@@ -117,11 +117,7 @@ object Experiments {
   }
 
   def main(args: Array[String]): Unit = {
-    val kv = args.map { a =>
-      val i = a.indexOf('=')
-      require(i > 0, s"expected key=value, got '$a'")
-      a.substring(0, i) -> a.substring(i + 1)
-    }.toMap
+    val kv = Main.keyValues(args)
     val spark = SparkSession.getActiveSession.getOrElse(
       graft.spark.Sessions.build(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"), "graft-experiments")
     )

@@ -26,21 +26,27 @@ import org.apache.spark.sql.functions._
   *                the default upTo is capped at the slowest consumer)
   *   repair     root=<source root> out=<parquet dir>
   *              — repair the full table at the current snapshot
-  *   bench      pages=N
-  *              — the throughput benchmark (local only)
+  *
+  * Measurement lives elsewhere: `graft.Bench` (headline and
+  * subcommands) and the repo benchmark `perfbench/`, whose
+  * `continuous` workload times this ingest -> update path.
   *
   * The session comes from the spark-submit conf (no master hardcoded);
   * local runs fall back to local[*].
   */
 object Main {
 
-  def main(args: Array[String]): Unit = {
-    val kv = args.map { a =>
+  /** `key=value` arguments as a map: the argument syntax of every graft main. */
+  def keyValues(args: Seq[String]): Map[String, String] =
+    args.map { a =>
       val i = a.indexOf('=')
       require(i > 0, s"expected key=value, got '$a'")
       a.substring(0, i) -> a.substring(i + 1)
     }.toMap
-    val job = kv.getOrElse("job", sys.error("missing job=<ingest|update|repair|bench>"))
+
+  def main(args: Array[String]): Unit = {
+    val kv = keyValues(args)
+    val job = kv.getOrElse("job", sys.error("missing job=<ingest|update|compact|repair>"))
 
     val hadSession = SparkSession.getActiveSession.isDefined
     val spark = SparkSession
@@ -108,10 +114,6 @@ object Main {
           .mode("overwrite")
           .parquet(out)
         Map("out" -> out)
-      case "bench" =>
-        val (tp, br, ts, bs) = Bench.rollupBench(spark, kv.getOrElse("pages", "1000000").toLong)
-        val (points, sec) = (tp + br, ts + bs)
-        Map("points" -> points.toString, "sec" -> f"$sec%.2f")
       case other => sys.error(s"unknown job '$other'")
     }
     val sec = (System.nanoTime() - t0) / 1e9

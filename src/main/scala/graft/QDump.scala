@@ -1,56 +1,43 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.spark.Sessions
+import org.apache.spark.sql.functions.col
 
-/** Scratch single-query row dump (golden regeneration):
+/** Single-query row dump (golden regeneration):
   * `runMain graft.QDump q62_meta_learner_cv` prints every row sorted;
   * `--ivf-centroids` prints the trained IVF quantizer as DuckDB VALUES
   * rows and `--pq-codebook` the flattened PQ codebook list — the per-SF
   * model literals pinned in resources/graft/goldens (q63/q66/q69). Run once per SF
-  * via SPARK_GRAFT_SF_DIR.
+  * via SPARK_GRAFT_SF_DIR, on `Sessions.build` at `local[$SPARK_GRAFT_CPUS]`.
   */
 object QDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession
-      .builder()
-      .appName("graft-qdump")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = Sessions.build(Sessions.localMaster, "graft-qdump")
     spark.sparkContext.setLogLevel("WARN")
-    args.filter(_ == "--ivf-centroids").foreach { _ =>
-      import org.apache.spark.sql.functions.col
-      val emb = spark.read
-        .parquet(s"$sfDir/embeddings.parquet")
-        .select(col("vec_id").as("id"), col("embedding"))
-      val cents = graft.ann.Ann.trainCentroids(emb, nCentroids = 8)
-      // java.lang.Double.toString is the shortest exact round-trip
-      // repr, so the SQL literal parses back to the identical double
-      cents.zipWithIndex.foreach { case (c, i) =>
-        val lst = c.map(java.lang.Double.toString).mkString(", ")
-        println(s"[qdump] centroid ($i, [$lst]),")
-      }
-    }
-    args.filter(_ == "--pq-codebook").foreach { _ =>
-      import org.apache.spark.sql.functions.col
-      val emb = spark.read
-        .parquet(s"$sfDir/embeddings.parquet")
-        .select(col("vec_id").as("id"), col("embedding"))
-      val cb = graft.ann.Ann.trainPq(emb)
-      println(s"[qdump] pq-codebook [${cb.map(java.lang.Double.toString).mkString(", ")}]")
-    }
-    args.filterNot(a => a == "--ivf-centroids" || a == "--pq-codebook").foreach { name =>
-      val out = SparkEntry.queries(name)(spark, sfDir)
-      val cols = out.columns.sorted
-      out
-        .selectExpr(cols: _*)
-        .collect()
-        .map(_.toSeq.map(String.valueOf).mkString("|"))
-        .sorted
-        .foreach(r => println(s"[qdump] $name $r"))
-      out.unpersist()
+    lazy val emb = spark.read
+      .parquet(s"$sfDir/embeddings.parquet")
+      .select(col("vec_id").as("id"), col("embedding"))
+    // java.lang.Double.toString is the shortest exact round-trip repr,
+    // so the SQL literal parses back to the identical double
+    def lst(xs: Array[Double]): String = xs.map(java.lang.Double.toString).mkString(", ")
+    args.foreach {
+      case "--ivf-centroids" =>
+        graft.ann.Ann.trainCentroids(emb, nCentroids = 8).zipWithIndex.foreach { case (c, i) =>
+          println(s"[qdump] centroid ($i, [${lst(c)}]),")
+        }
+      case "--pq-codebook" =>
+        println(s"[qdump] pq-codebook [${lst(graft.ann.Ann.trainPq(emb))}]")
+      case name =>
+        val out = SparkEntry.queries(name)(spark, sfDir)
+        val cols = out.columns.sorted
+        out
+          .selectExpr(cols: _*)
+          .collect()
+          .map(_.toSeq.map(String.valueOf).mkString("|"))
+          .sorted
+          .foreach(r => println(s"[qdump] $name $r"))
+        out.unpersist()
     }
     spark.stop()
   }

@@ -1,8 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import graft.spark.Sessions
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+import scala.jdk.CollectionConverters._
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Runs on
+  * `Sessions.build` at `local[$SPARK_GRAFT_CPUS]`, the session config
+  * the tests pin.
+  *
+  *   runMain graft.Verify <sfDir> <outDir> [<query>,<query>...]
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
@@ -10,54 +21,35 @@ object Verify {
     // iteration only; the driver always invokes with exactly two args)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.build(Sessions.localMaster, "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      // TimestampType -> TIMESTAMP_NTZ (identity under the UTC session
-      // TZ): the parquet dump then reads back tz-naive microseconds,
-      // exactly like the DuckDB oracle's timestamps.
-      try {
-        val out = fn(spark, sfDir)
-        val cast = out.schema.fields
-          .filter(_.dataType == org.apache.spark.sql.types.TimestampType)
-          .foldLeft(out)((a, f) =>
-            a.withColumn(f.name, org.apache.spark.sql.functions.col(f.name)
-              .cast(org.apache.spark.sql.types.TimestampNTZType)))
-        cast.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        // queries that return a cached result (lifecycle, LSH paths)
-        // must not accumulate storage across the 54-query sweep;
-        // no-op for uncached results
-        out.unpersist()
+        // TimestampType -> TIMESTAMP_NTZ (identity under the UTC session
+        // TZ): the parquet dump then reads back tz-naive microseconds,
+        // exactly like the DuckDB oracle's timestamps.
+        try {
+          val out = fn(spark, sfDir)
+          val cast = out.schema.fields
+            .filter(_.dataType == TimestampType)
+            .foldLeft(out)((a, f) => a.withColumn(f.name, col(f.name).cast(TimestampNTZType)))
+          cast.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          // queries that return a cached result (lifecycle, LSH paths)
+          // must not accumulate storage across the sweep; no-op for
+          // uncached results
+          out.unpersist()
+        } catch {
+          case e: Throwable => System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        }
       }
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // Jackson escapes quotes, backslashes and every control char, so a
+    // tab or CR in builder-authored SQL cannot break the driver's json.load
+    Files.writeString(
+      Paths.get(s"$outDir/oracle_sql.json"),
+      new ObjectMapper().writeValueAsString(SparkEntry.oracleSql.asJava)
+    )
     spark.stop()
   }
 }

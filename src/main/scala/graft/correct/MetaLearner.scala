@@ -157,6 +157,9 @@ object MetaLearner {
     out
   }
 
+  /** Spark's CrossValidator message for an empty training or validation fold. */
+  private val EmptyFold = "The (training|validation) data at fold \\d+ is empty\\.".r
+
   /** Fit the per-column pair classifier. "GBT" is the default; "CV"
     * cross-validates a small GBT grid (reference
     * `hpo.cross_validated_estimator`: GridSearchCV over AdaBoost
@@ -166,9 +169,11 @@ object MetaLearner {
     * predictions — the reference's exact `scoring="precision"`
     * criterion, so model selection matches it when the two metrics
     * disagree. Both are guarded like the reference: too few positives
-    * (<= 2) falls back to the plain model, as do degenerate folds.
+    * (<= 2) falls back to the plain model, as do degenerate folds
+    * (Spark's CrossValidator rejects an empty training or validation
+    * fold; no pinned query at sf0.001 or sf0.01 takes that fallback).
     */
-  private def fitClassifier(
+  private[correct] def fitClassifier(
       train: DataFrame,
       classifier: String,
       positives: Long,
@@ -233,7 +238,14 @@ object MetaLearner {
         .setParallelism(18)
         .setSeed(seed)
       try cv.fit(foldTrain).bestModel.asInstanceOf[org.apache.spark.ml.classification.GBTClassificationModel]
-      catch { case _: Exception => gbt.fit(train) }
+      catch {
+        // an empty fold (too few pairs for the fold hash to fill all
+        // three) is the one expected failure and keeps the plain model;
+        // anything else is a real fault and propagates
+        case e: org.apache.spark.SparkException if Option(e.getMessage).exists(EmptyFold.matches) =>
+          org.slf4j.LoggerFactory.getLogger(getClass).warn(s"fitClassifier: ${e.getMessage}; fitting without CV")
+          gbt.fit(train)
+      }
       finally foldTrain.unpersist()
     }
   }

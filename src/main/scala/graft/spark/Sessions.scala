@@ -2,7 +2,10 @@ package graft.spark
 
 import org.apache.spark.sql.SparkSession
 
-/** SparkSession factory used by tests, Verify, Bench and ScalingBench.
+/** SparkSession factory used by the tests, the repo benchmark
+  * (`perfbench/`) and the three entry mains `Bench`, `Verify` and
+  * `QDump`, so the driver's correctness dump and the bench run under
+  * the session config the tests pin.
   *
   * Local-mode settings tuned per the build constraints: shuffle
   * partitions sized to the core count (not the 200 default), AQE on
@@ -19,6 +22,11 @@ object Sessions {
       case _    => Runtime.getRuntime.availableProcessors().min(4)
     }
   }
+
+  /** `local[$SPARK_GRAFT_CPUS]` (4 when unset): the master of `Bench`,
+    * `Verify` and `QDump`.
+    */
+  def localMaster: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"
 
   def build(master: String, appName: String = "graft"): SparkSession = {
     val cores = coresOf(master)
@@ -49,9 +57,9 @@ object Sessions {
       .getOrCreate()
   }
 
-  /** Stop any active session, then build a fresh one (used by
-    * ScalingBench to re-run the same job at two parallelism levels
-    * within one JVM).
+  /** Stop any active session, then build a fresh one (used by the
+    * repo benchmark to re-run the same job at a second parallelism
+    * level within one JVM).
     */
   def rebuild(master: String, appName: String = "graft"): SparkSession = {
     SparkSession.getActiveSession.foreach(_.stop())

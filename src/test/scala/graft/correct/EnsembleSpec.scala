@@ -212,6 +212,36 @@ class EnsembleSpec extends SparkSpec {
     assert((21L to 30L).forall(r => out(r) == s"T$r"))
   }
 
+  /** Pair-classifier training rows: `pos` positives and `neg` negatives. */
+  private def cvTrain(pos: Int, neg: Int) = {
+    import org.apache.spark.ml.linalg.Vectors
+    ((1 to pos).map(i => (i.toLong, s"c$i", Vectors.dense(i.toDouble, 1.0), 1.0)) ++
+      (1 to neg).map(i => (100L + i, s"n$i", Vectors.dense(-i.toDouble, 0.0), 0.0)))
+      .toDF("row_id", "candidate", "fvec", "label")
+  }
+
+  test("CV falls back to the plain model only when a fold is empty") {
+    // 5 pairs leave fold 2 without validation rows: Spark's
+    // CrossValidator rejects that fold and the plain GBT is fitted
+    val model = MetaLearner.fitClassifier(cvTrain(3, 2), "CV", 3L, 42L)
+    assert(model.getNumTrees == 10)
+  }
+
+  test("a CV failure other than an empty fold surfaces instead of falling back") {
+    // the extra column is computed only when the fold relation is
+    // cached, so the failure hits the CV fits alone; the plain-model
+    // fallback prunes the column and would succeed. The repartition
+    // keeps the optimizer from folding the column into the local rows.
+    val boom = udf { (id: Long) =>
+      if (id >= 0) throw new IllegalStateException("injected CV failure")
+      id
+    }
+    val train = cvTrain(8, 5).repartition(2).withColumn("boom", boom(col("row_id")))
+    assert(MetaLearner.fitClassifier(train.drop("boom"), "CV", 8L, 42L).getNumTrees > 0)
+    val e = intercept[org.apache.spark.SparkException](MetaLearner.fitClassifier(train, "CV", 8L, 42L))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).exists(_.getMessage.contains("injected CV failure")))
+  }
+
   test("meta-learner falls back to A13 under the label-count guard") {
     val sugg = (1L to 5L).flatMap { r =>
       Seq(
