@@ -509,8 +509,7 @@ object Correctors {
   /** A13 generalized over arbitrary key columns. When every cell with
     * the same lhs value receives identical suggestions (single-FD
     * correction), deciding once per lhs value and broadcast-joining
-    * back is equivalent and avoids the per-cell window — that is the
-    * scale path used by the pages pipeline.
+    * back is equivalent and avoids the per-cell window.
     */
   def decideBy(suggestions: DataFrame, keys: Seq[String]): DataFrame = {
     val summed = suggestions

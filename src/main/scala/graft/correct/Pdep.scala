@@ -56,59 +56,51 @@ object Pdep {
     c.withColumn("lhs_cnt", sum(col("cnt")).over(w))
   }
 
-  /** N = rows without a detected error in lhs ∪ rhs. */
-  def errorCorrectedRowCount(df: DataFrame, errors: DataFrame, rowId: String, fd: Fd): Long =
-    Cells.dropRowsWithErrorIn(df, errors, rowId, fd.cols).count()
-
   /** All four statistics for one FD: ONE scan of the data (the counts
-    * aggregation) + scalar aggregates over the tiny counts relation.
+    * aggregation) + scalar aggregates over the tiny counts relation,
+    * which is cached for those actions and released before returning.
     * N (the error-corrected row count) is `sum(cnt)` — the counts were
     * mined over exactly the masked row set, so no second scan is
     * needed.
     */
-  def stats(df: DataFrame, errors: DataFrame, rowId: String, fd: Fd): PdepStats =
-    statsFromCounts(fdCounts(df, errors, rowId, fd), fd)
+  def stats(df: DataFrame, errors: DataFrame, rowId: String, fd: Fd): PdepStats = {
+    val counts = fdCounts(df, errors, rowId, fd).cache()
+    try {
+      val n = counts.agg(sum(col("cnt"))).head() match {
+        case r if r.isNullAt(0) => 0L
+        case r                  => r.getLong(0)
+      }
+      if (n == 0L) return PdepStats(fd, 0L, None, None, None, None)
 
-  /** Statistics from a precomputed (masked) counts relation — lets
-    * callers that already built the count model (the FD corrector)
-    * avoid any extra pass over the data.
-    */
-  def statsFromCounts(countsIn: DataFrame, fd: Fd): PdepStats = {
-    val counts = countsIn.cache()
-    val n = counts.agg(sum(col("cnt"))).head() match {
-      case r if r.isNullAt(0) => 0L
-      case r                  => r.getLong(0)
-    }
-    if (n == 0L) return PdepStats(fd, 0L, None, None, None, None)
+      // one aggregate over the counts relation:
+      //   sp  = sum(cnt^2 / lhs_cnt)                 -> pdep(A,B) * N
+      //   dA  = approx-free exact distinct lhs combos
+      //   rhs marginals for pdep(B)
+      val rhsMarginals = counts
+        .groupBy(col(fd.rhs))
+        .agg(sum(col("cnt")).as("rhs_cnt"))
+      val pdepBVal = rhsMarginals
+        .agg((sum(pow(col("rhs_cnt"), 2)) / lit(n.toDouble * n)).as("p"))
+        .head()
+        .getDouble(0)
 
-    // one aggregate over the counts relation:
-    //   sp  = sum(cnt^2 / lhs_cnt)                 -> pdep(A,B) * N
-    //   dA  = approx-free exact distinct lhs combos
-    //   rhs marginals for pdep(B)
-    val rhsMarginals = counts
-      .groupBy(col(fd.rhs))
-      .agg(sum(col("cnt")).as("rhs_cnt"))
-    val pdepBVal = rhsMarginals
-      .agg((sum(pow(col("rhs_cnt"), 2)) / lit(n.toDouble * n)).as("p"))
-      .head()
-      .getDouble(0)
+      val row = counts
+        .agg(
+          (sum(pow(col("cnt"), 2) / col("lhs_cnt")) / lit(n.toDouble)).as("pab"),
+          countDistinct(struct(fd.lhs.map(col): _*)).as("da")
+        )
+        .head()
+      val pdepABVal = row.getDouble(0)
+      val dA = row.getLong(1)
 
-    val row = counts
-      .agg(
-        (sum(pow(col("cnt"), 2) / col("lhs_cnt")) / lit(n.toDouble)).as("pab"),
-        countDistinct(struct(fd.lhs.map(col): _*)).as("da")
-      )
-      .head()
-    val pdepABVal = row.getDouble(0)
-    val dA = row.getLong(1)
+      val epdepVal: Option[Double] =
+        if (pdepBVal == 1.0) None // reference: division-by-zero guard, pdep.py:172-173
+        else if (n == 1L) Some(0.0)
+        else Some(pdepBVal + (dA - 1).toDouble / (n - 1).toDouble * (1 - pdepBVal))
 
-    val epdepVal: Option[Double] =
-      if (pdepBVal == 1.0) None // reference: division-by-zero guard, pdep.py:172-173
-      else if (n == 1L) Some(0.0)
-      else Some(pdepBVal + (dA - 1).toDouble / (n - 1).toDouble * (1 - pdepBVal))
-
-    val gpdepVal = epdepVal.map(e => pdepABVal - e)
-    PdepStats(fd, n, Some(pdepBVal), Some(pdepABVal), epdepVal, gpdepVal)
+      val gpdepVal = epdepVal.map(e => pdepABVal - e)
+      PdepStats(fd, n, Some(pdepBVal), Some(pdepABVal), epdepVal, gpdepVal)
+    } finally counts.unpersist()
   }
 
   /** In-engine FD search (replacement for the reference's external

@@ -554,6 +554,7 @@ object PseudoLlm {
     * key before any join; error-side work is proportional to detected
     * cells; a column whose vocabulary exceeds `maxVocabPerCol` is
     * skipped (free-text columns are not token-domain repairable).
+    * Returned cached and materialized; the caller unpersists it.
     */
   def tokenRepairCache(
       df: DataFrame,
@@ -735,8 +736,8 @@ object PseudoLlm {
     materialized
   }
 
-  /** Both cache members, union'd — the frozen cache table to route
-    * through `Cleaning.run(cache = ...)`.
+  /** Every cache member, union'd — the frozen cache table to route
+    * through `Cleaning.run(cache = ...)`, cached and materialized.
     */
   def cache(
       df: DataFrame,
@@ -754,7 +755,8 @@ object PseudoLlm {
       val corrs = fillPairs.map(_._2).distinct
       if (fillPairs.nonEmpty && corrs.size == 1) Some(c -> (corrs.head, 1.0)) else None
     }
-    llmCorrectionCache(detected, userLabels, skipColumns = tokens.keySet)
+    val tokenRepair = tokenRepairCache(df, rowId, cols, detected, userLabels)
+    val frozen = llmCorrectionCache(detected, userLabels, skipColumns = tokens.keySet)
       .unionByName(
         llmMasterCache(
           df,
@@ -766,6 +768,10 @@ object PseudoLlm {
           fillConstants = fillConstants
         )
       )
-      .unionByName(tokenRepairCache(df, rowId, cols, detected, userLabels))
+      .unionByName(tokenRepair)
+      .cache()
+    frozen.count()
+    tokenRepair.unpersist()
+    frozen
   }
 }

@@ -1,8 +1,7 @@
 package graft.pages
 
-import graft.correct.{Cells, Correctors, Fd, Pdep}
 import graft.rollup.Rollup
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,25 +15,28 @@ import org.apache.spark.sql.functions._
   *    (whole-cell replacement with an observed value only — the
   *    per-url byte-identity invariant holds by construction);
   *  - `warc_ts`: re-parsed from the html header comment;
-  *  - `lang`: FD corrector over domain->lang (gpdep-weighted count
-  *    model, A13 decision applied once per lhs value — see
-  *    `Correctors.decideBy`).
+  *  - `lang`: Mimir's FD corrector over domain -> lang. Its count
+  *    model is masked like `Pdep.fdCounts`, and detection masks
+  *    exactly the non-majority rows, so each domain keeps ONE
+  *    candidate, the majority lang; the A13 argmax of a single
+  *    candidate ignores its gpdep score. A score, if ever needed, is a
+  *    column in the same plan — never an eager action at build time.
   *
   * Scan discipline (the property that matters at 10^12 rows): the big
   * table is scanned exactly TWICE end to end —
   *   1. one domain->lang count model (a single hash aggregate, tiny
-  *      result) from which BOTH the majority-lang model and the
-  *      masked FD-corrector counts derive: the cells masked by
-  *      detection are exactly the non-majority rows, so the masked
-  *      count relation is the counts filtered to each domain's
-  *      majority lang — no second scan needed;
+  *      result); the per-domain majority is a window over that tiny
+  *      relation, no second scan;
   *   2. the single output pass that flags + repairs every cell with
-  *      pure expressions and two broadcast joins (majority model,
-  *      per-domain decision).
-  * Everything else operates on error-fraction-sized or
-  * model-sized relations.
+  *      pure expressions and one broadcast join (the majority model).
+  * With an external count model (`repairWithCounts`) the output pass
+  * is the only scan. Building the repaired frame runs no Spark job and
+  * caches nothing: the model is read once, as the broadcast side.
   */
 object PagePipeline {
+
+  /** The page columns repair reads and rewrites, in output order. */
+  val PageCols: Seq[String] = Seq("url", "warc_ts", "html", "text", "lang")
 
   private def flagCols(majorityJoined: DataFrame): DataFrame =
     majorityJoined
@@ -42,12 +44,11 @@ object PagePipeline {
       .withColumn("__text_bad", col("text") === "" && length(col("html")) > 0)
       .withColumn("__lang_bad", col("lang") =!= col("__majority_lang"))
 
-  /** Domain-majority lang model: one aggregate + per-domain argmax
-    * with lexicographic tie-break (tiny relation, broadcast by
-    * callers).
+  /** Domain-majority lang of a (domain, lang, cnt) count model:
+    * per-domain argmax with lexicographic tie-break (tiny relation,
+    * broadcast by callers).
     */
-  def majorityLang(withDomain: DataFrame): DataFrame = {
-    val counts = withDomain.groupBy("domain", "lang").agg(count(lit(1)).as("cnt"))
+  private def majorityOf(counts: DataFrame): DataFrame = {
     val w = Window.partitionBy("domain").orderBy(col("cnt").desc, col("lang").asc)
     counts
       .withColumn("rn", row_number().over(w))
@@ -68,7 +69,7 @@ object PagePipeline {
     */
   def detectErrors(pages: DataFrame): DataFrame = {
     val withId = withIdDomain(pages)
-    val flagged = flagCols(withId.join(broadcast(majorityLang(withId)), "domain"))
+    val flagged = flagCols(withId.join(broadcast(majorityOf(langCounts(pages))), "domain"))
     flagged
       .select(
         col("row_id"),
@@ -94,10 +95,10 @@ object PagePipeline {
   def langCounts(pages: DataFrame): DataFrame =
     withIdDomain(pages).groupBy("domain", "lang").agg(count(lit(1)).as("cnt"))
 
-  /** Repair all detected errors; returns the corrected page table with
-    * the original five columns. Computes the count model from `pages`
-    * itself — for partition-pruned incremental repair pass a
-    * full-table model to `repairWithCounts` instead.
+  /** Repair all detected errors; returns the corrected page table (see
+    * `repairWithCounts` for its columns). Computes the count model
+    * from `pages` itself — for partition-pruned incremental repair pass
+    * a full-table model to `repairWithCounts` instead.
     */
   def repair(pages: DataFrame): DataFrame =
     repairWithCounts(pages, langCounts(pages))
@@ -108,52 +109,20 @@ object PagePipeline {
     * pruned subset of the table equals restricting a full-table repair
     * to that subset — the exactness contract incremental tier updates
     * rely on.
+    *
+    * Output: the repaired `PageCols`, then every other input column
+    * unchanged (`ContinuousRollup`'s stored-day column reaches its
+    * exact guard). A domain with a null majority lang keeps its lang.
     */
-  def repairWithCounts(pages: DataFrame, counts0: DataFrame): DataFrame = {
-    val withId = withIdDomain(pages)
-    val langCounts = counts0.cache()
-    val w = Window.partitionBy("domain").orderBy(col("cnt").desc, col("lang").asc)
-    val majority = broadcast(
-      langCounts
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("domain"), col("lang").as("__majority_lang"))
-    )
-    val flagged = flagCols(withId.join(majority, "domain"))
+  def repairWithCounts(pages: DataFrame, counts: DataFrame): DataFrame = {
+    val majority = broadcast(majorityOf(counts).withColumnRenamed("domain", "__domain"))
+    val flagged = flagCols(pages.withColumn("__domain", PageGen.domainOf("url")).join(majority, "__domain"))
+    val passThrough = pages.columns.filterNot(PageCols.contains).map(c => col(s"`$c`"))
 
-    // FD corrector model for lang (domain -> lang), masked at row
-    // level over the FD's columns exactly like Pdep.fdCounts. The
-    // masked rows are precisely those whose lang differs from the
-    // domain majority, so the masked count model IS the count relation
-    // restricted to each domain's majority lang — derived from the
-    // same scan, not a second one.
-    val fd = Fd(Seq("domain"), "lang")
-    val counts = langCounts
-      .join(majority, "domain")
-      .filter(col("lang") === col("__majority_lang"))
-      .select(col("domain"), col("lang"), col("cnt"))
-      .withColumn("lhs_cnt", sum(col("cnt")).over(Window.partitionBy("domain")))
-      .cache()
-    val stats = Pdep.statsFromCounts(counts, fd)
-    // single FD: norm_gpdep = 1 when gpdep > 0 (normalized over itself)
-    val normGpdep = stats.gpdep.map(g => if (g > 0) 1.0 else 0.0).getOrElse(0.0)
-
-    // per-lhs-value decision (equivalent to per-cell A13 here — every
-    // error cell of a domain sees identical suggestions)
-    val sugg = counts.select(
-      col("domain"),
-      col("lang").as("candidate"),
-      lit(normGpdep).as("score")
-    )
-    val decided = Correctors
-      .decideBy(sugg, Seq("domain"))
-      .select(col("domain"), col("candidate").as("__lang_fix"))
-
-    // single output pass: pure-expression repairs + broadcast join
+    // single output pass: pure-expression repairs + one broadcast join
     val htmlStr = decode(col("html"), "UTF-8")
-    flagged
-      .join(broadcast(decided), Seq("domain"), "left")
-      .select(
+    flagged.select(
+      Seq(
         col("url"),
         when(
           col("__ts_bad"),
@@ -162,9 +131,9 @@ object PagePipeline {
         col("html"),
         when(col("__text_bad"), regexp_extract(htmlStr, "(?s)<body>(.*)</body>", 1))
           .otherwise(col("text")).as("text"),
-        when(col("__lang_bad") && col("__lang_fix").isNotNull, col("__lang_fix"))
-          .otherwise(col("lang")).as("lang")
-      )
+        when(col("__lang_bad"), col("__majority_lang")).otherwise(col("lang")).as("lang")
+      ) ++ passThrough: _*
+    )
   }
 
   /** Corrected pages -> hourly tier keyed by domain, with point count,

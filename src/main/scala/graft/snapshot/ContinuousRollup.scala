@@ -126,8 +126,8 @@ object ContinuousRollup {
     * prepare (iterating `df.columns`, melting, positional unions)
     * sees ONE shape across all invocations of one update — it may
     * treat `__graft_stored_day` like any other column. A
-    * schema-agnostic prepare (column-wise maps, filters, withColumn)
-    * passes it through unchanged and gets the exact guard for free; a
+    * schema-agnostic prepare (column-wise maps, filters, withColumn,
+    * the pages repair) passes it through and gets the exact guard; a
     * prepare that projects to a fixed schema drops it and gets the
     * weaker membership guard. The column is dropped again before any
     * tier aggregation, so it never reaches tier outputs.

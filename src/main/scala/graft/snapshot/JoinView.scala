@@ -1,5 +1,7 @@
 package graft.snapshot
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,11 +33,16 @@ import org.apache.spark.sql.functions._
   * each source may accumulate at most 2^31 (~2.1 billion) snapshots
   * over the VIEW'S LIFE — beyond minutely micro-batches for four
   * millennia; `mark` fails loudly (never wraps) if a store ever gets
-  * there.
+  * there. The encoding is versioned in the view manifest
+  * (`_joinview.json`, `watermarkShiftBits`), written before the first
+  * view append. A view with watermarks but no manifest was written by
+  * an older build with the 2^20 encoding; reading it fails instead of
+  * decoding its watermark as (0, m) and re-joining all of A.
   */
 object JoinView {
 
-  private val Shift = 1L << 31
+  private val ShiftBits = 31
+  private val Shift = 1L << ShiftBits
 
   private def mark(aId: Long, bId: Long): Long = {
     require(
@@ -46,10 +53,21 @@ object JoinView {
     aId * Shift + bId
   }
 
+  private def viewManifest(viewRoot: String) = Paths.get(viewRoot, "_joinview.json")
+
   /** Last applied (aId, bId) source watermark of the view. */
   def appliedSources(viewRoot: String): (Long, Long) = {
     val m = SnapshotStore.lastStreamBatchId(viewRoot)
-    if (m < 0) (0L, 0L) else (m / Shift, m % Shift)
+    if (m < 0) return (0L, 0L)
+    val p = viewManifest(viewRoot)
+    if (!Files.exists(p))
+      throw new IllegalStateException(
+        s"JoinView $viewRoot has watermarks but no view manifest: an older build encoded them as " +
+          "aId * 2^20 + bId, which this build cannot decode; rebuild the view from empty"
+      )
+    val bits = new ObjectMapper().readTree(Files.readAllBytes(p)).path("watermarkShiftBits").asInt(-1)
+    require(bits == ShiftBits, s"JoinView $viewRoot encodes watermarks as 2^$bits; this build reads 2^$ShiftBits")
+    (m / Shift, m % Shift)
   }
 
   /** Advance the view to the sources' current heads; returns the new
@@ -82,6 +100,8 @@ object JoinView {
         .readRange(spark, aRoot, 0L, aOld)
         .join(bc(SnapshotStore.readRange(spark, bRoot, bOld, bNew)), joinKeys)
     val delta = parts.result().reduce(_.unionByName(_))
+    if (!Files.exists(viewManifest(viewRoot)))
+      SnapshotStore.atomicWrite(viewManifest(viewRoot), s"""{"watermarkShiftBits":$ShiftBits}""")
     Some(SnapshotStore.append(viewRoot, delta, streamBatchId = Some(mark(aNew, bNew))))
   }
 

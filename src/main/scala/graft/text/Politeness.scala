@@ -20,6 +20,9 @@ import org.apache.spark.sql.functions._
   */
 object Politeness {
 
+  /** Largest accepted crawl delay: one day, in seconds. */
+  val MaxDelaySec: Long = 86400L
+
   /** @param priority higher fetches first; ties break on `tieBreak` asc
     * @param delaySec per-row host crawl delay (seconds). The schedule
     *        uses the MAX of `delaySec` over each host's rows: if rows
@@ -28,6 +31,11 @@ object Politeness {
     *        1 s row fires at 2 s inside slot 1 of a 5 s row's window)
     *        and silently break the per-host rate cap — the max is the
     *        only per-row-derivable spacing that honors every row's cap.
+    *        A negative delay, or one above `MaxDelaySec`, raises: one
+    *        corrupt robots value would otherwise stretch the host's
+    *        whole schedule. A null delay states no cap and is left out
+    *        of the max; a host whose delays are all null gets a null
+    *        `fetch_offset_s`.
     * @return input plus (slot, fetch_offset_s): slot = per-host fetch
     *         index (0-based), offset = slot * max-host-delay
     */
@@ -40,7 +48,10 @@ object Politeness {
   ): DataFrame = {
     val w = Window.partitionBy(col(hostCol)).orderBy(priority.desc, col(tieBreak).asc)
     // same partitioning as the ranking window -> one shuffle serves both
-    val hostDelay = max(delaySec.cast("long")).over(Window.partitionBy(col(hostCol)))
+    val raw = delaySec.cast("double")
+    val bad = raise_error(concat(lit(s"crawl delay out of [0, $MaxDelaySec] s: "), raw.cast("string")))
+    val checked = when(raw < 0 || raw > MaxDelaySec, bad).otherwise(delaySec.cast("long"))
+    val hostDelay = max(checked).over(Window.partitionBy(col(hostCol)))
     urls
       .withColumn("slot", (row_number().over(w) - 1).cast("long"))
       .withColumn("fetch_offset_s", col("slot") * hostDelay)

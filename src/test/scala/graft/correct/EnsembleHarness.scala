@@ -56,7 +56,7 @@ object EnsembleHarness {
       .select("row_id", "col", "clean_value")
 
     val cache =
-      if (withCache) Some(PseudoLlm.cache(dirty, "row_id", cols, detected, labels).cache())
+      if (withCache) Some(PseudoLlm.cache(dirty, "row_id", cols, detected, labels))
       else None
     // matches the reference's global config (feature_generators =
     // auto_instance + fd + llm members): the trained imputer runs

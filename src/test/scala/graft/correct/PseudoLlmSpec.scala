@@ -187,10 +187,12 @@ class PseudoLlmSpec extends SparkSpec {
     assert(out((4L, "state")) == "TX")
   }
 
-  test("token repair: unique in-vocab edit fixes typo tokens, digit damage stays unanswered") {
+  /** Typo-class fixture: trusted rows carry the vocabulary
+    * ("patients", percent scores, row-specific numbers); labels
+    * validate the token-repair member with two reproduced corrections.
+    */
+  private def tokenFixture() = {
     import spark.implicits._
-    // trusted rows carry the vocabulary: "patients", "empty", percent
-    // scores, plus row-specific numbers (shape 'd'+ is frequent)
     val dirty = Seq(
       (1L, "10 patients", "95%"),
       (2L, "223 patients", "87%"),
@@ -220,11 +222,17 @@ class PseudoLlmSpec extends SparkSpec {
       (5L, "sample", "619 patients"),
       (5L, "score", "95%")
     ).toDF("row_id", "col", "clean_value")
-    val got = PseudoLlm
-      .tokenRepairCache(dirty, "row_id", Seq("sample", "score"), detected, labels)
+    (dirty, detected, labels)
+  }
+
+  test("token repair: unique in-vocab edit fixes typo tokens, digit damage stays unanswered") {
+    val (dirty, detected, labels) = tokenFixture()
+    val member = PseudoLlm.tokenRepairCache(dirty, "row_id", Seq("sample", "score"), detected, labels)
+    val got = member
       .collect()
       .map(r => ((r.getLong(0), r.getString(1)), r.getString(3)))
       .toMap
+    member.unpersist()
     assert(got((5L, "sample")) == "619 patients")
     assert(got((5L, "score")) == "95%")
     assert(got((7L, "sample")) == "6 patients")
@@ -251,5 +259,19 @@ class PseudoLlmSpec extends SparkSpec {
     assert(
       PseudoLlm.tokenRepairCache(dirty, "row_id", Seq("sample"), detected, oneLabel).isEmpty
     )
+  }
+
+  test("Cleaning.run with the token-repair member leaves the cache manager no larger") {
+    import spark.implicits._
+    val (dirty, detected, labels) = tokenFixture()
+    val cols = Seq("sample", "score")
+    val before = cachedPlans
+    val member = PseudoLlm.cache(dirty, "row_id", cols, detected, labels)
+    assert(member.filter(col("corrector") === "token_repair").count() == 3L)
+    val out = Cleaning.run(dirty, "row_id", cols, detected, labels, cache = Some(member))
+    assert(out.filter(col("row_id") === 7L).select("value").as[String].collect().toSeq == Seq("6 patients"))
+    out.unpersist()
+    member.unpersist()
+    assert(cachedPlans <= before, s"cache manager grew from $before to $cachedPlans entries")
   }
 }

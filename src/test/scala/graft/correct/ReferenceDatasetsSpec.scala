@@ -60,7 +60,7 @@ class ReferenceDatasetsSpec extends SparkSpec {
     // the same labeled pairs + example rows the reference's prompts
     // carry — the functional stand-in for its GPT-populated sqlite
     val cache =
-      if (withCache) Some(PseudoLlm.cache(dirty, "row_id", cols, detected, labels).cache())
+      if (withCache) Some(PseudoLlm.cache(dirty, "row_id", cols, detected, labels))
       else None
 
     val cfg =

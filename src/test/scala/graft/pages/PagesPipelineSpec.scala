@@ -147,4 +147,101 @@ class PagesPipelineSpec extends SparkSpec {
       assert(got.except(want).isEmpty && want.except(got).isEmpty, s"tier $t mismatch")
     }
   }
+
+  test("building a repaired frame runs no Spark job") {
+    val pages = dirty
+    val model = PagePipeline.langCounts(pages)
+    val (built, jobs) = jobsDuring(PagePipeline.repairWithCounts(pages, model))
+    assert(jobs == 0, s"$jobs jobs ran while the repair plan was built")
+    assert(built.columns.toSeq == PagePipeline.PageCols)
+  }
+
+  test("repair passes extra input columns through unchanged, after the page columns") {
+    val withExtra = dirty.withColumn("extra", concat(lit("x:"), col("url")))
+    val out = PagePipeline.repair(withExtra)
+    assert(out.columns.toSeq == PagePipeline.PageCols :+ "extra")
+    assert(out.filter(col("extra") =!= concat(lit("x:"), col("url"))).isEmpty)
+    assert(comparable(out).except(comparable(repaired)).isEmpty)
+  }
+
+  test("lang repair is the domain majority: lexicographic tie-break, null majority keeps the lang") {
+    import spark.implicits._
+    val ts = java.sql.Timestamp.valueOf("2024-01-02 00:00:00")
+    def url(domain: String, id: Int) = s"https://$domain.example/p/$id"
+    def page(domain: String, id: Int, lang: String) =
+      (url(domain, id), ts, s"<html><body>t$id</body></html>".getBytes("UTF-8"), s"t$id", lang)
+    val pages = Seq(
+      // majority en (3 of 4): the de row is repaired
+      page("a", 1, "en"), page("a", 2, "en"), page("a", 3, "en"), page("a", 4, "de"),
+      // de and fr tie at 2: the lexicographically smaller de wins
+      page("b", 5, "fr"), page("b", 6, "de"), page("b", 7, "fr"), page("b", 8, "de"),
+      // null is the majority: no repair, the fr row keeps its lang
+      page("c", 9, null), page("c", 10, null), page("c", 11, "fr")
+    ).toDF(PagePipeline.PageCols: _*)
+    val got = PagePipeline
+      .repair(pages)
+      .select("url", "lang")
+      .as[(String, String)]
+      .collect()
+      .toMap
+    val want = Map(
+      url("a", 1) -> "en", url("a", 2) -> "en", url("a", 3) -> "en", url("a", 4) -> "en",
+      url("b", 5) -> "de", url("b", 6) -> "de", url("b", 7) -> "de", url("b", 8) -> "de",
+      url("c", 9) -> null, url("c", 10) -> null, url("c", 11) -> "fr"
+    )
+    assert(got == want)
+  }
+
+  test("pages update: a prepare moving a real-day row to another needed day fails the exact guard") {
+    import graft.snapshot.{ContinuousRollup, SnapshotStore}
+    val base = java.nio.file.Files.createTempDirectory("pages_guard").toString
+    val (root, tiers) = (s"$base/src", s"$base/tiers")
+    val batch = PageGen.corrupt(clean.filter(col("warc_ts") >= "2024-02-01"))
+    SnapshotStore.append(root, batch, tsCol = Some("warc_ts"))
+    // a row stored under 2024-02-01; the batch also lands on 02-02
+    val victim = batch
+      .filter(col("warc_ts") >= "2024-02-01" && col("warc_ts") < "2024-02-02")
+      .agg(min("url"))
+      .head()
+      .getString(0)
+    val model = PageModel.update(spark, root, tiers, 0L, 1L)
+    val moveVictim = (df: DataFrame) =>
+      df.withColumn(
+        "warc_ts",
+        when(col("url") === victim, col("warc_ts") + expr("INTERVAL 1 DAY")).otherwise(col("warc_ts"))
+      )
+    val e = intercept[IllegalStateException](
+      ContinuousRollup.update(
+        spark, root, tiers, Seq("domain", "lang"), "warc_ts",
+        length(col("html")).cast("long"),
+        prepare = df => moveVictim(PagePipeline.repairWithCounts(df, model)).withColumn("domain", PageGen.domainOf("url"))
+      )
+    )
+    assert(e.getMessage.contains("prepare-contract violation (exact guard"), e.getMessage)
+    assert(e.getMessage.contains(": 1 rows stored"), e.getMessage)
+    assert(ContinuousRollup.lastApplied(tiers) == 0L)
+  }
+
+  test("a pages update leaves the cache manager no larger than before") {
+    import graft.snapshot.{ContinuousRollup, SnapshotStore}
+    val base = java.nio.file.Files.createTempDirectory("pages_cache").toString
+    val (root, tiers) = (s"$base/src", s"$base/tiers")
+    clean.count() // the spec's own cached fixture
+    val before = cachedPlans
+    def upd(): Long = {
+      val from = ContinuousRollup.lastApplied(tiers)
+      val to = SnapshotStore.currentSnapshotId(root)
+      val model = PageModel.update(spark, root, tiers, from, to)
+      ContinuousRollup.update(
+        spark, root, tiers, Seq("domain", "lang"), "warc_ts",
+        length(col("html")).cast("long"),
+        prepare = df => PagePipeline.repairWithCounts(df, model).withColumn("domain", PageGen.domainOf("url"))
+      )
+    }
+    SnapshotStore.append(root, PageGen.corrupt(clean.filter(col("warc_ts") < "2024-02-01")), tsCol = Some("warc_ts"))
+    assert(upd() == 1L)
+    SnapshotStore.append(root, PageGen.corrupt(clean.filter(col("warc_ts") >= "2024-02-01")), tsCol = Some("warc_ts"))
+    assert(upd() == 2L)
+    assert(cachedPlans <= before, s"cache manager grew from $before to $cachedPlans entries")
+  }
 }

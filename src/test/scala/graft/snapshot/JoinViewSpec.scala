@@ -61,4 +61,29 @@ class JoinViewSpec extends SparkSpec {
     assert(viewRows(v) == Seq((1L, 10L, "d10"), (2L, 20L, "d20")))
     assert(JoinView.appliedSources(v) == (1L, 2L))
   }
+
+  test("the view manifest versions the watermark encoding") {
+    val (a, b, v) = roots()
+    SnapshotStore.append(a, facts(1L -> 10L))
+    SnapshotStore.append(b, dims(10L))
+    assert(JoinView.update(spark, v, a, b, Seq("uid")).isDefined)
+    val manifest = new String(Files.readAllBytes(java.nio.file.Paths.get(v, "_joinview.json")), "UTF-8")
+    assert(manifest == """{"watermarkShiftBits":31}""")
+    assert(JoinView.appliedSources(v) == (1L, 1L))
+  }
+
+  test("an unversioned view from the 2^20 encoding fails loudly instead of re-joining all of A") {
+    val (a, b, v) = roots()
+    SnapshotStore.append(a, facts(1L -> 10L))
+    SnapshotStore.append(b, dims(10L))
+    // a view written by the older build: (aId, bId) = (1, 1) encoded
+    // as 1 * 2^20 + 1, with no view manifest
+    SnapshotStore.append(v, facts(1L -> 10L).join(dims(10L), "uid"), streamBatchId = Some((1L << 20) + 1L))
+    val e = intercept[IllegalStateException](JoinView.appliedSources(v))
+    assert(e.getMessage.contains("2^20"), e.getMessage)
+    SnapshotStore.append(a, facts(2L -> 10L))
+    intercept[IllegalStateException](JoinView.update(spark, v, a, b, Seq("uid")))
+    assert(SnapshotStore.currentSnapshotId(v) == 1L)
+    assert(viewRows(v) == Seq((1L, 10L, "d10")))
+  }
 }
