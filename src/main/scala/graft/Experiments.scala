@@ -30,7 +30,10 @@ import scala.jdk.CollectionConverters._
   *   labeling_budget (default 20), label_noise_pct (default 0),
   *   use_fd / use_vicinity1 / use_vicinity2 / use_pdep_vicinity /
   *   use_imputer / use_value (booleans), n_best_pdeps,
-  *   use_meta_learner, synth_tuples, classification_model (GBT|CV).
+  *   use_meta_learner, synth_tuples,
+  *   classification_model (GBT|CV|CV_PRECISION).
+  * `use_vicinity1` / `use_vicinity2` (default true / false) map onto
+  * `CleaningConfig.vicinityOrders` 1 and 2.
   */
 object Experiments {
 
@@ -69,6 +72,22 @@ object Experiments {
   private def i(c: Map[String, JsonNode], k: String, dflt: Int) = c.get(k).map(_.asInt).getOrElse(dflt)
   private def s(c: Map[String, JsonNode], k: String): String = c(k).asText()
 
+  /** The lifecycle's config of one combination (keys above). */
+  def cleaningConfig(c: Map[String, JsonNode]): CleaningConfig =
+    CleaningConfig(
+      useFd = b(c, "use_fd", true),
+      vicinityOrders = Seq(1 -> b(c, "use_vicinity1", true), 2 -> b(c, "use_vicinity2", false)).collect {
+        case (n, true) => n
+      },
+      usePdepVicinity = b(c, "use_pdep_vicinity", false),
+      useImputer = b(c, "use_imputer", true),
+      useValue = b(c, "use_value", true),
+      nBestPdeps = i(c, "n_best_pdeps", 3),
+      useMetaLearner = b(c, "use_meta_learner", false),
+      synthTuples = i(c, "synth_tuples", 0),
+      metaClassifier = c.get("classification_model").map(_.asText).getOrElse("GBT")
+    )
+
   /** Run one combination; returns (f1, precision, recall, nErrors). */
   def runOne(spark: SparkSession, c: Map[String, JsonNode]): (Double, Double, Double, Long) = {
     val idCol = s(c, "id_col")
@@ -95,19 +114,7 @@ object Experiments {
           .labelWithGroundTruth(clean, "row_id", cols, rows, noise)
           .join(detected.select("row_id", "col"), Seq("row_id", "col"), "left_semi")
 
-    val cfg = CleaningConfig(
-      useFd = b(c, "use_fd", true),
-      useVicinity1 = b(c, "use_vicinity1", true),
-      useVicinity2 = b(c, "use_vicinity2", false),
-      usePdepVicinity = b(c, "use_pdep_vicinity", false),
-      useImputer = b(c, "use_imputer", true),
-      useValue = b(c, "use_value", true),
-      nBestPdeps = i(c, "n_best_pdeps", 3),
-      useMetaLearner = b(c, "use_meta_learner", false),
-      synthTuples = i(c, "synth_tuples", 0),
-      metaClassifier = c.get("classification_model").map(_.asText).getOrElse("GBT")
-    )
-    val corrections = Cleaning.run(dirty, "row_id", cols, detected, labels, cfg)
+    val corrections = Cleaning.run(dirty, "row_id", cols, detected, labels, cleaningConfig(c))
     val m = Correctors.evaluate(corrections, actual)
     val n = detected.count()
     diff.unpersist()

@@ -2041,7 +2041,15 @@ object SparkEntry {
       val errors = base
         .filter(pmod(col("row_id"), lit(13)) === 4)
         .select(col("row_id"), lit("segment").as("col"), col("segment").as("error_value"))
-      Correctors.allCounts(base, errors, "row_id", Seq("nation", "decile", "segment"))
+      Correctors
+        .allCountsOrderN(base, errors, "row_id", Seq("nation", "decile", "segment"), 1)
+        .select(
+          col("lhs_col_1").as("lhs_col"),
+          col("rhs_col"),
+          col("lhs_val_1").as("lhs_val"),
+          col("candidate"),
+          col("cnt")
+        )
     }),
 
     // ---- frozen LLM-cache corrector (S5+J4, M5/M6 cache join) ----
@@ -2582,7 +2590,7 @@ object SparkEntry {
         .filter(col("segment") === "__CORRUPT__")
         .select(col("row_id"), lit("segment").as("col"), col("segment").as("error_value"))
       Correctors
-        .vicinityCorrectorOrder2(base, errors, "row_id", Seq("nation", "decile", "segment"))
+        .vicinityCorrectorOrderN(base, errors, "row_id", Seq("nation", "decile", "segment"), 2)
         .select(col("row_id"), col("corrector"), col("candidate"), round(col("score"), 6).as("score"))
     }),
 

@@ -11,13 +11,10 @@ import org.apache.spark.sql.functions._
   */
 case class CleaningConfig(
     useFd: Boolean = true,
-    useVicinity1: Boolean = true,
-    useVicinity2: Boolean = false,
-    // reference `vicinity_orders` (e.g. [1], [1,2], [1,2,3]): orders
-    // BEYOND 2 run through the generic order-n corrector; 1 and 2 keep
-    // their dedicated name-compatible paths (so vicinityOrders=[1,2]
-    // == useVicinity1+useVicinity2)
-    vicinityOrders: Seq[Int] = Seq.empty,
+    // reference `vicinity_orders` (e.g. [1], [1,2], [1,2,3]): one naive
+    // vicinity member per order, each the order-n corrector; empty
+    // turns the naive vicinity members off
+    vicinityOrders: Seq[Int] = Seq(1),
     usePdepVicinity: Boolean = false,
     useImputer: Boolean = true,
     // M1's TRAINED form (auto_instance): per-column seeded
@@ -69,13 +66,6 @@ case class CleaningConfig(
   */
 object Cleaning {
 
-  /** Run the lifecycle; returns chosen corrections (row_id, col,
-    * value) with user labels overlaid.
-    *
-    * @param df        the dirty table (rowId + string-typed cols)
-    * @param detected  error cells (row_id, col, error_value)
-    * @param userLabels labeled clean values (row_id, col, clean_value)
-    */
   /** Reference step 5 (`draw_synth_error_positions`,
     * `correction.py:474-493`): pick `n` rows WITHOUT any detected
     * error and emit every cell of those rows as a synthetic error
@@ -103,6 +93,13 @@ object Cleaning {
       .select(col("row_id"), col("col"), col("value").as("clean_value"))
   }
 
+  /** Run the lifecycle; returns chosen corrections (row_id, col,
+    * value) with user labels overlaid.
+    *
+    * @param df        the dirty table (rowId + string-typed cols)
+    * @param detected  error cells (row_id, col, error_value)
+    * @param userLabels labeled clean values (row_id, col, clean_value)
+    */
   def run(
       df: DataFrame,
       rowId: String,
@@ -149,8 +146,9 @@ object Cleaning {
 
     // step 6: in-engine FD mining + gpdep weights for the fd corrector
     val cacheSuggestions = cache.map(c => Correctors.cacheCorrector(detected, c))
-    val suggestions = ((Seq(
-      if (cfg.useFd) {
+    val fdMember =
+      if (!cfg.useFd) None
+      else {
         val mined = Pdep
           .mineFds(df, correctorErrors, rowId, cols)
           .collect()
@@ -161,19 +159,14 @@ object Cleaning {
           val gp = Pdep.gpdepTable(df, correctorErrors, rowId, mined)
           Some(Correctors.fdCorrector(df, correctorErrors, rowId, gp, mined))
         }
-      } else None,
-      if (cfg.useVicinity1 || cfg.vicinityOrders.contains(1))
-        Some(Correctors.vicinityCorrectorOrder1(df, correctorErrors, rowId, cols))
-      else None,
-      if (cfg.useVicinity2 || cfg.vicinityOrders.contains(2))
-        Some(Correctors.vicinityCorrectorOrder2(df, correctorErrors, rowId, cols))
-      else None,
+      }
+    val vicinityMembers = cfg.vicinityOrders.distinct.sorted.map { n =>
+      Option(Correctors.vicinityCorrectorOrderN(df, correctorErrors, rowId, cols, n))
+    }
+    val suggestions = (((fdMember +: vicinityMembers) ++ Seq(
       if (cfg.usePdepVicinity)
         Some(Correctors.vicinityCorrectorPdep(df, correctorErrors, rowId, cols, cfg.nBestPdeps))
-      else None
-    ) ++ cfg.vicinityOrders.filter(_ > 2).sorted.map { n =>
-      Option(Correctors.vicinityCorrectorOrderN(df, correctorErrors, rowId, cols, n))
-    } ++ Seq[Option[org.apache.spark.sql.DataFrame]](
+      else None,
       if (cfg.useImputer) Some(Correctors.frequencyImputer(df, correctorErrors, rowId, cols)) else None,
       if (cfg.useMlImputer)
         Some(

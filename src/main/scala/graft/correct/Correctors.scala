@@ -66,54 +66,19 @@ object Correctors {
         .agg(sum("score").as("score"))
   }
 
-  /** Naive vicinity corrector, order 1 (reference
-    * `vicinity_based_corrector_order_n`, `src/pdep.py:292-321`): for
-    * every other column L of the error row, the conditional probability
-    * of each rhs candidate given the row's L-value, from cell-masked
-    * co-occurrence counts (`mine_all_counts`, `src/pdep.py:101-158`).
-    * One feature (corrector name) per lhs column.
-    *
-    * Count model: the long cell relation self-joined on row_id — one
-    * shuffle by row_id, one aggregation; cells marked as errors are
-    * excluded from the model (cell-level masking).
+  /** Order-1 naive vicinity corrector: [[vicinityCorrectorOrderN]] at
+    * n=1, one corrector name per lhs column (`vicinity_1_<lhs>`).
     */
-  def vicinityCorrectorOrder1(
-      df: DataFrame,
-      errors: DataFrame,
-      rowId: String,
-      cols: Seq[String]
-  ): DataFrame = {
-    val cells = Cells.melt(df, rowId, cols)
-    val counts = allCounts(df, errors, rowId, cols)
-    val wm = Window.partitionBy("lhs_col", "rhs_col", "lhs_val")
-    val countsPr = counts.withColumn("pr", col("cnt") / sum("cnt").over(wm))
-
-    // error cells paired with their row's other (lhs) cells — current
-    // values, errors included (the reference's `ed["vicinity"]` is the
-    // raw row)
-    val errLhs = errors
-      .select(col("row_id"), col("col").as("rhs_col"))
-      .join(cells.withColumnRenamed("col", "lhs_col").withColumnRenamed("value", "lhs_val"), "row_id")
-      .filter(col("lhs_col") =!= col("rhs_col"))
-
-    errLhs
-      .join(broadcast(countsPr), Seq("lhs_col", "rhs_col", "lhs_val"))
-      .select(
-        col("row_id"),
-        col("rhs_col").as("col"),
-        concat(lit("vicinity_1_"), col("lhs_col")).as("corrector"),
-        col("candidate"),
-        col("pr").as("score")
-      )
-  }
+  def vicinityCorrectorOrder1(df: DataFrame, errors: DataFrame, rowId: String, cols: Seq[String]): DataFrame =
+    vicinityCorrectorOrderN(df, errors, rowId, cols, 1)
 
   /** Pdep-ranked vicinity corrector, order 1 (reference M4,
-    * `src/pdep.py:450-499`): like the naive vicinity corrector but
-    * only the `nBest` dependencies per error column survive, ranked by
-    * gpdep descending (W3 top-k; deterministic lhs tie-break), and the
-    * emitted feature is the conditional probability of the candidate
-    * (the reference's default `pdep_features=['pr']`). One corrector
-    * name per surviving (lhs -> rhs) dependency.
+    * `src/pdep.py:450-499`): the order-1 vicinity join, restricted to
+    * the `nBest` dependencies per error column, ranked by gpdep
+    * descending (W3 top-k; deterministic lhs tie-break). The emitted
+    * feature is the conditional probability of the candidate (the
+    * reference's default `pdep_features=['pr']`). One corrector name
+    * per surviving (lhs -> rhs) dependency (`vicinity_pdep_<lhs>`).
     */
   def vicinityCorrectorPdep(
       df: DataFrame,
@@ -135,142 +100,43 @@ object Correctors {
           .map(_._1)
       }
       .toSet
-
-    val cells = Cells.melt(df, rowId, cols)
-    val counts = allCounts(df, errors, rowId, cols)
-    val wm = Window.partitionBy("lhs_col", "rhs_col", "lhs_val")
-    val countsPr = counts.withColumn("pr", col("cnt") / sum("cnt").over(wm))
-    val errLhs = errors
-      .select(col("row_id"), col("col").as("rhs_col"))
-      .join(cells.withColumnRenamed("col", "lhs_col").withColumnRenamed("value", "lhs_val"), "row_id")
-      .filter(col("lhs_col") =!= col("rhs_col"))
-      .filter(
-        concat(col("lhs_col"), lit("->"), col("rhs_col")).isin(surviving.toSeq: _*)
-      )
-    errLhs
-      .join(broadcast(countsPr), Seq("lhs_col", "rhs_col", "lhs_val"))
+    vicinityScores(df, errors, rowId, cols, 1)
+      .filter(concat(col("lhs_col_1"), lit("->"), col("rhs_col")).isin(surviving.toSeq: _*))
       .select(
         col("row_id"),
         col("rhs_col").as("col"),
-        concat(lit("vicinity_pdep_"), col("lhs_col")).as("corrector"),
+        concat(lit("vicinity_pdep_"), col("lhs_col_1")).as("corrector"),
         col("candidate"),
         col("pr").as("score")
       )
   }
 
-  /** A3 all-combination count model, order 1 (reference
-    * `mine_all_counts`, `src/pdep.py:101-158`): cell-masked
-    * co-occurrence counts for EVERY ordered (lhs_col, rhs_col) column
-    * pair, mined in one melt + one self-join on row_id + one hash
-    * aggregate. Error cells are excluded at cell granularity (either
-    * side), matching the reference's per-cell masking.
+  /** A3 all-combination count model of order n (reference
+    * `mine_all_counts`, `src/pdep.py:101-158`): cell-masked counts
+    * keyed by an UNORDERED n-set of lhs columns plus a rhs column. One
+    * melt + an (n+1)-way self-join on row_id + one hash aggregate;
+    * `lhs_col_1 < … < lhs_col_n` de-duplicates combinations. Error
+    * cells are excluded at cell granularity (any side), matching the
+    * reference's per-cell masking. Output schema: `lhs_col_1..n,
+    * rhs_col, lhs_val_1..n, candidate, cnt`.
     *
-    * SCALE BOUNDARY: the self-join materializes O(rows x cols^2)
+    * SCALE BOUNDARY: the self-join materializes O(rows x cols^(n+1))
     * pairs — sized for correction tables (the reference's are <= 20
     * columns x 10^4..10^6 rows), NOT for the web-page table. Wide or
     * web-scale inputs must use a projected per-FD count model
     * (`Pdep.fdCounts`) or the single-scan page model
-    * (`PagePipeline.repair`); the guard makes the boundary explicit.
-    */
-  def allCounts(df: DataFrame, errors: DataFrame, rowId: String, cols: Seq[String]): DataFrame = {
-    require(
-      cols.size <= 64,
-      s"allCounts is O(rows*cols^2) by design (correction-table sized); got ${cols.size} columns — " +
-        "use Pdep.fdCounts projections or the pages single-scan model at this width"
-    )
-    val masked = Cells
-      .melt(df, rowId, cols)
-      .join(errors.select("row_id", "col"), Seq("row_id", "col"), "left_anti")
-    val a = masked.select(col("row_id"), col("col").as("lhs_col"), col("value").as("lhs_val"))
-    val b = masked.select(col("row_id"), col("col").as("rhs_col"), col("value").as("candidate"))
-    a.join(b, "row_id")
-      .filter(col("lhs_col") =!= col("rhs_col"))
-      .groupBy("lhs_col", "rhs_col", "lhs_val", "candidate")
-      .agg(count(lit(1)).as("cnt"))
-  }
-
-  /** A3 all-combination count model, order 2 (reference
-    * `mine_all_counts` with `order=2`, `src/pdep.py:101-158`):
-    * cell-masked counts keyed by an UNORDERED lhs column pair plus a
-    * rhs column. One melt + a 3-way self-join on row_id + one hash
-    * aggregate; lhs_col_a < lhs_col_b de-duplicates combinations.
-    *
-    * SCALE BOUNDARY: O(rows x cols^3) pairs — see `allCounts`; the
-    * tighter guard reflects the cubic blowup.
-    */
-  def allCountsOrder2(df: DataFrame, errors: DataFrame, rowId: String, cols: Seq[String]): DataFrame = {
-    require(
-      cols.size <= 32,
-      s"allCountsOrder2 is O(rows*cols^3) by design (correction-table sized); got ${cols.size} columns"
-    )
-    val masked = Cells
-      .melt(df, rowId, cols)
-      .join(errors.select("row_id", "col"), Seq("row_id", "col"), "left_anti")
-    val a = masked.select(col("row_id"), col("col").as("lhs_col_a"), col("value").as("lhs_val_a"))
-    val b = masked.select(col("row_id"), col("col").as("lhs_col_b"), col("value").as("lhs_val_b"))
-    val r = masked.select(col("row_id"), col("col").as("rhs_col"), col("value").as("candidate"))
-    a.join(b, "row_id")
-      .filter(col("lhs_col_a") < col("lhs_col_b"))
-      .join(r, "row_id")
-      .filter(col("rhs_col") =!= col("lhs_col_a") && col("rhs_col") =!= col("lhs_col_b"))
-      .groupBy("lhs_col_a", "lhs_col_b", "rhs_col", "lhs_val_a", "lhs_val_b", "candidate")
-      .agg(count(lit(1)).as("cnt"))
-  }
-
-  /** Naive vicinity corrector, order 2 (reference
-    * `vicinity_based_corrector_order_n` with n=2): conditional pr of
-    * each candidate given the error row's values in an lhs column
-    * PAIR; one corrector name per pair.
-    */
-  def vicinityCorrectorOrder2(
-      df: DataFrame,
-      errors: DataFrame,
-      rowId: String,
-      cols: Seq[String]
-  ): DataFrame = {
-    val cells = Cells.melt(df, rowId, cols)
-    val counts = allCountsOrder2(df, errors, rowId, cols)
-    val wm = Window.partitionBy("lhs_col_a", "lhs_col_b", "rhs_col", "lhs_val_a", "lhs_val_b")
-    val countsPr = counts.withColumn("pr", col("cnt") / sum("cnt").over(wm))
-
-    val ca = cells.toDF("row_id", "lhs_col_a", "lhs_val_a")
-    val cb = cells.toDF("row_id", "lhs_col_b", "lhs_val_b")
-    val errLhs = errors
-      .select(col("row_id"), col("col").as("rhs_col"))
-      .join(ca, "row_id")
-      .join(cb, "row_id")
-      .filter(col("lhs_col_a") < col("lhs_col_b"))
-      .filter(col("rhs_col") =!= col("lhs_col_a") && col("rhs_col") =!= col("lhs_col_b"))
-
-    errLhs
-      .join(broadcast(countsPr), Seq("lhs_col_a", "lhs_col_b", "rhs_col", "lhs_val_a", "lhs_val_b"))
-      .select(
-        col("row_id"),
-        col("rhs_col").as("col"),
-        concat(lit("vicinity_2_"), col("lhs_col_a"), lit("_"), col("lhs_col_b")).as("corrector"),
-        col("candidate"),
-        col("pr").as("score")
-      )
-  }
-
-  /** A3 all-combination count model, ARBITRARY order n (reference
-    * `mine_all_counts` takes any `order`, `src/pdep.py:101-158`):
-    * cell-masked counts keyed by an UNORDERED n-set of lhs columns
-    * plus a rhs column. One melt + an (n+1)-way self-join on row_id +
-    * one hash aggregate; `lhs_col_1 < … < lhs_col_n` de-duplicates
-    * combinations. Output schema: `lhs_col_1..n, rhs_col,
-    * lhs_val_1..n, candidate, cnt`.
-    *
-    * SCALE BOUNDARY: O(rows × cols^(n+1)) pairs — see `allCounts`;
-    * the guard tightens with the order (the reference's shipped
-    * configs stop at order 2; arbitrary n exists for API parity).
+    * (`PagePipeline.repair`). The guard makes the boundary explicit:
+    * at most 64 columns at order 1, 32 at order 2, and
+    * cols^(n+1) <= 64^2 beyond (8 columns at order 3).
     */
   def allCountsOrderN(df: DataFrame, errors: DataFrame, rowId: String, cols: Seq[String], order: Int): DataFrame = {
     require(order >= 1, s"order must be >= 1, got $order")
+    val budget = if (order == 2) math.pow(32.0, 3.0) else math.pow(64.0, 2.0)
     require(
-      math.pow(cols.size.toDouble, (order + 1).toDouble) <= math.pow(64.0, 2.0),
+      math.pow(cols.size.toDouble, (order + 1).toDouble) <= budget,
       s"allCountsOrderN is O(rows*cols^${order + 1}) by design (correction-table sized); " +
-        s"${cols.size} columns at order $order exceeds the 64^2 combination budget"
+        s"${cols.size} columns at order $order exceed its budget — " +
+        "use Pdep.fdCounts projections or the pages single-scan model at this width"
     )
     val masked = Cells
       .melt(df, rowId, cols)
@@ -278,27 +144,31 @@ object Correctors {
     val lhs = (1 to order)
       .map(i => masked.select(col("row_id"), col("col").as(s"lhs_col_$i"), col("value").as(s"lhs_val_$i")))
       .reduceLeft(_.join(_, "row_id"))
-      .filter((2 to order).map(i => col(s"lhs_col_${i - 1}") < col(s"lhs_col_$i")).foldLeft(lit(true))(_ && _))
     val r = masked.select(col("row_id"), col("col").as("rhs_col"), col("value").as("candidate"))
-    val keyCols =
-      (1 to order).map(i => s"lhs_col_$i") ++ Seq("rhs_col") ++ (1 to order).map(i => s"lhs_val_$i") :+ "candidate"
     lhs
       .join(r, "row_id")
-      .filter((1 to order).map(i => col("rhs_col") =!= col(s"lhs_col_$i")).reduce(_ && _))
-      .groupBy(keyCols.map(col): _*)
+      .filter(lhsSetOf(order))
+      .groupBy((countKey(order) :+ "candidate").map(col): _*)
       .agg(count(lit(1)).as("cnt"))
   }
 
-  /** Order-3 alias of [[allCountsOrderN]]. */
-  def allCountsOrder3(df: DataFrame, errors: DataFrame, rowId: String, cols: Seq[String]): DataFrame =
-    allCountsOrderN(df, errors, rowId, cols, 3)
+  /** An order-n row pairing counts once: lhs columns strictly ascending
+    * (`lhs_col_1 < … < lhs_col_n`), none of them the rhs column.
+    */
+  private def lhsSetOf(order: Int): Column =
+    ((2 to order).map(i => col(s"lhs_col_${i - 1}") < col(s"lhs_col_$i")) ++
+      (1 to order).map(i => col("rhs_col") =!= col(s"lhs_col_$i"))).reduce(_ && _)
 
-  /** Naive vicinity corrector for ARBITRARY order n (reference
-    * `vicinity_based_corrector_order_n`): conditional pr of each
-    * candidate given the error row's values in an lhs column n-SET;
-    * one corrector name per set (`vicinity_<n>_<c1>_…_<cn>`, columns
-    * ascending). Equals `vicinityCorrectorOrder1/2` at n=1/2 (pinned
-    * by EnsembleSpec) — those stay as the hot, name-compatible paths.
+  /** `lhs_col_1..n, rhs_col, lhs_val_1..n`: the condition of an order-n count. */
+  private def countKey(order: Int): Seq[String] =
+    (1 to order).map(i => s"lhs_col_$i") ++ Seq("rhs_col") ++ (1 to order).map(i => s"lhs_val_$i")
+
+  /** Naive vicinity corrector of order n (reference
+    * `vicinity_based_corrector_order_n`, `src/pdep.py:292-321`): the
+    * conditional probability of each rhs candidate given the error
+    * row's values in an lhs column n-SET, from the cell-masked count
+    * model [[allCountsOrderN]]. One corrector name per set
+    * (`vicinity_<n>_<c1>_…_<cn>`, columns ascending).
     */
   def vicinityCorrectorOrderN(
       df: DataFrame,
@@ -307,32 +177,38 @@ object Correctors {
       cols: Seq[String],
       order: Int
   ): DataFrame = {
-    val cells = Cells.melt(df, rowId, cols)
-    val counts = allCountsOrderN(df, errors, rowId, cols, order)
-    val keyNoVal = (1 to order).map(i => s"lhs_col_$i") :+ "rhs_col"
-    val keyAll = keyNoVal ++ (1 to order).map(i => s"lhs_val_$i")
-    val wm = Window.partitionBy(keyAll.map(col): _*)
-    val countsPr = counts.withColumn("pr", col("cnt") / sum("cnt").over(wm))
-
-    val errLhs = (1 to order)
-      .map(i => cells.toDF("row_id", s"lhs_col_$i", s"lhs_val_$i"))
-      .foldLeft(errors.select(col("row_id"), col("col").as("rhs_col")))(_.join(_, "row_id"))
-      .filter((2 to order).map(i => col(s"lhs_col_${i - 1}") < col(s"lhs_col_$i")).foldLeft(lit(true))(_ && _))
-      .filter((1 to order).map(i => col("rhs_col") =!= col(s"lhs_col_$i")).reduce(_ && _))
-
-    val nameParts: Seq[Column] =
-      lit(s"vicinity_${order}_") +: (1 to order).flatMap(i =>
-        (if (i > 1) Seq(lit("_")) else Seq.empty[Column]) :+ col(s"lhs_col_$i")
-      )
-    errLhs
-      .join(broadcast(countsPr), keyAll)
+    vicinityScores(df, errors, rowId, cols, order)
       .select(
         col("row_id"),
         col("rhs_col").as("col"),
-        concat(nameParts: _*).as("corrector"),
+        concat_ws("_", lit(s"vicinity_$order") +: (1 to order).map(i => col(s"lhs_col_$i")): _*).as("corrector"),
         col("candidate"),
         col("pr").as("score")
       )
+  }
+
+  /** Error cells paired with their row's lhs n-sets — current values,
+    * errors included (the reference's `ed["vicinity"]` is the raw row)
+    * — joined to the broadcast count model with each candidate's
+    * conditional probability `pr`. Columns: `lhs_col_1..n, rhs_col,
+    * lhs_val_1..n, row_id, candidate, cnt, pr`.
+    */
+  private def vicinityScores(
+      df: DataFrame,
+      errors: DataFrame,
+      rowId: String,
+      cols: Seq[String],
+      order: Int
+  ): DataFrame = {
+    val cells = Cells.melt(df, rowId, cols)
+    val key = countKey(order)
+    val countsPr = allCountsOrderN(df, errors, rowId, cols, order)
+      .withColumn("pr", col("cnt") / sum("cnt").over(Window.partitionBy(key.map(col): _*)))
+    val errLhs = (1 to order)
+      .map(i => cells.toDF("row_id", s"lhs_col_$i", s"lhs_val_$i"))
+      .foldLeft(errors.select(col("row_id"), col("col").as("rhs_col")))(_.join(_, "row_id"))
+      .filter(lhsSetOf(order))
+    errLhs.join(broadcast(countsPr), key)
   }
 
   /** Value corrector (reference `src/correction.py:148-219`): value
@@ -588,13 +464,33 @@ object Correctors {
   }
 
   /** Cell-exact evaluation as a one-row DataFrame (reference
-    * `src/dataset.py:249-272`): detection & correction P/R/F1 from one
-    * left join of the emitted corrections against the actual-error
-    * cells, plus the raw TP/size counters. Fully declarative — the two
-    * counts and six ratios come out of a single aggregate over the
-    * (error-fraction-sized) join, no driver loop.
+    * `src/dataset.py:249-272`): the raw TP/size counters and the
+    * detection & correction P/R/F1, rounded to 6 digits (see
+    * [[evaluation]]).
     */
-  def evaluateDF(corrections: DataFrame, actualErrors: DataFrame): DataFrame = {
+  def evaluateDF(corrections: DataFrame, actualErrors: DataFrame): DataFrame =
+    evaluation(corrections, actualErrors).select(
+      Seq("output_size", "n_actual", "ed_tp", "ec_tp").map(col) ++ Ratios.map(r => round(col(r), 6).as(r)): _*
+    )
+
+  /** Cell-exact evaluation (reference `src/dataset.py:249-272`): the
+    * six unrounded detection & correction P/R/F1 ratios of
+    * [[evaluation]], read with one action.
+    */
+  def evaluate(corrections: DataFrame, actualErrors: DataFrame): Map[String, Double] = {
+    val row = evaluation(corrections, actualErrors).select(Ratios.map(col): _*).head()
+    Ratios.zipWithIndex.map { case (r, i) => r -> row.getDouble(i) }.toMap
+  }
+
+  private val Ratios = Seq("ed_p", "ed_r", "ed_f", "ec_p", "ec_r", "ec_f")
+
+  /** One left join of the emitted corrections against the actual-error
+    * cells, reduced by a single aggregate to the counters (output
+    * size, actual errors, detection and correction TPs, each 0 on an
+    * empty side) and the six unrounded ratios. Fully declarative: no
+    * driver loop over the (error-fraction-sized) join.
+    */
+  private def evaluation(corrections: DataFrame, actualErrors: DataFrame): DataFrame = {
     val a = actualErrors.select(col("row_id"), col("col"), col("clean_value"))
     val c = corrections.select(col("row_id"), col("col"), col("value"))
     val nActual = actualErrors.select(count(lit(1)).as("n_actual"))
@@ -609,7 +505,7 @@ object Correctors {
       val p = when(col("output_size") === 0, 0.0).otherwise(tp / col("output_size"))
       val r = when(col("n_actual") === 0, 0.0).otherwise(tp / col("n_actual"))
       val f = when(p + r === 0.0, 0.0).otherwise(lit(2.0) * p * r / (p + r))
-      Seq(round(p, 6).as(s"${prefix}_p"), round(r, 6).as(s"${prefix}_r"), round(f, 6).as(s"${prefix}_f"))
+      Seq(p.as(s"${prefix}_p"), r.as(s"${prefix}_r"), f.as(s"${prefix}_f"))
     }
     agg
       .crossJoin(nActual)
@@ -617,35 +513,5 @@ object Correctors {
         col("output_size") +: col("n_actual") +: col("ed_tp") +: col("ec_tp") +:
           (prf(col("ed_tp"), "ed") ++ prf(col("ec_tp"), "ec")): _*
       )
-  }
-
-  /** Cell-exact evaluation (reference `src/dataset.py:249-272`):
-    * detection & correction precision/recall/F1 as five scalars from one
-    * full-outer join of corrections against actual errors.
-    */
-  def evaluate(corrections: DataFrame, actualErrors: DataFrame): Map[String, Double] = {
-    val a = actualErrors.select(col("row_id"), col("col"), col("clean_value"))
-    val c = corrections.select(col("row_id"), col("col"), col("value"))
-    val j = c.join(a, Seq("row_id", "col"), "left")
-    val row = j
-      .agg(
-        count(lit(1)).as("output_size"),
-        sum(when(col("clean_value").isNotNull, 1L).otherwise(0L)).as("ed_tp"),
-        sum(when(col("clean_value") === col("value"), 1L).otherwise(0L)).as("ec_tp")
-      )
-      .head()
-    val outputSize = row.getLong(0).toDouble
-    val edTp = row.getLong(1).toDouble
-    val ecTp = Option(row.get(2)).map(_.asInstanceOf[Long].toDouble).getOrElse(0.0)
-    val nActual = actualErrors.count().toDouble
-    def prf(tp: Double): (Double, Double, Double) = {
-      val p = if (outputSize == 0) 0.0 else tp / outputSize
-      val r = if (nActual == 0) 0.0 else tp / nActual
-      val f = if (p + r == 0) 0.0 else 2 * p * r / (p + r)
-      (p, r, f)
-    }
-    val (edP, edR, edF) = prf(edTp)
-    val (ecP, ecR, ecF) = prf(ecTp)
-    Map("ed_p" -> edP, "ed_r" -> edR, "ed_f" -> edF, "ec_p" -> ecP, "ec_r" -> ecR, "ec_f" -> ecF)
   }
 }

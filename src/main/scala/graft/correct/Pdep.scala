@@ -56,51 +56,56 @@ object Pdep {
     c.withColumn("lhs_cnt", sum(col("cnt")).over(w))
   }
 
-  /** All four statistics for one FD: ONE scan of the data (the counts
-    * aggregation) + scalar aggregates over the tiny counts relation,
-    * which is cached for those actions and released before returning.
-    * N (the error-corrected row count) is `sum(cnt)` — the counts were
-    * mined over exactly the masked row set, so no second scan is
-    * needed.
+  /** All four statistics for one FD: the single-FD view of
+    * [[statsAll]].
     */
-  def stats(df: DataFrame, errors: DataFrame, rowId: String, fd: Fd): PdepStats = {
-    val counts = fdCounts(df, errors, rowId, fd).cache()
-    try {
-      val n = counts.agg(sum(col("cnt"))).head() match {
-        case r if r.isNullAt(0) => 0L
-        case r                  => r.getLong(0)
+  def stats(df: DataFrame, errors: DataFrame, rowId: String, fd: Fd): PdepStats =
+    statsAll(df, errors, rowId, Seq(fd)).head
+
+  /** The statistics of every FD from ONE Spark action, caching nothing.
+    * Each FD's counts relation (one scan, see [[fdCounts]]) reduces to
+    * a one-row aggregate of its scalars; the rows are unioned and
+    * collected together. Over the counts rows of one FD:
+    *
+    *   N                 = sum(cnt)  (mined over exactly the masked rows)
+    *   sum_b count(b)^2  = sum(cnt * rhs_cnt)   (exact, in longs)
+    *   pdep(A,B) * N     = sum(cnt^2 / lhs_cnt)
+    *   dA                = distinct lhs value combinations
+    */
+  private def statsAll(df: DataFrame, errors: DataFrame, rowId: String, fds: Seq[Fd]): Seq[PdepStats] = {
+    if (fds.isEmpty) return Seq.empty
+    val scalars = fds.zipWithIndex
+      .map { case (fd, i) =>
+        fdCounts(df, errors, rowId, fd)
+          .withColumn("rhs_cnt", sum(col("cnt")).over(Window.partitionBy(col(fd.rhs))))
+          .agg(
+            sum(col("cnt")).as("n"),
+            sum(col("cnt") * col("rhs_cnt")).as("rhs_sq"),
+            sum(pow(col("cnt"), 2) / col("lhs_cnt")).as("pab_n"),
+            countDistinct(struct(fd.lhs.map(col): _*)).as("da")
+          )
+          .select(lit(i).as("i"), col("n"), col("rhs_sq"), col("pab_n"), col("da"))
       }
-      if (n == 0L) return PdepStats(fd, 0L, None, None, None, None)
-
-      // one aggregate over the counts relation:
-      //   sp  = sum(cnt^2 / lhs_cnt)                 -> pdep(A,B) * N
-      //   dA  = approx-free exact distinct lhs combos
-      //   rhs marginals for pdep(B)
-      val rhsMarginals = counts
-        .groupBy(col(fd.rhs))
-        .agg(sum(col("cnt")).as("rhs_cnt"))
-      val pdepBVal = rhsMarginals
-        .agg((sum(pow(col("rhs_cnt"), 2)) / lit(n.toDouble * n)).as("p"))
-        .head()
-        .getDouble(0)
-
-      val row = counts
-        .agg(
-          (sum(pow(col("cnt"), 2) / col("lhs_cnt")) / lit(n.toDouble)).as("pab"),
-          countDistinct(struct(fd.lhs.map(col): _*)).as("da")
-        )
-        .head()
-      val pdepABVal = row.getDouble(0)
-      val dA = row.getLong(1)
-
-      val epdepVal: Option[Double] =
-        if (pdepBVal == 1.0) None // reference: division-by-zero guard, pdep.py:172-173
-        else if (n == 1L) Some(0.0)
-        else Some(pdepBVal + (dA - 1).toDouble / (n - 1).toDouble * (1 - pdepBVal))
-
-      val gpdepVal = epdepVal.map(e => pdepABVal - e)
-      PdepStats(fd, n, Some(pdepBVal), Some(pdepABVal), epdepVal, gpdepVal)
-    } finally counts.unpersist()
+      .reduce(_ unionByName _)
+      .collect()
+      .map(r => r.getInt(0) -> r)
+      .toMap
+    fds.zipWithIndex.map { case (fd, i) =>
+      val r = scalars(i)
+      val n = if (r.isNullAt(1)) 0L else r.getLong(1)
+      if (n == 0L) PdepStats(fd, 0L, None, None, None, None)
+      else {
+        val pdepBVal = r.getLong(2).toDouble / (n.toDouble * n)
+        val pdepABVal = r.getDouble(3) / n.toDouble
+        val dA = r.getLong(4)
+        val epdepVal: Option[Double] =
+          if (pdepBVal == 1.0) None // reference: division-by-zero guard, pdep.py:172-173
+          else if (n == 1L) Some(0.0)
+          else Some(pdepBVal + (dA - 1).toDouble / (n - 1).toDouble * (1 - pdepBVal))
+        val gpdepVal = epdepVal.map(e => pdepABVal - e)
+        PdepStats(fd, n, Some(pdepBVal), Some(pdepABVal), epdepVal, gpdepVal)
+      }
+    }
   }
 
   /** In-engine FD search (replacement for the reference's external
@@ -124,23 +129,23 @@ object Pdep {
   ): DataFrame = {
     // cell-level masking of a (lhs,rhs) pair ≡ the reference's
     // row-level masking restricted to that pair's two columns
-    val counts = Correctors.allCounts(df, errors, rowId, cols)
+    val counts = Correctors.allCountsOrderN(df, errors, rowId, cols, 1)
     counts
-      .groupBy("lhs_col", "rhs_col", "lhs_val")
+      .groupBy("lhs_col_1", "rhs_col", "lhs_val_1")
       .agg(sum("cnt").as("n"), count(lit(1)).as("d"))
-      .groupBy("lhs_col", "rhs_col")
+      .groupBy("lhs_col_1", "rhs_col")
       .agg(
         sum("n").as("n_rows"),
         sum(when(col("d") > 1, col("n")).otherwise(0L)).as("violating_rows")
       )
       .filter(col("violating_rows") <= col("n_rows") * lit(maxViolationFrac))
-      .select(col("lhs_col").as("lhs"), col("rhs_col").as("rhs"), col("n_rows"), col("violating_rows"))
+      .select(col("lhs_col_1").as("lhs"), col("rhs_col").as("rhs"), col("n_rows"), col("violating_rows"))
   }
 
   /** The gpdep table as a DataFrame: one row per FD with all four
     * statistics plus the per-rhs normalized gpdep, doubles rounded to 6
-    * for oracle-stable output. The per-FD aggregates run as Spark jobs
-    * (model-sized results); the assembled relation is tiny by
+    * for oracle-stable output. The per-FD aggregates run as one Spark
+    * action (model-sized results); the assembled relation is tiny by
     * construction (|FDs| rows).
     */
   def statsDF(df: DataFrame, errors: DataFrame, rowId: String, fds: Seq[Fd]): DataFrame = {
@@ -159,7 +164,8 @@ object Pdep {
   /** gpdep for a set of FDs, plus per-rhs normalization
     * (`norm_gpdep = gpdep / sum(gpdep over lhs for this rhs)` when the
     * sum is positive — reference `src/correction.py:541-553`).
-    * Returns `(fd, stats, normGpdep)` keyed by `fd.key`.
+    * Returns `(fd, stats, normGpdep)` keyed by `fd.key`; every FD's
+    * statistics come from one Spark action ([[statsAll]]).
     */
   def gpdepTable(
       df: DataFrame,
@@ -167,7 +173,7 @@ object Pdep {
       rowId: String,
       fds: Seq[Fd]
   ): Map[String, (PdepStats, Double)] = {
-    val all = fds.map(fd => fd.key -> stats(df, errors, rowId, fd)).toMap
+    val all = statsAll(df, errors, rowId, fds).map(s => s.fd.key -> s).toMap
     val byRhs = all.values.groupBy(_.fd.rhs)
     val norm: Map[String, Double] = byRhs.flatMap { case (_, ss) =>
       val normSum = ss.flatMap(_.gpdep).sum

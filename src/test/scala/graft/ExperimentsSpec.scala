@@ -26,6 +26,15 @@ class ExperimentsSpec extends SparkSpec {
     assert(combos.map(c => (c("use_meta_learner").asBoolean, c("synth_tuples").asInt, c("run").asInt)).distinct.size == 12)
   }
 
+  test("use_vicinity1 / use_vicinity2 map onto vicinityOrders") {
+    val f = com.fasterxml.jackson.databind.node.BooleanNode.FALSE
+    val t = com.fasterxml.jackson.databind.node.BooleanNode.TRUE
+    assert(Experiments.cleaningConfig(Map("use_vicinity1" -> f, "use_vicinity2" -> t)).vicinityOrders == Seq(2))
+    assert(Experiments.cleaningConfig(Map("use_vicinity2" -> t)).vicinityOrders == Seq(1, 2))
+    assert(Experiments.cleaningConfig(Map.empty).vicinityOrders == Seq(1))
+    assert(Experiments.cleaningConfig(Map("use_vicinity1" -> f)).vicinityOrders.isEmpty)
+  }
+
   test("the grid runs E2E and appends one results row per combination") {
     val base = Files.createTempDirectory("graft_exp").toString
     // debug fixture as CSVs (the reference's datasets/debug shape)

@@ -64,7 +64,7 @@ object EnsembleHarness {
     val cfg =
       if (referenceMembers)
         CleaningConfig(
-          useVicinity1 = false,
+          vicinityOrders = Seq.empty,
           usePdepVicinity = false,
           useImputer = false,
           useMlImputer = true,
@@ -76,7 +76,6 @@ object EnsembleHarness {
       else
         CleaningConfig(
           usePdepVicinity = true,
-          useVicinity2 = false,
           useMetaLearner = metaLearner,
           useMlImputer = true,
           useEntity = true

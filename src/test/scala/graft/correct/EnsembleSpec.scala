@@ -22,7 +22,7 @@ class EnsembleSpec extends SparkSpec {
   test("allCounts masks error cells on either side of the pair") {
     val errors = Seq(ErrorCell(3L, "r", "y")).toDF()
     val counts = Correctors
-      .allCounts(tbl, errors, "row_id", Seq("l", "r"))
+      .allCountsOrderN(tbl, errors, "row_id", Seq("l", "r"), 1)
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
       .toSet
@@ -35,6 +35,28 @@ class EnsembleSpec extends SparkSpec {
         ("r", "l", "z", "b", 1L)
       )
     )
+  }
+
+  test("allCountsOrderN admits 64/32/8 columns at orders 1/2/3 and rejects 65/33/9 before any job") {
+    val noErr = spark.emptyDataset[ErrorCell].toDF()
+    def wide(n: Int) =
+      spark.range(1).select(col("id").as("row_id") +: (1 to n).map(i => lit("v").as(s"c$i")): _*)
+    def counts(n: Int, order: Int) =
+      Correctors.allCountsOrderN(wide(n), noErr, "row_id", (1 to n).map(i => s"c$i"), order)
+    for ((admitted, order) <- Seq(64 -> 1, 32 -> 2, 8 -> 3)) {
+      val (_, jobs) = jobsDuring {
+        counts(admitted, order)
+        intercept[IllegalArgumentException](counts(admitted + 1, order))
+      }
+      assert(jobs == 0, s"order $order")
+    }
+  }
+
+  test("evaluate of an empty correction set is all zeros") {
+    val none = spark.emptyDataset[Correction].toDF()
+    val actual = Seq((1L, "r", "y")).toDF("row_id", "col", "clean_value")
+    val m = Correctors.evaluate(none, actual)
+    assert(m == Seq("ed_p", "ed_r", "ed_f", "ec_p", "ec_r", "ec_f").map(_ -> 0.0).toMap)
   }
 
   test("evaluateDF computes detection and correction P/R/F1") {
@@ -396,7 +418,7 @@ class EnsembleSpec extends SparkSpec {
     ).toDF("row_id", "l1", "l2", "r")
     val errors = Seq(ErrorCell(4L, "r", "BAD")).toDF()
     val counts = Correctors
-      .allCountsOrder2(df, errors, "row_id", Seq("l1", "l2", "r"))
+      .allCountsOrderN(df, errors, "row_id", Seq("l1", "l2", "r"), 2)
       .filter(col("rhs_col") === "r")
       .collect()
       .map(r => (r.getString(3), r.getString(4), r.getString(5), r.getLong(6)))
@@ -404,7 +426,7 @@ class EnsembleSpec extends SparkSpec {
     assert(counts == Set(("a", "p", "x", 2L), ("a", "q", "y", 1L)))
 
     val sugg = Correctors
-      .vicinityCorrectorOrder2(df, errors, "row_id", Seq("l1", "l2", "r"))
+      .vicinityCorrectorOrderN(df, errors, "row_id", Seq("l1", "l2", "r"), 2)
       .collect()
       .map(r => (r.getAs[String]("corrector"), r.getAs[String]("candidate"), r.getAs[Double]("score")))
       .toSet
@@ -412,7 +434,7 @@ class EnsembleSpec extends SparkSpec {
     assert(sugg == Set(("vicinity_2_l1_l2", "x", 1.0)))
   }
 
-  test("order-n vicinity generalizes: n=2 equals the dedicated path, n=3 conditions on triples") {
+  test("order-n vicinity: exact n=2 pair scores, n=3 triples") {
     val df = Seq(
       (1L, "a", "p", "u", "x"),
       (2L, "a", "p", "u", "x"),
@@ -423,15 +445,25 @@ class EnsembleSpec extends SparkSpec {
     val errors = Seq(ErrorCell(5L, "r", "BAD")).toDF()
     val cols = Seq("l1", "l2", "l3", "r")
 
-    // n=2 through the generic path == the dedicated order-2 corrector
-    // (same corrector names, candidates, and scores)
-    val gen2 = Correctors
+    // n=2: the error row's pairs (l1,l2)=(a,p) -> rows 1,2,3 (x,x,y);
+    // (l1,l3)=(a,u) -> rows 1,2,4 (x,x,y); (l2,l3)=(p,u) -> rows 1,2
+    val sugg2 = Correctors
       .vicinityCorrectorOrderN(df, errors, "row_id", cols, 2)
-      .select("row_id", "col", "corrector", "candidate", "score")
-    val ded2 = Correctors
-      .vicinityCorrectorOrder2(df, errors, "row_id", cols)
-      .select("row_id", "col", "corrector", "candidate", "score")
-    assert(gen2.except(ded2).isEmpty && ded2.except(gen2).isEmpty)
+      .collect()
+      .map(r =>
+        (r.getAs[Long]("row_id"), r.getAs[String]("col"), r.getAs[String]("corrector"), r.getAs[String]("candidate"),
+          r.getAs[Double]("score"))
+      )
+      .toSet
+    assert(
+      sugg2 == Set(
+        (5L, "r", "vicinity_2_l1_l2", "x", 2.0 / 3),
+        (5L, "r", "vicinity_2_l1_l2", "y", 1.0 / 3),
+        (5L, "r", "vicinity_2_l1_l3", "x", 2.0 / 3),
+        (5L, "r", "vicinity_2_l1_l3", "y", 1.0 / 3),
+        (5L, "r", "vicinity_2_l2_l3", "x", 1.0)
+      )
+    )
 
     // n=3: the error row's triple (l1,l2,l3)=(a,p,u) has clean
     // completions x,x (rows 1,2) -> pr 1.0 for x; order-2's pair
@@ -447,7 +479,7 @@ class EnsembleSpec extends SparkSpec {
 
     // masked: the error cell never contributes a candidate count
     val c3 = Correctors
-      .allCountsOrder3(df, errors, "row_id", cols)
+      .allCountsOrderN(df, errors, "row_id", cols, 3)
       .filter(col("rhs_col") === "r" && col("candidate") === "BAD")
     assert(c3.isEmpty)
 
@@ -461,8 +493,6 @@ class EnsembleSpec extends SparkSpec {
       noLabels,
       cfg = CleaningConfig(
         useFd = false,
-        useVicinity1 = false,
-        useVicinity2 = false,
         vicinityOrders = Seq(3),
         useImputer = false,
         useValue = false

@@ -36,7 +36,7 @@ class OpenmlDatasetsSpec extends SparkSpec {
     // (`global-performance.yaml` config_openml) — no vicinity members,
     // no frequency imputer; trained M1 carries the prediction
     val cfg = CleaningConfig(
-      useVicinity1 = false,
+      vicinityOrders = Seq.empty,
       useImputer = false,
       useMlImputer = true,
       useValue = false,

@@ -88,6 +88,24 @@ class PdepSpec extends SparkSpec {
     assert(s.n == 0 && s.pdepAB.isEmpty)
   }
 
+  test("gpdepTable runs one root SQL execution for 1 and for 6 FDs and caches nothing") {
+    val errors = Seq(ErrorCell(7L, "city", "Berln")).toDF()
+    val cols = Seq("name", "zip", "city")
+    val six = for { lhs <- cols; rhs <- cols if lhs != rhs } yield Fd(Seq(lhs), rhs)
+    for (fds <- Seq(six.take(1), six)) {
+      val before = cachedPlans
+      val (gp, executions) = rootExecutionsDuring(Pdep.gpdepTable(people, errors, "row_id", fds))
+      assert(executions == 1, s"${fds.size} FDs")
+      assert(gp.keySet == fds.map(_.key).toSet)
+      assert(cachedPlans <= before)
+    }
+    // the one-action table agrees with the single-FD view
+    val gp = Pdep.gpdepTable(people, noErrors, "row_id", six)
+    def rounded(s: PdepStats) =
+      (s.n, Seq(s.pdepB, s.pdepAB, s.epdep, s.gpdep).map(_.map(x => math.round(x * 1e9))))
+    six.foreach(fd => assert(rounded(gp(fd.key)._1) == rounded(Pdep.stats(people, noErrors, "row_id", fd))))
+  }
+
   test("cell diff finds exactly the differing cells") {
     val dirty = Seq((1L, "a", "x"), (2L, "b", "y")).toDF("row_id", "c1", "c2")
     val clean = Seq((1L, "a", "X"), (2L, "B", "y")).toDF("row_id", "c1", "c2")

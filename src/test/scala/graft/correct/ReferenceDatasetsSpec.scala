@@ -64,7 +64,7 @@ class ReferenceDatasetsSpec extends SparkSpec {
       else None
 
     val cfg =
-      CleaningConfig(usePdepVicinity = true, useVicinity2 = false, useMetaLearner = metaLearner)
+      CleaningConfig(usePdepVicinity = true, useMetaLearner = metaLearner)
     val corrections = Cleaning.run(dirty, "row_id", cols, detected, labels, cfg, cache = cache)
     val f1 = Correctors.evaluate(corrections, actual)("ec_f")
     val tag =
