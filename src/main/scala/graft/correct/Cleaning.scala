@@ -144,28 +144,30 @@ object Cleaning {
           .groupBy(_._1)
           .map { case (c, xs) => c -> xs.map(_._2).toSeq }
 
-    // step 6: in-engine FD mining + gpdep weights for the fd corrector
+    // step 6: in-engine FD mining + gpdep weights. ONE gpdep table
+    // serves the fd member's mined FDs and the pdep-vicinity member's
+    // dependencies: gpdep is per FD, and the fd member re-normalizes
+    // over its own FDs
     val cacheSuggestions = cache.map(c => Correctors.cacheCorrector(detected, c))
-    val fdMember =
-      if (!cfg.useFd) None
-      else {
-        val mined = Pdep
+    val mined: Seq[Fd] =
+      if (!cfg.useFd) Nil
+      else
+        Pdep
           .mineFds(df, correctorErrors, rowId, cols)
           .collect()
           .map(r => Fd(Seq(r.getString(0)), r.getString(1)))
           .toSeq
-        if (mined.isEmpty) None
-        else {
-          val gp = Pdep.gpdepTable(df, correctorErrors, rowId, mined)
-          Some(Correctors.fdCorrector(df, correctorErrors, rowId, gp, mined))
-        }
-      }
+    val pdepFds = if (cfg.usePdepVicinity) Correctors.pdepVicinityFds(correctorErrors, cols) else Nil
+    val gp = Pdep.gpdepTable(df, correctorErrors, rowId, (mined ++ pdepFds).distinct)
+    val fdMember =
+      if (mined.isEmpty) None
+      else Some(Correctors.fdCorrector(df, correctorErrors, rowId, Pdep.restrict(gp, mined), mined))
     val vicinityMembers = cfg.vicinityOrders.distinct.sorted.map { n =>
       Option(Correctors.vicinityCorrectorOrderN(df, correctorErrors, rowId, cols, n))
     }
     val suggestions = (((fdMember +: vicinityMembers) ++ Seq(
       if (cfg.usePdepVicinity)
-        Some(Correctors.vicinityCorrectorPdep(df, correctorErrors, rowId, cols, cfg.nBestPdeps))
+        Some(Correctors.vicinityCorrectorPdep(df, correctorErrors, rowId, cols, cfg.nBestPdeps, Some(gp)))
       else None,
       if (cfg.useImputer) Some(Correctors.frequencyImputer(df, correctorErrors, rowId, cols)) else None,
       if (cfg.useMlImputer)

@@ -72,6 +72,15 @@ object Correctors {
   def vicinityCorrectorOrder1(df: DataFrame, errors: DataFrame, rowId: String, cols: Seq[String]): DataFrame =
     vicinityCorrectorOrderN(df, errors, rowId, cols, 1)
 
+  /** The (lhs -> rhs) dependencies the pdep-ranked vicinity corrector
+    * ranks: every other column against each column holding an error
+    * (one small Spark job over `errors`).
+    */
+  def pdepVicinityFds(errors: DataFrame, cols: Seq[String]): Seq[Fd] = {
+    val errorCols = errors.select("col").distinct().collect().map(_.getString(0)).toSeq.sorted
+    for { rhs <- errorCols; lhs <- cols if lhs != rhs } yield Fd(Seq(lhs), rhs)
+  }
+
   /** Pdep-ranked vicinity corrector, order 1 (reference M4,
     * `src/pdep.py:450-499`): the order-1 vicinity join, restricted to
     * the `nBest` dependencies per error column, ranked by gpdep
@@ -79,18 +88,25 @@ object Correctors {
     * feature is the conditional probability of the candidate (the
     * reference's default `pdep_features=['pr']`). One corrector name
     * per surviving (lhs -> rhs) dependency (`vicinity_pdep_<lhs>`).
+    *
+    * `gpdeps`, when given, is a gpdep table built over at least
+    * [[pdepVicinityFds]] (as `Cleaning.run` shares one with the fd
+    * member); its entries whose rhs holds no error match no error cell
+    * and emit nothing. Without it the member builds its own.
     */
   def vicinityCorrectorPdep(
       df: DataFrame,
       errors: DataFrame,
       rowId: String,
       cols: Seq[String],
-      nBest: Int = 3
+      nBest: Int = 3,
+      gpdeps: Option[Map[String, (PdepStats, Double)]] = None
   ): DataFrame = {
-    val errorCols = errors.select("col").distinct().collect().map(_.getString(0)).toSeq.sorted
-    val fds = for { rhs <- errorCols; lhs <- cols if lhs != rhs } yield Fd(Seq(lhs), rhs)
-    if (fds.isEmpty) return emptySuggestions(df.sparkSession)
-    val gp = Pdep.gpdepTable(df, errors, rowId, fds)
+    val gp = gpdeps.getOrElse {
+      val fds = pdepVicinityFds(errors, cols)
+      if (fds.isEmpty) return emptySuggestions(df.sparkSession)
+      Pdep.gpdepTable(df, errors, rowId, fds)
+    }
     val surviving: Set[String] = gp.toSeq
       .groupBy(_._2._1.fd.rhs)
       .flatMap { case (_, deps) =>

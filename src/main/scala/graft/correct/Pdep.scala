@@ -172,8 +172,19 @@ object Pdep {
       errors: DataFrame,
       rowId: String,
       fds: Seq[Fd]
-  ): Map[String, (PdepStats, Double)] = {
-    val all = statsAll(df, errors, rowId, fds).map(s => s.fd.key -> s).toMap
+  ): Map[String, (PdepStats, Double)] =
+    normalized(statsAll(df, errors, rowId, fds))
+
+  /** The gpdep table of `fds` out of `table`, a gpdep table built over
+    * a superset of them. The statistics are per FD and carry over;
+    * only the per-rhs normalization is redone, over `fds`. Runs no
+    * Spark job.
+    */
+  def restrict(table: Map[String, (PdepStats, Double)], fds: Seq[Fd]): Map[String, (PdepStats, Double)] =
+    normalized(fds.map(fd => table(fd.key)._1))
+
+  private def normalized(stats: Seq[PdepStats]): Map[String, (PdepStats, Double)] = {
+    val all = stats.map(s => s.fd.key -> s).toMap
     val byRhs = all.values.groupBy(_.fd.rhs)
     val norm: Map[String, Double] = byRhs.flatMap { case (_, ss) =>
       val normSum = ss.flatMap(_.gpdep).sum

@@ -4,6 +4,7 @@ import graft.snapshot.SnapshotStore
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Incrementally maintained repair models for the pages pipeline.
   *
@@ -30,21 +31,32 @@ object PageModel {
 
   private def path(tiersRoot: String, id: Long) = s"$tiersRoot/_model/lang_counts_s$id"
 
+  /** The model's fixed (domain, lang, cnt) schema: reads pass it, so
+    * no read runs a schema-inference job.
+    */
+  private val Schema: StructType = StructType(
+    Seq(StructField("domain", StringType), StructField("lang", StringType), StructField("cnt", LongType))
+  )
+
   def exists(tiersRoot: String, id: Long): Boolean =
     Files.exists(Paths.get(path(tiersRoot, id)))
 
   def read(spark: SparkSession, tiersRoot: String, id: Long): DataFrame =
-    spark.read.parquet(path(tiersRoot, id))
+    spark.read.schema(Schema).parquet(path(tiersRoot, id))
 
   /** Roll the lang-count model forward from snapshot `from` to `to`
-    * and return the new model. Falls back to a full-range count when
-    * no model exists for `from` (first update, or a tiers table
-    * created before model maintenance existed).
+    * and return the new model. The old model's rows and the new
+    * batch's rows (each counting 1) meet under ONE aggregate. Falls
+    * back to a full-range count when no model exists for `from`
+    * (first update, or a tiers table created before model
+    * maintenance existed).
     */
   def update(spark: SparkSession, sourceRoot: String, tiersRoot: String, from: Long, to: Long): DataFrame = {
     val merged =
       if (from > 0 && exists(tiersRoot, from)) {
-        val batch = PagePipeline.langCounts(SnapshotStore.readRange(spark, sourceRoot, from, to))
+        val batch = SnapshotStore
+          .readRange(spark, sourceRoot, from, to)
+          .select(PageGen.domainOf("url").as("domain"), col("lang"), lit(1L).as("cnt"))
         read(spark, tiersRoot, from)
           .unionByName(batch)
           .groupBy("domain", "lang")

@@ -104,19 +104,24 @@ object PagePipeline {
     repairWithCounts(pages, langCounts(pages))
 
   /** Repair with an externally supplied (domain, lang, cnt) count
-    * model. The model must cover (at least) the domains present in
-    * `pages`; decisions then depend only on the model, so repairing a
+    * model. Lang decisions depend only on the model, so repairing a
     * pruned subset of the table equals restricting a full-table repair
     * to that subset — the exactness contract incremental tier updates
     * rely on.
     *
-    * Output: the repaired `PageCols`, then every other input column
-    * unchanged (`ContinuousRollup`'s stored-day column reaches its
-    * exact guard). A domain with a null majority lang keeps its lang.
+    * Output: one row per input row — the repaired `PageCols`, then
+    * every other input column unchanged (`ContinuousRollup`'s
+    * stored-day column reaches its exact guard). The model is joined
+    * on the left: a page whose domain the model lacks, or whose url is
+    * null, keeps its lang, like a domain with a null majority lang; its
+    * timestamp and text are still repaired. A query that reads only
+    * the repaired timestamp (the rollup's touched days) therefore
+    * plans no model join at all.
     */
   def repairWithCounts(pages: DataFrame, counts: DataFrame): DataFrame = {
     val majority = broadcast(majorityOf(counts).withColumnRenamed("domain", "__domain"))
-    val flagged = flagCols(pages.withColumn("__domain", PageGen.domainOf("url")).join(majority, "__domain"))
+    val flagged =
+      flagCols(pages.withColumn("__domain", PageGen.domainOf("url")).join(majority, Seq("__domain"), "left"))
     val passThrough = pages.columns.filterNot(PageCols.contains).map(c => col(s"`$c`"))
 
     // single output pass: pure-expression repairs + one broadcast join

@@ -27,12 +27,23 @@ object Tiers {
     // stays fixed-width — and deliberately absent from widthSeconds
     // (months have none).
     case "month" => date_trunc("month", ts)
+    // unix_seconds floors sub-second instants before 1970, where
+    // unix_timestamp truncates them into the next window
     case "30d" =>
       timestamp_seconds(
-        floor(unix_timestamp(ts) / ThirtyDaysSec).cast("long") * ThirtyDaysSec
+        floor(unix_seconds(ts.cast("timestamp")) / ThirtyDaysSec).cast("long") * ThirtyDaysSec
       )
     case other => throw new IllegalArgumentException(s"unknown tier $other")
   }
+
+  /** Start day of the 30d window that holds `day`: the driver-side twin
+    * of `to_date(bucket(ts, "30d"))` for any `ts` on that day, in a UTC
+    * session. Windows start at epoch multiples of 30 whole days, so a
+    * UTC day never straddles two; `floorDiv` keeps days before 1970 in
+    * the window below them.
+    */
+  def window30dOf(day: java.time.LocalDate): java.time.LocalDate =
+    java.time.LocalDate.ofEpochDay(Math.floorDiv(day.toEpochDay, 30L) * 30L)
 
   /** The coarser tier one step up (for hierarchical re-aggregation). */
   def parent(tier: String): Option[String] = tier match {

@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
   *     re-touch old partitions through the same path (no watermark
   *     drop).
   *
-  * Scale notes: `allRows` below prunes to touched partitions via a
-  * broadcast semi-join on the partition key; on a partitioned source
-  * table that predicate is partition pruning at the scan. Only new
+  * Scale notes: the 1m recompute keeps the touched days through a
+  * literal day predicate, and on a day-partitioned source the scan
+  * opens only the touched days' files. Only new
   * files decide WHAT to recompute — manifests are directory-level, so
   * the diff never scans data.
   *
@@ -65,16 +65,12 @@ object ContinuousRollup {
   def readTier(spark: SparkSession, tiersRoot: String, tier: String): DataFrame =
     spark.read.parquet(tierPath(tiersRoot, tier)).drop("part_key")
 
-  /** Partition key of a raw point for a tier: the day (1m/1h/1d) or
-    * the 30d window start. The day tiers recompute their touched
-    * partitions from raw rows carrying exactly that day; the 30d tier
-    * re-rolls up from the 1d tier (counts/sums/HLL are associative),
-    * so no tier ever reads raw data outside the touched days.
+  /** Partition key of a raw point: its day. Only the 1m tier reads raw
+    * points, from exactly the touched days; the coarser tiers re-roll
+    * up from the finer tier (counts/sums/HLL are associative), so no
+    * tier ever reads raw data outside the touched days.
     */
-  private def partKeyOfPoint(tsCol: String, tier: String): Column = tier match {
-    case "30d" => to_date(Tiers.bucket(col(tsCol), "30d"))
-    case _     => to_date(date_trunc("day", col(tsCol)))
-  }
+  private def partKeyOfPoint(tsCol: String): Column = to_date(date_trunc("day", col(tsCol)))
 
   private def partKeyOfBucket(tier: String): Column = tier match {
     case "30d" => to_date(col("bucket_ts"))
@@ -115,8 +111,10 @@ object ContinuousRollup {
     * Without day manifests it falls back to the full-range scan.
     *
     * NOTE (prepare contract, schema): EVERY `prepare` invocation of an
-    * update — the batch-side scan, the pruned branch, the unpruned
-    * branch, and the suspect-dir probe — receives the same one extra
+    * update — the batch-side scan, then the pruned or the unpruned
+    * table scan, plus the suspect-dir probe under the membership guard
+    * — reads the table's manifest-merged schema
+    * (`SnapshotStore.readDirs`) and receives the same one extra
     * synthetic column, `__graft_stored_day: string`. On the pruned
     * branch it carries the partition day the row's file was stored
     * under (feeding the exact guard below); on the other invocations
@@ -138,8 +136,9 @@ object ContinuousRollup {
     * fall out of every future recompute of its new day, so the update
     * counts such rows and fails loudly instead of diverging; the count
     * is also recorded in `_metrics.contract_violations`. Two guard
-    * tiers, both riding the batch's cache-materialization pass as an
-    * `observe` metric (no second read of the pruned data):
+    * tiers, both riding the 1m output's materialization pass as an
+    * `observe` metric (no second read of the pruned data), which runs
+    * before any tier write:
     *   - exact: the stored day is attached AT the scan (the one place
     *     `input_file_name` is legal) and compared per row after
     *     `prepare`, whenever `prepare` passes unknown columns through;
@@ -169,43 +168,50 @@ object ContinuousRollup {
 
     // an empty day-partitioned append commits a manifest with no data
     // dirs at all — nothing to fold, mark applied and return
-    if (SnapshotStore.resolveDirs(sourceRoot, from, to).isEmpty) {
+    val newDirs = SnapshotStore.resolveDirs(sourceRoot, from, to)
+    if (newDirs.isEmpty) {
       writeApplied(tiersRoot, to)
       return to
     }
+    // the driver derives each touched day's 30d window; that is exact
+    // only where days are UTC days
+    val sessionZone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
+    require(
+      sessionZone.normalized() == java.time.ZoneOffset.UTC,
+      s"ContinuousRollup needs a UTC session time zone (spark.sql.session.timeZone), got $sessionZone"
+    )
 
     val StoredDayCol = "__graft_stored_day"
     val dayRe = "part_day=([0-9]{4}-[0-9]{2}-[0-9]{2})"
+    // every scan of this update reads the table's manifest schema: one
+    // shape for every prepare invocation, and no schema-inference job
+    def scan(dirs: Seq[String]): DataFrame = SnapshotStore.readDirs(spark, sourceRoot, to, dirs)
 
-    // one tiny job over the prepared batch (its only consumer — no
-    // cache): the days its points land on (post-repair) and the 30d
-    // windows they touch. Days decide both the pruned raw read and the
-    // 1m/1h/1d recomputes; windows decide which 30d partitions re-roll
-    // up from the 1d tier. The synthetic stored-day column is attached
-    // as "" (value unused here) so prepare sees the same schema as on
-    // the tier-feeding scans below.
-    val newRows =
-      prepare(SnapshotStore.readRange(spark, sourceRoot, from, to).withColumn(StoredDayCol, lit("")))
-    val touchedKeys = newRows
-      .select(
-        to_date(col(tsCol)).as("d"),
-        to_date(Tiers.bucket(col(tsCol), "30d")).as("w")
-      )
+    // one tiny action over the prepared batch (its only consumer — no
+    // cache): the days its points land on (post-repair). Days decide
+    // the pruned raw read and the 1m/1h/1d recomputes; their 30d
+    // windows, derived on the driver, decide which 30d partitions
+    // re-roll up from the 1d tier. The query reads only the
+    // partition-deciding timestamp, so a prepare's model lookups for
+    // other columns drop out of its plan. The synthetic stored-day
+    // column is attached as "" (value unused here) so prepare sees the
+    // same schema as on the tier-feeding scans below.
+    val newRows = prepare(scan(newDirs).withColumn(StoredDayCol, lit("")))
+    val days = newRows
+      .select(to_date(col(tsCol)).as("d"))
       .distinct()
       .collect()
-    val days = touchedKeys.iterator.filterNot(_.isNullAt(0)).map(_.getDate(0).toLocalDate).toSet
-    val windows = touchedKeys.iterator.filterNot(_.isNullAt(1)).map(_.getDate(1).toLocalDate).toSet
-    if (days.isEmpty && windows.isEmpty) {
+      .iterator
+      .filterNot(_.isNullAt(0))
+      .map(_.getDate(0).toLocalDate)
+      .toSet
+    val windows = days.map(Tiers.window30dOf)
+    if (days.isEmpty) {
       // every prepared row has a null timestamp: nothing lands in any
       // tier partition — same clean no-op as an empty append
       writeApplied(tiersRoot, to)
       return to
     }
-    // full day span of every touched 30d window — 1d TIER partitions
-    // the 30d re-rollup reads (never raw files)
-    val windowSpanDays: Seq[java.time.LocalDate] =
-      windows.toSeq.flatMap(w => (0 until 30).map(i => w.plusDays(i.toLong))).distinct.sorted
-
     val canPrune = SnapshotStore.hasDayInfo(sourceRoot, 0L, to)
 
     // Why suspect-row landing days need no special recompute handling:
@@ -225,7 +231,7 @@ object ContinuousRollup {
     val (prepared, readDirs, dirsTotal) =
       if (!canPrune) {
         val dirs = SnapshotStore.resolveDirs(sourceRoot, 0L, to)
-        (prepare(spark.read.parquet(dirs: _*).withColumn(StoredDayCol, lit(""))), dirs, dirs.size)
+        (prepare(scan(dirs).withColumn(StoredDayCol, lit(""))), dirs, dirs.size)
       } else {
         val dirs = SnapshotStore.resolveDirs(sourceRoot, 0L, to, Some(neededDays), suspectDay)
         val total = SnapshotStore.resolveDirs(sourceRoot, 0L, to)
@@ -240,10 +246,7 @@ object ContinuousRollup {
         // where input_file_name is legal when `prepare` adds more file
         // sources (count models etc.); from here on it is a plain data
         // column that survives shuffles and joins
-        val scan = spark.read
-          .parquet(dirs: _*)
-          .withColumn(StoredDayCol, regexp_extract(input_file_name(), dayRe, 1))
-        (prepare(scan), dirs, total.size)
+        (prepare(scan(dirs).withColumn(StoredDayCol, regexp_extract(input_file_name(), dayRe, 1))), dirs, total.size)
       }
     val dirsRead = readDirs.size
 
@@ -261,17 +264,13 @@ object ContinuousRollup {
     val exactGuard = canPrune && realStoredDays.nonEmpty && prepared.columns.contains(StoredDayCol)
     val memberGuard = canPrune && realStoredDays.nonEmpty && !exactGuard
     val dayStr = to_date(col(tsCol)).cast("string")
-    // rows landing on this update's touched days — observed on the same
-    // cache-materialization pass as the guard; an upper bound on the 1m
-    // tier output that drives its write-layout branch with no extra job
-    val touchedRowsAgg = count(when(dayStr.isin(neededDays.toSeq: _*), lit(1))).as("touched_rows")
     val allRows =
       if (exactGuard) {
         // exact tier: per-row comparison of post-prepare day vs the
         // day the row's file was stored under
         val violation = col(StoredDayCol).isin(realStoredDays: _*) &&
           (dayStr =!= col(StoredDayCol) || col(tsCol).isNull)
-        prepared.observe(guardObs, count(when(violation, lit(1))).as("violations"), touchedRowsAgg)
+        prepared.observe(guardObs, count(when(violation, lit(1))).as("violations"))
       } else if (memberGuard) {
         // membership tier: `prepare` dropped the stored-day column, so
         // fall back to set membership. Days that suspect/null-partition
@@ -282,7 +281,7 @@ object ContinuousRollup {
         val landedDays: Set[String] =
           if (suspectDirs.isEmpty) Set.empty
           else
-            prepare(spark.read.parquet(suspectDirs: _*).withColumn(StoredDayCol, lit("")))
+            prepare(scan(suspectDirs).withColumn(StoredDayCol, lit("")))
               .select(dayStr.as("d"))
               .filter(col("d").isNotNull)
               .distinct()
@@ -291,22 +290,43 @@ object ContinuousRollup {
               .toSet
         val allowed = (neededDays ++ landedDays).toSeq
         val violation = col(tsCol).isNotNull && !dayStr.isin(allowed: _*)
-        prepared.observe(guardObs, count(when(violation, lit(1))).as("violations"), touchedRowsAgg)
-      } else prepared.observe(guardObs, lit(0L).as("violations"), touchedRowsAgg)
+        prepared.observe(guardObs, count(when(violation, lit(1))).as("violations"))
+      } else prepared.observe(guardObs, lit(0L).as("violations"))
 
     val lineageRows = scala.collection.mutable.ArrayBuffer[(String, String, Long, Long, Long)]()
     val t0 = System.nanoTime()
 
-    // ONE action over the pruned scan: materializes the shared cache
-    // that feeds every tier recompute AND fires the contract guard and
-    // the touched-row count as observed metrics of the same pass
-    allRows.cache()
-    allRows.count()
+    def outputOf(tier: String, recomputed: DataFrame): DataFrame =
+      recomputed.withColumn("part_key", partKeyOfBucket(tier))
+
+    // the single raw aggregation of the update. 1h and 1d both re-roll
+    // up this output IN MEMORY (associative measures: 1m -> 1d equals
+    // 1m -> 1h -> 1d; RollupSpec pins fromRaw == reRollup): it covers
+    // the touched days completely (ALL raw rows of those days, not
+    // just the batch), so it equals the freshly written 1m partitions
+    // without a file read-back. It is the one cached tier output —
+    // each cache costs its own materialization job, and 1h, 1d and
+    // 30d are read by nothing else in the update (30d reads the 1d
+    // FILES: its windows span days written by earlier updates).
+    // Touched days are a driver-side literal, pushable to the scan; the
+    // synthetic column never reaches a tier aggregation.
+    val touchedDays = days.toSeq.sorted.map(java.sql.Date.valueOf)
+    val affected = allRows
+      .drop(StoredDayCol)
+      .withColumn("part_key", partKeyOfPoint(tsCol))
+      .filter(col("part_key").isin(touchedDays: _*))
+    val out1m = outputOf("1m", Rollup.fromRaw(affected, series, tsCol, "1m", sizeCol, langCol = langCol)).cache()
+    // ONE action over the pruned scan, before any tier write: a no-op
+    // write materializes the cached 1m output AND fires the contract
+    // guard and the 1m row count (the 1m write-layout bound), observed
+    // on the same pass — unlike `count()`, with no aggregation stage
+    val rows1mObs = Observation(s"graft_rows_1m_${tiersRoot.hashCode.toHexString}_$to")
+    out1m.observe(rows1mObs, count(lit(1)).as("rows")).write.format("noop").mode("overwrite").save()
+    val rows1m = rows1mObs.get("rows").asInstanceOf[Long]
     val contractViolations: Long =
       if (exactGuard || memberGuard) guardObs.get("violations").asInstanceOf[Long] else 0L
-    val touchedRows: Long = guardObs.get("touched_rows").asInstanceOf[Long]
     if (contractViolations > 0) {
-      allRows.unpersist()
+      out1m.unpersist()
       val guardScope =
         if (exactGuard) "exact guard: per-row stored-day comparison"
         else
@@ -320,58 +340,35 @@ object ContinuousRollup {
           "for rows stored under suspect days (see `suspectDay`), or maintain those repairs externally."
       )
     }
-    // the synthetic column (whichever branch attached it, if prepare
-    // passed it through) never reaches a tier aggregation
-    val tierRows = allRows.drop(StoredDayCol)
-
-    // cascade state: the still-cached recomputed output of the
-    // previous (finer) tier. 1h and 1d re-rollup from it IN MEMORY —
-    // the touched 1m/1h/1d part keys are all the same day set, and the
-    // finer output covers those days completely (it was aggregated
-    // from ALL raw rows of the touched days, not just the batch), so
-    // the cached frame equals the freshly written tier partitions
-    // without a file read-back. Only 30d goes to the 1d tier FILES:
-    // its window span includes days written by earlier updates.
-    var finerOut: Option[DataFrame] = None
-    // conservative output-size bound for each tier's write-layout
-    // branch: aggregation only shrinks, so the 1m output is bounded by
-    // the touched-day row count observed above, and each coarser tier
-    // by the finer tier's observed output rows (30d scales 1d's by its
+    // output-size bound for each tier's write-layout branch: the 1m
+    // output's exact count, then, as aggregation only shrinks, the
+    // finer tier's observed output rows (30d scales 1d's by its
     // window-span ratio — a layout heuristic only, never correctness)
-    var finerRowsOut: Long = touchedRows
+    var finerRowsOut: Long = rows1m
 
     def runTier(tier: String): (String, String, Long, Long, Long) = {
-      val recomputed0 = tier match {
-        case "1m" =>
-          // the single raw aggregation of the update: every coarser
-          // tier re-rolls up from this result (associative measures;
-          // RollupSpec pins fromRaw == reRollup). Touched days are a
-          // driver-side literal — a plain pushable predicate at the
-          // scan, cheaper than the former broadcast semi-join.
-          val touchedDays = days.toSeq.sorted.map(java.sql.Date.valueOf)
-          val affected = tierRows
-            .withColumn("part_key", partKeyOfPoint(tsCol, tier))
-            .filter(col("part_key").isin(touchedDays: _*))
-          Rollup.fromRaw(affected, series, tsCol, tier, sizeCol, langCol = langCol)
-        case "1h" =>
-          Rollup.reRollup(finerOut.get.drop("part_key"), series, "1m" -> "1h")
-        case "1d" =>
-          Rollup.reRollup(finerOut.get.drop("part_key"), series, "1h" -> "1d")
+      val out = tier match {
+        case "1m" => out1m
+        case "1h" | "1d" => outputOf(tier, Rollup.reRollup(out1m.drop("part_key"), series, "1m" -> tier))
         case "30d" =>
           // a touched 30d window re-rolls up its day span from the 1d
           // TIER (days outside this batch were written by earlier
           // updates) — the raw read stays pruned to the touched days.
-          // Literal day list => static partition pruning at the scan.
-          val finer = spark.read
-            .parquet(tierPath(tiersRoot, "1d"))
-            .filter(col("part_key").isin(windowSpanDays.map(java.sql.Date.valueOf): _*))
-            .drop("part_key")
-          Rollup.reRollup(finer, series, "1d" -> "30d")
+          // Each window reads only its existing 1d day dirs (at most
+          // 30, within Spark's serial-listing threshold of 32) in the
+          // 1d output's schema: no listing job, no schema-inference
+          // job, however long the tier's history
+          val daySchema = Rollup.reRollup(out1m.drop("part_key"), series, "1m" -> "1d").schema
+          val finer = windows.toSeq.sorted
+            .map { w =>
+              val dirs = (0 until 30)
+                .map(i => s"${tierPath(tiersRoot, "1d")}/part_key=${w.plusDays(i.toLong)}")
+                .filter(d => Files.exists(Paths.get(d)))
+              spark.read.schema(daySchema).parquet(dirs: _*)
+            }
+            .reduce(_ unionByName _)
+          outputOf(tier, Rollup.reRollup(finer, series, "1d" -> "30d"))
       }
-      // cache the ROLLUP OUTPUT (tiny) before clustering: the range
-      // partitioner's sampling pass and the write would otherwise each
-      // re-execute the whole tier aggregation
-      val out = recomputed0.withColumn("part_key", partKeyOfBucket(tier)).cache()
       // cluster rows by their output partition before the partitioned
       // write: otherwise every shuffle task holds rows of every
       // part_key and the write fans out |tasks| × |partitions| tiny
@@ -381,13 +378,13 @@ object ContinuousRollup {
       // tiers (1d/30d) are re-rollups of already-tiny tier rows, where
       // range-partitioning's sampling job costs more than the write —
       // hash-cluster those on part_key instead.
-      // explicit partition count: with the child cached, AQE has
-      // accurate (tiny-at-test-scale) size stats and would coalesce an
+      // explicit partition count: AQE has the tier output's accurate
+      // (tiny-at-test-scale) size stats and would coalesce an
       // unnumbered range shuffle to ONE task, serializing the hot-day
       // write the range layout exists to parallelize
       val nWrite = spark.conf.get("spark.sql.shuffle.partitions").toInt
       // write layout branches on the CONSERVATIVE row bound (finer
-      // tier's observed output; touched raw rows for 1m) instead of a
+      // tier's observed output; the exact count for 1m) instead of a
       // dedicated count job: below the threshold the clustering shuffle
       // costs more than it saves — one writer task emits one file per
       // part_key dir with no exchange and a single task-commit round.
@@ -396,7 +393,7 @@ object ContinuousRollup {
       // metric; partitions written are driver-known by construction
       // (every touched day/window carries at least one batch row).
       val bound = tier match {
-        case "30d" => finerRowsOut / math.max(days.size, 1) * windowSpanDays.size + 1
+        case "30d" => finerRowsOut / math.max(days.size, 1) * windows.size * 30 + 1
         case _     => finerRowsOut
       }
       val clustered =
@@ -420,20 +417,15 @@ object ContinuousRollup {
         .parquet(path)
       val rowsOut = rowsObs.get("rows_out").asInstanceOf[Long]
       val partsOut = if (tier == "30d") windows.size.toLong else days.size.toLong
-      // hand the cached output to the next (coarser) tier's re-rollup
-      // and release the previous one
-      finerOut.foreach(_.unpersist())
-      finerOut = Some(out)
       finerRowsOut = rowsOut
       (tier, s"($from,$to]", rowsOut, partsOut, to)
     }
 
-    // Tiers run sequentially — each re-rolls up the cached output of
-    // the previous one, and the fine tiers are full-width
+    // Tiers run sequentially — the fine tiers are full-width
     // shuffle+write jobs that already use every core (overlapping
     // 1m/1h was measured SLOWER at sf0.1: cache/shuffle contention).
     Tiers.All.foreach(t => lineageRows += runTier(t))
-    finerOut.foreach(_.unpersist())
+    out1m.unpersist()
 
     // one run-log append carries BOTH the per-tier lineage rows and the
     // run metrics row (kind column discriminates) — a single tiny write
@@ -489,7 +481,6 @@ object ContinuousRollup {
       .mode("append")
       .parquet(s"$tiersRoot/_runlog")
 
-    allRows.unpersist()
     writeApplied(tiersRoot, to)
     to
   }

@@ -619,6 +619,36 @@ object SnapshotStore {
     } else readIds(spark, root, kept, 0L).filter(pred)
   }
 
+  /** Parquet read of `dirs`, data dirs of the snapshots `dataIds`, with
+    * their metadata-merged schema when every one recorded it. A read
+    * without a schema runs a footer-inference Spark job before any
+    * data moves; legacy manifests without a recorded schema fall back
+    * to it.
+    */
+  private def readDataDirs(spark: SparkSession, root: String, dataIds: Seq[Long], dirs: Seq[String]): DataFrame = {
+    val schemas = dataIds.map(id => Option(manifest(root, id).get("schemaJson")).map(_.asText()))
+    if (schemas.nonEmpty && schemas.forall(_.isDefined)) {
+      val merged = mergeSchemas(
+        schemas.flatten.map(j =>
+          org.apache.spark.sql.types.DataType.fromJson(j).asInstanceOf[org.apache.spark.sql.types.StructType])
+      )
+      spark.read.schema(merged).parquet(dirs: _*)
+    } else spark.read.parquet(dirs: _*)
+  }
+
+  /** Parquet read of `dirs` — data dirs that [[resolveDirs]] returned
+    * for a range ending at `toInclusive` — in the schema of the whole
+    * table (0, `toInclusive`], so every pruned subset of one update
+    * reads one shape and runs no schema-inference job.
+    */
+  private[snapshot] def readDirs(spark: SparkSession, root: String, toInclusive: Long, dirs: Seq[String]): DataFrame =
+    readDataDirs(
+      spark,
+      root,
+      effectiveIds(root, 0L, toInclusive).filterNot(id => manifest(root, id).has("deleteKeyCols")),
+      dirs
+    )
+
   private def readIds(spark: SparkSession, root: String, ids: Seq[Long], fromExclusive: Long): DataFrame = {
     val (delIds, dataIds) = ids.partition(id => manifest(root, id).has("deleteKeyCols"))
     require(
@@ -628,15 +658,7 @@ object SnapshotStore {
     )
     val dirs = expandDataDirs(root, dataIds, None, _ => false)
     require(dirs.nonEmpty, s"no data dirs in snapshots ${ids.mkString("{", ",", "}")} of $root")
-    val schemas = dataIds.map(id => Option(manifest(root, id).get("schemaJson")).map(_.asText()))
-    val data =
-      if (schemas.nonEmpty && schemas.forall(_.isDefined)) {
-        val merged = mergeSchemas(
-          schemas.flatten.map(j =>
-            org.apache.spark.sql.types.DataType.fromJson(j).asInstanceOf[org.apache.spark.sql.types.StructType])
-        )
-        spark.read.schema(merged).parquet(dirs: _*)
-      } else spark.read.parquet(dirs: _*)
+    val data = readDataDirs(spark, root, dataIds, dirs)
     if (delIds.isEmpty) data
     else {
       val keyColsPer = delIds.map(id =>

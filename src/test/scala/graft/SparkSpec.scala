@@ -1,10 +1,11 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{GraftTestHooks, SparkSession}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Shared local SparkSession for suites (one per JVM; sbt runs suites
   * in a single forked JVM so every suite reuses this session).
@@ -22,20 +23,42 @@ trait SparkSpec extends AnyFunSuite {
   def cachedPlans: Int = GraftTestHooks.cachedPlans(spark)
 
   /** Runs `body` and counts the Spark jobs it started. */
-  def jobsDuring[A](body: => A): (A, Int) =
-    eventsDuring(body) { case _: SparkListenerJobStart => true }
+  def jobsDuring[A](body: => A): (A, Int) = {
+    val (a, jobs) = jobStartsDuring(body)
+    (a, jobs.size)
+  }
+
+  /** Runs `body` and returns the start events of the Spark jobs it
+    * started, in order.
+    */
+  def jobStartsDuring[A](body: => A): (A, Seq[SparkListenerJobStart]) = {
+    val (a, events) = eventsDuring(body) { case _: SparkListenerJobStart => true }
+    (a, events.collect { case j: SparkListenerJobStart => j })
+  }
+
+  /** True for a job started outside any SQL execution: a read-time
+    * schema-inference (footer) or file-listing job, which moves no
+    * table data.
+    */
+  def outsideSqlExecution(job: SparkListenerJobStart): Boolean =
+    Option(job.properties).forall(_.getProperty("spark.sql.execution.id") == null)
 
   /** Runs `body` and counts the root SQL executions it started — one
     * per action, however many jobs AQE splits it into.
     */
-  def rootExecutionsDuring[A](body: => A): (A, Int) =
-    eventsDuring(body) { case e: SparkListenerSQLExecutionStart => e.rootExecutionId.forall(_ == e.executionId) }
+  def rootExecutionsDuring[A](body: => A): (A, Int) = {
+    val (a, events) =
+      eventsDuring(body) { case e: SparkListenerSQLExecutionStart => e.rootExecutionId.forall(_ == e.executionId) }
+    (a, events.size)
+  }
 
-  private def eventsDuring[A](body: => A)(counted: PartialFunction[SparkListenerEvent, Boolean]): (A, Int) = {
+  private def eventsDuring[A](body: => A)(
+      counted: PartialFunction[SparkListenerEvent, Boolean]
+  ): (A, Seq[SparkListenerEvent]) = {
     val sc = spark.sparkContext
-    val n = new AtomicInteger
+    val seen = new ConcurrentLinkedQueue[SparkListenerEvent]
     val listener = new SparkListener {
-      private def see(e: SparkListenerEvent): Unit = if (counted.applyOrElse(e, (_: SparkListenerEvent) => false)) n.incrementAndGet()
+      private def see(e: SparkListenerEvent): Unit = if (counted.applyOrElse(e, (_: SparkListenerEvent) => false)) seen.add(e)
       override def onJobStart(e: SparkListenerJobStart): Unit = see(e)
       override def onOtherEvent(e: SparkListenerEvent): Unit = see(e)
     }
@@ -44,7 +67,7 @@ trait SparkSpec extends AnyFunSuite {
     try {
       val a = body
       GraftTestHooks.drain(sc)
-      (a, n.get)
+      (a, seen.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 }

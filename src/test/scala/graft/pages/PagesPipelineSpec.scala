@@ -28,6 +28,21 @@ class PagesPipelineSpec extends SparkSpec {
       col("lang")
     )
 
+  /** `Main job=update`: roll the lang-count model forward, then fold
+    * the new snapshots into every tier with the model-based repair.
+    */
+  private def pagesUpdate(root: String, tiers: String): Long = {
+    import graft.snapshot.{ContinuousRollup, SnapshotStore}
+    val from = ContinuousRollup.lastApplied(tiers)
+    val to = SnapshotStore.currentSnapshotId(root)
+    val model = PageModel.update(spark, root, tiers, from, to)
+    ContinuousRollup.update(
+      spark, root, tiers, Seq("domain", "lang"), "warc_ts",
+      length(col("html")).cast("long"),
+      prepare = df => PagePipeline.repairWithCounts(df, model).withColumn("domain", PageGen.domainOf("url"))
+    )
+  }
+
   private def mapFree(df: DataFrame): DataFrame =
     if (df.columns.contains("lang_hist"))
       df.withColumn("lang_hist", array_sort(map_entries(col("lang_hist"))))
@@ -113,20 +128,10 @@ class PagesPipelineSpec extends SparkSpec {
     val b1 = PageGen.corrupt(clean.filter(col("warc_ts") < "2024-02-01"))
     val b2 = PageGen.corrupt(clean.filter(col("warc_ts") >= "2024-02-01"))
 
-    def upd(): Long = {
-      val from = ContinuousRollup.lastApplied(tiers)
-      val to = SnapshotStore.currentSnapshotId(root)
-      val model = PageModel.update(spark, root, tiers, from, to)
-      ContinuousRollup.update(
-        spark, root, tiers, Seq("domain", "lang"), "warc_ts",
-        length(col("html")).cast("long"),
-        prepare = df => PagePipeline.repairWithCounts(df, model).withColumn("domain", PageGen.domainOf("url"))
-      )
-    }
     SnapshotStore.append(root, b1, tsCol = Some("warc_ts"))
-    upd()
+    pagesUpdate(root, tiers)
     SnapshotStore.append(root, b2, tsCol = Some("warc_ts"))
-    upd()
+    pagesUpdate(root, tiers)
 
     // the second update pruned: days 01-01..01-16 (previous 30d
     // window, untouched by a February crawl) were never opened
@@ -223,25 +228,68 @@ class PagesPipelineSpec extends SparkSpec {
   }
 
   test("a pages update leaves the cache manager no larger than before") {
-    import graft.snapshot.{ContinuousRollup, SnapshotStore}
+    import graft.snapshot.SnapshotStore
     val base = java.nio.file.Files.createTempDirectory("pages_cache").toString
     val (root, tiers) = (s"$base/src", s"$base/tiers")
     clean.count() // the spec's own cached fixture
     val before = cachedPlans
-    def upd(): Long = {
-      val from = ContinuousRollup.lastApplied(tiers)
-      val to = SnapshotStore.currentSnapshotId(root)
-      val model = PageModel.update(spark, root, tiers, from, to)
-      ContinuousRollup.update(
-        spark, root, tiers, Seq("domain", "lang"), "warc_ts",
-        length(col("html")).cast("long"),
-        prepare = df => PagePipeline.repairWithCounts(df, model).withColumn("domain", PageGen.domainOf("url"))
-      )
-    }
     SnapshotStore.append(root, PageGen.corrupt(clean.filter(col("warc_ts") < "2024-02-01")), tsCol = Some("warc_ts"))
-    assert(upd() == 1L)
+    assert(pagesUpdate(root, tiers) == 1L)
     SnapshotStore.append(root, PageGen.corrupt(clean.filter(col("warc_ts") >= "2024-02-01")), tsCol = Some("warc_ts"))
-    assert(upd() == 2L)
+    assert(pagesUpdate(root, tiers) == 2L)
     assert(cachedPlans <= before, s"cache manager grew from $before to $cachedPlans entries")
+  }
+
+  test("a second pages update runs only data jobs, within its job budget") {
+    import graft.snapshot.SnapshotStore
+    val base = java.nio.file.Files.createTempDirectory("pages_jobs").toString
+    val (root, tiers) = (s"$base/src", s"$base/tiers")
+    SnapshotStore.append(root, PageGen.corrupt(clean.filter(col("warc_ts") < "2024-02-01")), tsCol = Some("warc_ts"))
+    assert(pagesUpdate(root, tiers) == 1L)
+    SnapshotStore.append(root, PageGen.corrupt(clean.filter(col("warc_ts") >= "2024-02-01")), tsCol = Some("warc_ts"))
+    val (applied, jobs) = jobStartsDuring(pagesUpdate(root, tiers))
+    assert(applied == 2L)
+    def described(js: Seq[org.apache.spark.scheduler.SparkListenerJobStart]) =
+      js.map(j => j.stageInfos.map(_.name).mkString("+")).mkString("; ")
+    // model: merge + write (2); touched days (2); 1m output with the
+    // contract guard (5: majority, broadcast, aggregate, cache, no-op
+    // write); tier writes 1m (1), 1h/1d/30d (2 each); run log (1)
+    assert(jobs.size <= 17, s"${jobs.size} jobs: ${described(jobs)}")
+    val inference = jobs.filter(outsideSqlExecution)
+    assert(inference.isEmpty, s"schema-inference or listing jobs ran: ${described(inference)}")
+  }
+
+  test("pages the model does not cover pass through: lang kept, timestamp and text still repaired") {
+    import spark.implicits._
+    val ts = java.sql.Timestamp.valueOf("2024-01-02 00:00:00")
+    val epoch = new java.sql.Timestamp(0L)
+    def html(id: Int) = s"<!--warc_ts:${ts.getTime / 1000}--><html><body>t$id</body></html>".getBytes("UTF-8")
+    def page(url: String, id: Int, lang: String, corrupt: Boolean) =
+      (url, if (corrupt) epoch else ts, html(id), if (corrupt) "" else s"t$id", lang)
+    val pages = Seq(
+      // covered: the de row is repaired to the majority en
+      page("https://a.example/p/1", 1, "en", corrupt = false),
+      page("https://a.example/p/2", 2, "de", corrupt = false),
+      // a domain the model lacks, and a null url: lang kept, the
+      // corrupt timestamp and emptied text repaired from the html
+      page("https://z.example/p/3", 3, "fr", corrupt = true),
+      page(null, 4, "de", corrupt = true)
+    ).toDF(PagePipeline.PageCols: _*)
+    val model = Seq(("a.example", "en", 2L), ("a.example", "de", 1L)).toDF("domain", "lang", "cnt")
+    val got = PagePipeline
+      .repairWithCounts(pages, model)
+      .select("url", "warc_ts", "text", "lang")
+      .as[(String, java.sql.Timestamp, String, String)]
+      .collect()
+      .sortBy(_._3)
+      .toSeq
+    assert(
+      got == Seq(
+        ("https://a.example/p/1", ts, "t1", "en"),
+        ("https://a.example/p/2", ts, "t2", "en"),
+        ("https://z.example/p/3", ts, "t3", "fr"),
+        (null, ts, "t4", "de")
+      )
+    )
   }
 }

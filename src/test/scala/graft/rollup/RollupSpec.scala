@@ -120,5 +120,31 @@ class RollupSpec extends SparkSpec {
     assert(b == "2023-12-19 00:00:00") // floor(1704449400/2592000)*2592000 = 1702944000
   }
 
+  test("the driver-side 30d window of a day equals to_date(bucket(ts, 30d)) across window edges") {
+    val edges = Seq(-60L, -30L, 0L, 30L, 19710L).map(d => java.time.Instant.ofEpochSecond(d * 86400L))
+    val offsets = Seq(
+      java.time.Duration.ofNanos(-1000L),
+      java.time.Duration.ZERO,
+      java.time.Duration.ofSeconds(1L),
+      java.time.Duration.ofHours(12L),
+      java.time.Duration.ofDays(1L).minusNanos(1000L)
+    )
+    val stamps = for (e <- edges; o <- offsets) yield java.sql.Timestamp.from(e.plus(o))
+    val rows = stamps
+      .map(Tuple1(_))
+      .toDF("t")
+      .select(to_date(col("t")).as("d"), to_date(Tiers.bucket(col("t"), "30d")).as("w"))
+      .collect()
+      .map(r => (r.getDate(0).toLocalDate, r.getDate(1).toLocalDate))
+    assert(rows.length == stamps.size)
+    rows.foreach { case (d, w) => assert(Tiers.window30dOf(d) == w, s"day $d: driver ${Tiers.window30dOf(d)}, Spark $w") }
+    // both sides of the epoch, and 1970-01-01 itself (the unrepaired
+    // sentinel day) in the window that starts on it
+    val days = rows.map(_._1).toSet
+    assert(days.contains(java.time.LocalDate.parse("1969-12-31")) && days.contains(java.time.LocalDate.parse("1970-01-01")))
+    assert(Tiers.window30dOf(java.time.LocalDate.parse("1969-12-31")) == java.time.LocalDate.parse("1969-12-02"))
+    assert(Tiers.window30dOf(java.time.LocalDate.parse("1970-01-01")) == java.time.LocalDate.parse("1970-01-01"))
+  }
+
   private def ts(s: String): java.sql.Timestamp = java.sql.Timestamp.valueOf(s)
 }
