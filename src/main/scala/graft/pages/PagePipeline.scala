@@ -110,13 +110,13 @@ object PagePipeline {
     * rely on.
     *
     * Output: one row per input row — the repaired `PageCols`, then
-    * every other input column unchanged (`ContinuousRollup`'s
-    * stored-day column reaches its exact guard). The model is joined
-    * on the left: a page whose domain the model lacks, or whose url is
-    * null, keeps its lang, like a domain with a null majority lang; its
-    * timestamp and text are still repaired. A query that reads only
-    * the repaired timestamp (the rollup's touched days) therefore
-    * plans no model join at all.
+    * every other input column unchanged (`ContinuousRollup.update`
+    * requires its stored-day column back, for the exact guard). The
+    * model is joined on the left: a page whose domain the model lacks,
+    * or whose url is null, keeps its lang, like a domain with a null
+    * majority lang; its timestamp and text are still repaired. A query
+    * that reads only the repaired timestamp (the rollup's touched days)
+    * therefore plans no model join at all.
     */
   def repairWithCounts(pages: DataFrame, counts: DataFrame): DataFrame = {
     val majority = broadcast(majorityOf(counts).withColumnRenamed("domain", "__domain"))

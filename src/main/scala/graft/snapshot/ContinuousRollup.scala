@@ -31,8 +31,8 @@ import org.apache.spark.sql.functions._
   * the diff never scans data.
   *
   * Per-partition lineage rows + per-run metrics append to the
-  * `tiersRoot/_runlog` table (read back via `readLineage` /
-  * `readMetrics`).
+  * `tiersRoot/_runlog` table as `RunLogRow`s (read back via
+  * `readLineage` / `readMetrics`).
   */
 object ContinuousRollup {
 
@@ -99,55 +99,30 @@ object ContinuousRollup {
     * either maintained externally (see `graft.Main`'s incremental
     * lang-count model) or per-partition-stable.
     *
-    * I/O is incremental, not just compute: when the source snapshots
-    * were appended with a `tsCol` (day-partitioned data + manifest day
-    * lists), the full-range scan is pruned at FILE level to exactly
-    * the days touched by the new batch plus suspect-day partitions —
-    * nothing else is opened. Coarse tiers never widen the raw read:
-    * 1d re-rolls up the freshly written 1h partitions and 30d the 1d
-    * partitions of its touched windows (associative measures, exact
-    * by RollupSpec/q50), so a daily update reads the touched days of
-    * raw plus a handful of tiny tier partitions — not 30 days of raw.
-    * Without day manifests it falls back to the full-range scan.
+    * I/O is incremental, not just compute: the table scan is pruned at
+    * FILE level to the days touched by the new batch plus suspect-day
+    * partitions (`defaultSuspectDay`); snapshots appended without a
+    * `tsCol` have no day lists and are read whole. Coarse tiers never
+    * widen the raw read: 1d re-rolls up the freshly written 1h
+    * partitions and 30d the 1d partitions of its touched windows
+    * (associative measures, exact by RollupSpec/q50), so a daily
+    * update reads the touched days of raw plus a handful of tiny tier
+    * partitions — not 30 days of raw.
     *
-    * NOTE (prepare contract, schema): EVERY `prepare` invocation of an
-    * update — the batch-side scan, then the pruned or the unpruned
-    * table scan, plus the suspect-dir probe under the membership guard
-    * — reads the table's manifest-merged schema
-    * (`SnapshotStore.readDirs`) and receives the same one extra
-    * synthetic column, `__graft_stored_day: string`. On the pruned
-    * branch it carries the partition day the row's file was stored
-    * under (feeding the exact guard below); on the other invocations
-    * its value is the empty string (stored day unknown/untrusted
-    * there, and the guard never reads it). Because the column is part
-    * of the prepare input schema everywhere, a schema-sensitive
-    * prepare (iterating `df.columns`, melting, positional unions)
-    * sees ONE shape across all invocations of one update — it may
-    * treat `__graft_stored_day` like any other column. A
-    * schema-agnostic prepare (column-wise maps, filters, withColumn,
-    * the pages repair) passes it through and gets the exact guard; a
-    * prepare that projects to a fixed schema drops it and gets the
-    * weaker membership guard. The column is dropped again before any
-    * tier aggregation, so it never reaches tier outputs.
-    *
-    * The `prepare` contract is enforced at runtime on the pruned
-    * branch: any row stored under a real (non-suspect) `part_day`
-    * whose post-prepare day differs from its stored day would silently
-    * fall out of every future recompute of its new day, so the update
-    * counts such rows and fails loudly instead of diverging; the count
-    * is also recorded in `_metrics.contract_violations`. Two guard
-    * tiers, both riding the 1m output's materialization pass as an
-    * `observe` metric (no second read of the pruned data), which runs
-    * before any tier write:
-    *   - exact: the stored day is attached AT the scan (the one place
-    *     `input_file_name` is legal) and compared per row after
-    *     `prepare`, whenever `prepare` passes unknown columns through;
-    *   - membership: prepares that project to a fixed schema drop the
-    *     column, so the guard degrades to "every post-prepare day must
-    *     be a needed day or a day that suspect-partition rows land
-    *     on" (the latter probed by preparing the suspect dirs alone —
-    *     tiny by construction). This tier cannot see moves BETWEEN
-    *     needed days, only escapes from the needed set.
+    * The prepare contract is checked, not trusted. Both `prepare`
+    * invocations of an update (the batch-side scan and the pruned table
+    * scan) read the table's manifest-merged schema
+    * (`SnapshotStore.readDirs`) plus one synthetic column,
+    * `__graft_stored_day: string`: the day the row's file is stored
+    * under, `""` for files without one. A schema-sensitive prepare sees
+    * one shape in both, and `prepare` must pass the column through
+    * (`require`d before any Spark job). A row stored under a real
+    * `part_day` whose post-prepare day differs would silently fall out
+    * of every future recompute of its new day, so the 1m output's
+    * materialization pass counts such rows per row (an `observe`
+    * metric, before any tier write) and the update fails loudly on any;
+    * the count is also recorded in the metrics' `contract_violations`.
+    * The column is dropped before any tier aggregation.
     */
   def update(
       spark: SparkSession,
@@ -157,8 +132,7 @@ object ContinuousRollup {
       tsCol: String,
       sizeCol: Column,
       langCol: Option[String] = None,
-      prepare: DataFrame => DataFrame = identity,
-      suspectDay: String => Boolean = defaultSuspectDay
+      prepare: DataFrame => DataFrame = identity
   ): Long = {
     val from = lastApplied(tiersRoot)
     val to = SnapshotStore.currentSnapshotId(sourceRoot)
@@ -183,9 +157,17 @@ object ContinuousRollup {
 
     val StoredDayCol = "__graft_stored_day"
     val dayRe = "part_day=([0-9]{4}-[0-9]{2}-[0-9]{2})"
-    // every scan of this update reads the table's manifest schema: one
-    // shape for every prepare invocation, and no schema-inference job
-    def scan(dirs: Seq[String]): DataFrame = SnapshotStore.readDirs(spark, sourceRoot, to, dirs)
+    // every scan reads the table's manifest schema (one shape for every
+    // prepare invocation, no schema-inference job) and attaches the
+    // stored day at the scan — the only plan position where
+    // input_file_name is legal when `prepare` adds more file sources;
+    // from there on it is a plain data column
+    def prepared(dirs: Seq[String]): DataFrame =
+      prepare(
+        SnapshotStore
+          .readDirs(spark, sourceRoot, to, dirs)
+          .withColumn(StoredDayCol, regexp_extract(input_file_name(), dayRe, 1))
+      )
 
     // one tiny action over the prepared batch (its only consumer — no
     // cache): the days its points land on (post-repair). Days decide
@@ -193,10 +175,13 @@ object ContinuousRollup {
     // windows, derived on the driver, decide which 30d partitions
     // re-roll up from the 1d tier. The query reads only the
     // partition-deciding timestamp, so a prepare's model lookups for
-    // other columns drop out of its plan. The synthetic stored-day
-    // column is attached as "" (value unused here) so prepare sees the
-    // same schema as on the tier-feeding scans below.
-    val newRows = prepare(scan(newDirs).withColumn(StoredDayCol, lit("")))
+    // other columns drop out of its plan.
+    val newRows = prepared(newDirs)
+    require(
+      newRows.columns.contains(StoredDayCol),
+      s"ContinuousRollup: `prepare` must pass the $StoredDayCol column through (the prepare-contract " +
+        s"guard compares it per row); it returned ${newRows.columns.mkString("[", ", ", "]")}"
+    )
     val days = newRows
       .select(to_date(col(tsCol)).as("d"))
       .distinct()
@@ -212,88 +197,37 @@ object ContinuousRollup {
       writeApplied(tiersRoot, to)
       return to
     }
-    val canPrune = SnapshotStore.hasDayInfo(sourceRoot, 0L, to)
 
     // Why suspect-row landing days need no special recompute handling:
     // a suspect row's landing day was touched by the update that first
     // folded it (its own batch's day set includes the landing day), so
     // its tier partitions exist and stay correct as long as the repair
     // is row-local — i.e. the SAME row always lands on the SAME day.
-    // That stability requirement is part of the prepare contract for
-    // ALL partition-deciding repairs, suspect rows included: a repair
-    // whose landing day drifts between updates leaves the old day's
-    // partitions stale (in the 1m/1h/1d tiers under every version of
-    // this design), which no pruned incremental scheme can detect
-    // without re-reading history. The guards below bless suspect rows
-    // landing on non-needed days precisely because, under the
-    // contract, those days' partitions were already computed.
+    // A repair whose landing day drifts between updates leaves the old
+    // day's partitions stale, which no pruned incremental scheme can
+    // detect without re-reading history.
     val neededDays: Set[String] = days.map(_.toString)
-    val (prepared, readDirs, dirsTotal) =
-      if (!canPrune) {
-        val dirs = SnapshotStore.resolveDirs(sourceRoot, 0L, to)
-        (prepare(scan(dirs).withColumn(StoredDayCol, lit(""))), dirs, dirs.size)
-      } else {
-        val dirs = SnapshotStore.resolveDirs(sourceRoot, 0L, to, Some(neededDays), suspectDay)
-        val total = SnapshotStore.resolveDirs(sourceRoot, 0L, to)
-        if (dirs.isEmpty)
-          throw new IllegalStateException(
-            s"ContinuousRollup prepare-contract violation: the prepared batch lands on days $neededDays " +
-              "but no stored partition carries any of them (and no suspect partitions exist) — `prepare` " +
-              "moved rows off their stored days. Partition-deciding timestamp repairs are only allowed " +
-              "for rows stored under suspect days (see `suspectDay`)."
-          )
-        // attach the stored day at the scan — the only plan position
-        // where input_file_name is legal when `prepare` adds more file
-        // sources (count models etc.); from here on it is a plain data
-        // column that survives shuffles and joins
-        (prepare(scan(dirs).withColumn(StoredDayCol, regexp_extract(input_file_name(), dayRe, 1))), dirs, total.size)
-      }
-    val dirsRead = readDirs.size
+    val readDirs = SnapshotStore.resolveDirs(sourceRoot, 0L, to, Some(neededDays), defaultSuspectDay)
+    val dirsTotal = SnapshotStore.resolveDirs(sourceRoot, 0L, to).size
+    if (readDirs.isEmpty)
+      throw new IllegalStateException(
+        s"ContinuousRollup prepare-contract violation: the prepared batch lands on days $neededDays " +
+          "but no stored partition carries any of them (and no suspect partitions exist) — `prepare` " +
+          "moved rows off their stored days."
+      )
 
-    // prepare-contract guard (pruned branch): a row stored under a
-    // real part_day must keep that day through prepare — otherwise
-    // recomputes of its post-prepare day never read its file and the
-    // tiers silently diverge from the one-shot result. Suspect-day and
-    // null-partition rows are exempt (they are read by EVERY pruned
-    // update precisely because their stored day is untrusted).
-    val realStoredDays: Seq[String] = readDirs
-      .map(d => d.substring(d.lastIndexOf("part_day=") + "part_day=".length))
-      .filter(d => d.matches("[0-9]{4}-[0-9]{2}-[0-9]{2}") && !suspectDay(d))
+    // the exact guard: a row stored under a real (non-suspect) day must
+    // keep that day through prepare. Suspect-day, null-partition and
+    // flat-dir rows are exempt: every pruned update reads them.
+    val realStoredDays = readDirs
+      .flatMap(d => dayRe.r.findFirstMatchIn(d).map(_.group(1)))
+      .filterNot(defaultSuspectDay)
       .distinct
+    val violation = col(StoredDayCol).isin(realStoredDays: _*) &&
+      (to_date(col(tsCol)).cast("string") =!= col(StoredDayCol) || col(tsCol).isNull)
     val guardObs = Observation(s"graft_prepare_contract_${tiersRoot.hashCode.toHexString}_$to")
-    val exactGuard = canPrune && realStoredDays.nonEmpty && prepared.columns.contains(StoredDayCol)
-    val memberGuard = canPrune && realStoredDays.nonEmpty && !exactGuard
-    val dayStr = to_date(col(tsCol)).cast("string")
-    val allRows =
-      if (exactGuard) {
-        // exact tier: per-row comparison of post-prepare day vs the
-        // day the row's file was stored under
-        val violation = col(StoredDayCol).isin(realStoredDays: _*) &&
-          (dayStr =!= col(StoredDayCol) || col(tsCol).isNull)
-        prepared.observe(guardObs, count(when(violation, lit(1))).as("violations"))
-      } else if (memberGuard) {
-        // membership tier: `prepare` dropped the stored-day column, so
-        // fall back to set membership. Days that suspect/null-partition
-        // rows legitimately land on are probed by preparing those dirs
-        // alone — exact iff the partition-deciding repair is row-local,
-        // which is itself the contract being checked.
-        val suspectDirs = SnapshotStore.resolveDirs(sourceRoot, 0L, to, Some(Set.empty), suspectDay)
-        val landedDays: Set[String] =
-          if (suspectDirs.isEmpty) Set.empty
-          else
-            prepare(scan(suspectDirs).withColumn(StoredDayCol, lit("")))
-              .select(dayStr.as("d"))
-              .filter(col("d").isNotNull)
-              .distinct()
-              .collect()
-              .map(_.getString(0))
-              .toSet
-        val allowed = (neededDays ++ landedDays).toSeq
-        val violation = col(tsCol).isNotNull && !dayStr.isin(allowed: _*)
-        prepared.observe(guardObs, count(when(violation, lit(1))).as("violations"))
-      } else prepared.observe(guardObs, lit(0L).as("violations"))
+    val allRows = prepared(readDirs).observe(guardObs, count(when(violation, lit(1))).as("violations"))
 
-    val lineageRows = scala.collection.mutable.ArrayBuffer[(String, String, Long, Long, Long)]()
     val t0 = System.nanoTime()
 
     def outputOf(tier: String, recomputed: DataFrame): DataFrame =
@@ -323,21 +257,15 @@ object ContinuousRollup {
     val rows1mObs = Observation(s"graft_rows_1m_${tiersRoot.hashCode.toHexString}_$to")
     out1m.observe(rows1mObs, count(lit(1)).as("rows")).write.format("noop").mode("overwrite").save()
     val rows1m = rows1mObs.get("rows").asInstanceOf[Long]
-    val contractViolations: Long =
-      if (exactGuard || memberGuard) guardObs.get("violations").asInstanceOf[Long] else 0L
+    val contractViolations = guardObs.get("violations").asInstanceOf[Long]
     if (contractViolations > 0) {
       out1m.unpersist()
-      val guardScope =
-        if (exactGuard) "exact guard: per-row stored-day comparison"
-        else
-          "membership guard: detects only escapes from the needed-day set — a schema-projecting " +
-            "prepare that moves rows BETWEEN needed days is beyond this tier's sight (pass " +
-            "__graft_stored_day through for the exact guard)"
       throw new IllegalStateException(
-        s"ContinuousRollup prepare-contract violation ($guardScope): $contractViolations rows stored " +
-          "under a real part_day changed their partition-deciding day in prepare; their new day's " +
-          "partitions would silently recompute without them. Repair partition-deciding timestamps only " +
-          "for rows stored under suspect days (see `suspectDay`), or maintain those repairs externally."
+        s"ContinuousRollup prepare-contract violation (exact guard: per-row stored-day comparison): " +
+          s"$contractViolations rows stored under a real part_day changed their partition-deciding day in " +
+          "prepare; their new day's partitions would silently recompute without them. Repair " +
+          "partition-deciding timestamps only for rows stored under suspect days (see `defaultSuspectDay`), " +
+          "or maintain those repairs externally."
       )
     }
     // output-size bound for each tier's write-layout branch: the 1m
@@ -346,7 +274,7 @@ object ContinuousRollup {
     // window-span ratio — a layout heuristic only, never correctness)
     var finerRowsOut: Long = rows1m
 
-    def runTier(tier: String): (String, String, Long, Long, Long) = {
+    def runTier(tier: String): RunLogRow = {
       val out = tier match {
         case "1m" => out1m
         case "1h" | "1d" => outputOf(tier, Rollup.reRollup(out1m.drop("part_key"), series, "1m" -> tier))
@@ -418,68 +346,29 @@ object ContinuousRollup {
       val rowsOut = rowsObs.get("rows_out").asInstanceOf[Long]
       val partsOut = if (tier == "30d") windows.size.toLong else days.size.toLong
       finerRowsOut = rowsOut
-      (tier, s"($from,$to]", rowsOut, partsOut, to)
+      RunLogRow("lineage", tier, s"($from,$to]", rowsOut, partsOut, to)
     }
 
     // Tiers run sequentially — the fine tiers are full-width
     // shuffle+write jobs that already use every core (overlapping
     // 1m/1h was measured SLOWER at sf0.1: cache/shuffle contention).
-    Tiers.All.foreach(t => lineageRows += runTier(t))
+    val lineage = Tiers.All.map(runTier)
     out1m.unpersist()
 
     // one run-log append carries BOTH the per-tier lineage rows and the
     // run metrics row (kind column discriminates) — a single tiny write
     // job instead of two; `readLineage`/`readMetrics` project the
     // classic shapes back out
-    import spark.implicits._
-    val lineagePart = lineageRows.toSeq.map { case (tier, range, rows, parts, snap) =>
-      (
-        "lineage",
-        tier,
-        range,
-        rows,
-        parts,
-        snap,
-        0.0,
-        "",
-        0,
-        0,
-        0L
-      )
-    }
-    val metricsPart = Seq(
-      (
-        "metrics",
-        "",
-        "",
-        0L,
-        0L,
-        to,
-        (System.nanoTime() - t0) / 1e9,
-        java.time.Instant.now.toString,
-        dirsRead,
-        dirsTotal,
-        contractViolations
-      )
+    val metrics = RunLogRow(
+      "metrics",
+      applied_snapshot = to,
+      update_seconds = (System.nanoTime() - t0) / 1e9,
+      wall_clock = java.time.Instant.now.toString,
+      source_dirs_read = readDirs.size.toLong,
+      source_dirs_total = dirsTotal.toLong,
+      contract_violations = contractViolations
     )
-    (lineagePart ++ metricsPart)
-      .toDF(
-        "kind",
-        "tier",
-        "snapshot_range",
-        "rows_out",
-        "partitions_touched",
-        "applied_snapshot",
-        "update_seconds",
-        "wall_clock",
-        "source_dirs_read",
-        "source_dirs_total",
-        "contract_violations"
-      )
-      .coalesce(1)
-      .write
-      .mode("append")
-      .parquet(s"$tiersRoot/_runlog")
+    RunLog.append(spark, tiersRoot, lineage :+ metrics)
 
     writeApplied(tiersRoot, to)
     to
@@ -489,25 +378,25 @@ object ContinuousRollup {
     * snapshot_range, rows_out, partitions_touched, applied_snapshot).
     */
   def readLineage(spark: SparkSession, tiersRoot: String): DataFrame =
-    spark.read
-      .parquet(s"$tiersRoot/_runlog")
+    RunLog
+      .read(spark, tiersRoot)
       .filter(col("kind") === "lineage")
       .select("tier", "snapshot_range", "rows_out", "partitions_touched", "applied_snapshot")
 
   /** One metrics row per applied update (applied_snapshot,
-    * update_seconds, wall_clock, source_dirs_read, source_dirs_total,
-    * contract_violations).
+    * update_seconds, wall_clock, source_dirs_read and source_dirs_total
+    * as int, contract_violations).
     */
   def readMetrics(spark: SparkSession, tiersRoot: String): DataFrame =
-    spark.read
-      .parquet(s"$tiersRoot/_runlog")
+    RunLog
+      .read(spark, tiersRoot)
       .filter(col("kind") === "metrics")
       .select(
-        "applied_snapshot",
-        "update_seconds",
-        "wall_clock",
-        "source_dirs_read",
-        "source_dirs_total",
-        "contract_violations"
+        col("applied_snapshot"),
+        col("update_seconds"),
+        col("wall_clock"),
+        col("source_dirs_read").cast("int").as("source_dirs_read"),
+        col("source_dirs_total").cast("int").as("source_dirs_total"),
+        col("contract_violations")
       )
 }

@@ -17,12 +17,12 @@ import scala.jdk.CollectionConverters._
   * window-start day for 30d), so expiry never reads, rewrites, or
   * shuffles a row — exactly how a table format drops expired
   * partitions at 100 TB. Idempotent (a second enforce with the same
-  * policy deletes nothing), auditable (one `_runlog` row per enforced
-  * tier, same table the update lineage/metrics ride), and safe to
-  * interleave with updates: `ContinuousRollup.update` recreates a
-  * dropped day only if new raw rows for that day arrive, which the
-  * policy owner handles by aligning retention with the source's
-  * late-data horizon.
+  * policy deletes nothing), auditable (one `RunLogRow` per enforced
+  * tier, appended to the `_runlog` table the update lineage and
+  * metrics rows ride), and safe to interleave with updates:
+  * `ContinuousRollup.update` recreates a dropped day only if new raw
+  * rows for that day arrive, which the policy owner handles by
+  * aligning retention with the source's late-data horizon.
   *
   * The retention boundary is date-based, not count-based: `keepDays =
   * k` retains partition days `>= asOf - (k-1)` (the `asOf` day plus
@@ -100,40 +100,15 @@ object Retention {
       }
     }
     // audit rows ride the same _runlog table as update lineage/metrics
-    import spark.implicits._
-    results
-      .map(r =>
-        (
-          if (archiveRoot.isDefined) "retention_archive" else "retention",
-          r.tier,
-          s"keep>=${r.cutoff}",
-          r.partsDropped,
-          r.partsBefore,
-          -1L,
-          (System.nanoTime() - t0) / 1e9,
-          java.time.Instant.now.toString,
-          0L,
-          0L,
-          0
-        )
-      )
-      .toDF(
-        "kind",
-        "tier",
-        "snapshot_range",
-        "rows_out",
-        "partitions_touched",
-        "applied_snapshot",
-        "update_seconds",
-        "wall_clock",
-        "source_dirs_read",
-        "source_dirs_total",
-        "contract_violations"
-      )
-      .coalesce(1)
-      .write
-      .mode("append")
-      .parquet(s"$tiersRoot/_runlog")
+    val kind = if (archiveRoot.isDefined) "retention_archive" else "retention"
+    val seconds = (System.nanoTime() - t0) / 1e9
+    val now = java.time.Instant.now.toString
+    RunLog.append(
+      spark,
+      tiersRoot,
+      results.map(r =>
+        RunLogRow(kind, r.tier, s"keep>=${r.cutoff}", r.partsDropped, r.partsBefore, -1L, seconds, now))
+    )
     results
   }
 }

@@ -111,6 +111,58 @@ class RetentionSpec extends SparkSpec {
     assert(again.head.partsDropped == 0L)
   }
 
+  test("update and retention rows share one _runlog: lineage and metrics read back, older int files too") {
+    val (root, tiers) = buildTiers()
+    val asOf = LocalDate.parse(partDays(tiers, "1m").max)
+    Retention.enforce(spark, tiers, Map("1h" -> 3), asOf)
+    // files as older writers left them: the update stored the dir
+    // counters as int, retention the violation count as int. The old
+    // retention file is named to sort first: a read without a schema
+    // infers it from the first file by path.
+    import spark.implicits._
+    val cols = Seq(
+      "kind", "tier", "snapshot_range", "rows_out", "partitions_touched", "applied_snapshot",
+      "update_seconds", "wall_clock", "source_dirs_read", "source_dirs_total", "contract_violations")
+    Seq(("metrics", "", "", 0L, 0L, 7L, 1.5, "old", 3, 30, 0L))
+      .toDF(cols: _*)
+      .write
+      .mode("append")
+      .parquet(s"$tiers/_runlog")
+    val oldRetention = tmpDir("ret_old_runlog")
+    Seq(("retention", "1d", "keep>=2024-01-01", 2L, 5L, -1L, 0.1, "old", 0L, 0L, 0))
+      .toDF(cols: _*)
+      .coalesce(1)
+      .write
+      .mode("overwrite")
+      .parquet(oldRetention)
+    val part = Files.list(Paths.get(oldRetention))
+    try
+      part
+        .filter(_.getFileName.toString.endsWith(".parquet"))
+        .forEach(p => Files.move(p, Paths.get(tiers, "_runlog", "part-0-old-retention.snappy.parquet")))
+    finally part.close()
+
+    val dirs = SnapshotStore.resolveDirs(root, 0L, 1L).size
+    val metrics = ContinuousRollup
+      .readMetrics(spark, tiers)
+      .orderBy("applied_snapshot")
+      .collect()
+      .map(r => (r.getLong(0), r.getInt(3), r.getInt(4), r.getLong(5)))
+      .toSeq
+    assert(metrics == Seq((1L, dirs, dirs, 0L), (7L, 3, 30, 0L)), s"metrics: $metrics")
+    val lineage = ContinuousRollup.readLineage(spark, tiers).collect()
+    assert(lineage.map(_.getString(0)).sorted.toSeq == graft.rollup.Tiers.All.sorted)
+    assert(lineage.forall(r => r.getLong(4) == 1L && r.getLong(3) > 0L))
+    val audit = RunLog
+      .read(spark, tiers)
+      .filter(col("kind") === "retention")
+      .select("tier", "contract_violations")
+      .as[(String, Long)]
+      .collect()
+      .toSet
+    assert(audit == Set("1h" -> 0L, "1d" -> 0L))
+  }
+
   test("audit rows land in _runlog; absent tier dirs and unknown tiers handled") {
     val (_, tiers) = buildTiers()
     val asOf = LocalDate.parse(partDays(tiers, "1m").max)

@@ -255,47 +255,58 @@ class SnapshotSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(tiers, "tier_1h")))
   }
 
-  test("a schema-projecting prepare that moves old rows out of the needed days fails (membership guard)") {
+  test("a prepare that drops the stored-day column fails before any Spark job") {
     val root = tmpDir("snap_contract_b")
     val tiers = tmpDir("snap_contract_b_tiers")
     val cols = events.columns.map(col).toSeq
-    // batch 1: even ids, full month, folded with a conforming prepare
-    SnapshotStore.append(root, events.filter(col("event_id") % 2 === 0), tsCol = Some("ts"))
-    val conform: DataFrame => DataFrame = df => df.select(cols: _*)
-    ContinuousRollup.update(spark, root, tiers, Seq("event_type"), "ts", lit(1L), prepare = conform)
-    // batch 2: odd ids of two days only
-    SnapshotStore.append(
-      root,
-      events.filter(col("event_id") % 2 === 1 && to_date(col("ts")).isin("2024-01-10", "2024-01-28")),
-      tsCol = Some("ts")
-    )
-    // violating prepare: shifts only OLD (even-id) rows of day 01-10
-    // by +40 days, then projects to the fixed schema (drops the
-    // stored-day column) -> the fallback membership guard must catch
-    // rows escaping the needed-day set {01-10, 01-28}
-    val violate: DataFrame => DataFrame = df =>
-      df.withColumn(
-        "ts",
-        when(
-          to_date(col("ts")) === "2024-01-10" && col("event_id") % 2 === 0,
-          col("ts") + expr("interval 40 days")
-        ).otherwise(col("ts"))
-      ).select(cols: _*)
-    val e = intercept[IllegalStateException] {
-      ContinuousRollup.update(spark, root, tiers, Seq("event_type"), "ts", lit(1L), prepare = violate)
-    }
-    assert(e.getMessage.contains("prepare-contract violation"))
-    // a conforming update afterwards still lands exactly
-    ContinuousRollup.update(spark, root, tiers, Seq("event_type"), "ts", lit(1L), prepare = conform)
-    val want = fullTier(
-      events.filter(
-        col("event_id") % 2 === 0 ||
-          (col("event_id") % 2 === 1 && to_date(col("ts")).isin("2024-01-10", "2024-01-28"))
-      ),
-      "1h"
-    )
+    SnapshotStore.append(root, events, tsCol = Some("ts"))
+    // projecting to the table's own columns drops __graft_stored_day,
+    // which the exact guard compares per row: refused at plan time
+    val project: DataFrame => DataFrame = df => df.select(cols: _*)
+    val (e, jobs) = jobStartsDuring(intercept[IllegalArgumentException] {
+      ContinuousRollup.update(spark, root, tiers, Seq("event_type"), "ts", lit(1L), prepare = project)
+    })
+    assert(e.getMessage.contains("__graft_stored_day"), e.getMessage)
+    assert(jobs.isEmpty, s"${jobs.size} Spark jobs ran before the rejection")
+    assert(ContinuousRollup.lastApplied(tiers) == 0L)
+    val written = Files.list(Paths.get(tiers))
+    try assert(written.noneMatch(_.getFileName.toString.startsWith("tier_")))
+    finally written.close()
+    // a prepare passing the column through folds the same table exactly
+    ContinuousRollup.update(spark, root, tiers, Seq("event_type"), "ts", lit(1L), prepare = _.select("*"))
     val got = ContinuousRollup.readTier(spark, tiers, "1h")
+    val want = fullTier(events, "1h")
     assert(got.except(want).isEmpty && want.except(got).isEmpty)
+  }
+
+  test("a table with flat and day-partitioned snapshots prunes its day-partitioned dirs") {
+    val root = tmpDir("snap_mixed")
+    val tiers = tmpDir("snap_mixed_tiers")
+    // snapshot 1 is flat (no day list); snapshot 2 is day-partitioned
+    // over every day but 01-28, snapshot 3 over 01-28 alone
+    val odd = events.filter(col("event_id") % 2 === 1)
+    val batches = Seq(
+      (events.filter(col("event_id") % 2 === 0), None),
+      (odd.filter(to_date(col("ts")) =!= "2024-01-28"), Some("ts")),
+      (odd.filter(to_date(col("ts")) === "2024-01-28"), Some("ts"))
+    )
+    for ((b, tsCol) <- batches) {
+      SnapshotStore.append(root, b, tsCol = tsCol)
+      ContinuousRollup.update(spark, root, tiers, Seq("event_type"), "ts", lit(1L))
+    }
+    for (t <- Seq("1m", "1h", "1d", "30d")) {
+      val got = ContinuousRollup.readTier(spark, tiers, t)
+      val want = fullTier(events, t)
+      assert(got.except(want).isEmpty && want.except(got).isEmpty, s"tier $t mismatch")
+    }
+    // the last update reads the flat dir whole and, of the
+    // day-partitioned snapshots, only 01-28's one dir
+    val m = ContinuousRollup
+      .readMetrics(spark, tiers)
+      .filter(col("applied_snapshot") === 3)
+      .head()
+    val (read, total) = (m.getAs[Int]("source_dirs_read"), m.getAs[Int]("source_dirs_total"))
+    assert(read == 2 && read < total, s"read $read of $total dirs")
   }
 
   test("schema-sensitive prepare sees ONE schema across batch, pruned, and unpruned invocations") {
