@@ -8,17 +8,14 @@ package graft
   *   - q25: the flagship corrupt→detect→repair→hourly-rollup pipeline
   *     over the fixed 2000-page synthetic corpus (pure function of the
   *     seed — a literal VALUES relation);
-  *   - q45/q52/q62: GBT meta-learner decisions (verified identical at
-  *     local[8] == local[32]);
-  *   - q63/q66/q69: trained ANN MODELS (spherical k-means centroids,
-  *     PQ codebook) as DOUBLE[] literals — DuckDB replays the whole
-  *     search given only the model, stronger than output goldens.
+  *   - q45/q52/q62/q182: GBT meta-learner decisions (verified
+  *     identical at local[8] == local[32]).
   *
   * The tables live as SQL text under `resources/graft/goldens/` (they
   * are pinned data, not engine code). Regenerate after an intentional
-  * algorithm change: `runMain graft.QDump` per SF rebuilds the model
-  * literals, and `graft.Verify` at sf0.001/sf0.01 dumps the decision
-  * tables; then rewrite the resource files in the same shape.
+  * algorithm change: `runMain graft.QDump <query>` per SF, or
+  * `graft.Verify` at sf0.001/sf0.01, dumps the decision tables; then
+  * rewrite the resource files in the same shape.
   */
 object Goldens {
   def apply(name: String): String = {

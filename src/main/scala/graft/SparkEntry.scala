@@ -1,6 +1,5 @@
 package graft
 
-import graft.ann.Ann
 import graft.correct.{Cells, Correctors, Fd, Pdep}
 import graft.dedup.Dedup
 import graft.pages.{PageGen, PagePipeline}
@@ -210,15 +209,6 @@ object SparkEntry {
         threshold = 0.5,
         maxShingleDf = 128L
       )
-    }),
-
-    // ---- similarity: brute-force cosine top-k ----
-    "q15_ann_brute" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").select(col("vec_id").as("id"), col("embedding"))
-      val q = t(s, dir, "embeddings")
-        .filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      Ann.bruteForceTopK(emb, q, k = 10)
     }),
 
     // ---- text: language id ----
@@ -1858,15 +1848,6 @@ object SparkEntry {
       Dedup.simHash(t(s, dir, "documents"), "doc_id", "text")
     }),
 
-    // ---- similarity: LSH-bucketed ANN (rows-only check) ----
-    "q24_ann_lsh" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").select(col("vec_id").as("id"), col("embedding"))
-      val q = t(s, dir, "embeddings")
-        .filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      Ann.lshTopK(emb, q, k = 10).drop("sim")
-    }),
-
     // ---- pages pipeline: correct -> tiered rollup (rows-only; full
     //      oracle lives in PagesPipelineSpec against in-Spark oracle)
     "q25_pages_pipeline" -> ((s, _) => {
@@ -1908,15 +1889,6 @@ object SparkEntry {
           length(col("frame")).as("frame_bytes"),
           md5(col("frame")).as("frame_md5")
         )
-    }),
-
-    // ---- similarity: IVF-bucketed ANN (rows-only check) ----
-    "q28_ann_ivf" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").select(col("vec_id").as("id"), col("embedding"))
-      val q = t(s, dir, "embeddings")
-        .filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      Ann.ivfTopK(emb, q, k = 10).drop("sim")
     }),
 
     // ---- pdep/gpdep statistics (A4-A8) as a relation ----
@@ -1998,12 +1970,6 @@ object SparkEntry {
       GapFill
         .interpolate(spined, Seq("event_type"), "value_sum")
         .select(col("event_type"), col("bucket_ts"), round(col("value_sum"), 6).as("value_sum"))
-    }),
-
-    // ---- dedup: embedding-cosine near-duplicate pairs ----
-    "q35_embed_neardup" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").select(col("vec_id").as("id"), col("embedding"))
-      Ann.cosineNearDupPairs(emb, threshold = 0.4)
     }),
 
     // ---- value corrector: difflib transformation replay (M7/V1-V3) ----
@@ -2194,19 +2160,6 @@ object SparkEntry {
       graft.correct.MetaLearner.trainPredict(features, correctors, labeled, classifier = "CV_PRECISION")
     }),
 
-    // ---- similarity: IVF with a TRAINED coarse quantizer (spherical
-    //      k-means on a bounded hash-sample — the FAISS-style scale
-    //      shape); oracle pins the trained centroids as literals and
-    //      replays assignment + probe + rerank in DuckDB ----
-    "q63_ann_ivf_kmeans" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").select(col("vec_id").as("id"), col("embedding"))
-      val q = t(s, dir, "embeddings")
-        .filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      val cents = Ann.trainCentroids(emb, nCentroids = 8)
-      Ann.ivfTopK(emb, q, k = 10, nprobe = 2, trained = Some(cents)).drop("sim")
-    }),
-
     // ---- dedup: INCREMENTAL MinHash-LSH — three batch arrivals fold
     //      against the growing (band, bucket) index; the union must be
     //      EXACTLY the batch run over the whole corpus, so the oracle
@@ -2228,39 +2181,12 @@ object SparkEntry {
       out.get.select("id_a", "id_b", "est_jaccard")
     }),
 
-    // ---- similarity: product quantization (IVF-PQ's memory stage) —
-    //      the corpus scan touches 8 sub-codes per vector (32x smaller
-    //      than the floats), ADC shortlists 50 per query, exact cosine
-    //      reranks the shortlist; the oracle pins the trained codebook
-    //      and replays normalize -> encode -> ADC -> rerank in DuckDB ----
-    "q66_ann_pq" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").select(col("vec_id").as("id"), col("embedding"))
-      val q = t(s, dir, "embeddings")
-        .filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      val cb = Ann.trainPq(emb)
-      Ann.pqTopK(emb, q, k = 10, cb, rerank = 50).drop("sim")
-    }),
-
     // ---- the end-to-end webtext preprocessing pass: lang-ID +
     //      quality gate + exact dedup + near-dedup + token accounting
     //      in ONE call; every stage is an order-free corpus predicate,
     //      so the oracle replays each in SQL and intersects ----
     "q67_corpus_pipeline" -> ((s, dir) => {
       graft.text.CorpusPipeline.clean(t(s, dir, "documents"), "doc_id", "text")
-    }),
-
-    // ---- similarity: IVF-PQ composed — cell-pruned ADC over the
-    //      (id, cell, codes) index, shortlist, exact rerank; the
-    //      oracle replays BOTH pinned models end to end ----
-    "q69_ann_ivf_pq" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").select(col("vec_id").as("id"), col("embedding"))
-      val q = t(s, dir, "embeddings")
-        .filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      val cents = Ann.trainCentroids(emb, nCentroids = 8)
-      val cb = Ann.trainPq(emb)
-      Ann.ivfPqTopK(emb, q, k = 10, cents, cb).drop("sim")
     }),
 
     // ---- repetition quality gate (Gopher-style, word-stream form):
@@ -2652,13 +2578,6 @@ object SparkEntry {
         col("point_count"),
         hll_sketch_estimate(col("users_hll")).as("distinct_users_est")
       )
-    }),
-
-    // ---- dedup: LSH-bucketed embedding near-dup (the 100-TB path of
-    //      q35: candidates from sign buckets, exact verify) ----
-    "q51_embed_neardup_lsh" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").select(col("vec_id").as("id"), col("embedding"))
-      Ann.cosineNearDupPairsLsh(emb, threshold = 0.4, tables = 8, planes = 4)
     }),
 
     // ---- cleaning lifecycle with synthetic training tuples (steps
@@ -3071,20 +2990,6 @@ object SparkEntry {
          SELECT id_a, id_b, overlap, sa.sz + sb.sz - overlap AS union_size
          FROM inter JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
          WHERE overlap * 1.0 / (sa.sz + sb.sz - overlap) >= 0.5""",
-    "q15_ann_brute" ->
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
-                    FROM embeddings WHERE vec_id < 5),
-         c AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS ce FROM embeddings),
-         scored AS (
-           SELECT q.query_id, c.id,
-                  list_dot_product(c.ce, q.qe) /
-                    (sqrt(list_dot_product(c.ce, c.ce)) * sqrt(list_dot_product(q.qe, q.qe))) AS sim
-           FROM c, q WHERE c.id <> q.query_id),
-         ranked AS (
-           SELECT query_id, id AS neighbor_id,
-                  row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, id ASC) AS rank
-           FROM scored)
-         SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= 10""",
     "q16_langid" -> langIdSql,
     "q17_quality" -> qualitySql,
     "q18_fingerprint" ->
@@ -3236,13 +3141,6 @@ object SparkEntry {
                             WHEN next_t = prev_t THEN prev_v
                             ELSE prev_v + (next_v - prev_v) * (ts_d - prev_t) / (next_t - prev_t) END, 6) AS value_sum
           FROM w""",
-    "q35_embed_neardup" ->
-      """WITH c AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-         p AS (SELECT a.id AS id_a, b.id AS id_b,
-                      list_dot_product(a.e, b.e) /
-                        (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e))) AS sim
-               FROM c a JOIN c b ON a.id < b.id)
-         SELECT id_a, id_b, round(sim, 6) AS sim FROM p WHERE sim >= 0.4""",
     "q36_value_corrector" ->
       """SELECT e.row_id, t.corrector, e.seg AS candidate, CAST(1.0 AS DOUBLE) AS score
          FROM (SELECT c_custkey AS row_id, c_mktsegment AS seg FROM customer
@@ -3423,70 +3321,6 @@ object SparkEntry {
                 FROM events GROUP BY 1, 2)
          SELECT pc.event_type, pc.bucket_ts, pc.point_count, tops.top5_users
          FROM pc JOIN tops USING (event_type, bucket_ts)""",
-    // Algorithm-parity oracle: identical 32-table x 4-plane LCG LSH
-    // candidate generation + exact rerank in SQL.
-    "q24_ann_lsh" ->
-      """WITH c AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-         bk AS (SELECT id, t,
-                       list_sum(list_transform(generate_series(0, 5), j ->
-                         CASE WHEN list_dot_product(e, list_transform(generate_series(0, 63), d ->
-                                ((131 * (t * 6 + j) + d) * 1103515245 + 12345) % 2147483648 / 1073741824.0 - 1.0)) >= 0
-                              THEN 1 << j ELSE 0 END)) AS key
-                FROM c CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS t) tt),
-         qb AS (SELECT id AS query_id, t, xor(key, m) AS key
-                FROM bk CROSS JOIN (SELECT unnest([0,1,2,4,8,16,32,3,5,6,9,10,12,17,18,20,24,33,34,36,40,48]) AS m)
-                WHERE id < 5),
-         cand AS (SELECT DISTINCT qb.query_id, bk.id
-                  FROM bk JOIN qb ON bk.t = qb.t AND bk.key = qb.key AND bk.id <> qb.query_id),
-         q AS (SELECT id AS query_id, e AS qe FROM c WHERE id < 5),
-         scored AS (SELECT cand.query_id, cand.id,
-                           list_dot_product(ce.e, q.qe) /
-                             (sqrt(list_dot_product(ce.e, ce.e)) * sqrt(list_dot_product(q.qe, q.qe))) AS sim
-                    FROM cand JOIN c ce ON ce.id = cand.id JOIN q ON q.query_id = cand.query_id),
-         ranked AS (SELECT query_id, id AS neighbor_id,
-                           row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, id ASC) AS rank
-                    FROM scored)
-         SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= 10""",
-    // Algorithm-parity oracle: same IVF (first-16 centroids, nearest
-    // cell assignment, 4-probe rerank) in SQL.
-    "q28_ann_ivf" ->
-      """WITH c0 AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-         cent AS (SELECT id AS centroid_id, e AS ce FROM c0 ORDER BY id LIMIT 16),
-         cs AS (SELECT c0.id, c0.e, cent.centroid_id,
-                       list_dot_product(c0.e, cent.ce) /
-                         (sqrt(list_dot_product(c0.e, c0.e)) * sqrt(list_dot_product(cent.ce, cent.ce))) AS c_sim
-                FROM c0 CROSS JOIN cent),
-         ca AS (SELECT id, e, centroid_id AS cell FROM
-                 (SELECT *, row_number() OVER (PARTITION BY id ORDER BY c_sim DESC, centroid_id ASC) AS r FROM cs)
-                WHERE r = 1),
-         qa AS (SELECT id AS query_id, e AS qe, centroid_id AS cell FROM
-                 (SELECT *, row_number() OVER (PARTITION BY id ORDER BY c_sim DESC, centroid_id ASC) AS r
-                  FROM cs WHERE id < 5)
-                WHERE r <= 4),
-         scored AS (SELECT qa.query_id, ca.id,
-                           list_dot_product(ca.e, qa.qe) /
-                             (sqrt(list_dot_product(ca.e, ca.e)) * sqrt(list_dot_product(qa.qe, qa.qe))) AS sim
-                    FROM ca JOIN qa USING (cell) WHERE ca.id <> qa.query_id),
-         ranked AS (SELECT query_id, id AS neighbor_id,
-                           row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, id ASC) AS rank
-                    FROM scored)
-         SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= 10""",
-    // Algorithm-parity oracle: 8 LSH tables x 4 LCG planes candidate
-    // generation + exact cosine verification in SQL.
-    "q51_embed_neardup_lsh" ->
-      """WITH c AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-         n AS (SELECT id, e, sqrt(list_dot_product(e, e)) AS nrm FROM c),
-         bk AS (SELECT id, t,
-                       list_sum(list_transform(generate_series(0, 3), j ->
-                         CASE WHEN list_dot_product(e, list_transform(generate_series(0, 63), d ->
-                                ((131 * (t * 4 + j) + d) * 1103515245 + 12345) % 2147483648 / 1073741824.0 - 1.0)) >= 0
-                              THEN 1 << j ELSE 0 END)) AS key
-                FROM n CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS t) tt),
-         cand AS (SELECT DISTINCT x.id AS id_a, y.id AS id_b
-                  FROM bk x JOIN bk y ON x.t = y.t AND x.key = y.key AND x.id < y.id),
-         p AS (SELECT id_a, id_b, list_dot_product(a.e, b.e) / (a.nrm * b.nrm) AS sim
-               FROM cand JOIN n a ON a.id = id_a JOIN n b ON b.id = id_b)
-         SELECT id_a, id_b, round(sim, 6) AS sim FROM p WHERE sim >= 0.4""",
     // Full A13 lifecycle oracle: vicinity1 (both lhs columns, masked
     // conditional probabilities) + frequency imputer, feature-sum
     // argmax with candidate tie-break, user-label overlay.
@@ -3546,9 +3380,6 @@ object SparkEntry {
     "q45_meta_learner" -> Goldens("q45_meta_learner"),
     "q62_meta_learner_cv" -> Goldens("q62_meta_learner_cv"),
     "q182_meta_learner_cv_precision" -> Goldens("q182_meta_learner_cv_precision"),
-    "q63_ann_ivf_kmeans" -> Goldens("q63_ann_ivf_kmeans"),
-    "q66_ann_pq" -> Goldens("q66_ann_pq"),
-    "q69_ann_ivf_pq" -> Goldens("q69_ann_ivf_pq"),
     "q52_cleaning_synth" -> Goldens("q52_cleaning_synth"),
     // Repetition stats: bigram/trigram lists rebuilt with 1-based list
     // comprehension transforms; max bigram frequency via unnest+group

@@ -103,8 +103,8 @@ object ContinuousRollup {
     * FILE level to the days touched by the new batch plus suspect-day
     * partitions (`defaultSuspectDay`); snapshots appended without a
     * `tsCol` have no day lists and are read whole. Coarse tiers never
-    * widen the raw read: 1d re-rolls up the freshly written 1h
-    * partitions and 30d the 1d partitions of its touched windows
+    * widen the raw read: 1h and 1d both re-roll up the cached 1m
+    * output, and 30d reads the 1d partitions of its touched windows
     * (associative measures, exact by RollupSpec/q50), so a daily
     * update reads the touched days of raw plus a handful of tiny tier
     * partitions — not 30 days of raw.

@@ -34,7 +34,6 @@ object Sessions {
       .builder()
       .master(master)
       .appName(appName)
-      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", cores.toString)
       // sandbox-scale stand-in for a split-rich 100 TB layout: test
       // inputs are only 10s-100s of MB, so the 128 MB default would

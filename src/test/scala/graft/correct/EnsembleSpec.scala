@@ -1,13 +1,11 @@
 package graft.correct
 
 import graft.SparkSpec
-import graft.ann.Ann
 import org.apache.spark.sql.functions._
 
 /** Specs for the corrector-ensemble operators added around the q29-q38
   * query set: the A3 all-combination count model, the cell-exact
-  * evaluator, the FD corrector with gpdep weighting, and the
-  * embedding-cosine near-dup pairs.
+  * evaluator and the FD corrector with gpdep weighting.
   */
 class EnsembleSpec extends SparkSpec {
   import spark.implicits._
@@ -104,19 +102,6 @@ class EnsembleSpec extends SparkSpec {
     // y is supported by both FDs: its score is the sum of both norm_gpdeps
     val yScore = sugg.filter(_._2 == "y").map(_._3).sum
     assert(math.abs(yScore - 1.0) < 1e-9)
-  }
-
-  test("cosineNearDupPairs finds exactly the high-cosine pairs") {
-    val emb = Seq(
-      (1L, Array(1.0f, 0.0f)),
-      (2L, Array(0.999f, 0.01f)), // near-dup of 1
-      (3L, Array(0.0f, 1.0f))
-    ).toDF("id", "embedding")
-    val pairs = Ann
-      .cosineNearDupPairs(emb, threshold = 0.99)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    assert(pairs.toSeq == Seq((1L, 2L)))
   }
 
   test("mineFds finds exactly the held FDs, error cells masked") {

@@ -99,12 +99,4 @@ class PagePartitioningSpec extends SparkSpec {
     )
     assert(got.except(want).isEmpty && want.except(got).isEmpty)
   }
-
-  test("graft_dot is callable from SQL via the session extension") {
-    val v = spark
-      .sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
-      .head()
-      .getDouble(0)
-    assert(v == 11.0)
-  }
 }

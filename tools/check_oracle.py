@@ -26,7 +26,7 @@ def main() -> None:
     con = duckdb.connect()
     for tbl in [
         "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
+        "lineitem", "events", "documents",
     ]:
         con.execute(
             f"CREATE VIEW {tbl} AS SELECT * FROM '{sf_dir}/{tbl}.parquet'"
