@@ -32,7 +32,8 @@ import org.apache.spark.sql.functions._
   * `continuous` workload times this ingest -> update path.
   *
   * The session comes from the spark-submit conf (no master hardcoded);
-  * local runs fall back to local[*].
+  * local runs fall back to local[*]. Like every graft session it
+  * carries `Sessions.FileSystemConf` (the fork-free `file:` filesystem).
   */
 object Main {
 
@@ -55,6 +56,7 @@ object Main {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config(graft.spark.Sessions.FileSystemConf)
       .getOrCreate()
 
     val t0 = System.nanoTime()

@@ -3,8 +3,12 @@ package graft.snapshot
 import graft.rollup.{Rollup, Tiers}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.io.LocalInputFile
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DateType, StructType}
+import scala.jdk.OptionConverters._
 
 /** Continuous aggregates over an Iceberg-lite snapshot table
   * (SURVEY.md §2.10): tier tables are kept up to date by recomputing
@@ -62,8 +66,42 @@ object ContinuousRollup {
     */
   private val SmallTierRows = 5000L
 
-  def readTier(spark: SparkSession, tiersRoot: String, tier: String): DataFrame =
-    spark.read.parquet(tierPath(tiersRoot, tier)).drop("part_key")
+  /** A tier's rows. The schema is the one Spark stored in the footer
+    * of one of the tier's data files, read on the driver: building the
+    * frame runs no schema-inference job. (A tier of more than 32
+    * partitions still pays Spark's parallel listing job.)
+    */
+  def readTier(spark: SparkSession, tiersRoot: String, tier: String): DataFrame = {
+    val path = tierPath(tiersRoot, tier)
+    val reader = storedSchema(path).fold(spark.read)(s => spark.read.schema(s.add("part_key", DateType)))
+    reader.parquet(path).drop("part_key")
+  }
+
+  /** The Spark schema in the footer of the first data file found under
+    * `path`'s partition dirs; None when there is none (the read then
+    * infers, or fails on a missing path, as before).
+    */
+  private def storedSchema(path: String): Option[StructType] = {
+    val root = Paths.get(path)
+    if (!Files.isDirectory(root)) return None
+    val files = Files.find(
+      root,
+      2,
+      (p, attrs) =>
+        attrs.isRegularFile && p.getFileName.toString.endsWith(".parquet") &&
+          p.getParent.getFileName.toString.startsWith("part_key=")
+    )
+    try
+      files.findFirst().toScala.flatMap { f =>
+        val reader = ParquetFileReader.open(new LocalInputFile(f))
+        try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
+        finally reader.close()
+      }.map(json => DataType.fromJson(json).asInstanceOf[StructType])
+    finally files.close()
+  }
+
+  /** The footer key under which Spark's parquet writer stores the row schema. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /** Partition key of a raw point: its day. Only the 1m tier reads raw
     * points, from exactly the touched days; the coarser tiers re-roll
@@ -137,8 +175,6 @@ object ContinuousRollup {
     val from = lastApplied(tiersRoot)
     val to = SnapshotStore.currentSnapshotId(sourceRoot)
     if (to <= from) return from
-
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     // an empty day-partitioned append commits a manifest with no data
     // dirs at all — nothing to fold, mark applied and return
@@ -341,6 +377,7 @@ object ContinuousRollup {
         .observe(rowsObs, count(lit(1)).as("rows_out"))
         .write
         .mode(if (exists) "overwrite" else "errorifexists")
+        .option("partitionOverwriteMode", "dynamic") // this write's mode; the session's stays the caller's
         .partitionBy("part_key")
         .parquet(path)
       val rowsOut = rowsObs.get("rows_out").asInstanceOf[Long]

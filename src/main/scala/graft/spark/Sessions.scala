@@ -11,8 +11,19 @@ import org.apache.spark.sql.SparkSession
   * partitions sized to the core count (not the 200 default), AQE on
   * (skew-join handling for hot-domain keys), UTC session timezone for
   * oracle parity with DuckDB.
+  *
+  * Every session, `graft.Main`'s too, carries `FileSystemConf`: the
+  * `file:` scheme maps to `InProcessLocalFileSystem`, which sets the
+  * permission bits of what a write creates in-process. Hadoop's own
+  * local filesystem, without the native `libhadoop`, forks a `chmod`
+  * process per file, `.crc` sidecar and directory, a fixed cost under
+  * every write of a continuous update.
   */
 object Sessions {
+
+  /** Hadoop settings every graft session builder applies. */
+  val FileSystemConf: Map[String, Any] =
+    Map("spark.hadoop.fs.file.impl" -> classOf[InProcessLocalFileSystem].getName)
 
   /** Cores implied by a `local[N]` master string; 4 as a fallback. */
   def coresOf(master: String): Int = {
@@ -53,6 +64,7 @@ object Sessions {
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
+      .config(FileSystemConf)
       .getOrCreate()
   }
 

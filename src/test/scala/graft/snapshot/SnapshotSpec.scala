@@ -465,4 +465,37 @@ class SnapshotSpec extends SparkSpec {
     val after = ContinuousRollup.readTier(spark, tiers, "1h").collect().toSet
     assert(after == before)
   }
+
+  test("update leaves the session's partition overwrite mode alone: a later static overwrite replaces the dir") {
+    import spark.implicits._
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(key)
+    val mode = spark.conf.get(key)
+    val root = tmpDir("snap_owmode")
+    val tiers = tmpDir("snap_owmode_tiers")
+    SnapshotStore.append(root, events, tsCol = Some("ts"))
+    ContinuousRollup.update(spark, root, tiers, Seq("event_type"), "ts", lit(1L))
+    assert(spark.conf.get(key) == mode)
+
+    val out = s"${tmpDir("snap_owmode_out")}/t"
+    Seq((1, "a"), (2, "b")).toDF("v", "p").write.partitionBy("p").parquet(out)
+    Seq((3, "a")).toDF("v", "p").write.mode("overwrite").partitionBy("p").parquet(out)
+    assert(spark.read.parquet(out).as[(Int, String)].collect().toSeq == Seq((3, "a")))
+  }
+
+  test("readTier reads the stored schema without a Spark job") {
+    val root = tmpDir("snap_readtier")
+    val tiers = tmpDir("snap_readtier_tiers")
+    SnapshotStore.append(root, events, tsCol = Some("ts"))
+    ContinuousRollup.update(spark, root, tiers, Seq("event_type"), "ts", lit(1L), langCol = Some("event_type"))
+    for (t <- Seq("1m", "1h", "1d", "30d")) {
+      val (schema, jobs) = jobStartsDuring(ContinuousRollup.readTier(spark, tiers, t).schema)
+      assert(jobs.isEmpty, s"tier $t: ${jobs.size} jobs, ${jobs.count(outsideSqlExecution)} outside any SQL execution")
+      val inferred = spark.read.parquet(s"$tiers/tier_$t").drop("part_key")
+      assert(schema == inferred.schema, s"tier $t")
+      def rows(df: DataFrame) = df.withColumn("lang_hist", array_sort(map_entries(col("lang_hist"))))
+      val got = rows(ContinuousRollup.readTier(spark, tiers, t))
+      assert(got.exceptAll(rows(inferred)).isEmpty && rows(inferred).exceptAll(got).isEmpty, s"tier $t rows")
+    }
+  }
 }
