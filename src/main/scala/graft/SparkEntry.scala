@@ -4,7 +4,6 @@ import graft.correct.{Cells, Correctors, Fd, Pdep}
 import graft.dedup.Dedup
 import graft.pages.{PageGen, PagePipeline}
 import graft.rollup.{BlockOps, GapFill, Rollup, Tiers}
-import graft.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -211,30 +210,6 @@ object SparkEntry {
       )
     }),
 
-    // ---- text: language id ----
-    "q16_langid" -> ((s, dir) => {
-      TextOps
-        .withLangId(t(s, dir, "documents"), "text", "lang_pred")
-        .select("doc_id", "lang_pred")
-    }),
-
-    // ---- text: quality / token stats ----
-    "q17_quality" -> ((s, dir) => {
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        length(col("text")).cast("long").as("n_chars_calc"),
-        TextOps.tokenCount(col("text")).cast("long").as("n_tokens"),
-        TextOps.stopwordCount("text").cast("long").as("n_stopwords"),
-        TextOps.bpeishCount("text").cast("long").as("n_bpeish"),
-        TextOps.qualityScore("text").as("quality")
-      )
-    }),
-
-    // ---- text: fingerprint ----
-    "q18_fingerprint" -> ((s, dir) => {
-      t(s, dir, "documents").select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp"))
-    }),
-
     // ---- Gorilla/delta-of-delta blocks: oracle checked THROUGH the
     //      codec (block built from 1m tier, decoded, points re-counted)
     "q19_blocks_roundtrip" -> ((s, dir) => {
@@ -299,20 +274,6 @@ object SparkEntry {
         .minHashLsh(t(s, dir, "documents"), "doc_id", "text")
         .select("id_a", "id_b")
       graft.dedup.Clusters.dedupDecision(pairs, "id_a", "id_b")
-    }),
-
-    // ---- token-budget corpus packing: per-language greedy prefix in
-    //      quality order until the stratum's token budget fills — one
-    //      window cumsum per stratum, no iteration ----
-    "q85_corpus_pack" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(
-        col("doc_id"),
-        col("lang"),
-        TextOps.tokenCount(col("text")).cast("long").as("n_tokens"),
-        TextOps.qualityScore("text").as("quality")
-      )
-      graft.text.CorpusPack
-        .packByBudget(d, "lang", "n_tokens", "quality", "doc_id", Map("en" -> 4000L), defaultBudget = 2500L)
     }),
 
     // ---- cross-series Pearson correlation: which metric series move
@@ -480,40 +441,6 @@ object SparkEntry {
       graft.rollup.Decay.decayedCounts(t(s, dir, "events"), Seq("event_type"), "ts", horizonDays = 30)
     }),
 
-    // ---- train/eval contamination: word-3-gram containment of the
-    //      held-out split against the training split — one LEFT SEMI
-    //      join on the distinct train shingle set, integer-threshold
-    //      flag (the benchmark-leak detector every corpus release
-    //      runs) ----
-    "q101_contamination" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.text.Contamination.ngramContainment(
-        docs.filter(col("doc_id") % 10 =!= 0),
-        docs.filter(col("doc_id") % 10 === 0),
-        "doc_id",
-        "text",
-        n = 3,
-        thresholdPct = 50
-      )
-    }),
-
-    // ---- inverted index: token -> sorted posting list as first id +
-    //      ascending gaps (the retrieval-index storage layout). The
-    //      SQL-replayable string form is checked here; the binary
-    //      DeltaCodec twin of the same longs is round-trip-pinned by
-    //      InvertedIndexSpec ----
-    "q102_inverted_index" -> ((s, dir) => {
-      graft.text.InvertedIndex
-        .postings(t(s, dir, "documents"), "doc_id", "text", minDf = 2)
-        .select("token", "df", "first_id", "gaps_csv")
-    }),
-
-    // ---- per-doc top-k keywords by an exact integer tf-idf
-    //      surrogate (tf * 1e6 div df), float-free ranking ----
-    "q103_tfidf_keywords" -> ((s, dir) => {
-      graft.text.Keywords.topKeywords(t(s, dir, "documents"), "doc_id", "text", k = 3)
-    }),
-
     // ---- predict_linear: per-series least-squares forecast one hour
     //      past the last observation — exact decimal co-moments, the
     //      fit a per-series float epilogue (Prometheus alerting
@@ -542,12 +469,6 @@ object SparkEntry {
     //      sliding-window hash join) ----
     "q106_span_dedup" -> ((s, dir) => {
       graft.dedup.SpanDedup.repeatedSpans(t(s, dir, "documents"), "doc_id", "text", k = 5)
-    }),
-
-    // ---- corpus Zipf frequency spectrum: types + token mass per
-    //      frequency band, head-mass cumsum — the df floor/cap curve ----
-    "q107_zipf_spectrum" -> ((s, dir) => {
-      graft.text.CorpusStats.frequencySpectrum(t(s, dir, "documents"), "text")
     }),
 
     // ---- ingestion integrity: duplicate + dropped sequence ids over
@@ -691,12 +612,6 @@ object SparkEntry {
     //      prefix (anchored span dedup, one window per doc) ----
     "q121_prefix_groups" -> ((s, dir) => {
       graft.dedup.SpanDedup.prefixGroups(t(s, dir, "documents"), "doc_id", "text", k = 3)
-    }),
-
-    // ---- vocabulary growth (Heaps curve) in 100-doc buckets ----
-    "q122_vocab_growth" -> ((s, dir) => {
-      graft.text.CorpusStats
-        .vocabGrowth(t(s, dir, "documents"), "doc_id", "text", bucketWidth = 100L)
     }),
 
     // ---- biggest movers: series activity delta across the data's own
@@ -1235,17 +1150,6 @@ object SparkEntry {
         .select("event_id", "user_id", "ts", "event_type")
     }),
 
-    // ---- training-mix temperature reweighting (α=0.5, the XLM-R
-    //      multilingual sampling shape): per-lang token mass →
-    //      sqrt-tempered sampling weights + expected epochs under a
-    //      1M-token budget; the normalization denominator is an
-    //      INTEGER micro-unit sum (order-free) on a 1-row broadcast ----
-    "q164_mixture_weights" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .select(col("lang"), graft.text.TextOps.tokenCount(col("text")).cast("long").as("n_tokens"))
-      graft.text.Mixture.temperatureWeights(d, "lang", "n_tokens", budgetTokens = 1000000L)
-    }),
-
     // ---- LTTB visual downsample (fixed-anchor parallel variant):
     //      ONE representative point per (series, hour) — the point
     //      forming the largest triangle against the previous bucket's
@@ -1421,23 +1325,6 @@ object SparkEntry {
       graft.rollup.Kmv.distinctEstimate(t(s, dir, "events"), Seq("event_type"), "user_id", k = 64)
     }),
 
-    // ---- crawl politeness schedule: per-host serialized fetch plan
-    //      under RFC 9309 Crawl-delay — priority-ordered slots, fetch
-    //      offset slot·delay; hosts are independent partitions ----
-    "q174_crawl_schedule" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val sfx = regexp_extract(col("source"), "^src(\\d+)$", 1).cast("int")
-      graft.text.Politeness
-        .schedule(
-          docs.select(col("doc_id"), col("source"), col("n_chars")),
-          "source",
-          priority = col("n_chars"),
-          tieBreak = "doc_id",
-          delaySec = lit(1) + pmod(sfx, lit(3))
-        )
-        .select("source", "doc_id", "n_chars", "slot", "fetch_offset_s")
-    }),
-
     // ---- branch-vs-main audit: what did the dev branch change,
     //      per day, WITHOUT reading data — Refs (zero-copy fork) and
     //      ReplicaDiff (order-free XOR digests) composed: the branch
@@ -1461,13 +1348,6 @@ object SparkEntry {
       graft.snapshot.ReplicaDiff
         .diff(m, d, Seq("day"), Seq("event_id", "user_id", "event_type"))
         .select("day", "digest_a", "n_a", "digest_b", "n_b", "status")
-    }),
-
-    // ---- tokenizer vocabulary coverage: per-doc OOV rate against the
-    //      exact (count DESC, token ASC) top-500 corpus vocab — the
-    //      vocab-size sweep / tokenizer-shred diagnostic ----
-    "q176_vocab_coverage" -> ((s, dir) => {
-      graft.text.Vocab.oovRate(t(s, dir, "documents"), "doc_id", "text", vocabSize = 500)
     }),
 
     // ---- change-data-feed (Iceberg changelog / Delta CDF): the
@@ -1708,32 +1588,6 @@ object SparkEntry {
         Seq("event_id", "user_id", "event_type"))
     }),
 
-    // ---- sitemap urlset roundtrip: per-host sitemap XML assembled
-    //      deterministically (order-free via array_sort before the
-    //      concat), then flat-mapped back to one row per <url> entry
-    //      by the tag-level parser — a zero-shuffle explode+regexp
-    //      stage; optional fields null when absent. Build∘parse must
-    //      be the identity on the entry relation (the oracle). ----
-    "q156_sitemap_parse" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val entry = concat(
-        lit("<url>\n  <loc> https://"), col("source"), lit(".example.com/doc/"),
-        col("doc_id").cast("string"), lit(" </loc>\n  <lastmod>2024-01-"),
-        lpad((pmod(col("doc_id"), lit(28)) + 1).cast("string"), 2, "0"), lit("</lastmod>\n"),
-        when(pmod(col("doc_id"), lit(4)) === 0, lit("  <priority>0.8</priority>\n")).otherwise(lit("")),
-        lit("</url>\n"))
-      val sites = docs
-        .select(col("source"), struct(col("doc_id"), entry.as("e")).as("se"))
-        .groupBy("source")
-        .agg(
-          concat(
-            lit("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<urlset xmlns=\"http://www.sitemaps.org/schemas/sitemap/0.9\">\n"),
-            concat_ws("", transform(array_sort(collect_list(col("se"))), x => x.getField("e"))),
-            lit("</urlset>\n")).as("xml"))
-      graft.text.Sitemap.parseUrlset(sites, "xml")
-        .select("source", "loc", "lastmod", "changefreq", "priority")
-    }),
-
     // ---- PageRank over a deterministic synthetic link graph (3
     //      out-links per doc, dst = (id*7 + 13j) mod N — gcd(7,N)=1
     //      makes in-degree uniform too): 8 supersteps of fixed-point
@@ -1749,61 +1603,6 @@ object SparkEntry {
         .select(col("src"), pmod(col("src") * 7 + col("j") * 13, lit(n)).as("dst"))
       graft.graph.PageRank.ranks(edges, "src", "dst", iters = 8)
         .select(col("v").as("doc_id"), col("rank"))
-    }),
-
-    // ---- robots.txt crawl-permission gate (RFC 9309): per-host
-    //      robots text parses to agent-selected (rule, prefix) rules
-    //      (host-sized relation), then every URL gets its longest-
-    //      match / Allow-wins-ties verdict via a BROADCAST rule join +
-    //      one partial-aggregated struct-max reduce — the corpus side
-    //      never shuffles for the match. Planted policy: /doc/ denied,
-    //      /doc/1* re-allowed, /doc/12* re-denied, hosts with
-    //      suffix%3==0 additionally allow /doc/7*; an evilbot group,
-    //      comments, empty values, and unknown fields must all be
-    //      ignored for our agent. ----
-    "q154_robots_filter" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val sfx = regexp_extract(col("source"), "^src(\\d+)$", 1).cast("int")
-      val txt = concat(
-        lit("# crawl policy\nUser-agent: evilbot\nDisallow: /\n\n" +
-          "User-agent: *\nDisallow: /doc/\nAllow: /doc/1\nDisallow: /doc/12\nCrawl-delay: 5\n"),
-        when(pmod(sfx, lit(3)) === 0, lit("Allow: /doc/7\n"))
-          .when(pmod(sfx, lit(3)) === 2, lit("Disallow:\n"))
-          .otherwise(lit("")))
-      val hosts = docs.select(col("source")).distinct().withColumn("txt", txt)
-      val rules = graft.text.Robots.parseRules(hosts, "source", "txt", "graftbot")
-      val urls = docs.select(
-        col("doc_id"),
-        col("source"),
-        concat(col("source"), lit(".example.com")).as("host"),
-        concat(lit("/doc/"), col("doc_id").cast("string")).as("path"))
-      graft.text.Robots.decide(urls, rules, Seq("doc_id"), "source", "path")
-        .select("doc_id", "host", "path", "allowed")
-    }),
-
-    // ---- WARC record parse (Common-Crawl's container format, ISO
-    //      28500): record-ized strings -> typed fields, every
-    //      extraction one codegen regexp in the Java ∩ RE2 dialect —
-    //      a ZERO-SHUFFLE map stage. Planted defects: doc_id%7 records
-    //      declare a wrong Content-Length (valid=false), doc_id%13
-    //      records are not WARC at all (all-null fields). ----
-    "q145_warc_parse" -> ((s, dir) => {
-      val crlf = lit("\r\n")
-      val docs = t(s, dir, "documents")
-      val declaredLen = when(pmod(col("doc_id"), lit(7)) === 0, length(col("text")) + 1)
-        .otherwise(length(col("text")))
-      val rec0 = concat(
-        lit("WARC/1.0"), crlf,
-        lit("WARC-Type: response"), crlf,
-        lit("WARC-Target-URI: https://"), col("source"), lit(".example.com/doc/"),
-        col("doc_id").cast("string"), crlf,
-        lit("WARC-Date: 2024-01-01T00:00:00Z"), crlf,
-        lit("Content-Length: "), declaredLen.cast("string"), crlf, crlf,
-        col("text"))
-      val rec = when(pmod(col("doc_id"), lit(13)) === 0, concat(lit("GARBAGE"), rec0)).otherwise(rec0)
-      graft.text.Warc
-        .parseRecords(docs.select(col("doc_id"), rec.as("record")), "record")
-        .select("doc_id", "warc_type", "uri", "warc_date", "content_length", "payload", "valid")
     }),
 
     // ---- merge-on-read row deletes (Iceberg v2 equality deletes):
@@ -2181,66 +1980,6 @@ object SparkEntry {
       out.get.select("id_a", "id_b", "est_jaccard")
     }),
 
-    // ---- the end-to-end webtext preprocessing pass: lang-ID +
-    //      quality gate + exact dedup + near-dedup + token accounting
-    //      in ONE call; every stage is an order-free corpus predicate,
-    //      so the oracle replays each in SQL and intersects ----
-    "q67_corpus_pipeline" -> ((s, dir) => {
-      graft.text.CorpusPipeline.clean(t(s, dir, "documents"), "doc_id", "text")
-    }),
-
-    // ---- repetition quality gate (Gopher-style, word-stream form):
-    //      dup-word / top-bigram / dup-trigram fractions + keep flag,
-    //      computed per row with zero shuffles (sorted-run aggregate
-    //      for the max n-gram frequency) ----
-    "q70_repetition" -> ((s, dir) => {
-      graft.text.CorpusClean
-        .repetitionStats(t(s, dir, "documents"), "text")
-        .select("doc_id", "dup_word_frac", "top_bigram_frac", "dup_trigram_frac", "keep")
-    }),
-
-    // ---- corpus-level boilerplate pruning by token document
-    //      frequency (CCNet common-line removal adapted to word
-    //      streams): DF over distinct (doc, token), vocabulary-bounded
-    //      hot list broadcast back as a per-row filter ----
-    "q71_boilerplate_df" -> ((s, dir) => {
-      graft.text.CorpusClean
-        .dfPrune(t(s, dir, "documents"), "doc_id", "text", minDfFrac = 0.78)
-        ._1
-    }),
-
-    // ---- PII redaction: deterministic injected email/IP/phone
-    //      (counts vary per doc) redacted by shared-dialect regexes,
-    //      plus per-type pre-redaction counts ----
-    "q72_pii_redact" -> ((s, dir) => {
-      import graft.text.CorpusClean
-      val aug = t(s, dir, "documents").select(
-        col("doc_id"),
-        concat(
-          col("text"),
-          lit(" contact user"),
-          col("doc_id").cast("string"),
-          lit("@mail"),
-          pmod(col("doc_id"), lit(7)).cast("string"),
-          lit(".com"),
-          expr(
-            """repeat(concat(' call 555-01', lpad(cast(doc_id % 100 as string), 2, '0')),
-                      cast(doc_id % 3 as int))"""
-          ),
-          lit(" host 10."),
-          pmod(col("doc_id"), lit(256)).cast("string"),
-          lit(".0.1")
-        ).as("atext")
-      )
-      aug.select(
-        col("doc_id"),
-        CorpusClean.redactPii(col("atext")).as("redacted"),
-        CorpusClean.piiCount(col("atext"), CorpusClean.EmailRe).as("n_email"),
-        CorpusClean.piiCount(col("atext"), CorpusClean.IpRe).as("n_ip"),
-        CorpusClean.piiCount(col("atext"), CorpusClean.PhoneRe).as("n_phone")
-      )
-    }),
-
     // ---- as-of join: purchases pick up the most recent prior-or-equal
     //      signup snapshot of the same user — ONE shared hash exchange
     //      plus an in-partition sort (sort-merge shape), never the
@@ -2446,32 +2185,6 @@ object SparkEntry {
           col("sw.end").as("session_end"),
           col("n_events")
         )
-    }),
-
-    // ---- webtext URL canonicalization + canonical-key dedup: the
-    //      synthetic crawl serves each page under three deterministic
-    //      disguises (upper-case host + default port + fragment;
-    //      tracking params; unsorted params) — canonical grouping must
-    //      reunite the first two and keep the param variant distinct ----
-    "q68_url_canonical" -> ((s, dir) => {
-      val d = col("doc_id")
-      val site = pmod(d, lit(7)).cast("string")
-      val page = pmod(d, lit(11)).cast("string")
-      val url = when(
-        pmod(d, lit(3)) === 0,
-        concat(lit("https://www.Example"), site, lit(".com/p"), page, lit("?utm_source=feed&ref=rss"))
-      ).when(
-          pmod(d, lit(3)) === 1,
-          concat(lit("HTTPS://WWW.EXAMPLE"), site, lit(".COM:443/p"), page, lit("#frag"))
-        )
-        .otherwise(concat(lit("https://www.example"), site, lit(".com/p"), page, lit("?b=2&a=1")))
-      t(s, dir, "documents")
-        .select(d, url.as("url"))
-        .groupBy(
-          graft.text.UrlOps.canonicalize(col("url")).as("canonical_url"),
-          graft.text.UrlOps.registeredDomain(col("url")).as("registered_domain")
-        )
-        .agg(min(col("doc_id")).as("keeper_id"), count(lit(1)).as("n_copies"))
     }),
 
     // ---- §2.10: mergeable top-k (heavy hitters) tier measure — the
@@ -2859,44 +2572,6 @@ object SparkEntry {
                  FROM cand JOIN sig sa ON sa.doc_id = id_a JOIN sig sb ON sb.doc_id = id_b)
          SELECT id_a, id_b, est_jaccard FROM est WHERE est_jaccard >= 0.5"""
 
-  /** Marker-token lang-ID in SQL — q16, and a CTE of q67. */
-  private val langIdSql: String = {
-    def sc(markers: Seq[String]) = {
-      val list = markers.map(w => s"'$w'").mkString(", ")
-      s"len(list_filter(string_split(text, ' '), w -> w IN ($list)))"
-    }
-    val de = sc(Seq("der", "die", "und", "nicht"))
-    val en = sc(Seq("the", "and", "of", "is"))
-    val es = sc(Seq("el", "los", "y", "que"))
-    val fr = sc(Seq("le", "la", "et", "les"))
-    s"""WITH scored AS (
-          SELECT doc_id, $de AS s_de, $en AS s_en, $es AS s_es, $fr AS s_fr FROM documents)
-        SELECT doc_id,
-               CASE WHEN s_de + s_en + s_es + s_fr = 0 THEN 'und'
-                    WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr THEN 'de'
-                    WHEN s_en >= s_es AND s_en >= s_fr THEN 'en'
-                    WHEN s_es >= s_fr THEN 'es'
-                    ELSE 'fr' END AS lang_pred
-        FROM scored"""
-  }
-
-  /** Quality features + score in SQL — q17, and a CTE of q67. */
-  private val qualitySql: String = {
-    val stop = TextOps.Stopwords.map(w => s"'$w'").mkString(", ")
-    s"""SELECT doc_id,
-               length(text) AS n_chars_calc,
-               len(string_split(text, ' ')) AS n_tokens,
-               len(list_filter(string_split(text, ' '), w -> w IN ($stop))) AS n_stopwords,
-               len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS n_bpeish,
-               round(
-                 least(length(text) / 500.0, 1.0) * 0.4 +
-                 (len(list_filter(string_split(text, ' '), w -> w IN ($stop))) * 1.0 /
-                   greatest(len(string_split(text, ' ')), 1)) * 0.3 +
-                 (CASE WHEN length(text) * 1.0 / greatest(len(string_split(text, ' ')), 1)
-                            BETWEEN 3.0 AND 10.0 THEN 1.0 ELSE 0.5 END) * 0.3, 6) AS quality
-        FROM documents"""
-  }
-
   def oracleSql: Map[String, String] = Map(
     "q01_lineitem_agg" ->
       s"""SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
@@ -2990,10 +2665,6 @@ object SparkEntry {
          SELECT id_a, id_b, overlap, sa.sz + sb.sz - overlap AS union_size
          FROM inter JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
          WHERE overlap * 1.0 / (sa.sz + sb.sz - overlap) >= 0.5""",
-    "q16_langid" -> langIdSql,
-    "q17_quality" -> qualitySql,
-    "q18_fingerprint" ->
-      """SELECT doc_id, md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp FROM documents""",
     "q19_blocks_roundtrip" ->
       s"""WITH minutely AS (
             SELECT event_type, date_trunc('minute', ts) AS mts, ${dsumSql("value")} AS vs
@@ -3257,54 +2928,6 @@ object SparkEntry {
     // signatures, exactly-once pair emission) — so its oracle IS the
     // batch SQL.
     "q64_dedup_incremental" -> minHashLshBatchSql,
-    // Stage-by-stage replay: the LSH CTE chain (shared with q22/q64)
-    // feeds the near-dup drop set; lang-ID and quality re-run as CTEs;
-    // exact dedup is a min-id-per-text keeper set; the survivor rows
-    // intersect all three predicates.
-    "q67_corpus_pipeline" -> {
-      val lshCtes = minHashLshBatchSql
-        .substring(0, minHashLshBatchSql.lastIndexOf("SELECT id_a"))
-        .trim
-      s"""$lshCtes,
-         nd AS (SELECT DISTINCT id_b FROM est WHERE est_jaccard >= 0.5),
-         lang AS ($langIdSql),
-         qual AS ($qualitySql),
-         keep AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY text)
-         SELECT d.doc_id, lang.lang_pred AS lang, qual.quality, qual.n_tokens, qual.n_bpeish
-         FROM documents d
-         JOIN lang ON lang.doc_id = d.doc_id
-         JOIN qual ON qual.doc_id = d.doc_id
-         WHERE qual.quality >= 0.5
-           AND d.doc_id IN (SELECT doc_id FROM keep)
-           AND d.doc_id NOT IN (SELECT id_b FROM nd)""".stripMargin
-    },
-    // Algorithm-parity oracle: identical URL synthesis + canonical
-    // rules (lowercase scheme/host, default-port strip, fragment drop,
-    // tracking-param drop, param sort) replayed with DuckDB regex +
-    // list functions.
-    "q68_url_canonical" ->
-      """WITH u AS (SELECT doc_id,
-               CASE WHEN doc_id % 3 = 0 THEN 'https://www.Example' || (doc_id % 7) || '.com/p' || (doc_id % 11) || '?utm_source=feed&ref=rss'
-                    WHEN doc_id % 3 = 1 THEN 'HTTPS://WWW.EXAMPLE' || (doc_id % 7) || '.COM:443/p' || (doc_id % 11) || '#frag'
-                    ELSE 'https://www.example' || (doc_id % 7) || '.com/p' || (doc_id % 11) || '?b=2&a=1' END AS url
-             FROM documents),
-         nf AS (SELECT doc_id, regexp_replace(url, '#.*$', '') AS nofrag FROM u),
-         parts AS (SELECT doc_id,
-                     lower(regexp_extract(nofrag, '^([A-Za-z]+)://', 1)) AS scheme,
-                     regexp_replace(lower(regexp_extract(nofrag, '^[A-Za-z]+://([^/?#]+)', 1)), ':(443|80)$', '') AS host,
-                     regexp_extract(nofrag, '^[A-Za-z]+://[^/?#]+([^?#]*)', 1) AS path,
-                     regexp_extract(nofrag, '\?(.*)$', 1) AS query
-                   FROM nf),
-         canon AS (SELECT doc_id,
-                     scheme || '://' || host || path ||
-                       CASE WHEN length(q) > 0 THEN '?' || q ELSE '' END AS canonical_url,
-                     regexp_extract(host, '([^.]+\.[^.]+)$', 1) AS registered_domain
-                   FROM (SELECT *, array_to_string(list_sort(list_filter(string_split(query, '&'),
-                           p -> NOT (regexp_matches(p, '^(utm_[^=]*|fbclid|gclid|ref)=') OR p = ''))), '&') AS q
-                         FROM parts))
-         SELECT canonical_url, registered_domain,
-                CAST(min(doc_id) AS BIGINT) AS keeper_id, count(*) AS n_copies
-         FROM canon GROUP BY 1, 2""",
     // Exact-mode oracle: below the sketch capacity the SpaceSaving
     // counters ARE the exact per-item counts, so the exact top-5 with
     // the identical (count desc, item asc) tie-break must match.
@@ -3381,53 +3004,6 @@ object SparkEntry {
     "q62_meta_learner_cv" -> Goldens("q62_meta_learner_cv"),
     "q182_meta_learner_cv_precision" -> Goldens("q182_meta_learner_cv_precision"),
     "q52_cleaning_synth" -> Goldens("q52_cleaning_synth"),
-    // Repetition stats: bigram/trigram lists rebuilt with 1-based list
-    // comprehension transforms; max bigram frequency via unnest+group
-    // (the oracle may shuffle — only the engine side must not).
-    "q70_repetition" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-         base AS (SELECT doc_id, l, len(l) AS n,
-             CASE WHEN len(l) < 2 THEN [] ELSE list_transform(range(1, len(l)), i -> l[i] || ' ' || l[i+1]) END AS bg,
-             CASE WHEN len(l) < 3 THEN [] ELSE list_transform(range(1, len(l)-1), i -> l[i] || ' ' || l[i+1] || ' ' || l[i+2]) END AS tg
-           FROM toks),
-         bge AS (SELECT doc_id, unnest(bg) AS b FROM base),
-         mx AS (SELECT doc_id, max(c) AS maxbg FROM (SELECT doc_id, b, count(*) AS c FROM bge GROUP BY 1, 2) GROUP BY 1),
-         st AS (SELECT base.doc_id,
-             round(1.0 - len(list_distinct(l)) * 1.0 / n, 6) AS dup_word_frac,
-             round(CASE WHEN n < 2 THEN 0.0 ELSE least(1.0, 2.0 * coalesce(maxbg, 0) / n) END, 6) AS top_bigram_frac,
-             round(CASE WHEN n < 3 THEN 0.0 ELSE 1.0 - len(list_distinct(tg)) * 1.0 / (n - 2) END, 6) AS dup_trigram_frac
-           FROM base LEFT JOIN mx ON base.doc_id = mx.doc_id)
-         SELECT doc_id, dup_word_frac, top_bigram_frac, dup_trigram_frac,
-                (dup_word_frac <= 0.6 AND top_bigram_frac <= 0.125) AS keep
-         FROM st""",
-    // Boilerplate DF pruning: hot list = tokens in >= 78% of docs,
-    // applied as a list_filter with the hot list cross-joined in.
-    "q71_boilerplate_df" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-         hot AS (SELECT tok FROM (SELECT DISTINCT doc_id, unnest(l) AS tok FROM toks)
-                 GROUP BY tok HAVING count(*) >= 0.78 * (SELECT count(*) FROM documents)),
-         hl AS (SELECT coalesce(list(tok), []) AS hw FROM hot)
-         SELECT doc_id,
-                coalesce(array_to_string(list_filter(l, w -> NOT list_contains(hw, w)), ' '), '') AS clean_text,
-                CAST(len(l) - len(list_filter(l, w -> NOT list_contains(hw, w))) AS BIGINT) AS n_removed
-         FROM toks, hl""",
-    // PII: identical inject expression, identical regexes (Java ∩ RE2
-    // dialect), redaction order email -> IP -> phone; DuckDB needs the
-    // explicit 'g' flag to match Spark's replace-all.
-    "q72_pii_redact" ->
-      """WITH aug AS (SELECT doc_id,
-             text || ' contact user' || doc_id || '@mail' || (doc_id % 7) || '.com' ||
-             repeat(' call 555-01' || lpad((doc_id % 100)::VARCHAR, 2, '0'), (doc_id % 3)::INT) ||
-             ' host 10.' || (doc_id % 256) || '.0.1' AS atext FROM documents)
-         SELECT doc_id,
-                regexp_replace(regexp_replace(regexp_replace(atext,
-                  '[a-z0-9._-]+@[a-z0-9.-]+\.[a-z]{2,}', '<EMAIL>', 'g'),
-                  '([0-9]{1,3}\.){3}[0-9]{1,3}', '<IP>', 'g'),
-                  '555-[0-9]{4}', '<PHONE>', 'g') AS redacted,
-                CAST(len(regexp_extract_all(atext, '[a-z0-9._-]+@[a-z0-9.-]+\.[a-z]{2,}')) AS BIGINT) AS n_email,
-                CAST(len(regexp_extract_all(atext, '([0-9]{1,3}\.){3}[0-9]{1,3}')) AS BIGINT) AS n_ip,
-                CAST(len(regexp_extract_all(atext, '555-[0-9]{4}')) AS BIGINT) AS n_phone
-         FROM aug""",
     // As-of join: DuckDB's native ASOF LEFT JOIN is the oracle — the
     // engine's union+window plan must reproduce it row for row,
     // including unmatched lefts and the exact-timestamp-tie match.
@@ -3624,18 +3200,6 @@ object SparkEntry {
                           SELECT r.id, e2.b FROM reach r JOIN e e2 ON r.w = e2.a)
          SELECT id, min(w) AS component, (id = min(w)) AS is_canonical
          FROM reach GROUP BY id"""
-    },
-    // Corpus packing: q17's quality CTE feeds the identical
-    // quality-desc/doc-id window cumsum and per-language budget ladder.
-    "q85_corpus_pack" -> {
-      s"""WITH q AS ($qualitySql),
-         j AS (SELECT d.doc_id, d.lang, q.n_tokens, q.quality
-               FROM documents d JOIN q ON q.doc_id = d.doc_id),
-         c AS (SELECT *, CAST(sum(n_tokens) OVER (PARTITION BY lang ORDER BY quality DESC, doc_id ASC
-                                                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-               FROM j)
-         SELECT doc_id, lang, CAST(n_tokens AS BIGINT) AS n_tokens, quality, cum_tokens FROM c
-         WHERE cum_tokens <= CASE WHEN lang = 'en' THEN 4000 ELSE 2500 END"""
     },
     // Pearson replay: identical micro-unit bucket sums, identical
     // integer co-moments (HUGEINT here, decimal(38,0) in the engine),
@@ -3856,46 +3420,6 @@ object SparkEntry {
                 CAST(sum(CAST(1 AS BIGINT) << (30 - age)) AS BIGINT) AS decayed_units,
                 CAST(sum(CAST(1 AS BIGINT) << (30 - age)) AS DOUBLE) / 1073741824e0 AS decayed_score
          FROM a GROUP BY 1""",
-    // Contamination replay: the q14 shingle CTE split into eval
-    // (doc_id % 10 = 0) and train sides, semi-join containment
-    // counts, identical integer threshold comparison.
-    "q101_contamination" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         sh AS (SELECT DISTINCT doc_id AS id, array_to_string(t[i:i+2], ' ') AS shingle
-                FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 2)) AS i) g
-                WHERE len(t) >= 3),
-         ev AS (SELECT * FROM sh WHERE id % 10 = 0),
-         tr AS (SELECT DISTINCT shingle FROM sh WHERE id % 10 <> 0),
-         tot AS (SELECT id, count(*) AS n_shingles FROM ev GROUP BY 1),
-         hit AS (SELECT id, count(*) AS n_hit FROM ev
-                 WHERE shingle IN (SELECT shingle FROM tr) GROUP BY 1)
-         SELECT t.id, t.n_shingles, CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-                (coalesce(h.n_hit, 0) * 100 >= t.n_shingles * 50) AS contaminated
-         FROM tot t LEFT JOIN hit h USING (id)""",
-    // Posting-list replay: identical distinct (token, id) pairs,
-    // ordered id lists, first element + lag-difference gaps.
-    "q102_inverted_index" ->
-      """WITH pairs AS (SELECT DISTINCT doc_id AS id, unnest(string_split(text, ' ')) AS token
-                        FROM documents),
-         p2 AS (SELECT * FROM pairs WHERE token <> ''),
-         lists AS (SELECT token, count(*) AS df, list(id ORDER BY id) AS ids
-                   FROM p2 GROUP BY token HAVING count(*) >= 2)
-         SELECT token, df, ids[1] AS first_id,
-                array_to_string(list_transform(generate_series(2, len(ids)),
-                                               i -> ids[i] - ids[i - 1]), ',') AS gaps_csv
-         FROM lists""",
-    // Keyword replay: identical tf / df counts, identical integer
-    // division score, identical (score desc, token asc) ranking.
-    "q103_tfidf_keywords" ->
-      """WITH toks AS (SELECT doc_id AS id, unnest(string_split(text, ' ')) AS token FROM documents),
-         f AS (SELECT * FROM toks WHERE len(token) >= 4),
-         tf AS (SELECT id, token, count(*) AS tf FROM f GROUP BY 1, 2),
-         dfreq AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
-         sc AS (SELECT id, token, tf, df, (tf * 1000000) // df AS score
-                FROM tf JOIN dfreq USING (token)),
-         r AS (SELECT *, row_number() OVER (PARTITION BY id ORDER BY score DESC, token ASC) AS rank
-               FROM sc)
-         SELECT id, token, tf, df, score, CAST(rank AS INT) AS rank FROM r WHERE rank <= 3""",
     // predict_linear replay: identical epoch-second x / micro-unit y,
     // identical exact co-moments (HUGEINT here, decimal(38,0) in the
     // engine; int128 -> VARCHAR -> DOUBLE like q86), identical float
@@ -4060,21 +3584,6 @@ object SparkEntry {
               FROM documents WHERE len(string_split(text, ' ')) >= 3)
          SELECT prefix_hash, count(DISTINCT doc_id) AS n_docs, min(doc_id) AS min_id
          FROM p GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2""",
-    // Heaps replay: identical min-doc-id first-seen rule, identical
-    // 100-doc buckets, identical running sums.
-    "q122_vocab_growth" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-         tk AS (SELECT * FROM toks WHERE token <> ''),
-         fs AS (SELECT CAST(floor(doc_id / 100) AS BIGINT) AS bucket, count(*) AS new_types
-                FROM (SELECT token, min(doc_id) AS doc_id FROM tk GROUP BY 1) GROUP BY 1),
-         oc AS (SELECT CAST(floor(doc_id / 100) AS BIGINT) AS bucket, count(*) AS n_tokens
-                FROM tk GROUP BY 1)
-         SELECT oc.bucket, oc.n_tokens, COALESCE(fs.new_types, 0) AS new_types,
-                CAST(sum(COALESCE(fs.new_types, 0)) OVER (ORDER BY oc.bucket
-                     ROWS UNBOUNDED PRECEDING) AS BIGINT) AS vocab_size,
-                CAST(sum(oc.n_tokens) OVER (ORDER BY oc.bucket
-                     ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-         FROM oc LEFT JOIN fs USING (bucket)""",
     // Movers replay: identical integer midpoint anchor, identical
     // conditional counts, identical (abs_delta desc, series asc)
     // total order for the top 20.
@@ -4366,19 +3875,6 @@ object SparkEntry {
     "q153_stream_static_join" ->
       """SELECT e.event_id, e.user_id, e.ts, e.event_type, n.n_name
          FROM events e JOIN nation n ON e.user_id % 25 = n.n_nationkey""",
-    // Mixture replay: identical integer micro-unit denominators and
-    // the identical left-associated double expression.
-    "q164_mixture_weights" ->
-      """WITH d AS (SELECT lang, len(string_split(text, ' ')) AS n_tokens FROM documents),
-         p AS (SELECT lang, CAST(sum(n_tokens) AS BIGINT) AS group_tokens FROM d GROUP BY 1),
-         s AS (SELECT lang, group_tokens,
-                      CAST(floor(sqrt(CAST(group_tokens AS DOUBLE)) * 1000000.0) AS BIGINT) AS su
-               FROM p),
-         t AS (SELECT CAST(sum(su) AS BIGINT) AS dd FROM s)
-         SELECT s.lang, s.group_tokens,
-                CAST(s.su AS DOUBLE) / CAST(t.dd AS DOUBLE) AS weight,
-                1000000.0 * s.su / t.dd / s.group_tokens AS epochs
-         FROM s, t""",
     // LTTB replay: identical integer coordinates (epoch seconds,
     // value micros), identical bucket-boundary anchors via lag/lead
     // over per-bucket ordered first/last, identical doubled-area
@@ -4523,16 +4019,6 @@ object SparkEntry {
                 CASE WHEN count(*) < 64 THEN CAST(count(*) AS DOUBLE)
                      ELSE 63e0 * 1152921504606846976e0 / CAST(max(h) AS DOUBLE) END AS est_distinct
          FROM r WHERE rk <= 64 GROUP BY 1""",
-    // Schedule replay: identical per-host (priority DESC, id) slots
-    // and the identical integer slot·delay offsets.
-    "q174_crawl_schedule" ->
-      """WITH u AS (SELECT source, doc_id, n_chars,
-                1 + CAST(regexp_extract(source, '^src(\d+)$', 1) AS INT) % 3 AS delay,
-                row_number() OVER (PARTITION BY source ORDER BY n_chars DESC, doc_id) - 1 AS slot
-              FROM documents)
-         SELECT source, doc_id, n_chars, CAST(slot AS BIGINT) AS slot,
-                CAST(slot * delay AS BIGINT) AS fetch_offset_s
-         FROM u""",
     // Branch-diff replay: main = even rows; dev = even rows plus odd
     // rows of the first 15 days; identical digests and status casing.
     "q175_branch_diff" ->
@@ -4557,18 +4043,6 @@ object SparkEntry {
                      WHEN digest_a = digest_b AND n_a = n_b THEN 'match'
                      ELSE 'diverged' END AS status
          FROM a FULL OUTER JOIN b ON a.day = b.day""",
-    // Vocab replay: identical token split, identical (count DESC,
-    // token ASC) top-500 set, identical integer OOV counts.
-    "q176_vocab_coverage" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-         vf AS (SELECT token, count(*) AS c FROM tok GROUP BY 1),
-         vocab AS (SELECT token FROM vf ORDER BY c DESC, token ASC LIMIT 500),
-         j AS (SELECT t.doc_id, (v.token IS NOT NULL) AS known
-               FROM tok t LEFT JOIN vocab v ON t.token = v.token)
-         SELECT doc_id, count(*) AS n_tokens,
-                CAST(sum(CASE WHEN known THEN 0 ELSE 1 END) AS BIGINT) AS n_oov,
-                CAST(sum(CASE WHEN known THEN 0 ELSE 1 END) AS DOUBLE) / count(*) AS oov_rate
-         FROM j GROUP BY 1""",
     // Changelog replay: snapshot 1 inserts evens, snapshot 2 deletes
     // the %4 keys (key-only tombstones, nulls elsewhere), snapshot 3
     // inserts odds.
@@ -4798,15 +4272,6 @@ object SparkEntry {
                 count(DISTINCT event_type),
                 min(event_type), max(event_type)
          FROM events""",
-    // Sitemap replay: build∘parse is the identity, so the oracle is
-    // the entry relation constructed directly.
-    "q156_sitemap_parse" ->
-      """SELECT source,
-                'https://' || source || '.example.com/doc/' || CAST(doc_id AS VARCHAR) AS loc,
-                '2024-01-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') AS lastmod,
-                CAST(NULL AS VARCHAR) AS changefreq,
-                CASE WHEN doc_id % 4 = 0 THEN 0.8 END AS priority
-         FROM documents""",
     // PageRank replay: the identical integer recurrence unrolled —
     // every step floor division on BIGINTs, so the 8th-iteration
     // ranks are bit-equal whatever the execution order.
@@ -4833,59 +4298,6 @@ object SparkEntry {
          i8 AS (SELECT e.dst AS v, (150000 // (SELECT n FROM nn)) + (85 * sum(r.rank // o.deg)) // 100 AS rank
                 FROM e JOIN i7 r ON e.src = r.v JOIN o ON e.src = o.src GROUP BY 1)
          SELECT v AS doc_id, CAST(rank AS BIGINT) AS rank FROM i8""",
-    // Robots replay: the parsed rule relation is the literal policy
-    // (the evilbot group, comments, empty values, and unknown fields
-    // all drop for agent graftbot), and the verdict is the identical
-    // lexicographic struct max — longest prefix, then Allow=1 beats
-    // Disallow=0; unmatched URLs default to allowed.
-    "q154_robots_filter" ->
-      """WITH hosts AS (
-           SELECT DISTINCT source, CAST(regexp_extract(source, '^src(\d+)$', 1) AS INT) AS sfx
-           FROM documents),
-         rules AS (
-           SELECT source, 'disallow' AS rule, '/doc/' AS prefix FROM hosts
-           UNION ALL SELECT source, 'allow', '/doc/1' FROM hosts
-           UNION ALL SELECT source, 'disallow', '/doc/12' FROM hosts
-           UNION ALL SELECT source, 'allow', '/doc/7' FROM hosts WHERE sfx % 3 = 0),
-         urls AS (
-           SELECT doc_id, source, source || '.example.com' AS host,
-                  '/doc/' || CAST(doc_id AS VARCHAR) AS path
-           FROM documents),
-         w AS (
-           SELECT u.doc_id,
-                  struct_extract(max(struct_pack(l := length(r.prefix),
-                                                 a := CASE WHEN r.rule = 'allow' THEN 1 ELSE 0 END)),
-                                 'a') AS a
-           FROM urls u JOIN rules r ON u.source = r.source AND starts_with(u.path, r.prefix)
-           GROUP BY 1)
-         SELECT u.doc_id, u.host, u.path, COALESCE(w.a = 1, TRUE) AS allowed
-         FROM urls u LEFT JOIN w ON u.doc_id = w.doc_id""",
-    // WARC replay: identical record synthesis (chr(13)||chr(10) line
-    // ends) and the IDENTICAL regexes — both engines run the same
-    // Java ∩ RE2 patterns; NULLIF mirrors the missing-header null.
-    "q145_warc_parse" ->
-      """WITH d AS (SELECT doc_id, text, source, chr(13)||chr(10) AS nl FROM documents),
-         r AS (SELECT doc_id, nl,
-                 CASE WHEN doc_id % 13 = 0 THEN 'GARBAGE' ELSE '' END ||
-                 'WARC/1.0' || nl || 'WARC-Type: response' || nl ||
-                 'WARC-Target-URI: https://' || source || '.example.com/doc/' || CAST(doc_id AS VARCHAR) || nl ||
-                 'WARC-Date: 2024-01-01T00:00:00Z' || nl ||
-                 'Content-Length: ' ||
-                 CAST(CASE WHEN doc_id % 7 = 0 THEN length(text) + 1 ELSE length(text) END AS VARCHAR) ||
-                 nl || nl || text AS record
-               FROM d),
-         p AS (SELECT doc_id, record, starts_with(record, 'WARC/1.0' || nl) AS is_warc FROM r),
-         x AS (SELECT doc_id, is_warc,
-                 CASE WHEN is_warc THEN NULLIF(regexp_extract(record, '(?s)\r\nWARC-Type: ([^\r\n]*)\r\n', 1), '') END AS warc_type,
-                 CASE WHEN is_warc THEN NULLIF(regexp_extract(record, '(?s)\r\nWARC-Target-URI: ([^\r\n]*)\r\n', 1), '') END AS uri,
-                 CASE WHEN is_warc THEN NULLIF(regexp_extract(record, '(?s)\r\nWARC-Date: ([^\r\n]*)\r\n', 1), '') END AS warc_date,
-                 CASE WHEN is_warc THEN CAST(NULLIF(regexp_extract(record, '(?s)\r\nContent-Length: ([^\r\n]*)\r\n', 1), '') AS BIGINT) END AS content_length,
-                 CASE WHEN is_warc THEN regexp_extract(record, '(?s)\r\n\r\n(.*)$', 1) END AS payload
-               FROM p)
-         SELECT doc_id, warc_type, uri, warc_date, content_length, payload,
-                coalesce(is_warc AND content_length IS NOT NULL
-                         AND length(payload) = content_length, FALSE) AS valid
-         FROM x""",
     // Merge-on-read delete replay: keys id%10==3 deleted at snapshot 3
     // erase snapshots 1-2's rows; snapshot 4's re-insert (id%20==3, a
     // subset of the deleted keys) postdates the delete and survives.
@@ -4934,17 +4346,6 @@ object SparkEntry {
                 FROM sp GROUP BY 1)
          SELECT sp.id, sp.pos, sp.span_hash, gs.n_docs, gs.n_occ
          FROM sp JOIN gs USING (span_hash) WHERE gs.n_docs >= 2""",
-    // Spectrum replay: identical token counts, count-of-counts, and
-    // head-down cumulative token mass.
-    "q107_zipf_spectrum" ->
-      """WITH tf AS (SELECT token, count(*) AS freq
-                     FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents)
-                     WHERE token <> '' GROUP BY 1),
-         sp AS (SELECT freq, count(*) AS n_types, freq * count(*) AS tokens_at_freq FROM tf GROUP BY 1)
-         SELECT freq, n_types, tokens_at_freq,
-                CAST(sum(tokens_at_freq) OVER (ORDER BY freq DESC ROWS UNBOUNDED PRECEDING) AS BIGINT)
-                  AS cum_tokens
-         FROM sp""",
     // Integrity replay: the identical deterministic corruption (drop
     // id % 97 = 13, replay id % 101 = 7), then dup counts and
     // lag-difference gap runs.

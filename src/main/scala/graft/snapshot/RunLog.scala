@@ -1,6 +1,8 @@
 package graft.snapshot
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import scala.jdk.CollectionConverters._
 
 /** One row of a tiers root's `_runlog` table: `ContinuousRollup.update`
   * appends lineage and metrics rows, `Retention.enforce` audit rows;
@@ -33,7 +35,13 @@ object RunLog {
 
   /** The whole run log in the fixed schema: no schema-inference job, and
     * files that stored a counter as int (older writers) read as `Long`.
+    * The read names the data files, not the `_`-prefixed directory,
+    * which Spark's hidden-path check would warn about on every read.
+    * (Past 32 files, naming them costs Spark's parallel listing job.)
     */
-  def read(spark: SparkSession, tiersRoot: String): DataFrame =
-    spark.read.schema(Schema).parquet(path(tiersRoot))
+  def read(spark: SparkSession, tiersRoot: String): DataFrame = {
+    val stream = Files.newDirectoryStream(Paths.get(path(tiersRoot)), "*.parquet")
+    val files = try stream.asScala.map(_.toString).toVector finally stream.close()
+    spark.read.schema(Schema).parquet(files: _*)
+  }
 }

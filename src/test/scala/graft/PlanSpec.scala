@@ -147,11 +147,9 @@ class PlanSpec extends SparkSpec {
     // nested loop against one row IS the right plan
     // q117/q123: the staleness/midpoint anchor is a 1-row broadcast
     // cross join, same shape as q100
-    // q164: the normalization denominator is a 1-row broadcast cross
-    // join against the vocabulary-sized stratum relation, same shape
     val allowNlj = Set(
       "q31_imputer", "q33_evaluate", "q100_decayed_topk",
-      "q117_staleness", "q123_top_movers", "q164_mixture_weights"
+      "q117_staleness", "q123_top_movers"
     )
     // row_id-keyed apply/overlay joins: both sides scale with the
     // table, so a shuffle join IS the 100-TB plan (full-outer overlay
@@ -160,8 +158,6 @@ class PlanSpec extends SparkSpec {
     // data-sized sides (tokens scale with the corpus) — shuffle joins
     // ARE the 100-TB plan there; the reduced conditional model joins
     // back to error cells via AQE-chosen sides
-    // q67: the exact-dedup digest join and the near-dup anti-join both
-    // pair corpus-sized relations on a key — shuffle joins by design
     // q119: FULL OUTER bucket alignment cannot broadcast by definition;
     // both sides are tier-sized (pre-aggregated), so the sort-merge is
     // over bucket-count rows, not raw data
@@ -182,10 +178,14 @@ class PlanSpec extends SparkSpec {
     // q172: the co-located bucketed join IS a sort-merge join — with
     // ZERO exchanges, which is the point (BucketingSpec pins that)
     val allowSmj = Set(
-      "q07_correct_fd", "q32_user_overlay", "q59_entity_corrector", "q67_corpus_pipeline",
+      "q07_correct_fd", "q32_user_overlay", "q59_entity_corrector",
       "q119_series_ratio", "q134_tier_reconcile", "q158_hits", "q159_triangles",
       "q160_bfs_levels", "q170_replica_diff", "q172_bucketed_join"
     )
+    // a stale id would silently grant its exemption to any later query
+    // registered under the same name
+    val stale = (checkedWhileBuilding ++ skip ++ allowNlj ++ allowSmj) -- SparkEntry.queries.keySet
+    assert(stale.isEmpty, s"exemptions name unregistered queries: ${stale.toSeq.sorted.mkString(", ")}")
     val dir = "/root/testdata/sf0.001"
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1) if !skip.contains(name)) {
       val plans =
