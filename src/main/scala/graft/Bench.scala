@@ -153,7 +153,7 @@ object Bench {
   val RefControlRowsPerSec: Double = 3.44e7
 
   /** Compute one driver query through the noop sink; a cached result
-    * (lifecycle, LSH paths) is released before the next timing starts.
+    * (lifecycle) is released before the next timing starts.
     */
   def runQuery(spark: SparkSession, sfDir: String, name: String): Unit = {
     val out = SparkEntry.queries(name)(spark, sfDir)

@@ -1,7 +1,6 @@
 package graft
 
 import graft.correct.{Cells, Correctors, Fd, Pdep}
-import graft.dedup.Dedup
 import graft.pages.{PageGen, PagePipeline}
 import graft.rollup.{BlockOps, GapFill, Rollup, Tiers}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -190,26 +189,6 @@ object SparkEntry {
         .select("event_type", "bucket_ts", "value_sum")
     }),
 
-    // ---- dedup: exact (hash groupBy) ----
-    "q13_dedup_exact" -> ((s, dir) => {
-      Dedup.exact(t(s, dir, "documents"), "doc_id", "text")
-    }),
-
-    // ---- dedup: word-3-gram Jaccard pairs (exact) ----
-    "q14_ngram_jaccard" -> ((s, dir) => {
-      // maxShingleDf guards the shingle self-join against boilerplate
-      // blowup; 128 does not bind on this corpus (max df 25 at sf0.1),
-      // so the oracle SQL needs no cap clause and output is exact
-      Dedup.ngramJaccardPairs(
-        t(s, dir, "documents"),
-        "doc_id",
-        "text",
-        n = 3,
-        threshold = 0.5,
-        maxShingleDf = 128L
-      )
-    }),
-
     // ---- Gorilla/delta-of-delta blocks: oracle checked THROUGH the
     //      codec (block built from 1m tier, decoded, points re-counted)
     "q19_blocks_roundtrip" -> ((s, dir) => {
@@ -257,23 +236,6 @@ object SparkEntry {
         .agg(map_from_entries(array_sort(collect_list(struct(col("lang"), col("cnt"))))).as("hist"))
       asMap
         .select(col("source"), explode(col("hist")).as(Seq("lang", "cnt")))
-    }),
-
-    // ---- dedup: MinHash + LSH (deterministic; rows-only check) ----
-    "q22_minhash_lsh" -> ((s, dir) => {
-      Dedup.minHashLsh(t(s, dir, "documents"), "doc_id", "text")
-        .select("id_a", "id_b", "est_jaccard")
-    }),
-
-    // ---- near-dup cluster formation: the q22 MinHash-LSH pairs
-    //      become connected components (hash-min label propagation,
-    //      one shuffle per round, loud non-convergence guard) and a
-    //      keep/drop decision per doc (canonical = smallest id) ----
-    "q84_dedup_clusters" -> ((s, dir) => {
-      val pairs = Dedup
-        .minHashLsh(t(s, dir, "documents"), "doc_id", "text")
-        .select("id_a", "id_b")
-      graft.dedup.Clusters.dedupDecision(pairs, "id_a", "id_b")
     }),
 
     // ---- cross-series Pearson correlation: which metric series move
@@ -450,27 +412,6 @@ object SparkEntry {
         .predictLinear(t(s, dir, "events"), "event_type", "ts", "value", horizonSec = 3600L)
     }),
 
-    // ---- edit-distance-1 similarity join via FastSS deletion
-    //      signatures: complete blocking (never-lossy), exact
-    //      levenshtein verify, no O(n^2) cross join ----
-    "q105_fuzzy_join" -> ((s, dir) => {
-      graft.dedup.FuzzyJoin
-        .editDistance1Pairs(
-          t(s, dir, "customer").select(col("c_custkey").as("id"), col("c_name").as("name")),
-          "id",
-          "name"
-        )
-        .withColumn("dist", col("dist").cast("long"))
-    }),
-
-    // ---- exact substring-span dedup: every 5-token span repeated
-    //      across docs, with occurrence coordinates — the boilerplate
-    //      passage detector (Lee et al. ExactSubstr re-expressed as a
-    //      sliding-window hash join) ----
-    "q106_span_dedup" -> ((s, dir) => {
-      graft.dedup.SpanDedup.repeatedSpans(t(s, dir, "documents"), "doc_id", "text", k = 5)
-    }),
-
     // ---- ingestion integrity: duplicate + dropped sequence ids over
     //      a deterministically corrupted replay of the event stream ----
     "q108_integrity" -> ((s, dir) => {
@@ -606,12 +547,6 @@ object SparkEntry {
     "q120_shard_balance" -> ((s, dir) => {
       graft.operators.Sharding
         .balance(t(s, dir, "documents"), "doc_id", "n_chars", nShards = 16, salt = "r4")
-    }),
-
-    // ---- template-opening groups: docs sharing their first-3-token
-    //      prefix (anchored span dedup, one window per doc) ----
-    "q121_prefix_groups" -> ((s, dir) => {
-      graft.dedup.SpanDedup.prefixGroups(t(s, dir, "documents"), "doc_id", "text", k = 3)
     }),
 
     // ---- biggest movers: series activity delta across the data's own
@@ -1393,15 +1328,6 @@ object SparkEntry {
       graft.operators.Transitions.matrix(t(s, dir, "events"), Seq("user_id"), "ts", "event_id", "event_type")
     }),
 
-    // ---- asymmetric shingle containment (Broder): the quote /
-    //      wrapper near-dup Jaccard misses — a short doc fully inside
-    //      a long one has tiny Jaccard but near-total containment;
-    //      ordered pairs, exact integer overlap/sizes ----
-    "q180_containment" -> ((s, dir) => {
-      graft.dedup.Dedup
-        .containmentPairs(t(s, dir, "documents"), "doc_id", "text", n = 3, threshold = 0.8)
-    }),
-
     // ---- order-3 vicinity corrector (q47 one order up; reference
     //      mine_all_counts takes arbitrary order): candidate pr
     //      conditioned on an lhs column TRIPLE. With errors on
@@ -1642,52 +1568,10 @@ object SparkEntry {
       served
     }),
 
-    // ---- dedup: SimHash fingerprints (rows-only check) ----
-    "q23_simhash" -> ((s, dir) => {
-      Dedup.simHash(t(s, dir, "documents"), "doc_id", "text")
-    }),
-
     // ---- pages pipeline: correct -> tiered rollup (rows-only; full
     //      oracle lives in PagesPipelineSpec against in-Spark oracle)
     "q25_pages_pipeline" -> ((s, _) => {
       PagePipeline.hourlyRollupFixed(s, nPages = 2000)
-    }),
-
-    // ---- multimodal plumbing: batched feature extraction over binary
-    //      payloads (stub decoder; rows-only check)
-    "q26_media_features" -> ((s, _) => {
-      graft.multimodal.Multimodal
-        .extractFeatures(
-          graft.multimodal.Multimodal.syntheticMedia(s, 2000L, ppmImages = true),
-          dim = 16,
-          withGraySums = true
-        )
-        .select(
-          col("media_id"),
-          col("kind"),
-          size(col("features")).as("dim"),
-          md5(col("payload")).as("payload_md5"),
-          // real pixel-derived features for the image rows: the pooled
-          // 4x4 grayscale INTEGER sums of the decoded 8x8 P6 payload —
-          // exact engine parity (the oracle re-decodes the same bytes).
-          // Serialized as a CSV string (null for non-image rows — guard
-          // needed because concat_ws maps a NULL array to "") so every
-          // output column stays scalar for the driver's comparer.
-          when(col("gray_sums").isNotNull, concat_ws(",", col("gray_sums")))
-            .as("gray_sums")
-        )
-    }),
-
-    // ---- multimodal: frame sampling fan-out (rows-only check) ----
-    "q27_frame_sample" -> ((s, _) => {
-      graft.multimodal.Multimodal
-        .frameSample(graft.multimodal.Multimodal.syntheticMedia(s, 2000L))
-        .select(
-          col("media_id"),
-          col("frame_idx"),
-          length(col("frame")).as("frame_bytes"),
-          md5(col("frame")).as("frame_md5")
-        )
     }),
 
     // ---- pdep/gpdep statistics (A4-A8) as a relation ----
@@ -1957,27 +1841,6 @@ object SparkEntry {
         .filter(col("c_custkey") <= 1500 && col("c_custkey") % 17 === 3 && col("c_custkey") % 5 === 0)
         .select(col("c_custkey").as("row_id"), lit("segment").as("col"), col("c_mktsegment").as("clean_value"))
       graft.correct.MetaLearner.trainPredict(features, correctors, labeled, classifier = "CV_PRECISION")
-    }),
-
-    // ---- dedup: INCREMENTAL MinHash-LSH — three batch arrivals fold
-    //      against the growing (band, bucket) index; the union must be
-    //      EXACTLY the batch run over the whole corpus, so the oracle
-    //      is q22's batch SQL verbatim (signatures are per-doc: the
-    //      candidate set and agreement estimate cannot differ) ----
-    "q64_dedup_incremental" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      var idx: Option[DataFrame] = None
-      var out: Option[DataFrame] = None
-      (0 to 2).foreach { i =>
-        val batch = docs.filter(pmod(col("doc_id"), lit(3)) === i)
-        val (pairs, newIdx) = Dedup.minHashLshIncrement(idx, batch, "doc_id", "text")
-        // the demo folds in memory; at scale newIdx is appended to a
-        // day-partitioned snapshot table and `idx` is its read-back
-        val cached = newIdx.cache()
-        idx = Some(idx.map(_.unionByName(cached)).getOrElse(cached))
-        out = Some(out.map(_.unionByName(pairs)).getOrElse(pairs))
-      }
-      out.get.select("id_a", "id_b", "est_jaccard")
     }),
 
     // ---- as-of join: purchases pick up the most recent prior-or-equal
@@ -2351,24 +2214,6 @@ object SparkEntry {
         .labelWithGroundTruth(base, "row_id", Seq("nation", "decile", "segment"), rows, noisePct = 0.2, seed = 7L)
     }),
 
-    // ---- multimodal resize: REAL average-pool transcode of the 8x8
-    //      P6 payloads to 4x4 (byte-exact oracle — the SQL re-decodes,
-    //      pools, and re-encodes the same bytes; all payload bytes are
-    //      ASCII-range so md5 parity holds across engines) ----
-    "q55_media_resize" -> ((s, _) => {
-      graft.multimodal.Multimodal
-        .resize(
-          graft.multimodal.Multimodal.syntheticMedia(s, 2000L, ppmImages = true).filter(col("kind") === "image"),
-          maxWidth = 4
-        )
-        .select(
-          col("media_id"),
-          col("meta.width").as("width"),
-          col("meta.height").as("height"),
-          md5(col("payload")).as("payload_md5")
-        )
-    }),
-
     // ---- S1/S3: all-string CSV sink + source round-trip. The engine
     //      WRITES customer-derived rows (with planted empty strings)
     //      through the CSV sink and reads them back; the oracle
@@ -2548,30 +2393,6 @@ object SparkEntry {
     )
   }
 
-  /** Batch MinHash+LSH in SQL (md5-prefix shingle hash, affine minhash
-    * family, band-slice buckets) — shared by q22 (batch) and q64
-    * (incremental fold, which must equal the batch run exactly).
-    */
-  private val minHashLshBatchSql: String =
-    """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         grams AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS shingle
-                   FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 2)) AS i) g
-                   WHERE len(t) >= 3),
-         hv AS (SELECT doc_id, CAST(('0x' || substr(md5(shingle), 1, 15)) AS BIGINT) % 1000000007 AS hh
-                FROM grams),
-         mh AS (SELECT doc_id, i, min(((131 * i + 7) * hh + (1000003 * i + 12345)) % 1000000007) AS v
-                FROM hv CROSS JOIN (SELECT unnest(generate_series(0, 31)) AS i) ii GROUP BY doc_id, i),
-         sig AS (SELECT doc_id, list(v ORDER BY i) AS s FROM mh GROUP BY doc_id),
-         bk AS (SELECT doc_id, b, s[b * 4 + 1 : b * 4 + 4] AS key
-                FROM sig CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS b) bb),
-         cand AS (SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-                  FROM bk x JOIN bk y ON x.b = y.b AND x.key = y.key AND x.doc_id < y.doc_id),
-         est AS (SELECT id_a, id_b,
-                        list_sum(list_transform(generate_series(1, 32),
-                          j -> CASE WHEN sa.s[j] = sb.s[j] THEN 1 ELSE 0 END)) / 32.0 AS est_jaccard
-                 FROM cand JOIN sig sa ON sa.doc_id = id_a JOIN sig sb ON sb.doc_id = id_b)
-         SELECT id_a, id_b, est_jaccard FROM est WHERE est_jaccard >= 0.5"""
-
   def oracleSql: Map[String, String] = Map(
     "q01_lineitem_agg" ->
       s"""SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
@@ -2651,20 +2472,6 @@ object SparkEntry {
                    PARTITION BY event_type ORDER BY bucket_ts
                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_sum
           FROM j""",
-    "q13_dedup_exact" ->
-      """SELECT min(doc_id) AS keeper_id, count(*) AS n_copies FROM documents GROUP BY text""",
-    "q14_ngram_jaccard" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         grams AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS shingle
-                   FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 2)) AS i) g
-                   WHERE len(t) >= 3),
-         sizes AS (SELECT doc_id, count(*) AS sz FROM grams GROUP BY 1),
-         inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS overlap
-                   FROM grams a JOIN grams b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2)
-         SELECT id_a, id_b, overlap, sa.sz + sb.sz - overlap AS union_size
-         FROM inter JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
-         WHERE overlap * 1.0 / (sa.sz + sb.sz - overlap) >= 0.5""",
     "q19_blocks_roundtrip" ->
       s"""WITH minutely AS (
             SELECT event_type, date_trunc('minute', ts) AS mts, ${dsumSql("value")} AS vs
@@ -2900,34 +2707,6 @@ object SparkEntry {
     "q49_distinct_exact" ->
       """SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
          FROM events GROUP BY 1""",
-    // Algorithm-parity oracle: identical md5-derived token bits +
-    // sign-of-vote fold in SQL.
-    "q23_simhash" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-         h AS (SELECT doc_id,
-                      CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT) AS h1,
-                      CAST(('0x' || substr(md5(tok), 16, 15)) AS BIGINT) AS h2
-               FROM tok),
-         votes AS (SELECT doc_id, i,
-                          sum(CASE WHEN ((CASE WHEN i < 32 THEN h1 ELSE h2 END)
-                                         >> (CASE WHEN i < 32 THEN i ELSE i - 32 END)) & 1 = 1
-                                   THEN 1 ELSE -1 END) AS v
-                   FROM h CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS i) ii
-                   GROUP BY 1, 2)
-         SELECT doc_id AS id,
-                CAST(sum(CASE WHEN v <= 0 THEN 0
-                              WHEN i = 63 THEN -9223372036854775808
-                              ELSE 1 << i END) AS BIGINT) AS simhash
-         FROM votes GROUP BY 1""",
-    // Algorithm-parity oracle: the SAME MinHash+LSH algorithm
-    // (md5-prefix shingle hash, affine minhash family, band-slice
-    // buckets) re-expressed in SQL — verifies the approximate path
-    // itself, not a recall-dependent comparison to the exact pairs.
-    "q22_minhash_lsh" -> minHashLshBatchSql,
-    // The incremental fold must equal the batch run EXACTLY (per-doc
-    // signatures, exactly-once pair emission) — so its oracle IS the
-    // batch SQL.
-    "q64_dedup_incremental" -> minHashLshBatchSql,
     // Exact-mode oracle: below the sketch capacity the SpaceSaving
     // counters ARE the exact per-item counts, so the exact top-5 with
     // the identical (count desc, item asc) tie-break must match.
@@ -3184,23 +2963,6 @@ object SparkEntry {
                 max(ts) + INTERVAL 30 MINUTE AS session_end,
                 count(*) AS n_events
          FROM x GROUP BY user_id, sidx""",
-    // Cluster formation: the same LSH CTE chain feeds a RECURSIVE
-    // transitive closure (component = min reachable id) — an
-    // independent fixpoint implementation checking the engine's
-    // label-propagation rounds.
-    "q84_dedup_clusters" -> {
-      val lshCtes = minHashLshBatchSql
-        .substring(0, minHashLshBatchSql.lastIndexOf("SELECT id_a"))
-        .trim
-      s"""${lshCtes.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         pairs AS (SELECT id_a, id_b FROM est WHERE est_jaccard >= 0.5),
-         e AS (SELECT id_a AS a, id_b AS b FROM pairs UNION SELECT id_b, id_a FROM pairs),
-         reach(id, w) AS (SELECT a, a FROM e
-                          UNION
-                          SELECT r.id, e2.b FROM reach r JOIN e e2 ON r.w = e2.a)
-         SELECT id, min(w) AS component, (id = min(w)) AS is_canonical
-         FROM reach GROUP BY id"""
-    },
     // Pearson replay: identical micro-unit bucket sums, identical
     // integer co-moments (HUGEINT here, decimal(38,0) in the engine),
     // and the identical double formula over them. The three co-moment
@@ -3576,14 +3338,6 @@ object SparkEntry {
       """SELECT CAST(('0x' || substr(md5(doc_id || '|r4'), 1, 15)) AS BIGINT) % 16 AS shard,
                 count(*) AS n_rows, CAST(sum(n_chars) AS BIGINT) AS weight_sum
          FROM documents GROUP BY 1""",
-    // Prefix replay: identical first-3-token join, identical 60-bit
-    // md5-prefix hash, identical group stats.
-    "q121_prefix_groups" ->
-      """WITH p AS (SELECT doc_id,
-                CAST(('0x' || substr(md5(array_to_string(list_slice(string_split(text, ' '), 1, 3), ' ')), 1, 15)) AS BIGINT) AS prefix_hash
-              FROM documents WHERE len(string_split(text, ' ')) >= 3)
-         SELECT prefix_hash, count(DISTINCT doc_id) AS n_docs, min(doc_id) AS min_id
-         FROM p GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2""",
     // Movers replay: identical integer midpoint anchor, identical
     // conditional counts, identical (abs_delta desc, series asc)
     // total order for the top 20.
@@ -4056,21 +3810,6 @@ object SparkEntry {
          UNION ALL
          SELECT CAST(3 AS BIGINT), 'insert', event_id, user_id, event_type
          FROM events WHERE event_id % 2 = 1""",
-    // Containment replay: q14's shingle construction, ordered pairs,
-    // overlap normalized by the CONTAINED side's set size.
-    "q180_containment" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         grams AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS shingle
-                   FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 2)) AS i) g
-                   WHERE len(t) >= 3),
-         sizes AS (SELECT doc_id, count(*) AS sz FROM grams GROUP BY 1),
-         inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS overlap
-                   FROM grams a JOIN grams b ON a.shingle = b.shingle AND a.doc_id <> b.doc_id
-                   GROUP BY 1, 2)
-         SELECT id_a, id_b, overlap, sa.sz AS size_a, sb.sz AS size_b,
-                CAST(overlap AS DOUBLE) / CAST(sa.sz AS DOUBLE) AS containment
-         FROM inter JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
-         WHERE CAST(overlap AS DOUBLE) / CAST(sa.sz AS DOUBLE) >= 0.8""",
     "q181_vicinity_order3" ->
       """WITH corrupted AS (SELECT c_custkey AS row_id, CAST(c_nationkey AS VARCHAR) AS nation,
              CAST(c_custkey % 10 AS VARCHAR) AS decile,
@@ -4334,18 +4073,6 @@ object SparkEntry {
                 CAST(n_both AS DOUBLE) / CAST(sa.n + sb.n - n_both AS DOUBLE) AS jaccard
          FROM b JOIN s sa ON sa.bucket_ts = b.bucket_ts AND sa.seg = seg_a
                 JOIN s sb ON sb.bucket_ts = b.bucket_ts AND sb.seg = seg_b""",
-    // Span replay: identical position windows, identical md5-prefix
-    // 60-bit span hashes, identical group stats and coordinates.
-    "q106_span_dedup" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         sp AS (SELECT doc_id AS id, CAST(i - 1 AS BIGINT) AS pos,
-                       CAST(('0x' || substr(md5(array_to_string(t[i:i+4], ' ')), 1, 15)) AS BIGINT) AS span_hash
-                FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 4)) AS i) g
-                WHERE len(t) >= 5),
-         gs AS (SELECT span_hash, count(DISTINCT id) AS n_docs, count(*) AS n_occ
-                FROM sp GROUP BY 1)
-         SELECT sp.id, sp.pos, sp.span_hash, gs.n_docs, gs.n_occ
-         FROM sp JOIN gs USING (span_hash) WHERE gs.n_docs >= 2""",
     // Integrity replay: the identical deterministic corruption (drop
     // id % 97 = 13, replay id % 101 = 7), then dup counts and
     // lag-difference gap runs.
@@ -4394,14 +4121,6 @@ object SparkEntry {
          SELECT series, ts, order_id, value, med_micro, mad_micro, dev_micro,
                 (dev_micro > mad_micro * 3) AS outlier
          FROM j""",
-    // Fuzzy-join truth: brute-force all-pairs levenshtein at oracle
-    // scale — the engine's FastSS blocking must reproduce it exactly.
-    "q105_fuzzy_join" ->
-      """SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
-                a.c_name AS str_a, b.c_name AS str_b,
-                CAST(levenshtein(a.c_name, b.c_name) AS BIGINT) AS dist
-         FROM customer a JOIN customer b ON a.c_custkey < b.c_custkey
-         WHERE levenshtein(a.c_name, b.c_name) <= 1""",
     // Exact oracle for the tier-merged HLL path: at these per-bucket
     // cardinalities the datasketches HLL sketch is still in its
     // exact (sparse) mode, so the estimate after two re-rollup merges
@@ -4413,50 +4132,6 @@ object SparkEntry {
       """SELECT event_type, date_trunc('day', ts) AS bucket_ts, count(*) AS point_count,
                 CAST(count(DISTINCT user_id) AS BIGINT) AS distinct_users_est
          FROM events GROUP BY 1, 2""",
-    // Parity oracle over the deterministic synthetic payload bytes:
-    // the generator (16 concatenated md5 hex blocks per id) and the
-    // metadata fan-through are reproduced in SQL, pinning the binary
-    // plumbing byte-for-byte.
-    // Payload parity for all kinds PLUS a real pixel-feature check for
-    // the image rows: the oracle re-decodes the 8x8 P6 payload (header
-    // + 192 ASCII-hex RGB bytes) and recomputes the 4x4 average-pool
-    // grayscale integer sums — cell (k): sum over its 2x2 pixel block
-    // of the 3 channel bytes, pixel (y,x) channel c at stream offset
-    // (y*8+x)*3+c.
-    "q26_media_features" ->
-      """WITH ids AS (SELECT unnest(generate_series(0, 1999)) AS media_id),
-         m AS (SELECT media_id,
-                      CASE media_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-                      array_to_string(list_transform(generate_series(0, 15),
-                        j -> md5(CAST(media_id AS VARCHAR) || CAST(j AS VARCHAR))), '') AS stream
-               FROM ids),
-         p AS (SELECT media_id, kind,
-                      CASE WHEN kind = 'image'
-                           THEN 'P6' || chr(10) || '8 8' || chr(10) || '255' || chr(10) || substr(stream, 1, 192)
-                           ELSE stream END AS payload,
-                      substr(stream, 1, 192) AS px
-               FROM m)
-         SELECT media_id, kind, 16 AS dim, md5(payload) AS payload_md5,
-                CASE WHEN kind = 'image' THEN
-                  array_to_string(list_transform(generate_series(0, 15), cell ->
-                    CAST(list_sum(list_transform(generate_series(0, 11), k ->
-                      ascii(substr(px,
-                        ((2 * (cell // 4) + k // 6) * 8 + (2 * (cell % 4) + (k // 3) % 2)) * 3 + (k % 3) + 1,
-                        1)))) AS BIGINT)), ',')
-                END AS gray_sums
-         FROM p""",
-    // Frame sampling parity: 512-byte payloads -> 8 frames of 64,
-    // every 4th kept; frame bytes verified by md5 of the same slice.
-    "q27_frame_sample" ->
-      """WITH ids AS (SELECT unnest(generate_series(0, 1999)) AS media_id),
-         m AS (SELECT media_id,
-                      array_to_string(list_transform(generate_series(0, 15),
-                        j -> md5(CAST(media_id AS VARCHAR) || CAST(j AS VARCHAR))), '') AS payload
-               FROM ids),
-         f AS (SELECT media_id, unnest([0, 4]) AS frame_idx, payload FROM m)
-         SELECT media_id, frame_idx, 64 AS frame_bytes,
-                md5(substr(payload, frame_idx * 64 + 1, 64)) AS frame_md5
-         FROM f""",
     // The mask lists exactly these positions; the oracle re-derives
     // them from the generation rule, independently of the JSON file.
     "q53_detection_mask" ->
@@ -4486,28 +4161,6 @@ object SparkEntry {
                           AND s.n > 1
                      THEN s.next_value ELSE c.value END AS clean_value
          FROM lab c JOIN succ s ON s.col = c.col AND s.value = c.value""",
-    // Byte-exact resize oracle: re-decode the 8x8 P6 stream, 2x2
-    // average-pool each channel (floor), re-encode 'P6\n4 4\n255\n' +
-    // 48 pooled bytes, and md5 the result — every byte is ASCII-range
-    // (hex digits pool to 48..102), so chr()/UTF-8 equals raw bytes
-    // and both engines hash identical payloads. Output pixel (y,x,c)
-    // at list index i: y=i//12, x=(i%12)//3, c=i%3; source pixel
-    // (sy,sx) channel c sits at px offset ((sy*8+sx)*3+c)+1 (1-based).
-    "q55_media_resize" ->
-      """WITH ids AS (SELECT unnest(generate_series(0, 1999)) AS media_id),
-         img AS (SELECT media_id,
-                        substr(array_to_string(list_transform(generate_series(0, 15),
-                          j -> md5(CAST(media_id AS VARCHAR) || CAST(j AS VARCHAR))), ''), 1, 192) AS px
-                 FROM ids WHERE media_id % 3 = 0),
-         pooled AS (SELECT media_id,
-                           'P6' || chr(10) || '4 4' || chr(10) || '255' || chr(10) ||
-                           array_to_string(list_transform(generate_series(0, 47), i ->
-                             chr((ascii(substr(px, ((2*(i//12))  *8 + 2*((i%12)//3))  *3 + (i%3) + 1, 1)) +
-                                  ascii(substr(px, ((2*(i//12))  *8 + 2*((i%12)//3)+1)*3 + (i%3) + 1, 1)) +
-                                  ascii(substr(px, ((2*(i//12)+1)*8 + 2*((i%12)//3))  *3 + (i%3) + 1, 1)) +
-                                  ascii(substr(px, ((2*(i//12)+1)*8 + 2*((i%12)//3)+1)*3 + (i%3) + 1, 1))) // 4)), '') AS payload
-                    FROM img)
-         SELECT media_id, 4 AS width, 4 AS height, md5(payload) AS payload_md5 FROM pooled""",
     // The engine side went through the CSV sink + source; the oracle is
     // the same relation straight from parquet. Hash equality proves ""
     // round-trips as the empty string.

@@ -36,7 +36,7 @@ object Verify {
             .filter(_.dataType == TimestampType)
             .foldLeft(out)((a, f) => a.withColumn(f.name, col(f.name).cast(TimestampNTZType)))
           cast.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-          // queries that return a cached result (lifecycle, LSH paths)
+          // queries that return a cached result (lifecycle)
           // must not accumulate storage across the sweep; no-op for
           // uncached results
           out.unpersist()

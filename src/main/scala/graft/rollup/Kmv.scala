@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * form); below k distinct values the sketch IS the exact set.
   *
   * Determinism: rows hash through the engine-portable 60-bit
-  * md5-prefix (the q120/q22 hash), the min-k is an integer
+  * md5-prefix (the q120 hash), the min-k is an integer
   * rank-filter, and the estimate is ONE float division of exact
   * integers — hash-identical in any engine.
   *

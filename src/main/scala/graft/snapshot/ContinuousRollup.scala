@@ -286,111 +286,114 @@ object ContinuousRollup {
       .withColumn("part_key", partKeyOfPoint(tsCol))
       .filter(col("part_key").isin(touchedDays: _*))
     val out1m = outputOf("1m", Rollup.fromRaw(affected, series, tsCol, "1m", sizeCol, langCol = langCol)).cache()
-    // ONE action over the pruned scan, before any tier write: a no-op
-    // write materializes the cached 1m output AND fires the contract
-    // guard and the 1m row count (the 1m write-layout bound), observed
-    // on the same pass — unlike `count()`, with no aggregation stage
-    val rows1mObs = Observation(s"graft_rows_1m_${tiersRoot.hashCode.toHexString}_$to")
-    out1m.observe(rows1mObs, count(lit(1)).as("rows")).write.format("noop").mode("overwrite").save()
-    val rows1m = rows1mObs.get("rows").asInstanceOf[Long]
-    val contractViolations = guardObs.get("violations").asInstanceOf[Long]
-    if (contractViolations > 0) {
-      out1m.unpersist()
-      throw new IllegalStateException(
-        s"ContinuousRollup prepare-contract violation (exact guard: per-row stored-day comparison): " +
-          s"$contractViolations rows stored under a real part_day changed their partition-deciding day in " +
-          "prepare; their new day's partitions would silently recompute without them. Repair " +
-          "partition-deciding timestamps only for rows stored under suspect days (see `defaultSuspectDay`), " +
-          "or maintain those repairs externally."
-      )
-    }
-    // output-size bound for each tier's write-layout branch: the 1m
-    // output's exact count, then, as aggregation only shrinks, the
-    // finer tier's observed output rows (30d scales 1d's by its
-    // window-span ratio — a layout heuristic only, never correctness)
-    var finerRowsOut: Long = rows1m
+    // every exit from here on releases the cached 1m output: a failed
+    // guard, 30d day-dir read or tier write must not leave it cached
+    // in the caller's session
+    val (contractViolations, lineage) = try {
+      // ONE action over the pruned scan, before any tier write: a no-op
+      // write materializes the cached 1m output AND fires the contract
+      // guard and the 1m row count (the 1m write-layout bound), observed
+      // on the same pass — unlike `count()`, with no aggregation stage
+      val rows1mObs = Observation(s"graft_rows_1m_${tiersRoot.hashCode.toHexString}_$to")
+      out1m.observe(rows1mObs, count(lit(1)).as("rows")).write.format("noop").mode("overwrite").save()
+      val rows1m = rows1mObs.get("rows").asInstanceOf[Long]
+      val contractViolations = guardObs.get("violations").asInstanceOf[Long]
+      if (contractViolations > 0) {
+        throw new IllegalStateException(
+          s"ContinuousRollup prepare-contract violation (exact guard: per-row stored-day comparison): " +
+            s"$contractViolations rows stored under a real part_day changed their partition-deciding day in " +
+            "prepare; their new day's partitions would silently recompute without them. Repair " +
+            "partition-deciding timestamps only for rows stored under suspect days (see `defaultSuspectDay`), " +
+            "or maintain those repairs externally."
+        )
+      }
+      // output-size bound for each tier's write-layout branch: the 1m
+      // output's exact count, then, as aggregation only shrinks, the
+      // finer tier's observed output rows (30d scales 1d's by its
+      // window-span ratio — a layout heuristic only, never correctness)
+      var finerRowsOut: Long = rows1m
 
-    def runTier(tier: String): RunLogRow = {
-      val out = tier match {
-        case "1m" => out1m
-        case "1h" | "1d" => outputOf(tier, Rollup.reRollup(out1m.drop("part_key"), series, "1m" -> tier))
-        case "30d" =>
-          // a touched 30d window re-rolls up its day span from the 1d
-          // TIER (days outside this batch were written by earlier
-          // updates) — the raw read stays pruned to the touched days.
-          // Each window reads only its existing 1d day dirs (at most
-          // 30, within Spark's serial-listing threshold of 32) in the
-          // 1d output's schema: no listing job, no schema-inference
-          // job, however long the tier's history
-          val daySchema = Rollup.reRollup(out1m.drop("part_key"), series, "1m" -> "1d").schema
-          val finer = windows.toSeq.sorted
-            .map { w =>
-              val dirs = (0 until 30)
-                .map(i => s"${tierPath(tiersRoot, "1d")}/part_key=${w.plusDays(i.toLong)}")
-                .filter(d => Files.exists(Paths.get(d)))
-              spark.read.schema(daySchema).parquet(dirs: _*)
+      def runTier(tier: String): RunLogRow = {
+        val out = tier match {
+          case "1m" => out1m
+          case "1h" | "1d" => outputOf(tier, Rollup.reRollup(out1m.drop("part_key"), series, "1m" -> tier))
+          case "30d" =>
+            // a touched 30d window re-rolls up its day span from the 1d
+            // TIER (days outside this batch were written by earlier
+            // updates) — the raw read stays pruned to the touched days.
+            // Each window reads only its existing 1d day dirs (at most
+            // 30, within Spark's serial-listing threshold of 32) in the
+            // 1d output's schema: no listing job, no schema-inference
+            // job, however long the tier's history
+            val daySchema = Rollup.reRollup(out1m.drop("part_key"), series, "1m" -> "1d").schema
+            val finer = windows.toSeq.sorted
+              .map { w =>
+                val dirs = (0 until 30)
+                  .map(i => s"${tierPath(tiersRoot, "1d")}/part_key=${w.plusDays(i.toLong)}")
+                  .filter(d => Files.exists(Paths.get(d)))
+                spark.read.schema(daySchema).parquet(dirs: _*)
+              }
+              .reduce(_ unionByName _)
+            outputOf(tier, Rollup.reRollup(finer, series, "1d" -> "30d"))
+        }
+        // cluster rows by their output partition before the partitioned
+        // write: otherwise every shuffle task holds rows of every
+        // part_key and the write fans out |tasks| × |partitions| tiny
+        // files. The fine tiers range-partition on (part_key, series):
+        // clustering plus hot-partition splitting by series range (one
+        // Zipf-hot day never bottlenecks a single writer). The coarse
+        // tiers (1d/30d) are re-rollups of already-tiny tier rows, where
+        // range-partitioning's sampling job costs more than the write —
+        // hash-cluster those on part_key instead.
+        // explicit partition count: AQE has the tier output's accurate
+        // (tiny-at-test-scale) size stats and would coalesce an
+        // unnumbered range shuffle to ONE task, serializing the hot-day
+        // write the range layout exists to parallelize
+        val nWrite = spark.conf.get("spark.sql.shuffle.partitions").toInt
+        // write layout branches on the CONSERVATIVE row bound (finer
+        // tier's observed output; the exact count for 1m) instead of a
+        // dedicated count job: below the threshold the clustering shuffle
+        // costs more than it saves — one writer task emits one file per
+        // part_key dir with no exchange and a single task-commit round.
+        // Misclassifying small-as-large costs one tiny shuffle, never
+        // correctness. Exact rows_out rides the write as an observed
+        // metric; partitions written are driver-known by construction
+        // (every touched day/window carries at least one batch row).
+        val bound = tier match {
+          case "30d" => finerRowsOut / math.max(days.size, 1) * windows.size * 30 + 1
+          case _     => finerRowsOut
+        }
+        val clustered =
+          if (bound <= SmallTierRows) out.coalesce(1)
+          else
+            tier match {
+              case "1m" | "1h" => out.repartitionByRange(nWrite, (col("part_key") +: series.map(col)): _*)
+              case _           => out.repartition(col("part_key"))
             }
-            .reduce(_ unionByName _)
-          outputOf(tier, Rollup.reRollup(finer, series, "1d" -> "30d"))
+        // observe sits ABOVE the clustering exchange: the range
+        // partitioner's sampling pass re-executes the exchange CHILD, so
+        // a metric below it would double-count
+        val rowsObs = Observation(s"graft_tier_rows_${tier}_${tiersRoot.hashCode.toHexString}_$to")
+        val path = tierPath(tiersRoot, tier)
+        val exists = Files.exists(Paths.get(path))
+        clustered
+          .observe(rowsObs, count(lit(1)).as("rows_out"))
+          .write
+          .mode(if (exists) "overwrite" else "errorifexists")
+          .option("partitionOverwriteMode", "dynamic") // this write's mode; the session's stays the caller's
+          .partitionBy("part_key")
+          .parquet(path)
+        val rowsOut = rowsObs.get("rows_out").asInstanceOf[Long]
+        val partsOut = if (tier == "30d") windows.size.toLong else days.size.toLong
+        finerRowsOut = rowsOut
+        RunLogRow("lineage", tier, s"($from,$to]", rowsOut, partsOut, to)
       }
-      // cluster rows by their output partition before the partitioned
-      // write: otherwise every shuffle task holds rows of every
-      // part_key and the write fans out |tasks| × |partitions| tiny
-      // files. The fine tiers range-partition on (part_key, series):
-      // clustering plus hot-partition splitting by series range (one
-      // Zipf-hot day never bottlenecks a single writer). The coarse
-      // tiers (1d/30d) are re-rollups of already-tiny tier rows, where
-      // range-partitioning's sampling job costs more than the write —
-      // hash-cluster those on part_key instead.
-      // explicit partition count: AQE has the tier output's accurate
-      // (tiny-at-test-scale) size stats and would coalesce an
-      // unnumbered range shuffle to ONE task, serializing the hot-day
-      // write the range layout exists to parallelize
-      val nWrite = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      // write layout branches on the CONSERVATIVE row bound (finer
-      // tier's observed output; the exact count for 1m) instead of a
-      // dedicated count job: below the threshold the clustering shuffle
-      // costs more than it saves — one writer task emits one file per
-      // part_key dir with no exchange and a single task-commit round.
-      // Misclassifying small-as-large costs one tiny shuffle, never
-      // correctness. Exact rows_out rides the write as an observed
-      // metric; partitions written are driver-known by construction
-      // (every touched day/window carries at least one batch row).
-      val bound = tier match {
-        case "30d" => finerRowsOut / math.max(days.size, 1) * windows.size * 30 + 1
-        case _     => finerRowsOut
-      }
-      val clustered =
-        if (bound <= SmallTierRows) out.coalesce(1)
-        else
-          tier match {
-            case "1m" | "1h" => out.repartitionByRange(nWrite, (col("part_key") +: series.map(col)): _*)
-            case _           => out.repartition(col("part_key"))
-          }
-      // observe sits ABOVE the clustering exchange: the range
-      // partitioner's sampling pass re-executes the exchange CHILD, so
-      // a metric below it would double-count
-      val rowsObs = Observation(s"graft_tier_rows_${tier}_${tiersRoot.hashCode.toHexString}_$to")
-      val path = tierPath(tiersRoot, tier)
-      val exists = Files.exists(Paths.get(path))
-      clustered
-        .observe(rowsObs, count(lit(1)).as("rows_out"))
-        .write
-        .mode(if (exists) "overwrite" else "errorifexists")
-        .option("partitionOverwriteMode", "dynamic") // this write's mode; the session's stays the caller's
-        .partitionBy("part_key")
-        .parquet(path)
-      val rowsOut = rowsObs.get("rows_out").asInstanceOf[Long]
-      val partsOut = if (tier == "30d") windows.size.toLong else days.size.toLong
-      finerRowsOut = rowsOut
-      RunLogRow("lineage", tier, s"($from,$to]", rowsOut, partsOut, to)
-    }
 
-    // Tiers run sequentially — the fine tiers are full-width
-    // shuffle+write jobs that already use every core (overlapping
-    // 1m/1h was measured SLOWER at sf0.1: cache/shuffle contention).
-    val lineage = Tiers.All.map(runTier)
-    out1m.unpersist()
+      // Tiers run sequentially — the fine tiers are full-width
+      // shuffle+write jobs that already use every core (overlapping
+      // 1m/1h was measured SLOWER at sf0.1: cache/shuffle contention).
+      (contractViolations, Tiers.All.map(runTier))
+    } finally out1m.unpersist()
 
     // one run-log append carries BOTH the per-tier lineage rows and the
     // run metrics row (kind column discriminates) — a single tiny write

@@ -81,13 +81,6 @@ class PlanSpec extends SparkSpec {
     assert(executedPhysical(df).contains("*("))
   }
 
-  test("bucketed similarity paths never fall back to a cartesian product") {
-    val plan = physical(graft.dedup.Dedup.minHashLsh(
-      spark.read.parquet("/root/testdata/sf0.001/documents.parquet"), "doc_id", "text"))
-    assert(!plan.contains("CartesianProduct"), s"minHashLsh plan degraded to a cartesian product: $plan")
-    assert(!plan.contains("BroadcastNestedLoopJoin"), s"minHashLsh plan has a nested-loop join: $plan")
-  }
-
   test("pruned incremental update opens only the pruned snapshot files") {
     import graft.snapshot.{ContinuousRollup, SnapshotStore}
     val root = java.nio.file.Files.createTempDirectory("plan_prune").toString + "/src"

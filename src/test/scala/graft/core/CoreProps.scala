@@ -51,37 +51,4 @@ object CoreProps extends Properties("core") {
       val swapped = ValueModel.mine(a, b)("swapper")
       equalsOk && ValueModel.applyTransform(a, swapped) == b
     }
-
-  // PPM decode/resize over ARBITRARY pixel bytes (incl. >=128: the
-  // encoder's signed .toByte wrap must survive the & 0xff re-decode)
-  private val ppmImage: Gen[(Int, Int, Array[Byte])] = for {
-    wHalf <- Gen.choose(1, 6)
-    hHalf <- Gen.choose(1, 6)
-    w = wHalf * 2
-    h = hHalf * 2
-    px <- Gen.listOfN(w * h * 3, Gen.choose(0, 255))
-  } yield {
-    val header = s"P6\n$w $h\n255\n".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-    (w, h, header ++ px.map(_.toByte).toArray)
-  }
-
-  property("PPM resize halves dims and every output byte is its block's floored mean") =
-    forAll(ppmImage) { case (w, h, payload) =>
-      val Some((ow, oh, _, opx)) = graft.multimodal.Multimodal.decodePpm(payload)
-      graft.multimodal.Multimodal.resizePpm(payload, w / 2) match {
-        case None => false
-        case Some((bytes, nw, nh)) =>
-          val Some((dw, dh, _, px)) = graft.multimodal.Multimodal.decodePpm(bytes)
-          dw == w / 2 && dh == h / 2 && nw == dw && nh == dh && ow == w && oh == h &&
-          (0 until dh).forall(y =>
-            (0 until dw).forall(x =>
-              (0 until 3).forall { c =>
-                val s = (for (dy <- 0 to 1; dx <- 0 to 1)
-                  yield opx(((2 * y + dy) * w + (2 * x + dx)) * 3 + c)).sum
-                px((y * dw + x) * 3 + c) == s / 4
-              }
-            )
-          )
-      }
-    }
 }

@@ -246,13 +246,31 @@ class SnapshotSpec extends SparkSpec {
     // column survives and the per-row exact guard fires
     val shift: DataFrame => DataFrame =
       df => df.withColumn("ts", col("ts") + expr("interval 1 day"))
+    val before = cachedPlans
     val e = intercept[IllegalStateException] {
       ContinuousRollup.update(spark, root, tiers, Seq("event_type"), "ts", lit(1L), prepare = shift)
     }
     assert(e.getMessage.contains("prepare-contract violation"))
-    // nothing was applied or written
+    // nothing was applied or written, and the 1m output is not left cached
     assert(ContinuousRollup.lastApplied(tiers) == 0L)
     assert(!Files.exists(Paths.get(tiers, "tier_1h")))
+    assert(cachedPlans <= before, s"cache manager grew from $before to $cachedPlans entries")
+  }
+
+  test("a tier write that fails after 1m is written still releases the cached 1m output") {
+    val root = tmpDir("snap_leak")
+    val tiers = tmpDir("snap_leak_tiers")
+    SnapshotStore.append(root, events, tsCol = Some("ts"))
+    // a regular file where the 1h tier's directory goes: the 1m write
+    // succeeds, the 1h write cannot create its partition dirs
+    Files.write(Paths.get(tiers, "tier_1h"), Array[Byte](1))
+    val before = cachedPlans
+    intercept[Exception] {
+      ContinuousRollup.update(spark, root, tiers, Seq("event_type"), "ts", lit(1L))
+    }
+    assert(Files.isDirectory(Paths.get(tiers, "tier_1m")), "the 1m tier should be written before 1h fails")
+    assert(ContinuousRollup.lastApplied(tiers) == 0L)
+    assert(cachedPlans <= before, s"cache manager grew from $before to $cachedPlans entries")
   }
 
   test("a prepare that drops the stored-day column fails before any Spark job") {
