@@ -1,7 +1,6 @@
 package graft
 
 import graft.correct._
-import graft.graph.{Bfs, LabelProp, PageRank, Triangles}
 import graft.pages.{PageGen, PagePipeline}
 import graft.rollup.{BlockOps, Rollup}
 import graft.spark.Sessions
@@ -13,7 +12,6 @@ import org.apache.spark.sql.functions._
   *
   *   runMain graft.Bench                               headline (below)
   *   runMain graft.Bench queries q=<name>[,<name>...] [reps=N]
-  *   runMain graft.Bench graph [nodes=N]
   *   runMain graft.Bench cleaning [rows=a,b,c]
   *
   * With no arguments it prints ONE JSON line:
@@ -169,11 +167,10 @@ object Bench {
       case Some("queries") =>
         val names = kv.getOrElse("q", sys.error("queries needs q=<name>[,<name>...]")).split(',').toSeq
         spark => Seq(queries(spark, sfDir, names, kv.getOrElse("reps", "2").toInt))
-      case Some("graph") => spark => Seq(graph(spark, kv.getOrElse("nodes", "2000000").toLong))
       case Some("cleaning") =>
         val rows = kv.getOrElse("rows", "5000,10000,25000").split(',').toSeq.map(_.trim.toLong)
         spark => cleaning(spark, rows)
-      case Some(other) => sys.error(s"unknown mode '$other' (expected queries, graph or cleaning)")
+      case Some(other) => sys.error(s"unknown mode '$other' (expected queries or cleaning)")
     }
     val spark = Sessions.build(Sessions.localMaster, s"graft-bench${args.headOption.fold("")("-" + _)}")
     spark.sparkContext.setLogLevel("WARN")
@@ -240,24 +237,6 @@ object Bench {
       "\"" + name + "\":" + secs.map(s => f"$s%.3f").mkString("[", ",", "]")
     }
     s"""{"metric":"query_sec","reps":$reps,"queries":${qs.mkString("{", ",", "}")},"sf":"$sfDir"}"""
-  }
-
-  /** The graph operators on a synthetic graph of `n` nodes with 3
-    * out-edges each (pure-codegen `range()` generation, so no I/O in
-    * the measurement); the driver fixtures only run the 500-doc table.
-    */
-  def graph(spark: SparkSession, n: Long): String = {
-    val edges = spark
-      .range(n)
-      .select(col("id").as("src"), explode(array(lit(1), lit(2), lit(3))).as("j"))
-      .select(col("src"), pmod(col("src") * 7 + col("j") * 13, lit(n)).as("dst"))
-    val seeds = spark.range(n).filter(pmod(col("id"), lit(1999)) === 0).select(col("id").as("v"))
-    val prSec = seconds(noopRun(PageRank.ranks(edges, "src", "dst", iters = 8)))._2
-    val triSec = seconds(noopRun(Triangles.perNode(edges, "src", "dst")))._2
-    val bfsSec = seconds(noopRun(Bfs.levels(edges, "src", "dst", seeds, "v", maxDepth = 3)))._2
-    val lpSec = seconds(noopRun(LabelProp.communities(edges, "src", "dst", iters = 3)))._2
-    val e = 3L * n
-    f"""{"metric":"graph_bench","nodes":$n,"edges":$e,"pagerank8_sec":$prSec%.2f,"pagerank_edge_traversals_per_sec":${(e * 8 / prSec).toLong},"triangles_sec":$triSec%.2f,"bfs3_sec":$bfsSec%.2f,"labelprop3_sec":$lpSec%.2f}"""
   }
 
   /** ncvoters-shaped synthetic table (FIXTURES.md §3 archetype). */

@@ -1,15 +1,15 @@
 package graft
 
 import graft.correct.{Cells, Correctors, Fd, Pdep}
-import graft.pages.{PageGen, PagePipeline}
-import graft.rollup.{BlockOps, GapFill, Rollup, Tiers}
+import graft.pages.PagePipeline
+import graft.rollup.{BlockOps, GapFill, Rollup}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2 (+ the training-data-pipeline operators), each with a
-  * DuckDB-runnable oracle in `oracleSql` where SQL-expressible.
+  * SURVEY.md §2, each with a DuckDB-runnable oracle in `oracleSql`
+  * where SQL-expressible.
   *
   * Determinism rules used throughout (so the driver's hash compare is
   * exact): double sums go through `round(x, 6)` + decimal cast before
@@ -284,22 +284,6 @@ object SparkEntry {
     "q90_histogram_quantile" -> ((s, dir) => {
       graft.rollup.Histogram
         .histogramQuantile(t(s, dir, "events"), "event_type", "value", width = 50.0, q = 0.95)
-    }),
-
-    // ---- Z-order layout keys: 16-bit portable dimension hashes,
-    //      Morton-interleaved into one clustering key — range-writing
-    //      on z bounds BOTH dimensions per file, so equality predicates
-    //      on either prune files (multi-dim clustering at 100 TB) ----
-    "q91_zorder_key" -> ((s, dir) => {
-      import graft.operators.ZOrder
-      t(s, dir, "events")
-        .select(
-          col("event_id"),
-          col("user_id"),
-          col("event_type"),
-          ZOrder.hash16(col("user_id"), "zu").as("ha"),
-          ZOrder.hash16(col("event_type"), "zt").as("hb"))
-        .withColumn("z", ZOrder.zValue(col("ha"), col("hb")))
     }),
 
     // ---- latest-wins CDC merge (upsert + tombstone): per key ONE
@@ -647,35 +631,6 @@ object SparkEntry {
       graft.rollup.Seasonal
         .anomalies(t(s, dir, "events"), "event_type", "ts", "value", threshold = 80.0)
         .select("event_id", "event_type", "ts", "value", "hour_of_week", "expected", "residual")
-    }),
-
-    // ---- zone maps over the z-order layout: per-zone pruning stats ----
-    "q130_zone_maps" -> ((s, dir) => {
-      graft.operators.ZoneMap
-        .stats(t(s, dir, "events"), "user_id", "event_type", Seq("user_id", "event_id"))
-    }),
-
-    // ---- Bloom pre-join pruning: filter built over the event users,
-    //      probed by doc ids; `actual` pins zero false negatives ----
-    "q131_bloom_prejoin" -> ((s, dir) => {
-      val users = t(s, dir, "events").select(col("user_id")).distinct()
-      val filter = graft.operators.Bloom.build(users, "user_id", m = 256, k = 3, salt = "bl")
-      val probed = graft.operators.Bloom
-        .mightContain(
-          t(s, dir, "documents").select(col("doc_id")),
-          "doc_id",
-          filter,
-          m = 256,
-          k = 3,
-          salt = "bl"
-        )
-      probed
-        .join(
-          users.select(col("user_id").as("__u"), lit(true).as("actual")),
-          probed("doc_id") === col("__u"),
-          "left"
-        )
-        .select(col("doc_id"), col("maybe"), coalesce(col("actual"), lit(false)).as("actual"))
     }),
 
     // ---- count-min sketch tiers: hourly sketches merged to days by
@@ -1141,24 +1096,6 @@ object SparkEntry {
       graft.snapshot.JoinView.read(s, vRoot).select("user_id", "event_id", "ts", "event_type", "cohort")
     }),
 
-    // ---- label-propagation communities (Raghavan 2007, synchronous
-    //      replayable variant): ring-of-10 blocks converge to per-block
-    //      labels in 3 supersteps — exact integer argmax, ties to the
-    //      smallest label, all nodes updating from the previous round ----
-    "q168_label_prop" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id")
-      val edges = docs
-        .select(col("doc_id").as("src"), explode(array(lit(1), lit(2), lit(3))).as("j"))
-        .select(
-          col("src"),
-          (col("src") - pmod(col("src"), lit(10)) +
-            pmod(pmod(col("src"), lit(10)) + col("j"), lit(10))).as("dst")
-        )
-      graft.graph.LabelProp
-        .communities(edges, "src", "dst", iters = 3)
-        .select(col("v").as("doc_id"), col("label"))
-    }),
-
     // ---- streaming LEFT OUTER stream-stream join: view→purchase
     //      attribution where UNMATCHED views must still emit (with a
     //      null purchase) — the outer row can only be declared once
@@ -1233,25 +1170,6 @@ object SparkEntry {
         .laggedPearson(t(s, dir, "events"), "event_type", "ts", "value", "hour", Seq(-2, -1, 0, 1, 2))
     }),
 
-    // ---- bucketed co-located join: facts and dim both written
-    //      bucketed+sorted on user_id (the north rule's bucket-by-hash
-    //      layout), so the recurring join needs ZERO exchanges — at
-    //      100 TB the nightly fact⋈dim shuffles nothing (BucketedJoin
-    //      Spec pins the exchange-free plan; here the joined result
-    //      aggregates to per-cohort counts) ----
-    "q172_bucketed_join" -> ((s, dir) => {
-      val base = "/tmp/graft_q172"
-      graft.snapshot.SnapshotStore.deleteRecursively(base)
-      val ev = t(s, dir, "events").select("event_id", "user_id", "event_type")
-      val dim = ev.select("user_id").distinct().withColumn("cohort", pmod(col("user_id"), lit(5)))
-      graft.operators.Bucketing.writeBucketed(ev, "q172_facts", s"$base/facts", "user_id", 8)
-      graft.operators.Bucketing.writeBucketed(dim, "q172_dim", s"$base/dim", "user_id", 8)
-      graft.operators.Bucketing
-        .colocatedJoin(s, "q172_facts", "q172_dim", "user_id")
-        .groupBy("cohort", "event_type")
-        .agg(count(lit(1)).as("n_events"), countDistinct(col("user_id")).as("n_users"))
-    }),
-
     // ---- KMV distinct sketch: per-series distinct-user estimate as
     //      the k smallest distinct 60-bit hashes — the simplest
     //      MERGEABLE distinct sketch (union + min-k re-rolls through
@@ -1308,19 +1226,6 @@ object SparkEntry {
         )
     }),
 
-    // ---- redirect-chain resolution by pointer doubling: 301-chain
-    //      canonicalization where reach SQUARES per round (3 rounds =
-    //      8 hops) — chains toward the next %10==9 sink run up to 9
-    //      hops, so digit-0 sources stay UNRESOLVED at 3 rounds and
-    //      everything else lands on its sink ----
-    "q178_redirect_resolve" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id")
-      val redirects = docs
-        .filter(pmod(col("doc_id"), lit(10)) =!= 9)
-        .select(col("doc_id").as("src"), (col("doc_id") + 1).as("dst"))
-      graft.graph.Pointers.resolveChains(redirects, "src", "dst", rounds = 3)
-    }),
-
     // ---- behavioral transition matrix: first-order Markov counts of
     //      per-user event-type sequences — P(next|current) for funnel
     //      design and transition-drift alerts ----
@@ -1342,21 +1247,6 @@ object SparkEntry {
       Correctors
         .vicinityCorrectorOrderN(base, errors, "row_id", Seq("nation", "decile", "segment", "parity"), 3)
         .select(col("row_id"), col("corrector"), col("candidate"), round(col("score"), 6).as("score"))
-    }),
-
-    // ---- personalized PageRank (topic-sensitive, Haveliwala 2002):
-    //      teleport mass returns ONLY to the doc_id%97 seed hosts, so
-    //      rank measures endorsement reachable FROM the seeds — same
-    //      integer supersteps as q155 with a seed-flagged base ----
-    "q162_personalized_pagerank" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id")
-      val n = docs.count()
-      val edges = docs
-        .select(col("doc_id").as("src"), explode(array(lit(1), lit(2), lit(3))).as("j"))
-        .select(col("src"), pmod(col("src") * 7 + col("j") * 13, lit(n)).as("dst"))
-      val seeds = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
-      graft.graph.PageRank.personalized(edges, "src", "dst", seeds, "doc_id", iters = 8)
-        .select(col("v").as("doc_id"), col("rank"))
     }),
 
     // ---- the streaming LAKEHOUSE loop end-to-end: micro-batches land
@@ -1450,58 +1340,6 @@ object SparkEntry {
       out
     }),
 
-    // ---- multi-source BFS crawl depth over the q155 graph: frontier
-    //      expansion from the doc_id%97 seed hosts, 3 hops — per
-    //      round the join input is the LAST frontier only (shrinks as
-    //      the search saturates), visited anti-join keeps levels
-    //      minimal, unreached docs level -1 via the vertex join ----
-    "q160_bfs_levels" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id")
-      val n = docs.count()
-      val edges = docs
-        .select(col("doc_id").as("src"), explode(array(lit(1), lit(2), lit(3))).as("j"))
-        .select(col("src"), pmod(col("src") * 7 + col("j") * 13, lit(n)).as("dst"))
-      val seeds = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
-      docs
-        .join(
-          graft.graph.Bfs.levels(edges, "src", "dst", seeds, "doc_id", maxDepth = 3)
-            .withColumnRenamed("v", "doc_id"),
-          Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("level"), lit(-1L)).as("level"))
-    }),
-
-    // ---- exact triangle counting on the undirected q155 graph: edges
-    //      canonicalized low->high so each triangle enumerates ONCE as
-    //      its sorted triple (wedge join + closing join, 3 shuffles);
-    //      per-node counts, isolated-in-the-undirected-graph docs 0 ----
-    "q159_triangles" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id")
-      val n = docs.count()
-      val edges = docs
-        .select(col("doc_id").as("src"), explode(array(lit(1), lit(2), lit(3))).as("j"))
-        .select(col("src"), pmod(col("src") * 7 + col("j") * 13, lit(n)).as("dst"))
-      docs
-        .join(
-          graft.graph.Triangles.perNode(edges, "src", "dst").withColumnRenamed("v", "doc_id"),
-          Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("n_tri"), lit(0L)).as("n_tri"))
-    }),
-
-    // ---- HITS hubs & authorities over the q155 graph made asymmetric
-    //      (out-degree cycles 1,2,3 by doc id): 3 fixed-point integer
-    //      rounds, max-normalization riding a 1-row broadcast
-    //      cross-join (zero driver actions per round) ----
-    "q158_hits" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id")
-      val n = docs.count()
-      val edges = docs
-        .select(col("doc_id").as("src"), explode(array(lit(1), lit(2), lit(3))).as("j"))
-        .filter(col("j") <= pmod(col("src"), lit(3)) + 1)
-        .select(col("src"), pmod(col("src") * 7 + col("j") * 13, lit(n)).as("dst"))
-      graft.graph.Hits.scores(edges, "src", "dst", iters = 3)
-        .select(col("v").as("doc_id"), col("auth"), col("hub"))
-    }),
-
     // ---- one-pass column profiling (ingestion QA / optimizer stats):
     //      melt the profiled columns in the single scan, then the
     //      two-level (col, value) -> col aggregate — both exchanges
@@ -1512,23 +1350,6 @@ object SparkEntry {
       graft.operators.Profile.profile(
         t(s, dir, "events"),
         Seq("event_id", "user_id", "event_type"))
-    }),
-
-    // ---- PageRank over a deterministic synthetic link graph (3
-    //      out-links per doc, dst = (id*7 + 13j) mod N — gcd(7,N)=1
-    //      makes in-degree uniform too): 8 supersteps of fixed-point
-    //      INTEGER arithmetic (floor divisions, no float sums — rank
-    //      values are partition-order-independent), each superstep one
-    //      edges⋈ranks join + one partial-aggregated dst reduce,
-    //      lineage cut per step via localCheckpoint ----
-    "q155_pagerank" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id")
-      val n = docs.count()
-      val edges = docs
-        .select(col("doc_id").as("src"), explode(array(lit(1), lit(2), lit(3))).as("j"))
-        .select(col("src"), pmod(col("src") * 7 + col("j") * 13, lit(n)).as("dst"))
-      graft.graph.PageRank.ranks(edges, "src", "dst", iters = 8)
-        .select(col("v").as("doc_id"), col("rank"))
     }),
 
     // ---- merge-on-read row deletes (Iceberg v2 equality deletes):
@@ -2102,7 +1923,6 @@ object SparkEntry {
     //      and CleaningSpec pins the E2E goldens on the reference's
     //      own debug fixtures) ----
     "q48_cleaning" -> ((s, dir) => {
-      import s.implicits._
       val base = corruptible(s, dir, corrupt = true)
       val detected = base
         .filter(col("segment") === "__CORRUPT__")
@@ -3046,18 +2866,6 @@ object SparkEntry {
          SELECT series, total_n, bin,
                 bin_lo + 50e0 * (target - CAST(cum_n - n AS DOUBLE)) / CAST(n AS DOUBLE) AS quantile_est
          FROM p WHERE rn = 1""",
-    // Z-order replay: the portable md5 16-bit hashes plus the identical
-    // 32-term shift/mask interleave — pure integer arithmetic.
-    "q91_zorder_key" ->
-      """WITH h AS (SELECT event_id, user_id, event_type,
-                CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR) || '|zu'), 1, 15)) AS BIGINT) & 65535 AS ha,
-                CAST(('0x' || substr(md5(event_type || '|zt'), 1, 15)) AS BIGINT) & 65535 AS hb
-              FROM events)
-         SELECT event_id, user_id, event_type, ha, hb,
-                CAST(list_sum(list_transform(generate_series(0, 15),
-                  i -> ((ha >> i) & 1) * (CAST(1 AS BIGINT) << (2*i))
-                     + ((hb >> i) & 1) * (CAST(1 AS BIGINT) << (2*i + 1)))) AS BIGINT) AS z
-         FROM h""",
     // Upsert replay: the engine's struct-max total order (versions...,
     // source, payload) is row_number() = 1 under the same DESC keys;
     // (ts, event_id, src) is unique here so payload never breaks ties.
@@ -3425,41 +3233,6 @@ object SparkEntry {
                 b.expected, e.value - b.expected AS residual
          FROM e JOIN b USING (event_type, hour_of_week)
          WHERE abs(e.value - b.expected) > 80.0""",
-    // Zone-map replay: identical 16-bit md5 hashes, identical bit
-    // interleave, identical 12-bit zone prefix and min/max stats.
-    "q130_zone_maps" ->
-      """WITH h AS (SELECT user_id, event_id,
-                CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR) || '|za'), 1, 15)) AS BIGINT) & 65535 AS ha,
-                CAST(('0x' || substr(md5(event_type || '|zb'), 1, 15)) AS BIGINT) & 65535 AS hb
-              FROM events),
-         z AS (SELECT user_id, event_id,
-                CAST(list_sum(list_transform(generate_series(0, 15),
-                  i -> ((ha >> i) & 1) * (CAST(1 AS BIGINT) << (2*i))
-                     + ((hb >> i) & 1) * (CAST(1 AS BIGINT) << (2*i + 1)))) AS BIGINT) >> 20 AS zone
-               FROM h)
-         SELECT zone, count(*) AS n_rows,
-                min(user_id) AS min_user_id, max(user_id) AS max_user_id,
-                min(event_id) AS min_event_id, max(event_id) AS max_event_id
-         FROM z GROUP BY 1""",
-    // Bloom replay: identical salted md5 positions, identical 64-bit
-    // word packing via bit_or, identical all-k-bits membership test.
-    "q131_bloom_prejoin" ->
-      """WITH u AS (SELECT DISTINCT user_id FROM events),
-         ks AS (SELECT j FROM generate_series(0, 2) g(j)),
-         up AS (SELECT CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR) || '|bl|' || CAST(j AS VARCHAR)), 1, 15)) AS BIGINT) % 256 AS pos
-                FROM u, ks),
-         f AS (SELECT pos // 32 AS word_idx, bit_or(CAST(1 AS BIGINT) << CAST(pos % 32 AS INTEGER)) AS bits
-               FROM up GROUP BY 1),
-         p AS (SELECT doc_id, j,
-                CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '|bl|' || CAST(j AS VARCHAR)), 1, 15)) AS BIGINT) % 256 AS pos
-               FROM documents, ks),
-         hit AS (SELECT p.doc_id,
-                  min(CASE WHEN (COALESCE(f.bits, 0) & (CAST(1 AS BIGINT) << CAST(p.pos % 32 AS INTEGER))) <> 0
-                           THEN 1 ELSE 0 END) AS all_hit
-                 FROM p LEFT JOIN f ON p.pos // 32 = f.word_idx GROUP BY 1)
-         SELECT h.doc_id, h.all_hit = 1 AS maybe,
-                (u.user_id IS NOT NULL) AS actual
-         FROM hit h LEFT JOIN u ON h.doc_id = u.user_id""",
     // CMS replay: identical salted md5 buckets; each estimate is the
     // min over d rows of that (type, day, row, bucket) cell count —
     // computed directly from the raw events, no sketch structure
@@ -3673,32 +3446,6 @@ object SparkEntry {
     // the full inner join — every event paired with its user's dim row.
     "q167_join_view" ->
       """SELECT user_id, event_id, ts, event_type, user_id % 5 AS cohort FROM events""",
-    // Label-propagation replay: 3 synchronous rounds unrolled — each
-    // round the exact (count DESC, label ASC) argmax over neighbor
-    // labels of the PREVIOUS round, no-inbound nodes keeping theirs.
-    "q168_label_prop" ->
-      """WITH e0 AS (SELECT doc_id AS src,
-                (doc_id - doc_id % 10) + ((doc_id % 10 + j) % 10) AS dst
-              FROM documents, (VALUES (1),(2),(3)) AS t(j)),
-         e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
-         n AS (SELECT DISTINCT v FROM (SELECT src AS v FROM e UNION ALL SELECT dst AS v FROM e)),
-         l0 AS (SELECT v, v AS label FROM n),
-         f1 AS (SELECT e.dst AS v, l.label, count(*) AS c FROM e JOIN l0 l ON e.src = l.v GROUP BY 1, 2),
-         b1 AS (SELECT v, label FROM (
-                  SELECT v, label, row_number() OVER (PARTITION BY v ORDER BY c DESC, label) AS rn FROM f1)
-                WHERE rn = 1),
-         l1 AS (SELECT l0.v, COALESCE(b1.label, l0.label) AS label FROM l0 LEFT JOIN b1 ON l0.v = b1.v),
-         f2 AS (SELECT e.dst AS v, l.label, count(*) AS c FROM e JOIN l1 l ON e.src = l.v GROUP BY 1, 2),
-         b2 AS (SELECT v, label FROM (
-                  SELECT v, label, row_number() OVER (PARTITION BY v ORDER BY c DESC, label) AS rn FROM f2)
-                WHERE rn = 1),
-         l2 AS (SELECT l1.v, COALESCE(b2.label, l1.label) AS label FROM l1 LEFT JOIN b2 ON l1.v = b2.v),
-         f3 AS (SELECT e.dst AS v, l.label, count(*) AS c FROM e JOIN l2 l ON e.src = l.v GROUP BY 1, 2),
-         b3 AS (SELECT v, label FROM (
-                  SELECT v, label, row_number() OVER (PARTITION BY v ORDER BY c DESC, label) AS rn FROM f3)
-                WHERE rn = 1),
-         l3 AS (SELECT l2.v, COALESCE(b3.label, l2.label) AS label FROM l2 LEFT JOIN b3 ON l2.v = b3.v)
-         SELECT v AS doc_id, label FROM l3""",
     // Outer-join replay: on bounded input the watermarked left-outer
     // stream-stream join equals the batch LEFT range join — matched
     // pairs identical to q139, unmatched views with a null purchase.
@@ -3754,12 +3501,6 @@ object SparkEntry {
                              * sqrt(CAST(CAST(n_buckets*syy - sy*sy AS VARCHAR) AS DOUBLE)))
                      END AS corr
          FROM s WHERE n_buckets >= 2""",
-    // Bucketed-join replay: the co-located join changes the PLAN, not
-    // the answer — per-cohort counts off the plain join.
-    "q172_bucketed_join" ->
-      """SELECT user_id % 5 AS cohort, event_type, count(*) AS n_events,
-                count(DISTINCT user_id) AS n_users
-         FROM events GROUP BY 1, 2""",
     // KMV replay: identical 60-bit hashes, identical min-k rank
     // filter, identical (k-1)·2^60/θ float division.
     "q173_kmv_distinct" ->
@@ -3822,15 +3563,6 @@ object SparkEntry {
                       cnt * 1.0 / sum(cnt) OVER (PARTITION BY decile, nation, parity) AS pr FROM c)
          SELECT e.row_id, 'vicinity_3_decile_nation_parity' AS corrector, p.candidate, round(p.pr, 6) AS score
          FROM err e JOIN p ON e.nation = p.nation AND e.decile = p.decile AND e.parity = p.parity""",
-    // Pointer-doubling replay: three unrolled t' = t(t(x)) rounds,
-    // then the resolved test = "final target is not a redirect src".
-    "q178_redirect_resolve" ->
-      """WITH r0 AS (SELECT doc_id AS src, doc_id + 1 AS nxt FROM documents WHERE doc_id % 10 <> 9),
-         r1 AS (SELECT a.src, COALESCE(b.nxt, a.nxt) AS nxt FROM r0 a LEFT JOIN r0 b ON a.nxt = b.src),
-         r2 AS (SELECT a.src, COALESCE(b.nxt, a.nxt) AS nxt FROM r1 a LEFT JOIN r1 b ON a.nxt = b.src),
-         r3 AS (SELECT a.src, COALESCE(b.nxt, a.nxt) AS nxt FROM r2 a LEFT JOIN r2 b ON a.nxt = b.src)
-         SELECT a.src, a.nxt AS final_dst, (b.src IS NULL) AS resolved
-         FROM r3 a LEFT JOIN (SELECT DISTINCT src FROM r0) b ON a.nxt = b.src""",
     // Transition replay: identical (ts, event_id) lag pairing, exact
     // integer counts, one float normalization per from_state.
     "q179_transition_matrix" ->
@@ -3842,74 +3574,6 @@ object SparkEntry {
          SELECT from_state, to_state, n,
                 CAST(n AS DOUBLE) / CAST(sum(n) OVER (PARTITION BY from_state) AS DOUBLE) AS prob
          FROM c""",
-    // Personalized-PageRank replay: q155's recurrence with the
-    // seed-restricted base vector, unrolled.
-    "q162_personalized_pagerank" ->
-      """WITH nn AS (SELECT count(*) AS n FROM documents),
-         e AS (SELECT doc_id AS src, (doc_id*7 + 13*j) % (SELECT n FROM nn) AS dst
-               FROM documents, (VALUES (1),(2),(3)) AS t(j)),
-         o AS (SELECT src, count(*) AS deg FROM e GROUP BY 1),
-         ns AS (SELECT count(*) AS k FROM documents WHERE doc_id % 97 = 0),
-         r0 AS (SELECT doc_id AS v,
-                       CASE WHEN doc_id % 97 = 0 THEN 1000000 // (SELECT k FROM ns) ELSE 0 END AS rank
-                FROM documents),
-         i1 AS (SELECT d.doc_id AS v,
-                       CASE WHEN d.doc_id % 97 = 0 THEN 150000 // (SELECT k FROM ns) ELSE 0 END
-                       + (85 * COALESCE(s.s, 0)) // 100 AS rank
-                FROM documents d LEFT JOIN (
-                  SELECT e.dst AS v, sum(r.rank // o.deg) AS s
-                  FROM e JOIN r0 r ON e.src = r.v JOIN o ON e.src = o.src GROUP BY 1) s
-                ON d.doc_id = s.v),
-         i2 AS (SELECT d.doc_id AS v,
-                       CASE WHEN d.doc_id % 97 = 0 THEN 150000 // (SELECT k FROM ns) ELSE 0 END
-                       + (85 * COALESCE(s.s, 0)) // 100 AS rank
-                FROM documents d LEFT JOIN (
-                  SELECT e.dst AS v, sum(r.rank // o.deg) AS s
-                  FROM e JOIN i1 r ON e.src = r.v JOIN o ON e.src = o.src GROUP BY 1) s
-                ON d.doc_id = s.v),
-         i3 AS (SELECT d.doc_id AS v,
-                       CASE WHEN d.doc_id % 97 = 0 THEN 150000 // (SELECT k FROM ns) ELSE 0 END
-                       + (85 * COALESCE(s.s, 0)) // 100 AS rank
-                FROM documents d LEFT JOIN (
-                  SELECT e.dst AS v, sum(r.rank // o.deg) AS s
-                  FROM e JOIN i2 r ON e.src = r.v JOIN o ON e.src = o.src GROUP BY 1) s
-                ON d.doc_id = s.v),
-         i4 AS (SELECT d.doc_id AS v,
-                       CASE WHEN d.doc_id % 97 = 0 THEN 150000 // (SELECT k FROM ns) ELSE 0 END
-                       + (85 * COALESCE(s.s, 0)) // 100 AS rank
-                FROM documents d LEFT JOIN (
-                  SELECT e.dst AS v, sum(r.rank // o.deg) AS s
-                  FROM e JOIN i3 r ON e.src = r.v JOIN o ON e.src = o.src GROUP BY 1) s
-                ON d.doc_id = s.v),
-         i5 AS (SELECT d.doc_id AS v,
-                       CASE WHEN d.doc_id % 97 = 0 THEN 150000 // (SELECT k FROM ns) ELSE 0 END
-                       + (85 * COALESCE(s.s, 0)) // 100 AS rank
-                FROM documents d LEFT JOIN (
-                  SELECT e.dst AS v, sum(r.rank // o.deg) AS s
-                  FROM e JOIN i4 r ON e.src = r.v JOIN o ON e.src = o.src GROUP BY 1) s
-                ON d.doc_id = s.v),
-         i6 AS (SELECT d.doc_id AS v,
-                       CASE WHEN d.doc_id % 97 = 0 THEN 150000 // (SELECT k FROM ns) ELSE 0 END
-                       + (85 * COALESCE(s.s, 0)) // 100 AS rank
-                FROM documents d LEFT JOIN (
-                  SELECT e.dst AS v, sum(r.rank // o.deg) AS s
-                  FROM e JOIN i5 r ON e.src = r.v JOIN o ON e.src = o.src GROUP BY 1) s
-                ON d.doc_id = s.v),
-         i7 AS (SELECT d.doc_id AS v,
-                       CASE WHEN d.doc_id % 97 = 0 THEN 150000 // (SELECT k FROM ns) ELSE 0 END
-                       + (85 * COALESCE(s.s, 0)) // 100 AS rank
-                FROM documents d LEFT JOIN (
-                  SELECT e.dst AS v, sum(r.rank // o.deg) AS s
-                  FROM e JOIN i6 r ON e.src = r.v JOIN o ON e.src = o.src GROUP BY 1) s
-                ON d.doc_id = s.v),
-         i8 AS (SELECT d.doc_id AS v,
-                       CASE WHEN d.doc_id % 97 = 0 THEN 150000 // (SELECT k FROM ns) ELSE 0 END
-                       + (85 * COALESCE(s.s, 0)) // 100 AS rank
-                FROM documents d LEFT JOIN (
-                  SELECT e.dst AS v, sum(r.rank // o.deg) AS s
-                  FROM e JOIN i7 r ON e.src = r.v JOIN o ON e.src = o.src GROUP BY 1) s
-                ON d.doc_id = s.v)
-         SELECT v AS doc_id, CAST(rank AS BIGINT) AS rank FROM i8""",
     // Lakehouse-loop replay: exactly-once ingest + incremental tier
     // maintenance must equal the one-shot batch rollup.
     "q163_stream_lakehouse" ->
@@ -3931,67 +3595,6 @@ object SparkEntry {
                 max(ts) + INTERVAL 30 MINUTE AS session_end,
                 count(*) AS n_events
          FROM x GROUP BY user_id, sidx""",
-    // BFS replay: level-synchronous expansion unrolled — frontier k+1
-    // = dst of frontier k minus everything already levelled.
-    "q160_bfs_levels" ->
-      """WITH nn AS (SELECT count(*) AS n FROM documents),
-         e AS (SELECT doc_id AS src, (doc_id*7 + 13*j) % (SELECT n FROM nn) AS dst
-               FROM documents, (VALUES (1),(2),(3)) AS t(j)),
-         l0 AS (SELECT doc_id AS v FROM documents WHERE doc_id % 97 = 0),
-         l1 AS (SELECT DISTINCT e.dst AS v FROM e JOIN l0 ON e.src = l0.v
-                WHERE e.dst NOT IN (SELECT v FROM l0)),
-         l2 AS (SELECT DISTINCT e.dst AS v FROM e JOIN l1 ON e.src = l1.v
-                WHERE e.dst NOT IN (SELECT v FROM l0 UNION ALL SELECT v FROM l1)),
-         l3 AS (SELECT DISTINCT e.dst AS v FROM e JOIN l2 ON e.src = l2.v
-                WHERE e.dst NOT IN (SELECT v FROM l0 UNION ALL SELECT v FROM l1 UNION ALL SELECT v FROM l2)),
-         lv AS (SELECT v, 0 AS level FROM l0 UNION ALL SELECT v, 1 FROM l1
-                UNION ALL SELECT v, 2 FROM l2 UNION ALL SELECT v, 3 FROM l3)
-         SELECT d.doc_id, CAST(COALESCE(lv.level, -1) AS BIGINT) AS level
-         FROM documents d LEFT JOIN lv ON d.doc_id = lv.v""",
-    // Triangle replay: identical canonicalization (least/greatest,
-    // self-loops out, distinct) + the identical wedge/closing joins.
-    "q159_triangles" ->
-      """WITH nn AS (SELECT count(*) AS n FROM documents),
-         e0 AS (SELECT doc_id AS src, (doc_id*7 + 13*j) % (SELECT n FROM nn) AS dst
-                FROM documents, (VALUES (1),(2),(3)) AS t(j)),
-         e AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-               FROM e0 WHERE src <> dst),
-         tri AS (SELECT e1.a, e1.b, e2.b AS c
-                 FROM e e1 JOIN e e2 ON e1.b = e2.a
-                 JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
-         x AS (SELECT a AS v FROM tri UNION ALL SELECT b FROM tri UNION ALL SELECT c FROM tri),
-         cnt AS (SELECT v, count(*) AS n_tri FROM x GROUP BY 1)
-         SELECT d.doc_id, CAST(COALESCE(c.n_tri, 0) AS BIGINT) AS n_tri
-         FROM documents d LEFT JOIN cnt c ON d.doc_id = c.v""",
-    // HITS replay: the identical integer rounds unrolled — raw sums,
-    // then BIGINT floor-division max-normalization per side.
-    "q158_hits" ->
-      """WITH nn AS (SELECT count(*) AS n FROM documents),
-         e AS (SELECT doc_id AS src, (doc_id*7 + 13*j) % (SELECT n FROM nn) AS dst
-               FROM documents, (VALUES (1),(2),(3)) AS t(j)
-               WHERE j <= 1 + doc_id % 3),
-         nodes AS (SELECT DISTINCT v FROM (SELECT src AS v FROM e UNION ALL SELECT dst FROM e)),
-         h0 AS (SELECT v, 1000000 AS hub FROM nodes),
-         a1r AS (SELECT e.dst AS v, sum(h.hub) AS x FROM e JOIN h0 h ON e.src = h.v GROUP BY 1),
-         a1 AS (SELECT n.v, COALESCE((r.x * 1000000) // (SELECT max(x) FROM a1r), 0) AS auth
-                FROM nodes n LEFT JOIN a1r r ON n.v = r.v),
-         h1r AS (SELECT e.src AS v, sum(a.auth) AS x FROM e JOIN a1 a ON e.dst = a.v GROUP BY 1),
-         h1 AS (SELECT n.v, COALESCE((r.x * 1000000) // (SELECT max(x) FROM h1r), 0) AS hub
-                FROM nodes n LEFT JOIN h1r r ON n.v = r.v),
-         a2r AS (SELECT e.dst AS v, sum(h.hub) AS x FROM e JOIN h1 h ON e.src = h.v GROUP BY 1),
-         a2 AS (SELECT n.v, COALESCE((r.x * 1000000) // (SELECT max(x) FROM a2r), 0) AS auth
-                FROM nodes n LEFT JOIN a2r r ON n.v = r.v),
-         h2r AS (SELECT e.src AS v, sum(a.auth) AS x FROM e JOIN a2 a ON e.dst = a.v GROUP BY 1),
-         h2 AS (SELECT n.v, COALESCE((r.x * 1000000) // (SELECT max(x) FROM h2r), 0) AS hub
-                FROM nodes n LEFT JOIN h2r r ON n.v = r.v),
-         a3r AS (SELECT e.dst AS v, sum(h.hub) AS x FROM e JOIN h2 h ON e.src = h.v GROUP BY 1),
-         a3 AS (SELECT n.v, COALESCE((r.x * 1000000) // (SELECT max(x) FROM a3r), 0) AS auth
-                FROM nodes n LEFT JOIN a3r r ON n.v = r.v),
-         h3r AS (SELECT e.src AS v, sum(a.auth) AS x FROM e JOIN a3 a ON e.dst = a.v GROUP BY 1),
-         h3 AS (SELECT n.v, COALESCE((r.x * 1000000) // (SELECT max(x) FROM h3r), 0) AS hub
-                FROM nodes n LEFT JOIN h3r r ON n.v = r.v)
-         SELECT a3.v AS doc_id, CAST(a3.auth AS BIGINT) AS auth, CAST(h3.hub AS BIGINT) AS hub
-         FROM a3 JOIN h3 ON a3.v = h3.v""",
     // Profile replay: per column, the same counts and LEXICOGRAPHIC
     // string-cast extrema (the operator's documented contract).
     "q157_profile" ->
@@ -4011,32 +3614,6 @@ object SparkEntry {
                 count(DISTINCT event_type),
                 min(event_type), max(event_type)
          FROM events""",
-    // PageRank replay: the identical integer recurrence unrolled —
-    // every step floor division on BIGINTs, so the 8th-iteration
-    // ranks are bit-equal whatever the execution order.
-    "q155_pagerank" ->
-      """WITH nn AS (SELECT count(*) AS n FROM documents),
-         e AS (SELECT doc_id AS src, (doc_id*7 + 13*j) % (SELECT n FROM nn) AS dst
-               FROM documents, (VALUES (1),(2),(3)) AS t(j)),
-         o AS (SELECT src, count(*) AS deg FROM e GROUP BY 1),
-         r0 AS (SELECT doc_id AS v, 1000000 // (SELECT n FROM nn) AS rank FROM documents),
-         i1 AS (SELECT e.dst AS v, (150000 // (SELECT n FROM nn)) + (85 * sum(r.rank // o.deg)) // 100 AS rank
-                FROM e JOIN r0 r ON e.src = r.v JOIN o ON e.src = o.src GROUP BY 1),
-         i2 AS (SELECT e.dst AS v, (150000 // (SELECT n FROM nn)) + (85 * sum(r.rank // o.deg)) // 100 AS rank
-                FROM e JOIN i1 r ON e.src = r.v JOIN o ON e.src = o.src GROUP BY 1),
-         i3 AS (SELECT e.dst AS v, (150000 // (SELECT n FROM nn)) + (85 * sum(r.rank // o.deg)) // 100 AS rank
-                FROM e JOIN i2 r ON e.src = r.v JOIN o ON e.src = o.src GROUP BY 1),
-         i4 AS (SELECT e.dst AS v, (150000 // (SELECT n FROM nn)) + (85 * sum(r.rank // o.deg)) // 100 AS rank
-                FROM e JOIN i3 r ON e.src = r.v JOIN o ON e.src = o.src GROUP BY 1),
-         i5 AS (SELECT e.dst AS v, (150000 // (SELECT n FROM nn)) + (85 * sum(r.rank // o.deg)) // 100 AS rank
-                FROM e JOIN i4 r ON e.src = r.v JOIN o ON e.src = o.src GROUP BY 1),
-         i6 AS (SELECT e.dst AS v, (150000 // (SELECT n FROM nn)) + (85 * sum(r.rank // o.deg)) // 100 AS rank
-                FROM e JOIN i5 r ON e.src = r.v JOIN o ON e.src = o.src GROUP BY 1),
-         i7 AS (SELECT e.dst AS v, (150000 // (SELECT n FROM nn)) + (85 * sum(r.rank // o.deg)) // 100 AS rank
-                FROM e JOIN i6 r ON e.src = r.v JOIN o ON e.src = o.src GROUP BY 1),
-         i8 AS (SELECT e.dst AS v, (150000 // (SELECT n FROM nn)) + (85 * sum(r.rank // o.deg)) // 100 AS rank
-                FROM e JOIN i7 r ON e.src = r.v JOIN o ON e.src = o.src GROUP BY 1)
-         SELECT v AS doc_id, CAST(rank AS BIGINT) AS rank FROM i8""",
     // Merge-on-read delete replay: keys id%10==3 deleted at snapshot 3
     // erase snapshots 1-2's rows; snapshot 4's re-insert (id%20==3, a
     // subset of the deleted keys) postdates the delete and survives.

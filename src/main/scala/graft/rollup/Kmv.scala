@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions._
   * form); below k distinct values the sketch IS the exact set.
   *
   * Determinism: rows hash through the engine-portable 60-bit
-  * md5-prefix (the q120 hash), the min-k is an integer
-  * rank-filter, and the estimate is ONE float division of exact
-  * integers — hash-identical in any engine.
+  * md5 prefix (the first 15 hex digits of the md5 of the value's
+  * string form), the min-k is an integer rank-filter, and the
+  * estimate is ONE float division of exact integers —
+  * hash-identical in any engine.
   *
   * Scale shape: a distinct-aggregation on (group, hash) collapses
   * duplicates map-side, then the rank window runs over DISTINCT

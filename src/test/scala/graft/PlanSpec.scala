@@ -156,24 +156,11 @@ class PlanSpec extends SparkSpec {
     // over bucket-count rows, not raw data
     // q134: FULL OUTER reconciliation join — cannot broadcast; both
     // sides are tier-sized aggregates
-    // q158: the final auth⋈hub combine pairs two NODE-sized score
-    // relations on the vertex key — at web-graph scale neither side
-    // broadcasts, the shuffle join is the intended plan (the per-round
-    // joins inside the iteration are checkpoint-materialized and don't
-    // appear here)
-    // q159: the wedge and closing joins pair the EDGE relation with
-    // itself on edge keys — the all-pairs-within-neighborhood core of
-    // triangle counting; at graph scale neither side broadcasts
-    // q160: the final docs⋈levels combine pairs the vertex relation
-    // with the visited-set relation — both node-sized, no broadcast
     // q170: FULL OUTER digest reconciliation — cannot broadcast; both
     // sides are partition-count-sized digest relations (q134's shape)
-    // q172: the co-located bucketed join IS a sort-merge join — with
-    // ZERO exchanges, which is the point (BucketingSpec pins that)
     val allowSmj = Set(
       "q07_correct_fd", "q32_user_overlay", "q59_entity_corrector",
-      "q119_series_ratio", "q134_tier_reconcile", "q158_hits", "q159_triangles",
-      "q160_bfs_levels", "q170_replica_diff", "q172_bucketed_join"
+      "q119_series_ratio", "q134_tier_reconcile", "q170_replica_diff"
     )
     // a stale id would silently grant its exemption to any later query
     // registered under the same name
