@@ -1,7 +1,6 @@
 package graft
 
 import graft.pages.{PageGen, PagePipeline}
-import graft.rollup.Rollup
 import graft.snapshot.{ContinuousRollup, SnapshotStore}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._

@@ -540,63 +540,6 @@ object SparkEntry {
         .topMovers(t(s, dir, "events"), Seq("event_type", "user_id"), "ts", k = 20)
     }),
 
-    // ---- Structured Streaming windowed tier: the built-in
-    //      watermark+window path (the custom-state block builder is
-    //      q58), flushed by watermark-advancing sentinel batches and
-    //      pinned against the batch 1h aggregate ----
-    "q124_streaming_tier" -> ((s0, dir) => {
-      // cloned session: streaming STATE partitioning follows
-      // spark.sql.shuffle.partitions, and every micro-batch commits one
-      // state file per partition — 8 partitions for 5 series keeps the
-      // state-store fan-out proportional to the data, not the session
-      // default (the real-cluster sizing rule this pins)
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      import s.implicits._
-      val pts = t(s, dir, "events")
-        .select(col("event_type").as("series"), col("ts"), col("value").cast("long").as("value"))
-        .as[graft.streaming.StreamPoint]
-        .collect()
-        .toSeq
-      val maxTs = pts.map(_.ts.getTime).max
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[graft.streaming.StreamPoint]
-      val sink = s"q124_sink_${System.nanoTime()}"
-      val q = graft.streaming.StreamingRollup
-        .streamingTier(
-          ms.toDS().toDF(),
-          Seq("series"),
-          "ts",
-          "1h",
-          watermark = "10 minutes",
-          sizeCol = col("value")
-        )
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .start()
-      ms.addData(pts)
-      q.processAllAvailable()
-      (1 to 2).foreach { i =>
-        ms.addData(
-          graft.streaming.StreamPoint("__sentinel__", new java.sql.Timestamp(maxTs + i * 7200000L), 0L)
-        )
-        q.processAllAvailable()
-      }
-      val out = s
-        .table(sink)
-        .filter(col("series") =!= "__sentinel__")
-        .select(
-          col("series").as("event_type"),
-          col("bucket_ts"),
-          col("point_count"),
-          col("byte_size")
-        )
-      q.stop()
-      out
-    }),
-
     // ---- per-bucket variance from exact decimal co-moments ----
     "q125_bucket_variance" -> ((s, dir) => {
       graft.rollup.Moments
@@ -738,82 +681,6 @@ object SparkEntry {
         .select("event_id", "user_id", "ts", "event_type")
     }),
 
-    // ---- streaming stream-stream join: purchase <- view attribution
-    //      within a 1-hour horizon. Both sides watermarked so the join
-    //      state is BOUNDED: a view older than watermark + horizon can
-    //      never match a future purchase and is evicted — the property
-    //      that makes an infinite two-stream join runnable at all. On
-    //      bounded input the result must equal the batch range join
-    //      (the oracle). Inner join + append mode: matches emit the
-    //      micro-batch they complete, no sentinel flush needed. ----
-    "q139_stream_stream_join" -> ((s0, dir) => {
-      val s = s0.newSession()
-      // state-store fan-out proportional to the key space, not the
-      // session default (same sizing rule q124 pins)
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      import s.implicits._
-      val ev = t(s, dir, "events").select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-      def side(tpe: String) = ev
-        .filter(col("event_type") === tpe)
-        .select(col("event_id"), col("ts"), col("user_id"))
-        .as[(Long, java.sql.Timestamp, Long)]
-        .collect()
-        .toSeq
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      val msV = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, java.sql.Timestamp, Long)]
-      val msB = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, java.sql.Timestamp, Long)]
-      val v = msV.toDF().toDF("view_id", "view_ts", "user_id").withWatermark("view_ts", "1 hour")
-      val b = msB.toDF().toDF("purchase_id", "purchase_ts", "buyer_id").withWatermark("purchase_ts", "1 hour")
-      val joined = v.join(
-        b,
-        col("user_id") === col("buyer_id") &&
-          col("purchase_ts") >= col("view_ts") &&
-          col("purchase_ts") <= col("view_ts") + expr("INTERVAL 1 HOUR")
-      )
-      val sink = s"q139_sink_${System.nanoTime()}"
-      val q = joined.writeStream.format("memory").queryName(sink).outputMode("append").start()
-      msV.addData(side("view"))
-      msB.addData(side("purchase"))
-      q.processAllAvailable()
-      val out = s.table(sink).select("purchase_id", "view_id", "user_id", "purchase_ts", "view_ts")
-      q.stop()
-      out
-    }),
-
-    // ---- streaming at-least-once ingestion dedup: the crawl-feed
-    //      duplicates (deterministic re-delivery of every 3rd and 7th
-    //      event) collapse via dropDuplicatesWithinWatermark — state
-    //      bounded by the disorder horizon, unlike dropDuplicates whose
-    //      key state grows with the stream forever. Duplicate rows are
-    //      byte-identical, so first-arrival nondeterminism is
-    //      invisible and the result equals batch DISTINCT (oracle). ----
-    "q140_stream_dedup" -> ((s0, dir) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      import s.implicits._
-      val ev = t(s, dir, "events").select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-      val redelivered = ev
-        .unionAll(ev.filter(pmod(col("event_id"), lit(3)) === 0))
-        .unionAll(ev.filter(pmod(col("event_id"), lit(7)) === 0))
-        .as[(Long, java.sql.Timestamp, Long, String)]
-        .collect()
-        .toSeq
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, java.sql.Timestamp, Long, String)]
-      val deduped = ms
-        .toDF()
-        .toDF("event_id", "ts", "user_id", "event_type")
-        .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark("event_id")
-      val sink = s"q140_sink_${System.nanoTime()}"
-      val q = deduped.writeStream.format("memory").queryName(sink).outputMode("append").start()
-      ms.addData(redelivered)
-      q.processAllAvailable()
-      val out = s.table(sink).select("event_id", "ts", "user_id", "event_type")
-      q.stop()
-      out
-    }),
-
     // ---- snapshot schema evolution: a later snapshot ADDS a column;
     //      the range read serves the union schema from manifest
     //      METADATA alone (no footer scans), older files returning
@@ -931,47 +798,6 @@ object SparkEntry {
       graft.snapshot.SnapshotStore.read(s, root).select("event_id", "user_id", "ts", "event_type")
     }),
 
-    // ---- streaming -> snapshot-table sink, EXACTLY-ONCE: foreachBatch
-    //      gives at-least-once with stable batch ids; recording the id
-    //      in the manifest makes a crash-retry re-delivery a no-op. The
-    //      deliberate re-delivery of the last batch below is the proof:
-    //      were it appended twice the row hash would double-count. ----
-    "q150_stream_snapshot_sink" -> ((s0, dir) => {
-      val root = "/tmp/graft_q150/tbl"
-      graft.snapshot.SnapshotStore.deleteRecursively("/tmp/graft_q150")
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      import s.implicits._
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "events")
-        .select("event_id", "user_id", "ts", "event_type")
-        .as[(Long, Long, java.sql.Timestamp, String)]
-        .collect()
-        .toSeq
-      val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, java.sql.Timestamp, String)]
-      val q = ms.toDF().toDF("event_id", "user_id", "ts", "event_type")
-        .writeStream
-        .option("checkpointLocation", s"/tmp/graft_q150/chk_${System.nanoTime()}")
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          graft.streaming.SnapshotSink.appendBatch(root, b, id, tsCol = Some("ts")); ()
-        }
-        .start()
-      val (h1, h2) = rows.splitAt(rows.size / 2)
-      ms.addData(h1); q.processAllAvailable()
-      ms.addData(h2); q.processAllAvailable()
-      q.stop()
-      // simulate the crash-retry: the checkpoint commit was lost, the
-      // SAME final batch arrives again — the manifest high-water mark
-      // must swallow it
-      val hwm = graft.snapshot.SnapshotStore.lastStreamBatchId(root)
-      graft.streaming.SnapshotSink.appendBatch(
-        root,
-        t(s, dir, "events")
-          .select(col("event_id"), col("user_id"), col("ts").cast("timestamp").as("ts"), col("event_type")),
-        hwm, tsCol = Some("ts"))
-      graft.snapshot.SnapshotStore.read(s, root).select("event_id", "user_id", "ts", "event_type")
-    }),
-
     // ---- as-of-timestamp time travel (the Iceberg as-of-timestamp
     //      read): resolve a wall-clock stamp to the newest snapshot
     //      committed at or before it — manifest metadata only, zero
@@ -988,36 +814,6 @@ object SparkEntry {
       graft.snapshot.SnapshotStore.append(root, ev.filter(pmod(col("event_id"), lit(2)) === 1), tsCol = Some("ts"))
       graft.snapshot.SnapshotStore.readAsOf(s, root, t1)
         .select("event_id", "user_id", "ts", "event_type")
-    }),
-
-    // ---- stream-static enrichment join: the third streaming join
-    //      shape (after stream-stream q139 and the stateful tier
-    //      q124) — a stream enriched against a BROADCAST static
-    //      dimension is STATELESS (no watermark, no join state): each
-    //      micro-batch hash-joins against the dim snapshot, the
-    //      100-TB/day ingest shape for dimension lookup ----
-    "q153_stream_static_join" -> ((s0, dir) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      import s.implicits._
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      val dim = broadcast(t(s, dir, "nation").select(col("n_nationkey"), col("n_name")))
-      val rows = t(s, dir, "events")
-        .select("event_id", "user_id", "ts", "event_type")
-        .as[(Long, Long, java.sql.Timestamp, String)]
-        .collect()
-        .toSeq
-      val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, java.sql.Timestamp, String)]
-      val enriched = ms.toDF()
-        .toDF("event_id", "user_id", "ts", "event_type")
-        .join(dim, pmod(col("user_id"), lit(25)) === col("n_nationkey"))
-      val sink = s"q153_sink_${System.nanoTime()}"
-      val q = enriched.writeStream.format("memory").queryName(sink).outputMode("append").start()
-      ms.addData(rows)
-      q.processAllAvailable()
-      val out = s.table(sink).select("event_id", "user_id", "ts", "event_type", "n_name")
-      q.stop()
-      out
     }),
 
     // ---- manifest-stats data skipping (Iceberg min/max pruning at
@@ -1070,80 +866,6 @@ object SparkEntry {
       val v1 = graft.snapshot.Refs.readTag(s, root, "v1").withColumn("ref", lit("v1"))
       val d = graft.snapshot.SnapshotStore.read(s, dev).withColumn("ref", lit("dev"))
       m.unionByName(v1).unionByName(d).select("ref", "event_id", "user_id", "ts", "event_type")
-    }),
-
-    // ---- incremental JOIN-view maintenance: V = events ⋈ user-dim
-    //      kept as its own snapshot store, advanced per update by the
-    //      delta-join ΔV = ΔA⋈B_new ∪ A_old⋈ΔB — each update reads
-    //      only the delta snapshots (never re-joins the full fact
-    //      table), dims broadcast. Two updates (init, then both sides
-    //      advancing at once) must land exactly the full join ----
-    "q167_join_view" -> ((s, dir) => {
-      val base = "/tmp/graft_q167"
-      graft.snapshot.SnapshotStore.deleteRecursively(base)
-      val (aRoot, bRoot, vRoot) = (s"$base/a", s"$base/b", s"$base/v")
-      val ev = t(s, dir, "events").select("event_id", "user_id", "ts", "event_type")
-      val dim = t(s, dir, "events")
-        .select("user_id")
-        .distinct()
-        .withColumn("cohort", pmod(col("user_id"), lit(5)))
-      graft.snapshot.SnapshotStore.append(aRoot, ev.filter(pmod(col("event_id"), lit(2)) === 0), tsCol = Some("ts"))
-      graft.snapshot.SnapshotStore.append(bRoot, dim.filter(pmod(col("user_id"), lit(2)) === 0))
-      graft.snapshot.JoinView.update(s, vRoot, aRoot, bRoot, Seq("user_id"))
-      graft.snapshot.SnapshotStore.append(aRoot, ev.filter(pmod(col("event_id"), lit(2)) === 1), tsCol = Some("ts"))
-      graft.snapshot.SnapshotStore.append(bRoot, dim.filter(pmod(col("user_id"), lit(2)) === 1))
-      graft.snapshot.JoinView.update(s, vRoot, aRoot, bRoot, Seq("user_id"))
-      graft.snapshot.JoinView.read(s, vRoot).select("user_id", "event_id", "ts", "event_type", "cohort")
-    }),
-
-    // ---- streaming LEFT OUTER stream-stream join: view→purchase
-    //      attribution where UNMATCHED views must still emit (with a
-    //      null purchase) — the outer row can only be declared once
-    //      the watermark proves no future match exists, so state is
-    //      evicted AND completed: the semantics q139's inner join
-    //      can't express. Far-future sentinels on both streams flush
-    //      the bounded tail; on bounded input = batch LEFT range join ----
-    "q169_stream_outer_join" -> ((s0, dir) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      import s.implicits._
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      val ev = t(s, dir, "events").select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-      def side(tpe: String) = ev
-        .filter(col("event_type") === tpe)
-        .select(col("event_id"), col("ts"), col("user_id"))
-        .as[(Long, java.sql.Timestamp, Long)]
-        .collect()
-        .toSeq
-      val maxTs = ev.select(max(col("ts")).cast("timestamp")).as[java.sql.Timestamp].collect()(0)
-      val sentinel = new java.sql.Timestamp(maxTs.getTime + 100L * 3600 * 1000)
-      val msV = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, java.sql.Timestamp, Long)]
-      val msB = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, java.sql.Timestamp, Long)]
-      val v = msV.toDF().toDF("view_id", "view_ts", "user_id").withWatermark("view_ts", "1 hour")
-      val b = msB.toDF().toDF("purchase_id", "purchase_ts", "buyer_id").withWatermark("purchase_ts", "1 hour")
-      val joined = v.join(
-        b,
-        col("user_id") === col("buyer_id") &&
-          col("purchase_ts") >= col("view_ts") &&
-          col("purchase_ts") <= col("view_ts") + expr("INTERVAL 1 HOUR"),
-        "left_outer"
-      )
-      val sink = s"q169_sink_${System.nanoTime()}"
-      val q = joined.writeStream.format("memory").queryName(sink).outputMode("append").start()
-      msV.addData(side("view"))
-      msB.addData(side("purchase"))
-      q.processAllAvailable()
-      // sentinel round: advances both watermarks past every view's
-      // match horizon so pending outer rows emit; sentinels filter out
-      msV.addData(Seq((-1L, sentinel, -1L)))
-      msB.addData(Seq((-1L, sentinel, -1L)))
-      q.processAllAvailable()
-      val out = s
-        .table(sink)
-        .filter(col("view_id") >= 0)
-        .select(col("view_id"), col("user_id"), col("view_ts"), col("purchase_id"))
-      q.stop()
-      out
     }),
 
     // ---- merkle-style replica reconciliation: two copies of the
@@ -1247,97 +969,6 @@ object SparkEntry {
       Correctors
         .vicinityCorrectorOrderN(base, errors, "row_id", Seq("nation", "decile", "segment", "parity"), 3)
         .select(col("row_id"), col("corrector"), col("candidate"), round(col("score"), 6).as("score"))
-    }),
-
-    // ---- the streaming LAKEHOUSE loop end-to-end: micro-batches land
-    //      in the snapshot table EXACTLY-ONCE (q150's sink) and the
-    //      continuous 1h/1d/30d tier cascade advances INSIDE the same
-    //      foreachBatch — ingest and aggregate maintenance move in
-    //      lockstep, each update reading only the day partitions its
-    //      batch touched (q37's pruned incremental path). A deliberate
-    //      re-delivery after the stream proves the sink's no-op leaves
-    //      the tiers untouched too (lastApplied already covers it). ----
-    "q163_stream_lakehouse" -> ((s0, dir) => {
-      val root = "/tmp/graft_q163/tbl"
-      val tiers = "/tmp/graft_q163/tiers"
-      graft.snapshot.SnapshotStore.deleteRecursively("/tmp/graft_q163")
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      import s.implicits._
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "events")
-        .select("event_id", "user_id", "ts", "event_type")
-        .as[(Long, Long, java.sql.Timestamp, String)]
-        .collect()
-        .toSeq
-      val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, java.sql.Timestamp, String)]
-      val q = ms.toDF().toDF("event_id", "user_id", "ts", "event_type")
-        .writeStream
-        .option("checkpointLocation", s"/tmp/graft_q163/chk_${System.nanoTime()}")
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          graft.streaming.SnapshotSink.appendBatch(root, b, id, tsCol = Some("ts")).foreach { _ =>
-            graft.snapshot.ContinuousRollup.update(s, root, tiers, Seq("event_type"), "ts", lit(0L))
-          }
-          ()
-        }
-        .start()
-      val third = rows.size / 3
-      rows.grouped(third.max(1)).foreach { chunk => ms.addData(chunk); q.processAllAvailable() }
-      q.stop()
-      // crash-retry re-delivery of the last batch: the sink swallows
-      // it, so no tier update runs and the cascade stays consistent
-      val hwm = graft.snapshot.SnapshotStore.lastStreamBatchId(root)
-      graft.streaming.SnapshotSink.appendBatch(
-        root,
-        t(s, dir, "events")
-          .select(col("event_id"), col("user_id"), col("ts").cast("timestamp").as("ts"), col("event_type")),
-        hwm, tsCol = Some("ts"))
-      graft.snapshot.ContinuousRollup
-        .readTier(s, tiers, "1h")
-        .select(col("event_type"), col("bucket_ts"), col("point_count"))
-    }),
-
-    // ---- STREAMING native session windows (the stateful window type
-    //      q83 pins in batch): watermarked session_window aggregation
-    //      in append mode — a session emits exactly once, when the
-    //      watermark passes its end; two far-future sentinel rounds
-    //      advance the watermark past every real session (a bounded
-    //      stream otherwise never finalizes its tail), and the
-    //      sentinel's own session filters out by key. Must equal the
-    //      batch session build (q83's oracle). ----
-    "q161_stream_session_window" -> ((s0, dir) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      import s.implicits._
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "events")
-        .select("user_id", "ts")
-        .as[(Long, java.sql.Timestamp)]
-        .collect()
-        .toSeq
-      val maxTs = rows.map(_._2.getTime).max
-      def sentinel(days: Long) = (-1L, new java.sql.Timestamp(maxTs + days * 24L * 3600L * 1000L))
-      val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, java.sql.Timestamp)]
-      val agg = ms.toDF()
-        .toDF("user_id", "ts")
-        .withWatermark("ts", "1 hour")
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(
-          col("user_id"),
-          col("sw.start").as("session_start"),
-          col("sw.end").as("session_end"),
-          col("n_events"))
-      val sink = s"q161_sink_${System.nanoTime()}"
-      val q = agg.writeStream.format("memory").queryName(sink).outputMode("append").start()
-      ms.addData(rows); q.processAllAvailable()
-      ms.addData(Seq(sentinel(10))); q.processAllAvailable()
-      ms.addData(Seq(sentinel(11))); q.processAllAvailable()
-      val out = s.table(sink)
-        .filter(col("user_id") >= 0)
-        .select("user_id", "session_start", "session_end", "n_events")
-      q.stop()
-      out
     }),
 
     // ---- one-pass column profiling (ingestion QA / optimizer stats):
@@ -2076,51 +1707,6 @@ object SparkEntry {
         // resolveDirs lists day-level dirs: three appends each carry
         // the full day set, the compacted base carries it once
         .withColumn("files_reduced", lit(dirsAfter < dirsBefore))
-    }),
-
-    // ---- Structured Streaming block builder: the bounded memory
-    //      stream flows through flatMapGroupsWithState; sealed blocks
-    //      decode back to per-(series, hour) point counts + exact value
-    //      sums that must equal the plain SQL hourly aggregate.
-    //      Sentinel batches only advance the watermark (their own
-    //      open blocks are filtered, never emitted) ----
-    "q58_streaming_blocks" -> ((s, dir) => {
-      import s.implicits._
-      val pts = t(s, dir, "events")
-        .select(col("event_type").as("series"), col("ts"), col("value").cast("long").as("value"))
-        .as[graft.streaming.StreamPoint]
-        .collect()
-        .toSeq
-      val maxTs = pts.map(_.ts.getTime).max
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[graft.streaming.StreamPoint]
-      val sink = s"q58_sink_${System.nanoTime()}"
-      val q = graft.streaming.StreamingRollup
-        .streamingBlocks(ms.toDS(), watermark = "10 minutes")
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .start()
-      ms.addData(pts)
-      q.processAllAvailable()
-      // two watermark-advancing sentinel batches: the first moves the
-      // watermark past every real hour, the second fires the timeouts
-      // computed from it
-      (1 to 2).foreach { i =>
-        ms.addData(
-          graft.streaming.StreamPoint("__sentinel__", new java.sql.Timestamp(maxTs + i * 7200000L), 0L)
-        )
-        q.processAllAvailable()
-      }
-      val blocks = s.table(sink).filter(col("series") =!= "__sentinel__")
-      q.stop()
-      blocks
-        .withColumn("__ts", BlockOps.decodeTs(col("ts_block")))
-        .withColumn("__vs", BlockOps.decodeVals(col("val_block")))
-        .withColumn("__pt", explode(arrays_zip(col("__ts"), col("__vs"))))
-        .groupBy(col("series").as("event_type"), col("hour_start").as("bucket_ts"))
-        .agg(count(lit(1)).as("n_points"), sum(col("__pt.__vs").cast("long")).as("value_sum"))
     }),
 
     // ---- cross-row entity/token corrector (the deterministic in-table
@@ -3163,14 +2749,6 @@ object SparkEntry {
                 n_after - n_before AS delta, abs(n_after - n_before) AS abs_delta
          FROM c
          ORDER BY abs_delta DESC, event_type ASC, user_id ASC LIMIT 20""",
-    // Streaming-tier replay: the watermark+window streaming aggregate
-    // over a bounded input must equal the batch hourly aggregate
-    // (value truncated toward zero to long on both sides, as q58).
-    "q124_streaming_tier" ->
-      """SELECT event_type, date_trunc('hour', ts) AS bucket_ts,
-                count(*) AS point_count,
-                CAST(sum(CAST(trunc(value) AS BIGINT)) AS BIGINT) AS byte_size
-         FROM events GROUP BY 1, 2""",
     // Variance replay: identical exact decimal co-moments, identical
     // float epilogue expression.
     "q125_bucket_variance" ->
@@ -3329,21 +2907,6 @@ object SparkEntry {
     // append's rows.
     "q138_incremental_read" ->
       "SELECT event_id, user_id, ts, event_type FROM events WHERE event_id % 2 = 1",
-    // Stream-stream join replay: on bounded input the watermarked
-    // streaming inner join equals the batch range join — exact ids and
-    // timestamps, horizon arithmetic in exact micros on both engines.
-    "q139_stream_stream_join" ->
-      """SELECT b.event_id AS purchase_id, v.event_id AS view_id, v.user_id,
-                b.ts AS purchase_ts, v.ts AS view_ts
-         FROM events v JOIN events b
-           ON v.user_id = b.user_id
-          AND b.ts >= v.ts AND b.ts <= v.ts + INTERVAL 1 HOUR
-         WHERE v.event_type = 'view' AND b.event_type = 'purchase'""",
-    // Streaming dedup replay: duplicates are byte-identical
-    // re-deliveries, so watermarked dedup on the key equals batch
-    // DISTINCT over the original stream.
-    "q140_stream_dedup" ->
-      "SELECT event_id, ts, user_id, event_type FROM events",
     // Schema-evolution replay: snapshot 1's rows (even ids) predate the
     // added column and read back null; snapshot 2's carry it.
     "q141_schema_evolution" ->
@@ -3383,10 +2946,6 @@ object SparkEntry {
     "q149_rollback" ->
       """SELECT event_id, user_id, ts, event_type
          FROM events WHERE event_id % 3 <> 1""",
-    // Streaming-sink replay: exactly-once means the table holds each
-    // event ONCE despite the deliberate re-delivery of the last batch.
-    "q150_stream_snapshot_sink" ->
-      "SELECT event_id, user_id, ts, event_type FROM events",
     // As-of replay: the stamp of commit 1 resolves to snapshot 1 —
     // only the even-id half exists at that wall-clock instant.
     "q151_read_as_of" ->
@@ -3397,11 +2956,6 @@ object SparkEntry {
     "q152_data_skipping" ->
       """SELECT event_id, user_id, ts, event_type
          FROM events WHERE user_id BETWEEN 5 AND 9""",
-    // Stream-static replay: a stateless enrichment join equals the
-    // batch join against the same dimension snapshot.
-    "q153_stream_static_join" ->
-      """SELECT e.event_id, e.user_id, e.ts, e.event_type, n.n_name
-         FROM events e JOIN nation n ON e.user_id % 25 = n.n_nationkey""",
     // LTTB replay: identical integer coordinates (epoch seconds,
     // value micros), identical bucket-boundary anchors via lag/lead
     // over per-bucket ordered first/last, identical doubled-area
@@ -3442,19 +2996,6 @@ object SparkEntry {
          SELECT 'v1' AS ref, event_id, user_id, ts, event_type FROM events WHERE event_id % 3 = 0
          UNION ALL
          SELECT 'dev' AS ref, event_id, user_id, ts, event_type FROM events WHERE event_id % 3 IN (0, 2)""",
-    // Join-view replay: after both updates the materialized view IS
-    // the full inner join — every event paired with its user's dim row.
-    "q167_join_view" ->
-      """SELECT user_id, event_id, ts, event_type, user_id % 5 AS cohort FROM events""",
-    // Outer-join replay: on bounded input the watermarked left-outer
-    // stream-stream join equals the batch LEFT range join — matched
-    // pairs identical to q139, unmatched views with a null purchase.
-    "q169_stream_outer_join" ->
-      """SELECT v.event_id AS view_id, v.user_id, v.ts AS view_ts, b.event_id AS purchase_id
-         FROM events v LEFT JOIN events b
-           ON v.user_id = b.user_id AND b.event_type = 'purchase'
-          AND b.ts >= v.ts AND b.ts <= v.ts + INTERVAL 1 HOUR
-         WHERE v.event_type = 'view'""",
     // Replica-diff replay: identical portable 60-bit md5-prefix row
     // hashes, identical order-free XOR day digests on both replicas,
     // identical full-outer status casing.
@@ -3574,27 +3115,6 @@ object SparkEntry {
          SELECT from_state, to_state, n,
                 CAST(n AS DOUBLE) / CAST(sum(n) OVER (PARTITION BY from_state) AS DOUBLE) AS prob
          FROM c""",
-    // Lakehouse-loop replay: exactly-once ingest + incremental tier
-    // maintenance must equal the one-shot batch rollup.
-    "q163_stream_lakehouse" ->
-      """SELECT event_type, date_trunc('hour', ts) AS bucket_ts, count(*) AS point_count
-         FROM events GROUP BY 1, 2""",
-    // Streaming session replay: on bounded input the watermarked
-    // streaming session aggregation equals the batch session build —
-    // q83's replay verbatim (sentinels filtered by key on the engine
-    // side never reach the output).
-    "q161_stream_session_window" ->
-      """WITH o AS (SELECT user_id, ts,
-             CASE WHEN lag(ts) OVER w IS NULL
-                    OR epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000
-                  THEN 1 ELSE 0 END AS ns
-           FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-         x AS (SELECT *, CAST(sum(ns) OVER (PARTITION BY user_id ORDER BY ts
-                                            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sidx FROM o)
-         SELECT user_id, min(ts) AS session_start,
-                max(ts) + INTERVAL 30 MINUTE AS session_end,
-                count(*) AS n_events
-         FROM x GROUP BY user_id, sidx""",
     // Profile replay: per column, the same counts and LEXICOGRAPHIC
     // string-cast extrema (the operator's documented contract).
     "q157_profile" ->
@@ -3750,12 +3270,6 @@ object SparkEntry {
     "q57_compaction" ->
       """SELECT event_type, date_trunc('day', ts) AS bucket_ts,
                 count(*) AS point_count, TRUE AS files_reduced
-         FROM events GROUP BY 1, 2""",
-    // Hourly aggregate of the same points the stream consumed; the
-    // engine decoded its sealed Gorilla/delta blocks back to points.
-    "q58_streaming_blocks" ->
-      """SELECT event_type, date_trunc('hour', ts) AS bucket_ts,
-                count(*) AS n_points, CAST(sum(CAST(trunc(value) AS BIGINT)) AS BIGINT) AS value_sum
          FROM events GROUP BY 1, 2""",
     // The identical entity/token-corrector algorithm in SQL: trusted
     // cells -> row tokens (len >= 2, df in [2, n/2]) -> (token, col,

@@ -1,6 +1,6 @@
 package graft.correct
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** A detected error cell: the universal address of the reference's

@@ -1,7 +1,7 @@
 package graft.rollup
 
 import graft.core.{DeltaCodec, GorillaCodec}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Compressed columnar block structs for rollup rows (north rule):

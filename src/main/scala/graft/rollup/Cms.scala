@@ -1,6 +1,6 @@
 package graft.rollup
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder}
+import org.apache.spark.sql.{Column, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._

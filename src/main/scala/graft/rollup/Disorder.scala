@@ -5,10 +5,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Stream-disorder audit: how out-of-order do events ARRIVE relative
-  * to event time? This is the measurement that SIZES a watermark — the
-  * streaming tier's `withWatermark` horizon (q58/q124) and the batch
-  * snapshot's late-data re-touch window are both policies over exactly
-  * this distribution.
+  * to event time? This is the measurement that SIZES a watermark — a
+  * streaming `withWatermark` horizon and the batch snapshot's
+  * late-data re-touch window are both policies over exactly this
+  * distribution.
   *
   * An event is out-of-order when its event time is behind the maximum
   * event time already arrived on its key (arrival order = the caller's

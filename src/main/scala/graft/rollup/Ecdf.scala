@@ -28,7 +28,6 @@ object Ecdf {
       valueCol: String
   ): DataFrame = {
     val byGroup = Window.partitionBy(col(groupCol))
-    val ordered = byGroup.orderBy(col(valueCol))
     // max rank among ties = count of rows with value <= this one:
     // rank() gives the MIN rank of the tie run; cume_dist would be a
     // float — instead count rows via a RANGE frame up to current value

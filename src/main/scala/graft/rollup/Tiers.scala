@@ -53,15 +53,6 @@ object Tiers {
     case _    => None
   }
 
-  /** Window duration string for `functions.window` (streaming tier). */
-  def duration(tier: String): String = tier match {
-    case "1m"  => "1 minute"
-    case "1h"  => "1 hour"
-    case "1d"  => "1 day"
-    case "30d" => "30 days"
-    case other => throw new IllegalArgumentException(s"unknown tier $other")
-  }
-
   /** Tiers usable as a re-rollup TARGET (bucket() works), a superset of
     * the retention cascade `All`.
     */

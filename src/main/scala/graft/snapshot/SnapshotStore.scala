@@ -113,7 +113,6 @@ object SnapshotStore {
       root: String,
       df: DataFrame,
       tsCol: Option[String] = None,
-      streamBatchId: Option[Long] = None,
       statsCols: Seq[String] = Nil
   ): Long = {
     val parent = currentSnapshotId(root)
@@ -162,7 +161,6 @@ object SnapshotStore {
     // a mergeSchema footer scan of every file at 100 TB
     m.put("schemaJson", df.schema.json)
     m.put("commitMillis", System.currentTimeMillis())
-    streamBatchId.foreach(b => m.put("streamBatchId", b))
     if (statsCols.nonEmpty) {
       val st: ObjectNode = m.putObject("stats")
       statsCols.foreach { c =>
@@ -188,15 +186,6 @@ object SnapshotStore {
   /** Commit wall-clock of snapshot `id` (absent on legacy manifests). */
   def commitMillis(root: String, id: Long): Option[Long] =
     Option(manifest(root, id).get("commitMillis")).map(_.asLong())
-
-  /** Highest streaming batch id committed into this table, -1 when
-    * none — the exactly-once marker `streaming.SnapshotSink` keys on.
-    */
-  def lastStreamBatchId(root: String): Long =
-    snapshotIds(root)
-      .flatMap(id => Option(manifest(root, id).get("streamBatchId")).map(_.asLong()))
-      .maxOption
-      .getOrElse(-1L)
 
   /** AS-OF-TIMESTAMP time travel (the Iceberg `as-of-timestamp` read):
     * the newest snapshot committed at or before `millis`, 0 when the

@@ -100,8 +100,8 @@ class PlanSpec extends SparkSpec {
     // side collects: every plan executed while they build is checked too
     val checkedWhileBuilding = Set("q44_baran_sample", "q53_detection_mask", "q54_label_noise")
     // queries whose construction executes heavy work (snapshot updates,
-    // streaming queries, writes) are audited by their own specs — the
-    // sweep covers the rest cheaply
+    // writes) are audited by their own specs — the sweep covers the
+    // rest cheaply
     val skip = Set(
       "q25_pages_pipeline", "q37_continuous_rollup",
       // construction runs the lifecycle or a meta-learner; plans it
@@ -109,17 +109,10 @@ class PlanSpec extends SparkSpec {
       // shape) and the full-outer label overlay (q32's shape)
       "q45_meta_learner", "q48_cleaning", "q52_cleaning_synth", "q62_meta_learner_cv",
       "q182_meta_learner_cv_precision",
-      // construction runs a CSV write / snapshot update + compaction /
-      // a full streaming query — audited by their own oracles + specs
-      "q56_csv_roundtrip", "q57_compaction", "q58_streaming_blocks",
+      // construction runs a CSV write / snapshot update + compaction
+      // — audited by their own oracles + specs
+      "q56_csv_roundtrip", "q57_compaction",
       "q61_experiment_grid",
-      // construction runs a full streaming query (watermark+window
-      // path) — audited by its oracle + StreamingRollupSpec
-      "q124_streaming_tier",
-      // construction runs full streaming queries (stream-stream join /
-      // watermarked dedup / outer stream-stream join) — audited by
-      // their oracles
-      "q139_stream_stream_join", "q140_stream_dedup", "q169_stream_outer_join",
       // construction writes a snapshot store twice (q57-style side
       // effects) — audited by their oracles + SnapshotSpec
       "q137_time_travel", "q138_incremental_read", "q141_schema_evolution", "q144_row_deletes",
@@ -128,8 +121,7 @@ class PlanSpec extends SparkSpec {
       // construction writes/vacuums/stages/rolls back a snapshot store
       "q147_vacuum", "q148_wap_publish", "q149_rollback",
       // construction forks/tags/appends snapshot stores (q166, q175)
-      // and runs two incremental join-view updates (q167)
-      "q166_branch_refs", "q167_join_view", "q175_branch_diff",
+      "q166_branch_refs", "q175_branch_diff",
       // construction appends data + delete snapshots (q177)
       "q177_changelog"
     )

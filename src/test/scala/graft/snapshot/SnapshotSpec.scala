@@ -516,4 +516,75 @@ class SnapshotSpec extends SparkSpec {
       assert(got.exceptAll(rows(inferred)).isEmpty && rows(inferred).exceptAll(got).isEmpty, s"tier $t rows")
     }
   }
+
+  test("as-of-timestamp reads resolve to the newest snapshot at or before the stamp") {
+    val root = tmpDir("asof") + "/tbl"
+    val evens = events.filter(pmod(col("event_id"), lit(2)) === 0)
+    val odds = events.filter(pmod(col("event_id"), lit(2)) === 1)
+    val before = System.currentTimeMillis() - 1
+    SnapshotStore.append(root, evens, tsCol = Some("ts"))
+    val t1 = SnapshotStore.commitMillis(root, 1L).get
+    // guarantee commit2 lands on a LATER millisecond than commit1
+    while (System.currentTimeMillis() <= t1) Thread.sleep(1)
+    SnapshotStore.append(root, odds, tsCol = Some("ts"))
+    val t2 = SnapshotStore.commitMillis(root, 2L).get
+    assert(t2 > t1)
+
+    assert(SnapshotStore.snapshotAsOf(root, before) == 0L, "predates the table")
+    assert(SnapshotStore.snapshotAsOf(root, t1) == 1L)
+    assert(SnapshotStore.snapshotAsOf(root, t2 - 1) == 1L)
+    assert(SnapshotStore.snapshotAsOf(root, t2) == 2L)
+    assert(SnapshotStore.snapshotAsOf(root, System.currentTimeMillis()) == 2L)
+
+    assert(SnapshotStore.readAsOf(spark, root, t1).count() == evens.count())
+    assert(SnapshotStore.readAsOf(spark, root, t2).count() == events.count())
+  }
+
+  test("compaction keeps the rebase point's commit stamp so as-of reads at it still resolve") {
+    val root = tmpDir("asofcomp") + "/tbl"
+    SnapshotStore.append(root, events.limit(50), tsCol = Some("ts"))
+    val t1 = SnapshotStore.commitMillis(root, 1L).get
+    while (System.currentTimeMillis() <= t1) Thread.sleep(1)
+    SnapshotStore.append(root, events.limit(80).except(events.limit(50)), tsCol = Some("ts"))
+    val t2 = SnapshotStore.commitMillis(root, 2L).get
+    val n = SnapshotStore.read(spark, root).count()
+    SnapshotStore.compact(spark, root, upTo = 2L)
+    assert(SnapshotStore.commitMillis(root, 2L).contains(t2))
+    assert(SnapshotStore.snapshotAsOf(root, t2) == 2L)
+    assert(SnapshotStore.readAsOf(spark, root, t2).count() == n)
+  }
+
+  test("a manifest still carrying an old streamBatchId field reads, appends, compacts and updates as one without it") {
+    def same(a: DataFrame, b: DataFrame): Boolean = a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    val halves = Seq(0, 1).map(i => events.filter(col("event_id") % 2 === i))
+    val extra = events.filter(col("event_id") % 3 === 0).withColumn("event_id", col("event_id") + 1000000)
+    val roots @ Seq(legacy, plain) = Seq("snap_legacy", "snap_plain").map(tmpDir)
+    val tiers = roots.map(r => s"$r-tiers")
+    roots.foreach(r => SnapshotStore.append(r, halves(0), tsCol = Some("ts")))
+    // earlier builds wrote a per-batch stream id into the manifest JSON
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val v1 = Paths.get(legacy, "_snapshots", "v1.json")
+    val m = mapper.readTree(Files.readAllBytes(v1)).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    m.put("streamBatchId", 7L)
+    Files.write(v1, mapper.writeValueAsBytes(m))
+    assert(SnapshotStore.manifest(legacy, 1L).get("streamBatchId").asLong() == 7L)
+
+    def update(): Unit = roots.zip(tiers).foreach { case (r, t) =>
+      ContinuousRollup.update(spark, r, t, Seq("event_type"), "ts", lit(1L))
+    }
+    def sameTiers(): Unit = for (t <- Seq("1m", "1h", "1d", "30d"))
+      assert(same(ContinuousRollup.readTier(spark, tiers(0), t), ContinuousRollup.readTier(spark, tiers(1), t)), s"tier $t")
+
+    assert(same(SnapshotStore.read(spark, legacy), SnapshotStore.read(spark, plain)))
+    roots.foreach(r => SnapshotStore.append(r, halves(1), tsCol = Some("ts")))
+    assert(same(SnapshotStore.read(spark, legacy), SnapshotStore.read(spark, plain)))
+    update()
+    sameTiers()
+    roots.zip(tiers).foreach { case (r, t) => SnapshotStore.compact(spark, r, upTo = 2L, consumerTiersRoots = Seq(t)) }
+    assert(same(SnapshotStore.read(spark, legacy), SnapshotStore.read(spark, plain)))
+    roots.foreach(r => SnapshotStore.append(r, extra, tsCol = Some("ts")))
+    update()
+    sameTiers()
+    assert(same(ContinuousRollup.readTier(spark, tiers(0), "1h"), fullTier(events.unionByName(extra), "1h")))
+  }
 }
