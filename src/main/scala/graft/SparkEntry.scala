@@ -286,23 +286,6 @@ object SparkEntry {
         .histogramQuantile(t(s, dir, "events"), "event_type", "value", width = 50.0, q = 0.95)
     }),
 
-    // ---- latest-wins CDC merge (upsert + tombstone): per key ONE
-    //      struct-max partial aggregate — never a full-history window
-    //      sort, never a base-vs-changes join ----
-    "q92_upsert_merge" -> ((s, dir) => {
-      val ev = t(s, dir, "events").select(
-        col("user_id"),
-        col("ts"),
-        col("event_id"),
-        col("value"),
-        lit(false).as("is_delete"))
-      val changes = ev
-        .filter(pmod(col("event_id"), lit(5)) === 0)
-        .withColumn("value", col("value") + 1000.0)
-        .withColumn("is_delete", pmod(col("event_id"), lit(25)) === 0)
-      graft.snapshot.Upsert.merge(ev, changes, Seq("user_id"), Seq("ts", "event_id"), "is_delete")
-    }),
-
     // ---- pairwise audience overlap per day: exact distinct
     //      intersection + Jaccard between segments — distinct first
     //      (collapses repeat activity), member-keyed self-join carries
@@ -757,85 +740,6 @@ object SparkEntry {
         .withColumn("orphans_removed", lit(removed.size.toLong))
     }),
 
-    // ---- write-audit-publish branch: staged snapshots are invisible
-    //      to main, the audit view is main ∪ staged (the same committed
-    //      bytes that will become visible), publish promotes them onto
-    //      main in stage order via the id CAS ----
-    "q148_wap_publish" -> ((s, dir) => {
-      val root = "/tmp/graft_q148/src"
-      graft.snapshot.SnapshotStore.deleteRecursively("/tmp/graft_q148")
-      val ev = t(s, dir, "events").select("event_id", "user_id", "ts", "event_type")
-      graft.snapshot.SnapshotStore.append(root, ev.filter(pmod(col("event_id"), lit(3)) === 0), tsCol = Some("ts"))
-      graft.snapshot.Wap.stage(root, ev.filter(pmod(col("event_id"), lit(3)) === 1), "ingest", tsCol = Some("ts"))
-      graft.snapshot.Wap.stage(root, ev.filter(pmod(col("event_id"), lit(3)) === 2), "ingest", tsCol = Some("ts"))
-      def agg(df: DataFrame, phase: String): DataFrame =
-        df.groupBy("event_type")
-          .agg(count(lit(1)).as("n_events"), sum("event_id").as("id_sum"))
-          .withColumn("phase", lit(phase))
-      // materialize the pre-publish views NOW (publish MOVES the staged
-      // files — a lazy plan evaluated afterwards would read thin air)
-      val before = agg(graft.snapshot.SnapshotStore.read(s, root), "main_before")
-        .unionByName(agg(graft.snapshot.Wap.auditRead(s, root, "ingest"), "audit"))
-        .localCheckpoint(true)
-      graft.snapshot.Wap.publish(root, "ingest")
-      before.unionByName(agg(graft.snapshot.SnapshotStore.read(s, root), "published"))
-    }),
-
-    // ---- snapshot rollback: a bad ingest un-publishes (manifests +
-    //      data park in an audit bin, CURRENT drops), the freed ids are
-    //      reusable for the corrected re-ingest — two directory renames
-    //      per snapshot, zero rows read ----
-    "q149_rollback" -> ((s, dir) => {
-      val root = "/tmp/graft_q149/src"
-      graft.snapshot.SnapshotStore.deleteRecursively("/tmp/graft_q149")
-      val ev = t(s, dir, "events").select("event_id", "user_id", "ts", "event_type")
-      graft.snapshot.SnapshotStore.append(root, ev.filter(pmod(col("event_id"), lit(3)) === 0), tsCol = Some("ts"))
-      graft.snapshot.SnapshotStore.append(root, ev.filter(pmod(col("event_id"), lit(3)) === 1), tsCol = Some("ts"))
-      graft.snapshot.SnapshotStore.append(root, ev.filter(pmod(col("event_id"), lit(3)) === 2), tsCol = Some("ts"))
-      // snapshots 2 and 3 were a bad ingest: roll back, re-ingest the good part
-      graft.snapshot.SnapshotStore.rollback(root, 1L)
-      graft.snapshot.SnapshotStore.append(root, ev.filter(pmod(col("event_id"), lit(3)) === 2), tsCol = Some("ts"))
-      graft.snapshot.SnapshotStore.read(s, root).select("event_id", "user_id", "ts", "event_type")
-    }),
-
-    // ---- as-of-timestamp time travel (the Iceberg as-of-timestamp
-    //      read): resolve a wall-clock stamp to the newest snapshot
-    //      committed at or before it — manifest metadata only, zero
-    //      data files touched by the resolution ----
-    "q151_read_as_of" -> ((s, dir) => {
-      val root = "/tmp/graft_q151/src"
-      graft.snapshot.SnapshotStore.deleteRecursively("/tmp/graft_q151")
-      val ev = t(s, dir, "events").select("event_id", "user_id", "ts", "event_type")
-      graft.snapshot.SnapshotStore.append(root, ev.filter(pmod(col("event_id"), lit(2)) === 0), tsCol = Some("ts"))
-      val t1 = graft.snapshot.SnapshotStore.commitMillis(root, 1L).get
-      // commit 2 must land on a LATER millisecond, or the stamp t1
-      // would (correctly) resolve to it
-      while (System.currentTimeMillis() <= t1) Thread.sleep(1)
-      graft.snapshot.SnapshotStore.append(root, ev.filter(pmod(col("event_id"), lit(2)) === 1), tsCol = Some("ts"))
-      graft.snapshot.SnapshotStore.readAsOf(s, root, t1)
-        .select("event_id", "user_id", "ts", "event_type")
-    }),
-
-    // ---- manifest-stats data skipping (Iceberg min/max pruning at
-    //      snapshot granularity): appends clustered by user_id record
-    //      per-snapshot min/max riding the write's observe; readWhere
-    //      opens ONLY snapshots whose range can intersect the
-    //      predicate (DataSkipSpec pins the inputFiles proof), the
-    //      residual filter prunes rows on the survivors ----
-    "q152_data_skipping" -> ((s, dir) => {
-      val root = "/tmp/graft_q152/src"
-      graft.snapshot.SnapshotStore.deleteRecursively("/tmp/graft_q152")
-      val ev = t(s, dir, "events").select("event_id", "user_id", "ts", "event_type")
-      graft.snapshot.SnapshotStore.append(
-        root, ev.filter(col("user_id") < 5), tsCol = Some("ts"), statsCols = Seq("user_id"))
-      graft.snapshot.SnapshotStore.append(
-        root, ev.filter(col("user_id") >= 5 && col("user_id") < 10), tsCol = Some("ts"), statsCols = Seq("user_id"))
-      graft.snapshot.SnapshotStore.append(
-        root, ev.filter(col("user_id") >= 10), tsCol = Some("ts"), statsCols = Seq("user_id"))
-      graft.snapshot.SnapshotStore.readWhere(s, root, "user_id", 5, 9)
-        .select("event_id", "user_id", "ts", "event_type")
-    }),
-
     // ---- LTTB visual downsample (fixed-anchor parallel variant):
     //      ONE representative point per (series, hour) — the point
     //      forming the largest triangle against the previous bucket's
@@ -845,42 +749,6 @@ object SparkEntry {
       graft.rollup.Downsample
         .lttb(t(s, dir, "events"), Seq("event_type"), "ts", "value", "1h", "event_id")
         .select("event_type", "bucket_ts", "sel_ts", "event_id", "sel_v", "area2", "n_points")
-    }),
-
-    // ---- named refs (Iceberg tags + branches): tag v1 pins snapshot
-    //      1 forever; branch dev forks there METADATA-ONLY (no data
-    //      bytes copied) and takes an append main never sees; main
-    //      advances independently. One output, three reads: main
-    //      (r0+r1), the v1 tag (r0), the dev branch (r0+r2) ----
-    "q166_branch_refs" -> ((s, dir) => {
-      val base = "/tmp/graft_q166"
-      graft.snapshot.SnapshotStore.deleteRecursively(base)
-      val root = s"$base/src"
-      val ev = t(s, dir, "events").select("event_id", "user_id", "ts", "event_type")
-      graft.snapshot.SnapshotStore.append(root, ev.filter(pmod(col("event_id"), lit(3)) === 0), tsCol = Some("ts"))
-      graft.snapshot.Refs.tag(root, "v1", 1L)
-      val dev = graft.snapshot.Refs.branch(root, "dev", 1L)
-      graft.snapshot.SnapshotStore.append(dev, ev.filter(pmod(col("event_id"), lit(3)) === 2), tsCol = Some("ts"))
-      graft.snapshot.SnapshotStore.append(root, ev.filter(pmod(col("event_id"), lit(3)) === 1), tsCol = Some("ts"))
-      val m = graft.snapshot.SnapshotStore.read(s, root).withColumn("ref", lit("main"))
-      val v1 = graft.snapshot.Refs.readTag(s, root, "v1").withColumn("ref", lit("v1"))
-      val d = graft.snapshot.SnapshotStore.read(s, dev).withColumn("ref", lit("dev"))
-      m.unionByName(v1).unionByName(d).select("ref", "event_id", "user_id", "ts", "event_type")
-    }),
-
-    // ---- merkle-style replica reconciliation: two copies of the
-    //      events table compare per-DAY order-free XOR digests — only
-    //      (day, digest, count) rows cross the wire, and the audit
-    //      names the diverged day (dropped rows) and the missing day
-    //      without shipping data ----
-    "q170_replica_diff" -> ((s, dir) => {
-      val a = t(s, dir, "events").withColumn("day", date_trunc("day", col("ts")))
-      val b = a
-        .filter(!(pmod(col("event_id"), lit(997)) === 5))
-        .filter(col("day") =!= to_timestamp(lit("2024-01-30")))
-      graft.snapshot.ReplicaDiff
-        .diff(a, b, Seq("day"), Seq("event_id", "user_id", "event_type"))
-        .select("day", "digest_a", "n_a", "digest_b", "n_b", "status")
     }),
 
     // ---- lagged cross-correlation: does series B LEAD series A?
@@ -898,54 +766,6 @@ object SparkEntry {
     //      tiers); estimate (k-1)·2^60/θ, exact below k ----
     "q173_kmv_distinct" -> ((s, dir) => {
       graft.rollup.Kmv.distinctEstimate(t(s, dir, "events"), Seq("event_type"), "user_id", k = 64)
-    }),
-
-    // ---- branch-vs-main audit: what did the dev branch change,
-    //      per day, WITHOUT reading data — Refs (zero-copy fork) and
-    //      ReplicaDiff (order-free XOR digests) composed: the branch
-    //      appends odd rows for the first 15 days only, so those days
-    //      read 'diverged' and the rest 'match' ----
-    "q175_branch_diff" -> ((s, dir) => {
-      val base = "/tmp/graft_q175"
-      graft.snapshot.SnapshotStore.deleteRecursively(base)
-      val root = s"$base/src"
-      val ev = t(s, dir, "events").select("event_id", "user_id", "ts", "event_type")
-      graft.snapshot.SnapshotStore.append(root, ev.filter(pmod(col("event_id"), lit(2)) === 0), tsCol = Some("ts"))
-      val dev = graft.snapshot.Refs.branch(root, "dev", 1L)
-      graft.snapshot.SnapshotStore.append(
-        dev,
-        ev.filter(pmod(col("event_id"), lit(2)) === 1)
-          .filter(date_trunc("day", col("ts")) < to_timestamp(lit("2024-01-16"))),
-        tsCol = Some("ts")
-      )
-      val m = graft.snapshot.SnapshotStore.read(s, root).withColumn("day", date_trunc("day", col("ts")))
-      val d = graft.snapshot.SnapshotStore.read(s, dev).withColumn("day", date_trunc("day", col("ts")))
-      graft.snapshot.ReplicaDiff
-        .diff(m, d, Seq("day"), Seq("event_id", "user_id", "event_type"))
-        .select("day", "digest_a", "n_a", "digest_b", "n_b", "status")
-    }),
-
-    // ---- change-data-feed (Iceberg changelog / Delta CDF): the
-    //      labeled row-level stream a downstream consumer tails —
-    //      inserts from data snapshots, delete tombstones (key-only,
-    //      q144's merge-on-read) from delete snapshots, each tagged
-    //      with its snapshot id so replay reconstructs the table ----
-    "q177_changelog" -> ((s, dir) => {
-      val root = "/tmp/graft_q177/src"
-      graft.snapshot.SnapshotStore.deleteRecursively("/tmp/graft_q177")
-      val ev = t(s, dir, "events").select("event_id", "user_id", "event_type")
-      graft.snapshot.SnapshotStore.append(root, ev.filter(pmod(col("event_id"), lit(2)) === 0))
-      graft.snapshot.SnapshotStore.appendDeletes(root, ev.filter(pmod(col("event_id"), lit(4)) === 0).select("event_id"))
-      graft.snapshot.SnapshotStore.append(root, ev.filter(pmod(col("event_id"), lit(2)) === 1))
-      graft.snapshot.Changelog
-        .changes(s, root, 0L, 3L)
-        .select(
-          col("_snapshot_id").as("snapshot_id"),
-          col("_change_type").as("change_type"),
-          col("event_id"),
-          col("user_id"),
-          col("event_type")
-        )
     }),
 
     // ---- behavioral transition matrix: first-order Markov counts of
@@ -981,23 +801,6 @@ object SparkEntry {
       graft.operators.Profile.profile(
         t(s, dir, "events"),
         Seq("event_id", "user_id", "event_type"))
-    }),
-
-    // ---- merge-on-read row deletes (Iceberg v2 equality deletes):
-    //      a GDPR-style key purge appends DELETE KEYS as a snapshot —
-    //      no data file rewritten; the read anti-joins with snapshot
-    //      ordering, so a LATER re-insert of a deleted key survives ----
-    "q144_row_deletes" -> ((s, dir) => {
-      val root = "/tmp/graft_q144/src"
-      graft.snapshot.SnapshotStore.deleteRecursively("/tmp/graft_q144")
-      val ev = t(s, dir, "events").select("event_id", "user_id", "ts", "event_type")
-      graft.snapshot.SnapshotStore.append(root, ev.filter(pmod(col("event_id"), lit(2)) === 0), tsCol = Some("ts"))
-      graft.snapshot.SnapshotStore.append(root, ev.filter(pmod(col("event_id"), lit(2)) === 1), tsCol = Some("ts"))
-      graft.snapshot.SnapshotStore
-        .appendDeletes(root, ev.filter(pmod(col("event_id"), lit(10)) === 3).select("event_id"))
-      graft.snapshot.SnapshotStore
-        .append(root, ev.filter(pmod(col("event_id"), lit(20)) === 3), tsCol = Some("ts"))
-      graft.snapshot.SnapshotStore.read(s, root).select("event_id", "user_id", "ts", "event_type")
     }),
 
     // ---- tier router: the QUERY side of the cascade — a (range,
@@ -2452,18 +2255,6 @@ object SparkEntry {
          SELECT series, total_n, bin,
                 bin_lo + 50e0 * (target - CAST(cum_n - n AS DOUBLE)) / CAST(n AS DOUBLE) AS quantile_est
          FROM p WHERE rn = 1""",
-    // Upsert replay: the engine's struct-max total order (versions...,
-    // source, payload) is row_number() = 1 under the same DESC keys;
-    // (ts, event_id, src) is unique here so payload never breaks ties.
-    "q92_upsert_merge" ->
-      """WITH b AS (SELECT user_id, ts, event_id, value, false AS is_delete, 0 AS src FROM events),
-         c AS (SELECT user_id, ts, event_id, value + 1000e0 AS value,
-                 (event_id % 25 = 0) AS is_delete, 1 AS src
-               FROM events WHERE event_id % 5 = 0),
-         u AS (SELECT * FROM b UNION ALL SELECT * FROM c),
-         r AS (SELECT *, row_number() OVER (PARTITION BY user_id
-                 ORDER BY ts DESC, event_id DESC, src DESC) AS rn FROM u)
-         SELECT user_id, ts, event_id, value FROM r WHERE rn = 1 AND NOT is_delete""",
     // Overlap replay: distinct member-segment rows, self-join, exact
     // counts; jaccard is one double division over exact integers.
     "q93_audience_overlap" ->
@@ -2929,33 +2720,6 @@ object SparkEntry {
                 count(DISTINCT user_id) AS n_users,
                 CAST(1 AS BIGINT) AS orphans_removed
          FROM events GROUP BY 1""",
-    // WAP replay: before publish main holds only the base third; the
-    // audit view and the published table both hold everything.
-    "q148_wap_publish" ->
-      """SELECT event_type, count(*) AS n_events,
-                CAST(sum(event_id) AS BIGINT) AS id_sum, 'main_before' AS phase
-         FROM events WHERE event_id % 3 = 0 GROUP BY 1
-         UNION ALL
-         SELECT event_type, count(*), CAST(sum(event_id) AS BIGINT), 'audit'
-         FROM events GROUP BY 1
-         UNION ALL
-         SELECT event_type, count(*), CAST(sum(event_id) AS BIGINT), 'published'
-         FROM events GROUP BY 1""",
-    // Rollback replay: thirds 0 and 2 survive (the bad third-1 ingest
-    // was rolled back, the good third re-ingested at the freed id).
-    "q149_rollback" ->
-      """SELECT event_id, user_id, ts, event_type
-         FROM events WHERE event_id % 3 <> 1""",
-    // As-of replay: the stamp of commit 1 resolves to snapshot 1 —
-    // only the even-id half exists at that wall-clock instant.
-    "q151_read_as_of" ->
-      """SELECT event_id, user_id, ts, event_type
-         FROM events WHERE event_id % 2 = 0""",
-    // Data-skipping replay: pruning chooses FILES, the predicate
-    // chooses ROWS — the result is the plain range filter.
-    "q152_data_skipping" ->
-      """SELECT event_id, user_id, ts, event_type
-         FROM events WHERE user_id BETWEEN 5 AND 9""",
     // LTTB replay: identical integer coordinates (epoch seconds,
     // value micros), identical bucket-boundary anchors via lag/lead
     // over per-bucket ordered first/last, identical doubled-area
@@ -2988,38 +2752,6 @@ object SparkEntry {
          SELECT event_type, bucket_ts, ts AS sel_ts, event_id, value AS sel_v, area2,
                 CAST(n_points AS BIGINT) AS n_points
          FROM r WHERE rn = 1""",
-    // Refs replay: main = snapshots 1+2 (r0+r1), tag v1 = snapshot 1
-    // (r0), dev branch = fork at 1 plus its own append (r0+r2).
-    "q166_branch_refs" ->
-      """SELECT 'main' AS ref, event_id, user_id, ts, event_type FROM events WHERE event_id % 3 IN (0, 1)
-         UNION ALL
-         SELECT 'v1' AS ref, event_id, user_id, ts, event_type FROM events WHERE event_id % 3 = 0
-         UNION ALL
-         SELECT 'dev' AS ref, event_id, user_id, ts, event_type FROM events WHERE event_id % 3 IN (0, 2)""",
-    // Replica-diff replay: identical portable 60-bit md5-prefix row
-    // hashes, identical order-free XOR day digests on both replicas,
-    // identical full-outer status casing.
-    "q170_replica_diff" ->
-      """WITH a AS (SELECT date_trunc('day', ts) AS day,
-                bit_xor(CAST(('0x' || substr(md5(
-                  CAST(event_id AS VARCHAR) || chr(1) || CAST(user_id AS VARCHAR) || chr(1) || event_type
-                ), 1, 15)) AS BIGINT)) AS digest_a,
-                count(*) AS n_a
-              FROM events GROUP BY 1),
-         b AS (SELECT date_trunc('day', ts) AS day,
-                bit_xor(CAST(('0x' || substr(md5(
-                  CAST(event_id AS VARCHAR) || chr(1) || CAST(user_id AS VARCHAR) || chr(1) || event_type
-                ), 1, 15)) AS BIGINT)) AS digest_b,
-                count(*) AS n_b
-              FROM events
-              WHERE NOT event_id % 997 = 5 AND date_trunc('day', ts) <> TIMESTAMP '2024-01-30 00:00:00'
-              GROUP BY 1)
-         SELECT COALESCE(a.day, b.day) AS day, digest_a, n_a, digest_b, n_b,
-                CASE WHEN digest_a IS NULL THEN 'missing_in_a'
-                     WHEN digest_b IS NULL THEN 'missing_in_b'
-                     WHEN digest_a = digest_b AND n_a = n_b THEN 'match'
-                     ELSE 'diverged' END AS status
-         FROM a FULL OUTER JOIN b ON a.day = b.day""",
     // Lagged-correlation replay: q86's exact co-moment contract with
     // the epoch-second lag alignment and the lag in the group key.
     "q171_lag_correlation" ->
@@ -3055,43 +2787,6 @@ object SparkEntry {
                 CASE WHEN count(*) < 64 THEN CAST(count(*) AS DOUBLE)
                      ELSE 63e0 * 1152921504606846976e0 / CAST(max(h) AS DOUBLE) END AS est_distinct
          FROM r WHERE rk <= 64 GROUP BY 1""",
-    // Branch-diff replay: main = even rows; dev = even rows plus odd
-    // rows of the first 15 days; identical digests and status casing.
-    "q175_branch_diff" ->
-      """WITH base AS (SELECT *, date_trunc('day', ts) AS day FROM events),
-         a AS (SELECT day,
-                bit_xor(CAST(('0x' || substr(md5(
-                  CAST(event_id AS VARCHAR) || chr(1) || CAST(user_id AS VARCHAR) || chr(1) || event_type
-                ), 1, 15)) AS BIGINT)) AS digest_a,
-                count(*) AS n_a
-              FROM base WHERE event_id % 2 = 0 GROUP BY 1),
-         b AS (SELECT day,
-                bit_xor(CAST(('0x' || substr(md5(
-                  CAST(event_id AS VARCHAR) || chr(1) || CAST(user_id AS VARCHAR) || chr(1) || event_type
-                ), 1, 15)) AS BIGINT)) AS digest_b,
-                count(*) AS n_b
-              FROM base
-              WHERE event_id % 2 = 0 OR (event_id % 2 = 1 AND day < TIMESTAMP '2024-01-16 00:00:00')
-              GROUP BY 1)
-         SELECT COALESCE(a.day, b.day) AS day, digest_a, n_a, digest_b, n_b,
-                CASE WHEN digest_a IS NULL THEN 'missing_in_a'
-                     WHEN digest_b IS NULL THEN 'missing_in_b'
-                     WHEN digest_a = digest_b AND n_a = n_b THEN 'match'
-                     ELSE 'diverged' END AS status
-         FROM a FULL OUTER JOIN b ON a.day = b.day""",
-    // Changelog replay: snapshot 1 inserts evens, snapshot 2 deletes
-    // the %4 keys (key-only tombstones, nulls elsewhere), snapshot 3
-    // inserts odds.
-    "q177_changelog" ->
-      """SELECT CAST(1 AS BIGINT) AS snapshot_id, 'insert' AS change_type,
-                event_id, user_id, event_type
-         FROM events WHERE event_id % 2 = 0
-         UNION ALL
-         SELECT CAST(2 AS BIGINT), 'delete', event_id, CAST(NULL AS BIGINT), CAST(NULL AS VARCHAR)
-         FROM events WHERE event_id % 4 = 0
-         UNION ALL
-         SELECT CAST(3 AS BIGINT), 'insert', event_id, user_id, event_type
-         FROM events WHERE event_id % 2 = 1""",
     "q181_vicinity_order3" ->
       """WITH corrupted AS (SELECT c_custkey AS row_id, CAST(c_nationkey AS VARCHAR) AS nation,
              CAST(c_custkey % 10 AS VARCHAR) AS decile,
@@ -3134,13 +2829,6 @@ object SparkEntry {
                 count(DISTINCT event_type),
                 min(event_type), max(event_type)
          FROM events""",
-    // Merge-on-read delete replay: keys id%10==3 deleted at snapshot 3
-    // erase snapshots 1-2's rows; snapshot 4's re-insert (id%20==3, a
-    // subset of the deleted keys) postdates the delete and survives.
-    "q144_row_deletes" ->
-      """SELECT event_id, user_id, ts, event_type FROM events WHERE event_id % 10 <> 3
-         UNION ALL
-         SELECT event_id, user_id, ts, event_type FROM events WHERE event_id % 20 = 3""",
     // Tier-router replay: serving a 2h step from the 1h tier and
     // re-summing must equal bucketing RAW data at the step directly
     // (epoch-anchored floors nest) — the oracle computes from raw; the

@@ -20,9 +20,8 @@ import org.apache.spark.sql.functions._
   * reduce and a parallel one at corpus scale.
   *
   * Values profile as STRINGS (min/max lexicographic on the cast):
-  * type-faithful extrema belong to the manifest stats
-  * (`SnapshotStore.append(statsCols=...)`); this operator's job is
-  * the uniform any-schema profile a data-quality dashboard reads.
+  * this operator's job is the uniform any-schema profile a
+  * data-quality dashboard reads, not type-faithful extrema.
   */
 object Profile {
 

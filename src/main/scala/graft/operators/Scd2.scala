@@ -7,11 +7,10 @@ import org.apache.spark.sql.functions._
 /** SCD-2 history construction: turn a change-event log (one row per
   * observed state of a key) into slowly-changing-dimension validity
   * intervals — each row becomes `[effective_from, effective_to)` with
-  * the open current row marked. The warehouse counterpart of the
-  * latest-wins CDC merge ([[graft.snapshot.Upsert]], q92): that keeps only the final
-  * state, this keeps the full queryable history (join fact rows by
-  * `fact.ts >= from AND fact.ts < to` — the epoch-bucketed interval
-  * join of q81 is the scale path for that probe).
+  * the open current row marked. Where a latest-wins merge keeps only
+  * the final state, this keeps the full queryable history (join fact
+  * rows by `fact.ts >= from AND fact.ts < to` — the epoch-bucketed
+  * interval join of q81 is the scale path for that probe).
   *
   * Exact: epoch-second integers; ties on ts broken by the caller's
   * total-order column, so intervals are deterministic.

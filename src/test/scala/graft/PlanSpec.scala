@@ -115,15 +115,11 @@ class PlanSpec extends SparkSpec {
       "q61_experiment_grid",
       // construction writes a snapshot store twice (q57-style side
       // effects) — audited by their oracles + SnapshotSpec
-      "q137_time_travel", "q138_incremental_read", "q141_schema_evolution", "q144_row_deletes",
+      "q137_time_travel", "q138_incremental_read", "q141_schema_evolution",
       // construction runs a snapshot update + archival retention
       "q146_retention_archive",
-      // construction writes/vacuums/stages/rolls back a snapshot store
-      "q147_vacuum", "q148_wap_publish", "q149_rollback",
-      // construction forks/tags/appends snapshot stores (q166, q175)
-      "q166_branch_refs", "q175_branch_diff",
-      // construction appends data + delete snapshots (q177)
-      "q177_changelog"
+      // construction writes and vacuums a snapshot store
+      "q147_vacuum"
     )
     // broadcast-model or tiny-side joins where a nested-loop is the
     // right plan: literal-column broadcast model lookups, single-row
@@ -148,11 +144,9 @@ class PlanSpec extends SparkSpec {
     // over bucket-count rows, not raw data
     // q134: FULL OUTER reconciliation join — cannot broadcast; both
     // sides are tier-sized aggregates
-    // q170: FULL OUTER digest reconciliation — cannot broadcast; both
-    // sides are partition-count-sized digest relations (q134's shape)
     val allowSmj = Set(
       "q07_correct_fd", "q32_user_overlay", "q59_entity_corrector",
-      "q119_series_ratio", "q134_tier_reconcile", "q170_replica_diff"
+      "q119_series_ratio", "q134_tier_reconcile"
     )
     // a stale id would silently grant its exemption to any later query
     // registered under the same name

@@ -5,10 +5,8 @@ import java.nio.file.attribute.FileTime
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
-/** Table-maintenance operations: orphan-file vacuum (age-gated, never
-  * touches referenced or fresh dirs) and snapshot rollback (history
-  * above the target un-publishes into an audit bin; ids are reusable;
-  * compacted rebases refuse).
+/** Table maintenance: orphan-file vacuum (age-gated, never touches
+  * referenced or fresh dirs, nor anything outside `data/`).
   */
 class MaintenanceSpec extends SparkSpec {
 
@@ -51,47 +49,15 @@ class MaintenanceSpec extends SparkSpec {
   test("vacuum never touches an unpublished WAP branch (staged data lives outside data/)") {
     val root = tmpDir("vacwap")
     SnapshotStore.append(root, events.filter(col("event_id") % 2 === 0))
-    Wap.stage(root, events.filter(col("event_id") % 2 === 1), "pending")
-    ageDir(s"$root/_wap/pending/k0")
+    // older builds staged write-audit-publish batches under
+    // root/_wap/<branch>/k<k>, outside data/ and named by no manifest
+    val staged = s"$root/_wap/pending/k0"
+    events.filter(col("event_id") % 2 === 1).write.parquet(staged)
+    ageDir(staged)
+    ageDir(s"$root/_wap/pending")
+    ageDir(s"$root/_wap")
     assert(SnapshotStore.vacuum(root, olderThanMillis = 0L).isEmpty)
-    assert(Wap.auditRead(spark, root, "pending").count() == events.count())
-  }
-
-  test("rollback un-publishes snapshots above the target; ids reuse; data parks in the audit bin") {
-    val root = tmpDir("rb")
-    val thirds = (0 to 2).map(r => events.filter(col("event_id") % 3 === r))
-    SnapshotStore.append(root, thirds(0), tsCol = Some("ts"))
-    SnapshotStore.append(root, thirds(1), tsCol = Some("ts"))
-    SnapshotStore.append(root, thirds(2), tsCol = Some("ts"))
-
-    assert(SnapshotStore.rollback(root, 1L) == Seq(2L, 3L))
-    assert(SnapshotStore.currentSnapshotId(root) == 1L)
-    assert(SnapshotStore.read(spark, root).count() == thirds(0).count())
-    // the un-published rows are parked, not destroyed
-    assert(Files.exists(Paths.get(s"$root/_rolledback/r0/s2")))
-    assert(Files.exists(Paths.get(s"$root/_rolledback/r0/v2.json")))
-
-    // the freed ids are reusable: a corrected re-ingest lands at 2
-    assert(SnapshotStore.append(root, thirds(2), tsCol = Some("ts")) == 2L)
-    assert(SnapshotStore.read(spark, root).count() == thirds(0).count() + thirds(2).count())
-
-    // a second rollback gets its own bin — no collision on reused ids
-    assert(SnapshotStore.rollback(root, 1L) == Seq(2L))
-    assert(Files.exists(Paths.get(s"$root/_rolledback/r1/s2")))
-
-    // rollback to current is a no-op; below zero/above current raise
-    assert(SnapshotStore.rollback(root, 1L).isEmpty)
-    intercept[IllegalArgumentException](SnapshotStore.rollback(root, 5L))
-  }
-
-  test("rollback refuses to cross a compacted rebase") {
-    val root = tmpDir("rbcomp")
-    SnapshotStore.append(root, events.filter(col("event_id") % 2 === 0), tsCol = Some("ts"))
-    SnapshotStore.append(root, events.filter(col("event_id") % 2 === 1), tsCol = Some("ts"))
-    SnapshotStore.compact(spark, root, 2L)
-    val e = intercept[IllegalArgumentException](SnapshotStore.rollback(root, 1L))
-    assert(e.getMessage.contains("compacted rebase"))
-    // rolling back TO the rebase id (not across it) is fine
-    assert(SnapshotStore.rollback(root, 2L).isEmpty)
+    assert(spark.read.parquet(staged).count() == events.filter(col("event_id") % 2 === 1).count())
+    assert(SnapshotStore.read(spark, root).count() == events.filter(col("event_id") % 2 === 0).count())
   }
 }

@@ -72,26 +72,43 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("merge-on-read deletes: ordering semantics, loud incremental/dir guards, compaction materializes") {
+    // Older builds applied these deletes in snapshot order, guarded
+    // incremental and dir reads over them, and compaction materialized
+    // them. This build applies none of that: a table an older build
+    // gave such a delete is refused by reads, updates and compaction.
     val root = tmpDir("snapdel")
+    val tiers = tmpDir("snapdel_tiers")
     val ev = events.select("event_id", "user_id", "ts", "event_type")
-    SnapshotStore.append(root, ev.filter(col("event_id") < 100), tsCol = Some("ts")) // s1
-    SnapshotStore.appendDeletes(root, ev.filter(col("event_id") < 10).select("event_id")) // s2
-    SnapshotStore.append(root, ev.filter(col("event_id") < 5), tsCol = Some("ts")) // s3: re-insert subset
-    val got = SnapshotStore.read(spark, root)
-    // ids 5-9 deleted; 0-4 re-inserted AFTER the delete and survive
-    assert(got.count() == 95)
-    assert(got.filter(col("event_id") >= 5 && col("event_id") < 10).count() == 0)
-    assert(got.filter(col("event_id") < 5).count() == 5)
-    // a diff read over pending deletes cannot express removal — loud
-    val e1 = intercept[IllegalArgumentException](SnapshotStore.readRange(spark, root, 1L, 3L))
-    assert(e1.getMessage.contains("merge-on-read deletes"))
-    // dir-level consumers (tier updates) must not fold deleted rows — loud
-    val e2 = intercept[IllegalArgumentException](SnapshotStore.resolveDirs(root, 0L, 3L))
-    assert(e2.getMessage.contains("merge-on-read deletes"))
-    // compaction materializes: same rows, delete manifests gone, dir reads legal again
-    SnapshotStore.compact(spark, root, 3L)
-    assert(SnapshotStore.read(spark, root).count() == 95)
-    assert(SnapshotStore.resolveDirs(root, 0L, 3L).nonEmpty)
+    val base = ev.filter(col("event_id") < 100)
+    SnapshotStore.append(root, base, tsCol = Some("ts")) // s1
+    // s2 as older builds committed a delete: a dir of key rows and a
+    // manifest naming the key columns
+    ev.filter(col("event_id") < 10).select("event_id").write.parquet(s"$root/data/s2")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val m = mapper.createObjectNode()
+    m.put("snapshotId", 2L)
+    m.put("parentId", 1L)
+    m.put("rows", 10L)
+    m.putArray("deleteKeyCols").add("event_id")
+    m.putArray("dataDirs").add(s"$root/data/s2")
+    Files.write(Paths.get(root, "_snapshots", "v2.json"), mapper.writeValueAsBytes(m))
+    Files.write(Paths.get(root, "_snapshots", "CURRENT"), "2".getBytes)
+    SnapshotStore.append(root, ev.filter(col("event_id") < 5), tsCol = Some("ts")) // s3: re-insert
+
+    // reading s2's keys as rows, or skipping them, would both serve
+    // ids 5-9 again: every path through s2 must fail instead
+    def refused(body: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](body)
+      assert(e.getMessage.contains("merge-on-read deletes"), e.getMessage)
+    }
+    refused(SnapshotStore.read(spark, root))
+    refused(SnapshotStore.readRange(spark, root, 1L, 3L))
+    refused(ContinuousRollup.update(spark, root, tiers, Seq("event_type"), "ts", lit(1L)))
+    refused(SnapshotStore.compact(spark, root, 3L))
+    assert(ContinuousRollup.lastApplied(tiers) == 0L)
+    assert(SnapshotStore.snapshotIds(root) == Seq(1L, 2L, 3L))
+    // the range below the delete holds no deleted rows and still reads
+    assert(SnapshotStore.readRange(spark, root, 0L, 1L).count() == base.count())
   }
 
   test("incremental tier update over two snapshots == one-pass recompute") {
@@ -388,7 +405,7 @@ class SnapshotSpec extends SparkSpec {
     // exactly one data file set remains, under the compacted dir
     assert(after.inputFiles.forall(_.contains("/data/c3/")))
     // day manifests survive compaction -> pruned reads still work
-    assert(SnapshotStore.hasDayInfo(root, 0L, 3L))
+    assert(SnapshotStore.manifest(root, 3L).has("days"))
 
     // a later append + incremental update continues from the marker
     // over the compacted base and stays exact
@@ -517,43 +534,6 @@ class SnapshotSpec extends SparkSpec {
     }
   }
 
-  test("as-of-timestamp reads resolve to the newest snapshot at or before the stamp") {
-    val root = tmpDir("asof") + "/tbl"
-    val evens = events.filter(pmod(col("event_id"), lit(2)) === 0)
-    val odds = events.filter(pmod(col("event_id"), lit(2)) === 1)
-    val before = System.currentTimeMillis() - 1
-    SnapshotStore.append(root, evens, tsCol = Some("ts"))
-    val t1 = SnapshotStore.commitMillis(root, 1L).get
-    // guarantee commit2 lands on a LATER millisecond than commit1
-    while (System.currentTimeMillis() <= t1) Thread.sleep(1)
-    SnapshotStore.append(root, odds, tsCol = Some("ts"))
-    val t2 = SnapshotStore.commitMillis(root, 2L).get
-    assert(t2 > t1)
-
-    assert(SnapshotStore.snapshotAsOf(root, before) == 0L, "predates the table")
-    assert(SnapshotStore.snapshotAsOf(root, t1) == 1L)
-    assert(SnapshotStore.snapshotAsOf(root, t2 - 1) == 1L)
-    assert(SnapshotStore.snapshotAsOf(root, t2) == 2L)
-    assert(SnapshotStore.snapshotAsOf(root, System.currentTimeMillis()) == 2L)
-
-    assert(SnapshotStore.readAsOf(spark, root, t1).count() == evens.count())
-    assert(SnapshotStore.readAsOf(spark, root, t2).count() == events.count())
-  }
-
-  test("compaction keeps the rebase point's commit stamp so as-of reads at it still resolve") {
-    val root = tmpDir("asofcomp") + "/tbl"
-    SnapshotStore.append(root, events.limit(50), tsCol = Some("ts"))
-    val t1 = SnapshotStore.commitMillis(root, 1L).get
-    while (System.currentTimeMillis() <= t1) Thread.sleep(1)
-    SnapshotStore.append(root, events.limit(80).except(events.limit(50)), tsCol = Some("ts"))
-    val t2 = SnapshotStore.commitMillis(root, 2L).get
-    val n = SnapshotStore.read(spark, root).count()
-    SnapshotStore.compact(spark, root, upTo = 2L)
-    assert(SnapshotStore.commitMillis(root, 2L).contains(t2))
-    assert(SnapshotStore.snapshotAsOf(root, t2) == 2L)
-    assert(SnapshotStore.readAsOf(spark, root, t2).count() == n)
-  }
-
   test("a manifest still carrying an old streamBatchId field reads, appends, compacts and updates as one without it") {
     def same(a: DataFrame, b: DataFrame): Boolean = a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
     val halves = Seq(0, 1).map(i => events.filter(col("event_id") % 2 === i))
@@ -561,13 +541,21 @@ class SnapshotSpec extends SparkSpec {
     val roots @ Seq(legacy, plain) = Seq("snap_legacy", "snap_plain").map(tmpDir)
     val tiers = roots.map(r => s"$r-tiers")
     roots.foreach(r => SnapshotStore.append(r, halves(0), tsCol = Some("ts")))
-    // earlier builds wrote a per-batch stream id into the manifest JSON
+    // earlier builds wrote a per-batch stream id, a commit stamp and
+    // per-column min/max stats into the manifest JSON
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val v1 = Paths.get(legacy, "_snapshots", "v1.json")
     val m = mapper.readTree(Files.readAllBytes(v1)).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     m.put("streamBatchId", 7L)
+    m.put("commitMillis", 1700000000000L)
+    val stats = m.putObject("stats").putObject("event_id")
+    stats.put("numeric", true)
+    stats.put("min", "0")
+    stats.put("max", "9")
     Files.write(v1, mapper.writeValueAsBytes(m))
-    assert(SnapshotStore.manifest(legacy, 1L).get("streamBatchId").asLong() == 7L)
+    val written = SnapshotStore.manifest(legacy, 1L)
+    assert(written.get("streamBatchId").asLong() == 7L && written.get("commitMillis").asLong() == 1700000000000L)
+    assert(written.get("stats").get("event_id").get("max").asText() == "9")
 
     def update(): Unit = roots.zip(tiers).foreach { case (r, t) =>
       ContinuousRollup.update(spark, r, t, Seq("event_type"), "ts", lit(1L))
