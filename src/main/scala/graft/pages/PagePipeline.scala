@@ -2,7 +2,6 @@ package graft.pages
 
 import graft.rollup.Rollup
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The north-rule pipeline: rule-based error detection -> corrector
@@ -25,8 +24,8 @@ import org.apache.spark.sql.functions._
   * Scan discipline (the property that matters at 10^12 rows): the big
   * table is scanned exactly TWICE end to end —
   *   1. one domain->lang count model (a single hash aggregate, tiny
-  *      result); the per-domain majority is a window over that tiny
-  *      relation, no second scan;
+  *      result); the per-domain majority is a one-task aggregate over
+  *      that tiny relation, no second scan and no shuffle;
   *   2. the single output pass that flags + repairs every cell with
   *      pure expressions and one broadcast join (the majority model).
   * With an external count model (`repairWithCounts`) the output pass
@@ -45,16 +44,18 @@ object PagePipeline {
       .withColumn("__lang_bad", col("lang") =!= col("__majority_lang"))
 
   /** Domain-majority lang of a (domain, lang, cnt) count model:
-    * per-domain argmax with lexicographic tie-break (tiny relation,
-    * broadcast by callers).
+    * per-domain argmax, the highest count first, then the smallest
+    * lang (a null lang sorts first). The model is tiny and broadcast
+    * by callers, so the argmax runs as ONE task: over a single
+    * partition the grouping plans no exchange, and the aggregate
+    * computes inside the broadcast's own job.
     */
-  private def majorityOf(counts: DataFrame): DataFrame = {
-    val w = Window.partitionBy("domain").orderBy(col("cnt").desc, col("lang").asc)
+  private def majorityOf(counts: DataFrame): DataFrame =
     counts
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("domain"), col("lang").as("__majority_lang"))
-  }
+      .coalesce(1)
+      .groupBy("domain")
+      .agg(min(struct((-col("cnt")).as("neg_cnt"), col("lang"))).as("top"))
+      .select(col("domain"), col("top.lang").as("__majority_lang"))
 
   private def withIdDomain(pages: DataFrame): DataFrame =
     PageGen.withRowId(pages).withColumn("domain", PageGen.domainOf("url"))

@@ -3,6 +3,7 @@ package graft.snapshot
 import graft.rollup.{Rollup, Tiers}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import java.time.LocalDate
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.io.LocalInputFile
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
@@ -61,8 +62,8 @@ object ContinuousRollup {
 
   private def tierPath(tiersRoot: String, tier: String) = s"$tiersRoot/tier_$tier"
 
-  /** Below this output size a tier write skips the clustering shuffle
-    * (see the write-layout branch in `update`).
+  /** Below this output size a tier re-rolls up and writes in one task,
+    * with no shuffle (see the write-layout branch in `update`).
     */
   private val SmallTierRows = 5000L
 
@@ -206,25 +207,36 @@ object ContinuousRollup {
       )
 
     // one tiny action over the prepared batch (its only consumer — no
-    // cache): the days its points land on (post-repair). Days decide
-    // the pruned raw read and the 1m/1h/1d recomputes; their 30d
-    // windows, derived on the driver, decide which 30d partitions
-    // re-roll up from the 1d tier. The query reads only the
-    // partition-deciding timestamp, so a prepare's model lookups for
-    // other columns drop out of its plan.
+    // cache): the days its points land on (post-repair), observed as a
+    // set on a no-op write of the one-column projection, so the pass is
+    // a single job with no aggregation stage (`collect_set` drops null
+    // timestamps). Days decide the pruned raw read and the 1m/1h/1d
+    // recomputes; their 30d windows, derived without a Spark job, decide
+    // which 30d partitions re-roll up from the 1d tier. The pass reads
+    // only the partition-deciding timestamp, so a prepare's model
+    // lookups for other columns drop out of its plan.
     val newRows = prepared(newDirs)
     require(
       newRows.columns.contains(StoredDayCol),
       s"ContinuousRollup: `prepare` must pass the $StoredDayCol column through (the prepare-contract " +
         s"guard compares it per row); it returned ${newRows.columns.mkString("[", ", ", "]")}"
     )
-    val days = newRows
+    val daysObs = Observation(s"graft_touched_days_${tiersRoot.hashCode.toHexString}_$to")
+    newRows
       .select(to_date(col(tsCol)).as("d"))
-      .distinct()
-      .collect()
+      .observe(daysObs, collect_set(col("d")).as("days"))
+      .write
+      .format("noop")
+      .mode("overwrite")
+      .save()
+    val days: Set[LocalDate] = daysObs
+      .get("days")
+      .asInstanceOf[scala.collection.Seq[Any]]
       .iterator
-      .filterNot(_.isNullAt(0))
-      .map(_.getDate(0).toLocalDate)
+      .map {
+        case d: java.sql.Date => d.toLocalDate
+        case d: LocalDate     => d
+      }
       .toSet
     val windows = days.map(Tiers.window30dOf)
     if (days.isEmpty) {
@@ -314,9 +326,26 @@ object ContinuousRollup {
       var finerRowsOut: Long = rows1m
 
       def runTier(tier: String): RunLogRow = {
+        // write layout branches on the CONSERVATIVE row bound (finer
+        // tier's observed output; the exact count for 1m) instead of a
+        // dedicated count job: below the threshold a shuffle costs more
+        // than it saves. A small tier re-rolls up ONE partition of its
+        // input, so its aggregate plans no exchange and one writer task
+        // emits one file per part_key dir in a single job with a single
+        // task-commit round. Misclassifying small-as-large costs one
+        // tiny shuffle, never correctness. Exact rows_out rides the
+        // write as an observed metric; partitions written are known
+        // by construction (every touched day/window carries at least
+        // one batch row).
+        val bound = tier match {
+          case "30d" => finerRowsOut / math.max(days.size, 1) * windows.size * 30 + 1
+          case _     => finerRowsOut
+        }
+        val small = bound <= SmallTierRows
+        def input(df: DataFrame): DataFrame = if (small) df.coalesce(1) else df
         val out = tier match {
           case "1m" => out1m
-          case "1h" | "1d" => outputOf(tier, Rollup.reRollup(out1m.drop("part_key"), series, "1m" -> tier))
+          case "1h" | "1d" => outputOf(tier, Rollup.reRollup(input(out1m.drop("part_key")), series, "1m" -> tier))
           case "30d" =>
             // a touched 30d window re-rolls up its day span from the 1d
             // TIER (days outside this batch were written by earlier
@@ -334,7 +363,7 @@ object ContinuousRollup {
                 spark.read.schema(daySchema).parquet(dirs: _*)
               }
               .reduce(_ unionByName _)
-            outputOf(tier, Rollup.reRollup(finer, series, "1d" -> "30d"))
+            outputOf(tier, Rollup.reRollup(input(finer), series, "1d" -> "30d"))
         }
         // cluster rows by their output partition before the partitioned
         // write: otherwise every shuffle task holds rows of every
@@ -350,21 +379,8 @@ object ContinuousRollup {
         // unnumbered range shuffle to ONE task, serializing the hot-day
         // write the range layout exists to parallelize
         val nWrite = spark.conf.get("spark.sql.shuffle.partitions").toInt
-        // write layout branches on the CONSERVATIVE row bound (finer
-        // tier's observed output; the exact count for 1m) instead of a
-        // dedicated count job: below the threshold the clustering shuffle
-        // costs more than it saves — one writer task emits one file per
-        // part_key dir with no exchange and a single task-commit round.
-        // Misclassifying small-as-large costs one tiny shuffle, never
-        // correctness. Exact rows_out rides the write as an observed
-        // metric; partitions written are driver-known by construction
-        // (every touched day/window carries at least one batch row).
-        val bound = tier match {
-          case "30d" => finerRowsOut / math.max(days.size, 1) * windows.size * 30 + 1
-          case _     => finerRowsOut
-        }
         val clustered =
-          if (bound <= SmallTierRows) out.coalesce(1)
+          if (small) out.coalesce(1)
           else
             tier match {
               case "1m" | "1h" => out.repartitionByRange(nWrite, (col("part_key") +: series.map(col)): _*)

@@ -43,10 +43,20 @@ object SnapshotStore {
 
   private[snapshot] def snapDir(root: String): Path = Paths.get(root, "_snapshots")
 
+  /** The current snapshot id. The manifest link is an append's commit
+    * point and `CURRENT` only a hint written after it, so the id rolls
+    * forward from `CURRENT` over every committed successor manifest: a
+    * crash between the link and the `CURRENT` write loses nothing, and
+    * the next append takes the next free id. (`compact` rewrites only
+    * ids at or below the current one, so it never looks newer.)
+    */
   def currentSnapshotId(root: String): Long = {
     val cur = snapDir(root).resolve("CURRENT")
-    if (Files.exists(cur)) new String(Files.readAllBytes(cur), StandardCharsets.UTF_8).trim.toLong
-    else 0L
+    var id =
+      if (Files.exists(cur)) new String(Files.readAllBytes(cur), StandardCharsets.UTF_8).trim.toLong
+      else 0L
+    while (Files.exists(snapDir(root).resolve(s"v${id + 1}.json"))) id += 1
+    id
   }
 
   private[snapshot] def snapshotIds(root: String): Seq[Long] =

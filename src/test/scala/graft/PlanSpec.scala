@@ -65,6 +65,8 @@ class PlanSpec extends SparkSpec {
     val plan = physical(PagePipeline.repair(spark.read.parquet(pagesPath)))
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("SortMergeJoin"), plan)
+    // the domain majority is a one-task aggregate, not a ranking window
+    assert(!plan.contains("Window"), plan)
   }
 
   test("tier rollup is a two-phase hash aggregate (map-side partial)") {

@@ -153,6 +153,36 @@ class PagesPipelineSpec extends SparkSpec {
     }
   }
 
+  test("updates on both write-layout branches == one-shot repair rollup, all 4 tiers") {
+    import graft.snapshot.{ContinuousRollup, SnapshotStore}
+    val base = java.nio.file.Files.createTempDirectory("pages_layout").toString
+    val (root, tiers) = (s"$base/src", s"$base/tiers")
+    // the first update folds about 10k pages into more 1m rows than the
+    // small-tier bound (5,000), so its fine tiers take the clustered
+    // layout; the second, a 4-day crawl, stays under it
+    val big = PageGen.clean(spark, 12000L)
+    SnapshotStore.append(root, PageGen.corrupt(big.filter(col("warc_ts") < "2024-02-01")), tsCol = Some("warc_ts"))
+    assert(pagesUpdate(root, tiers) == 1L)
+    SnapshotStore.append(root, PageGen.corrupt(big.filter(col("warc_ts") >= "2024-02-01")), tsCol = Some("warc_ts"))
+    assert(pagesUpdate(root, tiers) == 2L)
+
+    val rows1m = ContinuousRollup
+      .readLineage(spark, tiers)
+      .filter(col("tier") === "1m")
+      .select("applied_snapshot", "rows_out")
+      .collect()
+      .map(r => r.getLong(0) -> r.getLong(1))
+      .toMap
+    assert(rows1m(1L) > 5000L && rows1m(2L) < 5000L, s"1m rows per update: $rows1m")
+
+    val oneShot = PagePipeline.repair(PageGen.corrupt(big)).withColumn("domain", PageGen.domainOf("url"))
+    for (t <- Seq("1m", "1h", "1d", "30d")) {
+      val got = ContinuousRollup.readTier(spark, tiers, t)
+      val want = Rollup.fromRaw(oneShot, Seq("domain", "lang"), "warc_ts", t, length(col("html")).cast("long"))
+      assert(got.except(want).isEmpty && want.except(got).isEmpty, s"tier $t mismatch")
+    }
+  }
+
   test("building a repaired frame runs no Spark job") {
     val pages = dirty
     val model = PagePipeline.langCounts(pages)
@@ -181,7 +211,10 @@ class PagesPipelineSpec extends SparkSpec {
       // de and fr tie at 2: the lexicographically smaller de wins
       page("b", 5, "fr"), page("b", 6, "de"), page("b", 7, "fr"), page("b", 8, "de"),
       // null is the majority: no repair, the fr row keeps its lang
-      page("c", 9, null), page("c", 10, null), page("c", 11, "fr")
+      page("c", 9, null), page("c", 10, null), page("c", 11, "fr"),
+      // null and de tie at 2: null sorts first and wins, so the fr row
+      // keeps its lang (a de majority would repair it to de)
+      page("d", 12, null), page("d", 13, "de"), page("d", 14, null), page("d", 15, "de"), page("d", 16, "fr")
     ).toDF(PagePipeline.PageCols: _*)
     val got = PagePipeline
       .repair(pages)
@@ -192,7 +225,8 @@ class PagesPipelineSpec extends SparkSpec {
     val want = Map(
       url("a", 1) -> "en", url("a", 2) -> "en", url("a", 3) -> "en", url("a", 4) -> "en",
       url("b", 5) -> "de", url("b", 6) -> "de", url("b", 7) -> "de", url("b", 8) -> "de",
-      url("c", 9) -> null, url("c", 10) -> null, url("c", 11) -> "fr"
+      url("c", 9) -> null, url("c", 10) -> null, url("c", 11) -> "fr",
+      url("d", 12) -> null, url("d", 13) -> "de", url("d", 14) -> null, url("d", 15) -> "de", url("d", 16) -> "fr"
     )
     assert(got == want)
   }
@@ -251,10 +285,12 @@ class PagesPipelineSpec extends SparkSpec {
     assert(applied == 2L)
     def described(js: Seq[org.apache.spark.scheduler.SparkListenerJobStart]) =
       js.map(j => j.stageInfos.map(_.name).mkString("+")).mkString("; ")
-    // model: merge + write (2); touched days (2); 1m output with the
-    // contract guard (5: majority, broadcast, aggregate, cache, no-op
-    // write); tier writes 1m (1), 1h/1d/30d (2 each); run log (1)
-    assert(jobs.size <= 17, s"${jobs.size} jobs: ${described(jobs)}")
+    // model: merge + write (2); touched days (1: the observed no-op
+    // write); 1m output with the contract guard (4: majority broadcast,
+    // aggregate, cache, no-op write); tier writes 1m, 1h, 1d and 30d
+    // (1 each: small tiers re-roll up one partition, no exchange); run
+    // log (1)
+    assert(jobs.size <= 12, s"${jobs.size} jobs: ${described(jobs)}")
     val inference = jobs.filter(outsideSqlExecution)
     assert(inference.isEmpty, s"schema-inference or listing jobs ran: ${described(inference)}")
   }

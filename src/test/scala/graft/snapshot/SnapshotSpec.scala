@@ -5,6 +5,7 @@ import graft.rollup.Rollup
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Iceberg-lite snapshot store + continuous aggregate tests:
   * incremental tier updates over two appends must equal a one-pass
@@ -64,11 +65,31 @@ class SnapshotSpec extends SparkSpec {
     val ev = events.select("event_id", "event_type").limit(10)
     SnapshotStore.append(root, ev)
     // another writer commits snapshot 2 between our id computation and
-    // our manifest move: simulate by pre-placing its manifest
-    Files.write(Paths.get(root, "_snapshots", "v2.json"), "{\"snapshotId\":2}".getBytes)
-    intercept[java.util.ConcurrentModificationException](SnapshotStore.append(root, ev))
+    // our manifest link: its manifest appears while our data is written
+    val rival = Paths.get(root, "_snapshots", "v2.json").toString
+    val race = udf { (id: Long) =>
+      try Files.write(Paths.get(rival), "{\"snapshotId\":2}".getBytes, java.nio.file.StandardOpenOption.CREATE_NEW)
+      catch { case _: java.nio.file.FileAlreadyExistsException => () }
+      id
+    }
+    intercept[java.util.ConcurrentModificationException](
+      SnapshotStore.append(root, ev.withColumn("event_id", race(col("event_id"))))
+    )
     // CURRENT still points at the winner's lineage; no manifest was replaced
     assert(new String(Files.readAllBytes(Paths.get(root, "_snapshots", "v2.json"))).contains("\"snapshotId\":2}"))
+  }
+
+  test("a crash between the manifest link and the CURRENT write loses no snapshot") {
+    val root = tmpDir("snap_current")
+    SnapshotStore.append(root, events.filter(col("event_id") % 2 === 0), tsCol = Some("ts"))
+    SnapshotStore.append(root, events.filter(col("event_id") % 2 === 1), tsCol = Some("ts"))
+    // the crash: v2.json is linked, CURRENT still names snapshot 1
+    Files.write(Paths.get(root, "_snapshots", "CURRENT"), "1".getBytes)
+    assert(SnapshotStore.currentSnapshotId(root) == 2L)
+    assert(SnapshotStore.read(spark, root).count() == events.count())
+    val extra = events.filter(col("event_id") % 3 === 0)
+    assert(SnapshotStore.append(root, extra, tsCol = Some("ts")) == 3L)
+    assert(SnapshotStore.read(spark, root).count() == events.count() + extra.count())
   }
 
   test("merge-on-read deletes: ordering semantics, loud incremental/dir guards, compaction materializes") {
@@ -479,6 +500,30 @@ class SnapshotSpec extends SparkSpec {
     val applied = ContinuousRollup.update(spark, root, tiers, Seq("event_type"), "ts", lit(1L))
     assert(applied == 2L && ContinuousRollup.lastApplied(tiers) == 2L)
     assert(ContinuousRollup.readTier(spark, tiers, "1h").collect().toSet == before)
+  }
+
+  test("a batch whose prepared timestamps are all null marks applied and writes nothing") {
+    val root = tmpDir("snap_nullts")
+    val tiers = tmpDir("snap_nullts_tiers")
+    def update(prepare: DataFrame => DataFrame): Long =
+      ContinuousRollup.update(spark, root, tiers, Seq("event_type"), "ts", lit(1L), prepare = prepare)
+    def files(): Map[String, (Long, Long)] = {
+      val walk = Files.walk(Paths.get(tiers))
+      try
+        walk.iterator().asScala.filter(Files.isRegularFile(_))
+          .filterNot(_.getFileName.toString == "_applied")
+          .map(p => p.toString -> (Files.size(p), Files.getLastModifiedTime(p).toMillis))
+          .toMap
+      finally walk.close()
+    }
+    SnapshotStore.append(root, events.filter(col("ts") < "2024-01-15"), tsCol = Some("ts"))
+    assert(update(identity) == 1L)
+    val (before, lineage) = (files(), ContinuousRollup.readLineage(spark, tiers).count())
+    SnapshotStore.append(root, events.filter(col("ts") >= "2024-01-15"), tsCol = Some("ts"))
+    assert(update(_.withColumn("ts", lit(null).cast("timestamp"))) == 2L)
+    assert(ContinuousRollup.lastApplied(tiers) == 2L)
+    assert(files() == before)
+    assert(ContinuousRollup.readLineage(spark, tiers).count() == lineage)
   }
 
   test("update is a no-op when nothing is new, and resumes after a lost marker") {
